@@ -63,7 +63,7 @@ from switchback_test_dag_spark.queries import FLAGSHIP  # noqa: E402
 
 
 def _host_probe(trials: int = 2) -> dict:
-    """Compact tools/boxprobe.py twin: this box's memory subsystem has shown
+    """Host environment control: this box's memory subsystem has shown
     10-100x transient swings on identical plans (SCALE.md round-7 audits), so
     every recorded benchmark carries its own environment control — min times
     for a fixed BLAS matmul and a fixed 200 MB first-touch allocation.

@@ -8,8 +8,9 @@ zone exclusion lists as ``'ZoneA, ZoneB'`` CSV, NULL → empty list.
 
 Configs are tiny (rows = number of running tests), so like the reference we parse
 them driver-side; unlike the reference, the per-test *work* is not a driver loop —
-``pipeline.run_tests`` pushes all tests into one distributed plan via a broadcast
-join against this parsed config table.
+``pipeline.label_orders`` pushes all tests into one distributed plan via a broadcast
+join against this parsed config table, and the battery (``run_tests``, the
+registry's ``sb_metrics`` / ``sb_mwu_pvalues``) runs over its output.
 """
 
 from __future__ import annotations

@@ -92,7 +92,9 @@ def daily_tasks(spark: SparkSession, sf_dir: str) -> list[Task]:
     """The reference DAG's task chain on this engine: extraction (the 8-stage
     composed ELT script standing in for run_sql_queries) then the switchback
     analysis battery (pipeline.run_tests standing in for
-    automated_switchback_test_analysis_script)."""
+    automated_switchback_test_analysis_script). Each task returns its
+    collected rows: the ELT signature, then the per_order / totals /
+    p_values tables."""
     from switchback_test_dag_spark.operators.domain import (
         domain_configs_df,
         synthesize_orders_fact,
@@ -100,16 +102,17 @@ def daily_tasks(spark: SparkSession, sf_dir: str) -> list[Task]:
     from switchback_test_dag_spark.pipeline import run_tests
     from switchback_test_dag_spark.queries_elt import elt_orders_fact
 
+    # collect(), never count(): the outputs are a few dozen rows, and count()
+    # lets Catalyst prune the work it forces (the MWU rank window included)
     def run_queries():
         # materialize the extraction like the reference's CREATE TABLE step
-        return elt_orders_fact(spark, sf_dir).count()
+        return elt_orders_fact(spark, sf_dir).collect()
 
     def run_analysis():
         fact = synthesize_orders_fact(spark, sf_dir)
         out = run_tests(fact, domain_configs_df(spark))
-        # force each result table (the reference uploads them to the
-        # warehouse; count() is the scheduler-visible materialization here)
-        return {name: df.count() for name, df in out.items()}
+        # the reference uploads these three tables to the warehouse
+        return {name: df.collect() for name, df in out.items()}
 
     return [
         Task("run_queries", run_queries),

@@ -116,11 +116,27 @@ def synthesize_orders_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # left-to-right in both forms, and every CAST mirrors the old .cast().
 # Expression order continues to mirror ORACLE_FACT_CTE below so IEEE
 # doubles agree bit-for-bit with the DuckDB oracle (hash-verified).
+#
+# The four per-row formulas below are public because ELT stage 6a
+# (queries_elt._SPARK_SCRIPT) builds its fact from the same strings: each
+# Spark KPI formula is defined once.
 _FACT_SECS = (
     "(((l_orderkey % 86400) * 2654435761 + l_linenumber * 97) % 86400)"
 )
 _FACT_ON_HOUR = f"(FLOOR({_FACT_SECS} / 3600) % 2) = 0"
-_FACT_REVENUE = (
+FACT_ORDER_TIME = (
+    "timestamp_seconds(CAST(unix_timestamp(o_orderdate)"
+    f" + {_FACT_SECS} AS BIGINT))"
+)
+FACT_SCHEME_ID = (
+    "CAST(CASE WHEN l_orderkey % 97 = 0 THEN 999"
+    f" WHEN o_custkey % 2 = 0 THEN (CASE WHEN {_FACT_ON_HOUR}"
+    "  THEN 110 + (l_orderkey % 2) ELSE 120 END)"
+    f" ELSE (CASE WHEN {_FACT_ON_HOUR}"
+    "  THEN 210 ELSE 220 + (l_orderkey % 2) END)"
+    " END AS INT)"
+)
+FACT_REVENUE = (
     "(2.5D + l_quantity * 0.1D)"
     " + l_extendedprice * l_discount"
     " + (CASE WHEN l_orderkey % 5 = 0 THEN 1.5D ELSE 0.0D END)"
@@ -128,22 +144,17 @@ _FACT_REVENUE = (
     " + (CASE WHEN l_extendedprice >= 1000 THEN 0.0D"
     "    ELSE 1000.0D - l_extendedprice END)"
 )
+FACT_GROSS_PROFIT = f"{FACT_REVENUE} - (3.0D + l_quantity * 0.15D)"
 _FACT_EXPRS = (
     "l_orderkey * 10 + l_linenumber AS order_id",
     "concat('sb_test_', CAST(o_custkey % 2 AS STRING)) AS test_name",
     "CASE WHEN o_custkey % 10 = 0 THEN 'Non_TG'"
     " ELSE concat('TG', CAST((o_custkey % 3) + 1 AS STRING)) END"
     " AS target_group",
-    "timestamp_seconds(CAST(unix_timestamp(o_orderdate)"
-    f" + {_FACT_SECS} AS BIGINT)) AS order_placed_at_local",
+    f"{FACT_ORDER_TIME} AS order_placed_at_local",
     "sn_name AS zone_name_vendor",
     "cn_name AS zone_name_customer",
-    "CAST(CASE WHEN l_orderkey % 97 = 0 THEN 999"
-    f" WHEN o_custkey % 2 = 0 THEN (CASE WHEN {_FACT_ON_HOUR}"
-    "  THEN 110 + (l_orderkey % 2) ELSE 120 END)"
-    f" ELSE (CASE WHEN {_FACT_ON_HOUR}"
-    "  THEN 210 ELSE 220 + (l_orderkey % 2) END)"
-    " END AS INT) AS scheme_id",
+    f"{FACT_SCHEME_ID} AS scheme_id",
     "2.5D + l_quantity * 0.1D AS actual_df_paid_by_customer",
     "l_extendedprice AS gfv_local",
     "l_extendedprice * (1.0D + l_tax) AS gmv_local",
@@ -154,8 +165,8 @@ _FACT_EXPRS = (
     " ELSE 1000.0D - l_extendedprice END AS sof_local",
     "0.99D AS service_fee_local",
     "3.0D + l_quantity * 0.15D AS delivery_costs_local",
-    f"{_FACT_REVENUE} AS revenue_local",
-    f"{_FACT_REVENUE} - (3.0D + l_quantity * 0.15D) AS gross_profit_local",
+    f"{FACT_REVENUE} AS revenue_local",
+    f"{FACT_GROSS_PROFIT} AS gross_profit_local",
     "CASE WHEN l_linenumber = 7 THEN CAST(NULL AS DOUBLE)"
     " ELSE 5.0D + (l_partkey % 100) * 0.3D END AS dps_mean_delay",
     "CASE WHEN l_partkey % 11 = 0 THEN CAST(NULL AS DOUBLE)"

@@ -1,24 +1,29 @@
-"""The production switchback analysis — Spark-native re-expression of
-``/root/reference/py_scripts/automated_switchback_test_analysis_script.py:104-161``.
+"""The production switchback analysis — Spark-native re-expression of the
+reference's ``py_scripts/automated_switchback_test_analysis_script.py:104-161``.
 
 Reference flow (per test, serial pandas): boolean-mask filter → ``np.select``
 On/Off label → ``groupby().mean()`` / ``.sum()`` over 13 KPIs → per-KPI
 ``scipy.stats.mannwhitneyu``. Here the per-test loop disappears: configs become a
 broadcast-joined dimension, so *all* tests run in one distributed plan —
-filters/labels are column predicates over array-typed config fields, aggregates are
-one ``groupBy``, and the 13 MWU tests melt into a single ranked window job
-partitioned by (test, KPI). At 100 TB the fact table is scanned once per battery
-instead of once per test.
+filters/labels are column predicates over array-typed config fields
+(:func:`label_orders`), the means and totals are one exact micro-unit
+``groupBy`` (:func:`kpi_metrics`), and the 13 MWU tests melt into a single
+ranked window job partitioned by (test, KPI) (:func:`kpi_mwu`). At 100 TB the
+fact table is scanned once per battery instead of once per test.
+
+This module is the engine's only implementation of the battery: ``run_tests``
+(the daily DAG's analysis task) projects its three tables from these two
+frames, and the registry's ``sb_metrics`` / ``sb_mwu_pvalues`` return them
+as-is for the DuckDB oracles to check.
 """
 
 from __future__ import annotations
-
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from switchback_test_dag_spark.exact import spark_micro_avg, spark_micro_sum
 from switchback_test_dag_spark.stats.mwu import mann_whitney_u
 from switchback_test_dag_spark.stats.util import melt_kpis
 
@@ -81,51 +86,49 @@ def label_orders(orders: DataFrame, configs_df: DataFrame) -> DataFrame:
     )
 
 
-def per_order_metrics(
-    labeled: DataFrame, kpi_cols: Sequence[str] = KPI_COLS
-) -> DataFrame:
-    """Per-order (mean) KPIs by (test_name, on_or_off_day), rounded to 2 —
-    ``automated_...py:124-125``."""
+def kpi_metrics(labeled: DataFrame) -> DataFrame:
+    """The 13 per-order KPI means and the 10 monetary totals (``total_<kpi>``)
+    by (test_name, on_or_off_day) in ONE groupBy — ``automated_...py:124-129``,
+    whose two ``.agg()`` passes share the same scan and shuffle. Every
+    2-decimal output uses order-independent integer micro-unit arithmetic
+    (``exact.spark_micro_avg`` / ``spark_micro_sum``), so a value cannot
+    drift a cent with the shuffle order of a float sum."""
     return labeled.groupBy("test_name", "on_or_off_day").agg(
-        *[F.round(F.avg(c), 2).alias(c) for c in kpi_cols]
+        *[spark_micro_avg(c).alias(c) for c in KPI_COLS],
+        *[spark_micro_sum(c).alias(f"total_{c}") for c in MONETARY_KPI_COLS],
     )
 
 
-def total_metrics(
-    labeled: DataFrame, kpi_cols: Sequence[str] = MONETARY_KPI_COLS
-) -> DataFrame:
-    """Total (sum) monetary KPIs by (test_name, on_or_off_day), rounded to 2 —
-    ``automated_...py:128-129`` (logistics KPIs excluded)."""
-    return labeled.groupBy("test_name", "on_or_off_day").agg(
-        *[F.round(F.sum(c), 2).alias(c) for c in kpi_cols]
-    )
-
-
-def p_values(
-    labeled: DataFrame, kpi_cols: Sequence[str] = KPI_COLS, pivot: bool = False
-) -> DataFrame:
-    """Two-sided MWU p-value per (test_name, KPI), On vs Off, rounded to 4 —
-    ``automated_...py:136-144``. All tests × KPIs in one distributed job."""
-    long = melt_kpis(labeled, kpi_cols, id_cols=("test_name", "on_or_off_day"))
+def kpi_mwu(labeled: DataFrame) -> DataFrame:
+    """Two-sided tie-corrected MWU per (test_name, KPI), On vs Off —
+    ``automated_...py:136-144``: the full ``n_a, n_b, u_stat, z, p_value``
+    table (z rounded to 6, p to 4), all tests × KPIs in one distributed job."""
+    long = melt_kpis(labeled, KPI_COLS, id_cols=("test_name", "on_or_off_day"))
     res = mann_whitney_u(
         long, "value", "on_or_off_day", "On", "Off", by=["test_name", "kpi"]
-    ).select("test_name", "kpi", F.round("p_value", 4).alias("p_value"))
-    if pivot:
-        return res.groupBy("test_name").pivot("kpi", list(kpi_cols)).agg(
-            F.first("p_value")
-        )
-    return res
+    )
+    return res.select(
+        "test_name",
+        "kpi",
+        "n_a",
+        "n_b",
+        "u_stat",  # exact multiple of 0.5 — rounding would only corrupt it
+        F.round("z", 6).alias("z"),
+        F.round("p_value", 4).alias("p_value"),
+    )
 
 
-def run_tests(
-    orders: DataFrame, configs_df: DataFrame, kpi_cols: Sequence[str] = KPI_COLS
-) -> dict[str, DataFrame]:
-    """Full battery: returns {'per_order', 'totals', 'p_values'} DataFrames."""
+def run_tests(orders: DataFrame, configs_df: DataFrame) -> dict[str, DataFrame]:
+    """Full battery: returns {'per_order', 'totals', 'p_values'} DataFrames —
+    the reference's three output tables, each a projection of
+    :func:`kpi_metrics` or :func:`kpi_mwu` over the labeled orders."""
     labeled = label_orders(orders, configs_df)
+    metrics = kpi_metrics(labeled)
+    keys = ("test_name", "on_or_off_day")
     return {
-        "per_order": per_order_metrics(labeled, kpi_cols),
-        "totals": total_metrics(
-            labeled, [c for c in kpi_cols if c in MONETARY_KPI_COLS]
+        "per_order": metrics.select(*keys, *KPI_COLS),
+        "totals": metrics.select(
+            *keys, *[F.col(f"total_{c}").alias(c) for c in MONETARY_KPI_COLS]
         ),
-        "p_values": p_values(labeled, kpi_cols),
+        "p_values": kpi_mwu(labeled).select("test_name", "kpi", "p_value"),
     }

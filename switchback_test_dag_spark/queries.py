@@ -11,7 +11,6 @@ IEEE noise cannot flip the value hash.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from switchback_test_dag_spark.operators.domain import (
     ORACLE_FACT_CTE,
@@ -21,8 +20,9 @@ from switchback_test_dag_spark.operators.domain import (
 from switchback_test_dag_spark.pipeline import (
     KPI_COLS,
     MONETARY_KPI_COLS,
+    kpi_metrics,
+    kpi_mwu,
     label_orders,
-    p_values,
 )
 
 QUERIES: dict = {}
@@ -60,8 +60,6 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 from switchback_test_dag_spark.exact import (  # noqa: E402
     duck_micro_avg as _duck_micro_avg,
     duck_micro_sum as _duck_micro_sum,
-    spark_micro_avg as _spark_micro_avg,
-    spark_micro_sum as _spark_micro_sum,
 )
 
 _METRICS_ORACLE = (
@@ -76,17 +74,10 @@ _METRICS_ORACLE = (
 
 @query("sb_metrics", _METRICS_ORACLE)
 def sb_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 + A2 in one shuffle: 13-KPI per-order means AND the monetary-KPI sums
-    by (test, arm) — automated_...py:124-129. One groupBy computes both; the
-    reference's two separate .agg() passes collapse into one plan (the scans
-    and shuffle are identical, only the aggregate list differs). All 2-decimal
-    outputs use order-independent integer micro-unit arithmetic (see
-    ``_duck_micro_sum``)."""
-    labeled = _labeled(spark, sf_dir)
-    return labeled.groupBy("test_name", "on_or_off_day").agg(
-        *[_spark_micro_avg(c).alias(c) for c in KPI_COLS],
-        *[_spark_micro_sum(c).alias(f"total_{c}") for c in MONETARY_KPI_COLS],
-    )
+    """A1 + A2 in one shuffle: the battery's 13-KPI per-order means AND the
+    monetary-KPI sums by (test, arm) — ``pipeline.kpi_metrics`` over the
+    synthesized fact."""
+    return kpi_metrics(_labeled(spark, sf_dir))
 
 
 _MWU_CORE = (
@@ -165,29 +156,12 @@ FROM xc"""
 
 @query("sb_mwu_pvalues", _MWU_FULL_ORACLE)
 def sb_mwu_pvalues(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T1: the full distributed tie-corrected MWU table per (test, KPI) —
-    n_a/n_b/U/z (the rank/tie machinery) AND the production two-sided p-value
-    (flagship output). Oracled end-to-end: the normal tail is the A&S 7.1.26
-    polynomial on both engines (scipy parity of that polynomial is pinned
-    separately in tests/test_stats_reference.py)."""
-    from switchback_test_dag_spark.stats.mwu import mann_whitney_u
-    from switchback_test_dag_spark.stats.util import melt_kpis
-
-    long = melt_kpis(
-        _labeled(spark, sf_dir), KPI_COLS, id_cols=("test_name", "on_or_off_day")
-    )
-    res = mann_whitney_u(
-        long, "value", "on_or_off_day", "On", "Off", by=["test_name", "kpi"]
-    )
-    return res.select(
-        "test_name",
-        "kpi",
-        "n_a",
-        "n_b",
-        "u_stat",  # exact multiple of 0.5 — rounding would only corrupt it
-        F.round("z", 6).alias("z"),
-        F.round("p_value", 4).alias("p_value"),
-    )
+    """T1: the battery's full distributed tie-corrected MWU table per (test,
+    KPI) — ``pipeline.kpi_mwu``: n_a/n_b/U/z (the rank/tie machinery) AND the
+    production two-sided p-value (flagship output). Oracled end-to-end: the
+    normal tail is the A&S 7.1.26 polynomial on both engines (scipy parity of
+    that polynomial is pinned separately in tests/test_stats_reference.py)."""
+    return kpi_mwu(_labeled(spark, sf_dir))
 
 
 # Register the relational / document / vector query families (each module adds its

@@ -242,10 +242,11 @@ _SPAN_L = 4
 _TEXT_PIN_MAX_BYTES = 16 << 20
 
 
-def _local_parquet_bytes(sf_dir: str, name: str) -> int:
-    """On-disk bytes of a fixture table's parquet (file or directory), or a
-    value above every pin gate when the path is not local/stat-able — remote
-    storage means a real corpus, where the scan path is the right default."""
+def _local_parquet_bytes(sf_dir: str, name: str) -> float:
+    """On-disk bytes of a fixture table's parquet (file or directory), or
+    infinity when the path is not local/stat-able, so it passes no finite
+    pin gate — remote storage means a real corpus, where the scan path is
+    the right default."""
     import os as _os
 
     path = _os.path.join(sf_dir, f"{name}.parquet")
@@ -258,7 +259,7 @@ def _local_parquet_bytes(sf_dir: str, name: str) -> int:
             )
         return _os.path.getsize(path)
     except OSError:
-        return 1 << 62
+        return float("inf")
 
 
 _DUCK_SPANS = f"""

@@ -51,13 +51,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from switchback_test_dag_spark.io import TABLES, load_table
-from switchback_test_dag_spark.operators.domain import RAW_CONFIG_ROWS, raw_config_df
+from switchback_test_dag_spark.operators.domain import (
+    FACT_GROSS_PROFIT,
+    FACT_ORDER_TIME,
+    FACT_REVENUE,
+    FACT_SCHEME_ID,
+    RAW_CONFIG_ROWS,
+    raw_config_df,
+)
 from switchback_test_dag_spark.queries import query
-
-# per-row arithmetic shared with operators/domain.py (same IEEE ops in the
-# same order on both engines — see ORACLE_FACT_CTE's contract)
-_SECS = "((l_orderkey % 86400) * 2654435761 + l_linenumber * 97) % 86400"
-_HR_PAR = f"(({_SECS}) div 3600) % 2"
 
 _SPARK_SCRIPT = f"""
 DECLARE test_names ARRAY<STRING>;
@@ -114,29 +116,19 @@ SELECT n_name,
        CAST(n_nationkey div 5 AS INT) AS cy
 FROM nation;
 
--- Stage 6a: the big fact join with KPI formulas
+-- Stage 6a: the big fact join with KPI formulas (per-row arithmetic from
+-- operators/domain.py, the same strings synthesize_orders_fact projects)
 CREATE OR REPLACE TABLE elt_fact AS
 SELECT l_orderkey * 10 + l_linenumber AS order_id,
        concat('sb_test_', CAST(o_custkey % 2 AS STRING)) AS test_name,
        tg.target_group,
-       timestamp_seconds(CAST(unix_timestamp(CAST(o_orderdate AS TIMESTAMP)) + {_SECS} AS BIGINT)) AS order_placed_at_local,
+       {FACT_ORDER_TIME} AS order_placed_at_local,
        sn.n_name AS zone_name_vendor,
-       CAST(CASE WHEN l_orderkey % 97 = 0 THEN 999
-                 WHEN o_custkey % 2 = 0 THEN
-                   CASE WHEN {_HR_PAR} = 0 THEN 110 + (l_orderkey % 2) ELSE 120 END
-                 ELSE
-                   CASE WHEN {_HR_PAR} = 0 THEN 210 ELSE 220 + (l_orderkey % 2) END
-            END AS INT) AS scheme_id,
+       {FACT_SCHEME_ID} AS scheme_id,
        l_suppkey AS supp_key,
        l_extendedprice AS gfv_local,
-       (2.5 + l_quantity * 0.1) + l_extendedprice * l_discount
-         + CASE WHEN l_orderkey % 5 = 0 THEN 1.5 ELSE 0.0 END + 0.99
-         + CASE WHEN l_extendedprice >= 1000 THEN 0.0 ELSE 1000.0 - l_extendedprice END
-         AS revenue_local,
-       (2.5 + l_quantity * 0.1) + l_extendedprice * l_discount
-         + CASE WHEN l_orderkey % 5 = 0 THEN 1.5 ELSE 0.0 END + 0.99
-         + CASE WHEN l_extendedprice >= 1000 THEN 0.0 ELSE 1000.0 - l_extendedprice END
-         - (3.0 + l_quantity * 0.15) AS gross_profit_local
+       {FACT_REVENUE} AS revenue_local,
+       {FACT_GROSS_PROFIT} AS gross_profit_local
 FROM lineitem
 JOIN orders ON l_orderkey = o_orderkey
 JOIN elt_target_groups tg ON o_custkey = tg.c_custkey

@@ -22,12 +22,17 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    Defaults follow the driver environment: ``local[$SPARK_GRAFT_CPUS]`` with
-    shuffle partitions matching core count (not the 200 default, which produces
-    tiny-partition overhead at local scale; on a real cluster AQE coalescing
-    re-sizes at runtime anyway).
+    Defaults follow the host: ``local[N]`` with N = ``cpus``, else
+    ``$SPARK_GRAFT_CPUS``, else the cores this process may run on
+    (``os.sched_getaffinity``), and shuffle partitions matching that core
+    count (not the 200 default, which produces tiny-partition overhead at
+    local scale; on a real cluster AQE coalescing re-sizes at runtime anyway).
     """
-    cpus = int(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(
+        cpus
+        or os.environ.get("SPARK_GRAFT_CPUS")
+        or len(os.sched_getaffinity(0))
+    )
     shuffle_partitions = int(shuffle_partitions or cpus)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -598,7 +598,9 @@ def test_barrier_reroot_canary_fails_loud_on_fallback(spark):
         release_all()
 
 
-def test_doc_text_profile_text_pin_gate_paths_agree(spark, sf_dir):
+def test_doc_text_profile_text_pin_gate_paths_agree(
+    spark, sf_dir, monkeypatch, tmp_path
+):
     """The size gate (queries_documents._TEXT_PIN_MAX_BYTES) switches
     doc_text_profile between pinning the text column (small inputs) and
     per-branch pruned parquet scans (large inputs / unknown size). Both
@@ -607,15 +609,17 @@ def test_doc_text_profile_text_pin_gate_paths_agree(spark, sf_dir):
     import switchback_test_dag_spark.queries_documents as QD
     from switchback_test_dag_spark.caching import release_all
 
-    old = QD._TEXT_PIN_MAX_BYTES
     try:
-        QD._TEXT_PIN_MAX_BYTES = 1 << 62  # force the pin path
+        monkeypatch.setattr(QD, "_TEXT_PIN_MAX_BYTES", 1 << 62)  # pin path
+        # a path that cannot be statted never passes the gate, however high
+        assert not (
+            QD._local_parquet_bytes(str(tmp_path / "missing"), "documents")
+            <= QD._TEXT_PIN_MAX_BYTES
+        )
         pinned = {tuple(r) for r in QD.doc_text_profile(spark, sf_dir).collect()}
         release_all()
-        QD._TEXT_PIN_MAX_BYTES = 0  # force the scan path
+        monkeypatch.setattr(QD, "_TEXT_PIN_MAX_BYTES", 0)  # scan path
         scanned = {tuple(r) for r in QD.doc_text_profile(spark, sf_dir).collect()}
-        release_all()
     finally:
-        QD._TEXT_PIN_MAX_BYTES = old
         release_all()
     assert pinned == scanned and len(pinned) > 0
