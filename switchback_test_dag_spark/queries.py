@@ -44,8 +44,7 @@ def _labeled(spark: SparkSession, sf_dir: str) -> DataFrame:
     return label_orders(fact, domain_configs_df(spark))
 
 
-# The registry's headline query: bench.py runs it first (doubling as the
-# warmup plan family) and __spark_entry__.entry() returns it.
+# The registry's headline query: __spark_entry__.entry() returns it.
 FLAGSHIP = "sb_mwu_pvalues"
 
 

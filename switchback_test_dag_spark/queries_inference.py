@@ -281,9 +281,11 @@ def fpr_by_window_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     (T5, method_evaluation.ipynb:269-300)} — the reference's nested serial
     loops, for all four of its candidate methods, as ONE plan. The window
     dimension is exploded onto the fact scan, the single fact shuffle reduces
-    to per-(window, bucket) moments, the seed dimension + seeded arm ride
-    that tiny table, and ALL eight (method, metric) statistics come out of a
-    SINGLE (window, seed) aggregation over it
+    to per-(window, bucket) moments, a seed range partitioned over the
+    session's cores is crossed with that tiny table (broadcast) and attaches
+    the seeded arm, and ALL eight (method, metric) statistics come out of
+    ONE aggregation over it — nine sums per (window, seed, arm), pivoted to
+    one row per (window, seed)
     (stats/permutation.fused_sweep_stats: order-t / bucket-t / CRSE with the
     meat term expanded per arm, effect injection as closed-form moment
     algebra on the same sums) — the seeded frame is consumed once, so
@@ -304,9 +306,10 @@ def fpr_by_window_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = F.expr("ts_ns div (window_minutes * 60000000000)")
     moments = P.bucket_moments(exploded, "value", bucket, by=["window_minutes"])
     # the seeded frame is consumed ONCE: fused_sweep_stats folds all four
-    # methods × {null, injected} into a single (window, seed) aggregation
-    # (see its docstring for the moment algebra), so the fact pass + md5 arm
-    # assignment run exactly once with no cache materialization at the
+    # methods × {null, injected} into one aggregation by (window, seed, arm),
+    # pivoted to (window, seed) (see its docstring for the moment algebra),
+    # so the fact pass + md5 arm assignment — spread over every core by
+    # with_seeds — run exactly once with no cache materialization at the
     # windows × buckets × seeds grain. What IS pinned is the tiny stats
     # frame (windows × seeds rows): the threshold percentiles and the rate
     # aggregation both read it.
@@ -385,11 +388,13 @@ def power_ci_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     +3.0 effect (exact moment algebra — no second fact pass) and CI coverage
     under the null (≈ 95% at the normal critical value), one row."""
     ev = load_table(spark, sf_dir, "events")
-    # one fact pass, one seeded aggregation: fused_sweep_stats yields the
-    # bucket-t statistic per seed for BOTH the injected (power) and the null
-    # (coverage) hypotheses, so the power and coverage halves are two
-    # aggregate columns over the same per-seed frame — no pinned moments, no
-    # second seeded expansion, no cross join of branch results
+    # one fact pass, one seeded aggregation (the seeds partitioned over the
+    # cores, the moment table broadcast to them, per-arm sums pivoted per
+    # seed): fused_sweep_stats yields the bucket-t statistic per seed for
+    # BOTH the injected (power) and the null (coverage) hypotheses, so the
+    # power and coverage halves are two aggregate columns over the same
+    # per-seed frame — no pinned moments, no second seeded expansion, no
+    # cross join of branch results
     m = P.bucket_moments(ev, "value", F.expr(_SPARK_BUCKET))
     stats = P.fused_sweep_stats(P.with_seeds(m, N_SEEDS), EFFECT)
     covered = (

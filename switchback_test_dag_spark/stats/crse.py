@@ -30,7 +30,8 @@ from switchback_test_dag_spark.stats.distributions import t_two_sided_p_udf
 def crse_from_cluster_moments(seeded: DataFrame, by: Sequence[str] = ()) -> DataFrame:
     """CR1 cluster-robust OLS per (by, seed) closed-form from the seeded
     per-cluster moment table (``permutation.with_seeds`` output: one row per
-    (by, bucket, seed) with n, s1, s2, arm).
+    (by, bucket, seed) with n, s1, s2, arm; the seeds are partitioned over the
+    session's cores and the bucket moments broadcast to them).
 
     In a switchback the cluster IS the time bucket, so the treatment x is
     constant within a cluster and the per-cluster score sum collapses to pure

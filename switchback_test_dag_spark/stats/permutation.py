@@ -11,8 +11,9 @@ Spark-first design — the seed dimension lives in the *plan*, not in a loop:
 1. ONE pass over the fact table reduces it to per-(by, bucket) moments
    (``n, Σy, Σy²``). At 100 TB this is the only big shuffle, and it is the same
    aggregation the switchback analysis already needs.
-2. The tiny moment table is crossed with ``explode(sequence(0, n_seeds−1))`` —
-   buckets × seeds rows (e.g. 1k × 1k = 1M), trivially parallel.
+2. A seed range partitioned over the session's cores is crossed with the
+   broadcast moment table — buckets × seeds rows (e.g. 1k × 1k = 1M), each
+   core expanding its own slice of seeds.
 3. The seeded arm of (bucket, seed) is a **portable deterministic hash**:
    ``substring(md5(concat(bucket, '|', seed)), 1, 4) < '8000'`` — exactly
    Bernoulli(p) for a 4-hex-digit threshold, reproducible on any cluster size
@@ -21,7 +22,8 @@ Spark-first design — the seed dimension lives in the *plan*, not in a loop:
    per *bucket×seed*, not per order — irrelevant after step 1).
 4. Every statistic (permutation mean-difference, bucket-level t, injected-effect
    power, CI coverage) is closed-form column math over those moments — one
-   ``groupBy(seed)`` on step-2's output computes all N iterations at once.
+   aggregation of step 2's output by seed (by (seed, arm) first, then pivoted,
+   in ``fused_sweep_stats``) computes all N iterations at once.
 
 Effect injection (power) is exact on moments: adding δ to every treated order
 shifts ``Σy`` by δ·n and ``Σy²`` by 2δΣy + δ²n.
@@ -89,11 +91,27 @@ def bucket_moments(
 
 
 def with_seeds(moments: DataFrame, n_seeds: int, p: float = 0.5) -> DataFrame:
-    """Step 2+3: cross the moment table with the seed range and attach the
-    seeded arm. Output grain: (by, bucket, seed, arm)."""
-    return moments.withColumn(
-        "seed", F.explode(F.sequence(F.lit(0), F.lit(n_seeds - 1)))
-    ).withColumn("arm", portable_arm("bucket", "seed", p))
+    """Step 2+3: cross the seed range with the moment table and attach the
+    seeded arm. Output grain: (by, bucket, seed, arm), columns
+    ``(*moments.columns, seed int, arm)``.
+
+    The seeds are the partitioned side — ``min(n_seeds, defaultParallelism)``
+    slices of ``range(n_seeds)`` — and the moment table is broadcast to each
+    of them, so every core expands and hashes its own seeds. (The moment table
+    is tiny, so AQE coalesces it to one or two partitions; expanding the seeds
+    onto it would run the whole buckets × seeds frame in that many tasks.)
+    Each seed lives in exactly one partition, its buckets in moment-table
+    order."""
+    if n_seeds < 1:
+        raise ValueError(f"n_seeds must be >= 1, got {n_seeds}")
+    spark = moments.sparkSession
+    slices = min(n_seeds, spark.sparkContext.defaultParallelism)
+    seeds = spark.range(n_seeds, numPartitions=slices).select(
+        F.col("id").cast("int").alias("seed")
+    )
+    return seeds.crossJoin(F.broadcast(moments)).select(
+        *moments.columns, "seed", portable_arm("bucket", "seed", p).alias("arm")
+    )
 
 
 def permutation_mean_diffs(
@@ -249,6 +267,44 @@ def bucket_level_t(seeded: DataFrame, by: Sequence[str] = ()) -> DataFrame:
     return _bucket_level_t(seeded, list(by))
 
 
+def _arm_sums(seeded: DataFrame, by: list[str]) -> DataFrame:
+    """Per-(by, seed) arm sums of the bucket moments for ``fused_sweep_stats``:
+    ``N, G`` plus ``{n, s1, s2, B, bm1, bm2, q, r, w}_{on,off}``.
+
+    Nine unconditional sums per seeded row at the (by, seed, arm) grain, then
+    the <=2 arm rows of each (by, seed) pivoted into *_on / *_off columns. A
+    missing arm gives NULL sums and a bucket count ``B`` of 0."""
+    c = F.col
+    bm = c("s1") / c("n")
+    sums = {
+        "n": c("n"),
+        "s1": c("s1"),
+        "s2": c("s2"),
+        "bm1": bm,
+        "bm2": bm * bm,
+        "q": c("s1") * c("s1"),
+        "r": c("s1") * c("n"),
+        "w": c("n").cast("double") * c("n"),
+    }
+    arms = seeded.groupBy(*by, "seed", "arm").agg(
+        F.count(F.lit(1)).alias("B"),
+        *[F.sum(e).alias(k) for k, e in sums.items()],
+    )
+    on_ = c("arm") == ON
+    return arms.groupBy(*by, "seed").agg(
+        F.sum("n").alias("N"),
+        F.sum("B").alias("G"),
+        *[
+            F.sum(F.when(cond, c(k))).alias(f"{k}_{side}")
+            for side, cond in (("on", on_), ("off", ~on_))
+            for k in ["B", *sums]
+        ],
+    ).withColumns(
+        {"B_on": F.coalesce(c("B_on"), F.lit(0)),
+         "B_off": F.coalesce(c("B_off"), F.lit(0))}
+    )
+
+
 def fused_sweep_stats(
     seeded: DataFrame, effect: float, by: Sequence[str] = ()
 ) -> DataFrame:
@@ -261,7 +317,9 @@ def fused_sweep_stats(
     score-sum re-join) re-reads the (by, bucket, seed) frame once per branch
     — ~10 passes at the sweep's grain. Every one of those statistics is
     closed-form in per-(by, seed, arm) SUMS of the bucket moments, so one
-    groupBy computing 18 aggregate columns replaces all of them:
+    pass computing nine unconditional sums per seeded row at the
+    (by, seed, arm) grain, pivoted to one row per (by, seed)
+    (``_arm_sums``), replaces all of them:
 
     - **order-level t** (T2): per-arm ``n, Σs1, Σs2`` — the exact
       ``order_level_t`` formulas.
@@ -290,30 +348,12 @@ def fused_sweep_stats(
     operators' validity guards. Differential-tested against the composed
     branches in tests/test_inference.py."""
     by = list(by)
-    on_ = F.col("arm") == ON
+    return _sweep_stats(_arm_sums(seeded, by), effect, by)
+
+
+def _sweep_stats(g: DataFrame, effect: float, by: list[str]) -> DataFrame:
+    """The closed-form statistics of ``fused_sweep_stats`` over its arm sums."""
     d = float(effect)
-
-    def per_arm(expr: Column, name: str) -> list[Column]:
-        return [
-            F.sum(F.when(on_, expr)).alias(f"{name}_on"),
-            F.sum(F.when(~on_, expr)).alias(f"{name}_off"),
-        ]
-
-    bm = F.col("s1") / F.col("n")
-    g = seeded.groupBy(*by, "seed").agg(
-        F.sum("n").alias("N"),
-        F.count(F.lit(1)).alias("G"),
-        *per_arm(F.col("n"), "n"),
-        *per_arm(F.col("s1"), "s1"),
-        *per_arm(F.col("s2"), "s2"),
-        F.count(F.when(on_, F.lit(1))).alias("B_on"),
-        F.count(F.when(~on_, F.lit(1))).alias("B_off"),
-        *per_arm(bm, "bm1"),
-        *per_arm(bm * bm, "bm2"),
-        *per_arm(F.col("s1") * F.col("s1"), "q"),
-        *per_arm(F.col("s1") * F.col("n"), "r"),
-        *per_arm(F.col("n").cast("double") * F.col("n"), "w"),
-    )
     c = F.col
 
     def order_t(s1_on: Column, s2_on: Column) -> tuple[Column, Column]:

@@ -353,3 +353,74 @@ def test_fused_sweep_crse_meat_cancellation_clamped(spark):
         v = r[col]
         assert v is not None and not math.isnan(v), f"{col} must not be NaN"
         assert abs(v) < 1e-3  # exact meat is ~0 here, so SE ≈ 0
+
+
+def test_with_seeds_rejects_nonpositive_n_seeds(spark):
+    """Zero seeds is an error, not a silent simulation: Spark's
+    ``sequence(0, -1)`` counts down, so an explode-based expansion would have
+    run seeds {-1, 0} for n_seeds=0."""
+    m = spark.createDataFrame([(0, 1, 1.0, 1.0)], "bucket long, n long, s1 double, s2 double")
+    for n in (0, -1):
+        with pytest.raises(ValueError, match="n_seeds"):
+            P.with_seeds(m, n)
+
+
+def test_with_seeds_partitioned_and_equal_to_explode(spark, events):
+    """The seed range is spread over the session's cores, and the seeded frame
+    is the explode(sequence) expansion of the moment table: same schema, same
+    (bucket, seed, arm, n, s1, s2) rows."""
+    n_seeds = 200
+    m = P.bucket_moments(events, "value", F.expr(BUCKET))
+    seeded = P.with_seeds(m, n_seeds)
+    ref = m.withColumn(
+        "seed", F.explode(F.sequence(F.lit(0), F.lit(n_seeds - 1)))
+    ).withColumn("arm", P.portable_arm("bucket", "seed"))
+    parallelism = spark.sparkContext.defaultParallelism
+    assert seeded.rdd.getNumPartitions() == min(n_seeds, parallelism)
+    assert seeded.schema == ref.schema
+    cols = ["bucket", "seed", "arm", "n", "s1", "s2"]
+    got, exp = seeded.select(cols), ref.select(cols)
+    assert got.count() == exp.count() > 0
+    assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
+
+
+def _sum_when_arm_sums(seeded):
+    """The single-pass 26-column ``sum(when(arm ...))`` aggregate that
+    ``fused_sweep_stats`` computed before it pre-aggregated by arm."""
+    on_ = F.col("arm") == P.ON
+
+    def per_arm(expr, name):
+        return [
+            F.sum(F.when(on_, expr)).alias(f"{name}_on"),
+            F.sum(F.when(~on_, expr)).alias(f"{name}_off"),
+        ]
+
+    bm = F.col("s1") / F.col("n")
+    return seeded.groupBy("seed").agg(
+        F.sum("n").alias("N"),
+        F.count(F.lit(1)).alias("G"),
+        *per_arm(F.col("n"), "n"),
+        *per_arm(F.col("s1"), "s1"),
+        *per_arm(F.col("s2"), "s2"),
+        F.count(F.when(on_, F.lit(1))).alias("B_on"),
+        F.count(F.when(~on_, F.lit(1))).alias("B_off"),
+        *per_arm(bm, "bm1"),
+        *per_arm(bm * bm, "bm2"),
+        *per_arm(F.col("s1") * F.col("s1"), "q"),
+        *per_arm(F.col("s1") * F.col("n"), "r"),
+        *per_arm(F.col("n").cast("double") * F.col("n"), "w"),
+    )
+
+
+def test_fused_sweep_preaggregation_exact(events):
+    """Pre-aggregating by (seed, arm) and pivoting gives EXACTLY (==, not
+    approx) the statistics of the 26-column sum(when) form, including the
+    one-arm seeds of p=1.0 / p=0.0."""
+    effect = 7.5
+    m = P.bucket_moments(events, "value", F.expr(BUCKET))
+    for p in (0.5, 1.0, 0.0):
+        seeded = P.with_seeds(m, 40, p=p)
+        got = sorted(P.fused_sweep_stats(seeded, effect).collect())
+        exp = sorted(P._sweep_stats(_sum_when_arm_sums(seeded), effect, []).collect())
+        assert len(got) == 40
+        assert got == exp, p

@@ -307,17 +307,22 @@ def test_cleaning_pipeline_plan_is_jvm_and_broadcasts_eval(spark, sf_dir):
 
 # Queries whose plan CONTAINS a BroadcastNestedLoopJoin by design: each is a
 # bounded scalar attach — crossJoin(broadcast(X)) where X is a 1-row (or
-# metadata-bounded) aggregate — which is linear in the probe side. The
-# forbidden shape is an UNBOUNDED nested-loop (both sides data-sized); any
-# query not on this list growing a BNLJ is a defect (round 9 caught exactly
-# that in dsir_select's constant-key max attach, since fixed).
+# metadata-bounded) aggregate — which is linear in the probe side, or the
+# seeded simulation's seed cross (stats/permutation.with_seeds: a
+# range(n_seeds) stream side × the broadcast per-bucket moment table, whose
+# output IS the seeds × buckets frame; the stream side is the constant seed
+# count, never data-sized). The forbidden shape is an UNBOUNDED nested-loop
+# (both sides data-sized); any query not on this list growing a BNLJ is a
+# defect (round 9 caught exactly that in dsir_select's constant-key max
+# attach, since fixed).
 _SCALAR_ATTACH_BNLJ = {
     "emb_near_dup_pairs",   # query vector / threshold scalar (vectors/similarity.py)
     "emb_cosine_topk",      # broadcast query-vector frame
     "emb_lsh_topk",         # broadcast query-vector frame
     "emb_ivf_topk",         # broadcast query-vector + probed-centroid set
-    "perm_dist_thresholds", # global observed-stat scalar (queries_inference.py:123)
-    "power_ci_sim",         # global power scalar attach (queries_inference.py:410)
+    "perm_dist_thresholds", # global observed-stat scalar (queries_inference.py:123) + seed cross
+    "power_ci_sim",         # seed cross (with_seeds)
+    "fpr_by_window_size",   # seed cross (with_seeds)
     "crse_beta_se",         # no-group global moments attach (stats/crse.py:132,149)
     "events_scalar_suite",  # global min-max bounds attach (operators/relational.py:324)
     "keep_drop_flag_clean", # 16MB-capped combo-string scalar (documented exhibit)

@@ -4,7 +4,7 @@
 The driver ships fixtures up to sf0.1; every scale claim in SCALE.md beyond
 that is extrapolated. This tool manufactures an sf1-equivalent directory by
 replicating the sf0.1 FACT tables K times with join-consistent key offsets,
-so `bench.py` can produce a real 10× data point:
+so `tools/scale_evidence.py` can measure a real 10× data point:
 
 - customer/supplier/part scale with K exactly as TPC-H does (sf1 = 150k
   customers, not 15k customers with 10× orders each): every key column and

@@ -56,6 +56,79 @@ from switchback_test_dag_spark.session import get_spark  # noqa: E402
 from switchback_test_dag_spark.text import dedup as TD  # noqa: E402
 
 
+def _host_probe(trials: int = 2) -> dict:
+    """Host environment control: this box's memory subsystem has shown
+    10-100x transient swings on identical plans (SCALE.md round-7 audits), so
+    every recorded measurement carries its own environment control — min
+    times for a fixed BLAS matmul and a fixed 200 MB first-touch allocation.
+    Healthy ballpark: matmul ~0.01 s, alloc ~0.1 s."""
+    import numpy as np
+
+    mm, al = [], []
+    for _ in range(trials):
+        a = np.random.rand(4000, 64)
+        t0 = time.monotonic()
+        s = a @ a.T
+        mm.append(time.monotonic() - t0)
+        t0 = time.monotonic()
+        buf = np.ones(200_000_000 // 8)
+        al.append(time.monotonic() - t0)
+        del s, buf
+    return {"matmul_s": round(min(mm), 3), "alloc200mb_s": round(min(al), 3)}
+
+
+def _make_cpu_reader(spark):
+    """Per-stage executor CPU time from the UI REST status store (CPU consumed
+    by a plan's tasks is a property of the plan + data, not of the host's
+    wall-clock mood). Returns a zero-arg callable yielding
+    {(stageId, attemptId): cpu_ns} over COMPLETED stages, or None when the UI
+    is off. A measurement's CPU is the delta of NEW stage ids between two
+    reads, so old-stage eviction cannot perturb it.
+
+    executorCpuTime counts JVM task CPU only — Python/Arrow worker CPU is
+    outside it. The status store is updated ASYNCHRONOUSLY from the event
+    bus, so snapshots must go through ``_stable_cpu_read``."""
+    import urllib.request
+
+    ui = spark.sparkContext.uiWebUrl
+    if not ui:
+        return None
+    app_id = spark.sparkContext.applicationId
+    url = f"{ui}/api/v1/applications/{app_id}/stages?status=complete"
+
+    def read():
+        try:
+            with urllib.request.urlopen(url, timeout=10) as resp:
+                stages = json.load(resp)
+            return {
+                (s["stageId"], s["attemptId"]): s.get("executorCpuTime", 0)
+                for s in stages
+            }
+        except Exception:  # noqa: BLE001 - CPU metrics are best-effort
+            return None
+
+    return read
+
+
+def _stable_cpu_read(cpu_read, tries: int = 5, sleep_s: float = 0.15):
+    """Take a status-store snapshot only once the completed-stage-id set has
+    stopped moving (two consecutive reads agree), bounding the event-bus lag
+    described in ``_make_cpu_reader``. A read that never stabilizes within
+    ``tries`` returns the last view (best-effort)."""
+    cur = cpu_read()
+    for _ in range(tries):
+        if cur is None:
+            return None
+        time.sleep(sleep_s)
+        nxt = cpu_read()
+        if nxt is None:
+            return cur
+        if set(nxt) == set(cur):
+            return nxt
+        cur = nxt
+    return cur
+
+
 def measure_components(spark, sf_dir: str) -> dict:
     docs = load_table(spark, sf_dir, "documents")
     pairs = TD.minhash_lsh_pairs(
@@ -362,11 +435,12 @@ FROM sgagg JOIN dsagg USING (source) JOIN dsselagg USING (source)
 
 def measure_minhash_oph(spark, sf_dir: str) -> dict:
     """Classic vs one-permutation MinHash on a LONG-DOCUMENT corpus:
-    executor CPU per scheme (the box-independent number, via bench.py's
-    REST status-store reader) and pair-set equality of the verified output.
-    This is the machine-readable twin of the round-9 SCALE.md prose claim —
-    OPH is the documented long-document scale path precisely because the
-    classic signature's O(|shingles|·k) mixing dominates there.
+    executor CPU per scheme (the box-independent number, via the REST
+    status-store reader ``_make_cpu_reader``) and pair-set equality of the
+    verified output. This is the machine-readable twin of the round-9
+    SCALE.md prose claim — OPH is the documented long-document scale path
+    precisely because the classic signature's O(|shingles|·k) mixing
+    dominates there.
 
     The corpus is built DETERMINISTICALLY from the scale directory's
     documents: consecutive id-groups concatenated in id order into ~3000-
@@ -375,7 +449,6 @@ def measure_minhash_oph(spark, sf_dir: str) -> dict:
     Both schemes run on the SAME materialized corpus; each scheme is run
     twice and the WARM run is recorded (first run pays parquet/codegen
     warmup)."""
-    from bench import _make_cpu_reader, _stable_cpu_read
     from switchback_test_dag_spark.caching import release_all
 
     # 50 consecutive sf1 docs ≈ 3000 tokens — the corpus the docstring and
@@ -920,8 +993,6 @@ _MEASURES = {
 
 
 def main() -> None:
-    from bench import _host_probe  # the same probe the BENCH artifacts embed
-
     ap = argparse.ArgumentParser()
     ap.add_argument(
         "what", nargs="*", default=["components", "emb_lsh"],
@@ -938,7 +1009,7 @@ def main() -> None:
         cpus=32,
         shuffle_partitions=32,
         # the UI powers the REST status store the minhash_oph measurement
-        # reads executor CPU from (same reader as bench.py)
+        # reads executor CPU from (``_make_cpu_reader``)
         extra_conf={
             "spark.ui.enabled": "true",
             "spark.ui.port": "0",
