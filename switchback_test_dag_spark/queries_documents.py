@@ -1,7 +1,7 @@
 """Document / embedding operator queries (training-data pipeline extensions:
-dedup, similarity search, text analysis, multimodal plumbing), each with a
-DuckDB oracle where SQL-expressible. Registered into ``queries.QUERIES`` on
-import (see bottom of ``queries.py``).
+dedup, similarity search, text analysis), each with a DuckDB oracle where
+SQL-expressible. Registered into ``queries.QUERIES`` on import (see bottom of
+``queries.py``).
 
 Oracle parity notes:
 - tokenization is pinned on both engines as: lowercase → split on ``\\s+`` →
@@ -25,7 +25,6 @@ from switchback_test_dag_spark.plans import packing as PK
 from switchback_test_dag_spark.plans import sampling as PS
 from switchback_test_dag_spark.queries import query
 from switchback_test_dag_spark.text import analysis as TA
-from switchback_test_dag_spark.text import decontaminate as DC
 from switchback_test_dag_spark.text import dedup as TD
 from switchback_test_dag_spark.text import spans as SP
 from switchback_test_dag_spark.vectors import similarity as VS
@@ -948,751 +947,6 @@ def emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------- #
-# multimodal plumbing
-# --------------------------------------------------------------------------- #
-
-
-_DUCK_BMP_AGG = """
-       SELECT source, CAST(count(*) AS BIGINT) AS n_media,
-              CAST(sum(54 + ((3 * w + 3) // 4) * 4 * h) AS BIGINT) AS total_bytes,
-              CAST(max(54 + ((3 * w + 3) // 4) * 4 * h) AS BIGINT) AS max_bytes,
-              CAST(sum(w * h) AS BIGINT) AS total_px,
-              CAST(sum(sr) AS BIGINT) AS sum_r,
-              CAST(sum(sg) AS BIGINT) AS sum_g,
-              CAST(sum(sb) AS BIGINT) AS sum_b,
-              CAST(sum(ws) AS BIGINT) AS wsum,
-              round(CAST(sum(sr) + sum(sg) + sum(sb) AS DOUBLE)
-                    / CAST(sum(w * h) * 3 AS DOUBLE), 6) AS mean_px
-       FROM bmp_per GROUP BY source"""
-
-_DUCK_BMP_PER = """bmp_dims AS (
-         SELECT doc_id, source, 8 + doc_id % 9 AS w, 6 + doc_id % 5 AS h
-         FROM documents
-       ), bmp_px AS (
-         SELECT d.doc_id, d.source, d.w, d.h, r.r, c.c, k.k,
-                (d.doc_id * 7 + r.r * 5 + c.c * 3 + k.k * 11) % 256 AS v
-         FROM bmp_dims d,
-              unnest(generate_series(0, d.h - 1)) AS r(r),
-              unnest(generate_series(0, d.w - 1)) AS c(c),
-              unnest(generate_series(0, 2)) AS k(k)
-       ), bmp_per AS (
-         SELECT doc_id, any_value(source) AS source,
-                any_value(w) AS w, any_value(h) AS h,
-                sum(CASE WHEN k = 0 THEN v ELSE 0 END) AS sr,
-                sum(CASE WHEN k = 1 THEN v ELSE 0 END) AS sg,
-                sum(CASE WHEN k = 2 THEN v ELSE 0 END) AS sb,
-                sum(v * ((r * w + c) * 3 + k + 1)) AS ws
-         FROM bmp_px GROUP BY doc_id
-       )"""
-
-
-def _fanout_docs(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Right-size the per-document codec stages: the documents parquet is
-    compact (text compresses well), so `maxPartitionBytes` yields only a
-    handful of scan splits — 1 at sf0.1, 8 at the 100x point — and the
-    CPU-heavy Python encode/decode stages inherit that, idling most cores
-    (measured: media_decode_suite ran ~11-way effective on 32 cores at 100x).
-    Payload-byte budgets (`repartition_by_bytes`) are the wrong dial BEFORE
-    synthesis when rows are still tiny ids; instead target ~500 docs per
-    Arrow task, clamped to 4x the core count (each Python task costs ~20 ms
-    of scheduling/Arrow setup locally, so a fixed 4x-cores fan-out measurably
-    HURTS small inputs — 0.9 s -> 3.1 s on the sf0.1 bmp branch). The row
-    count is one cheap metadata-backed job; the shuffled frame is a 2-column
-    sliver."""
-    target = min(
-        df.count() // 500 + 1, spark.sparkContext.defaultParallelism * 4
-    )
-    return df.repartition(int(target)) if target > 1 else df
-
-
-def _suite_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The (doc_id, source) sliver every per-format branch fans out over.
-    ``media_decode_suite`` builds it ONCE and passes it to all eight
-    branches: the row-count job inside ``_fanout_docs`` and the documents
-    scan otherwise re-ran once per branch — nine near-identical count jobs
-    per suite evaluation for the same number (guide §1.2: don't compute
-    things you throw away). Branch helpers keep the ``docs=None`` default so
-    they stay independently callable."""
-    return _fanout_docs(
-        spark, load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    )
-
-
-def _media_bmp_agg(spark: SparkSession, sf_dir: str, docs: DataFrame | None = None) -> DataFrame:
-    """The multimodal component's REAL image codec path (superseding the
-    payload-byte-accounting query, whose octet_length aggregates it absorbs):
-    per-document BMP payloads (canonical 24-bit bottom-up BI_RGB bytes with
-    per-id varying dimensions — multimodal/bmp.py) are decoded by the real
-    DIB parser inside Arrow-batched ``mapInPandas``, yielding integer-exact
-    dimension / byte-size / channel-sum / position-weighted-checksum features,
-    aggregated per source. The oracle never sees bytes: it recomputes the same
-    features from the closed-form pixel pattern AND the container-size formula
-    ``54 + stride·h`` (stride = 4-byte-padded 3·w), so a parse bug anywhere —
-    header offsets, row stride, bottom-up flip, BGR order — breaks the match.
-    All features are exact integers until the final mean, so shuffle order
-    cannot move any value."""
-    from switchback_test_dag_spark.multimodal.media import (
-        synth_decode_bmp_features,
-    )
-
-    docs = _suite_docs(spark, sf_dir) if docs is None else docs
-    feats = synth_decode_bmp_features(docs, "doc_id")
-    joined = feats.join(docs, feats.media_id == docs.doc_id)
-    return joined.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_media"),
-        F.sum("n_bytes").cast("long").alias("total_bytes"),
-        F.max("n_bytes").cast("long").alias("max_bytes"),
-        F.sum(F.col("width").cast("long") * F.col("height")).cast("long").alias(
-            "total_px"
-        ),
-        F.sum("sum_r").cast("long").alias("sum_r"),
-        F.sum("sum_g").cast("long").alias("sum_g"),
-        F.sum("sum_b").cast("long").alias("sum_b"),
-        F.sum("wsum").cast("long").alias("wsum"),
-        F.round(
-            (F.sum("sum_r") + F.sum("sum_g") + F.sum("sum_b")).cast("double")
-            / (F.sum(F.col("width").cast("long") * F.col("height")) * 3).cast(
-                "double"
-            ),
-            6,
-        ).alias("mean_px"),
-    )
-
-
-_DUCK_WAV_PER = """wav_s AS (
-         SELECT d.doc_id, d.source,
-                ((d.doc_id * 31 + t.i * 17) % 65536) - 32768 AS samp
-         FROM documents d, unnest(generate_series(0, 255)) AS t(i)
-       ), wav_per AS (
-         SELECT doc_id, any_value(source) AS source, count(*) AS n,
-                sum(samp * samp) AS ss, max(abs(samp)) AS pk
-         FROM wav_s GROUP BY doc_id
-       )"""
-
-_DUCK_WAV_AGG = """
-       SELECT source, CAST(count(*) AS BIGINT) AS n_media,
-              CAST(sum(n) AS BIGINT) AS total_samples,
-              round(sqrt(CAST(sum(ss) AS DOUBLE) / CAST(sum(n) AS DOUBLE)), 6) AS rms,
-              CAST(max(pk) AS INTEGER) AS max_peak,
-              CAST(sum(n) * 1000 // 8000 AS BIGINT) AS total_duration_ms
-       FROM wav_per GROUP BY source"""
-
-
-def _media_wav_agg(spark: SparkSession, sf_dir: str, docs: DataFrame | None = None) -> DataFrame:
-    """The multimodal component's REAL codec path: per-document WAV payloads
-    (spec-conformant RIFF PCM16 bytes, stdlib-``wave``-readable — see
-    multimodal/wav.py) are decoded by the chunk-walking parser inside
-    Arrow-batched ``mapInPandas``, yielding integer-exact energy/peak/count
-    features, aggregated per source. The oracle never sees bytes: it recomputes
-    the same features from the closed-form waveform generator, so a parse bug
-    anywhere (header arithmetic, chunk offsets, endianness) breaks the match.
-    Features are exact integers until the final rms sqrt, so shuffle order
-    cannot move any value."""
-    from switchback_test_dag_spark.multimodal.media import (
-        synth_decode_wav_features,
-    )
-
-    docs = _suite_docs(spark, sf_dir) if docs is None else docs
-    feats = synth_decode_wav_features(
-        docs, "doc_id", n_samples=256, sample_rate=8000
-    )
-    joined = feats.join(docs, feats.media_id == docs.doc_id)
-    total_n = F.sum("n_samples")
-    return joined.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_media"),
-        total_n.cast("long").alias("total_samples"),
-        F.round(
-            F.sqrt(F.sum("sum_sq").cast("double") / total_n.cast("double")), 6
-        ).alias("rms"),
-        F.max("peak").alias("max_peak"),
-        F.expr("(sum(n_samples) * 1000) div 8000").cast("long").alias(
-            "total_duration_ms"
-        ),
-    )
-
-
-_DUCK_PNG_PER = """png_dims AS (
-         SELECT doc_id, source, 5 + doc_id % 11 AS w, 5 + doc_id % 7 AS h
-         FROM documents
-       ), png_px AS (
-         SELECT d.doc_id, d.source, d.w, d.h, r.r, c.c, k.k,
-                (d.doc_id * 7 + r.r * 5 + c.c * 3 + k.k * 11) % 256 AS v
-         FROM png_dims d,
-              unnest(generate_series(0, d.h - 1)) AS r(r),
-              unnest(generate_series(0, d.w - 1)) AS c(c),
-              unnest(generate_series(0, 2)) AS k(k)
-       ), png_per AS (
-         SELECT doc_id, any_value(source) AS source,
-                any_value(w) AS w, any_value(h) AS h,
-                sum(CASE WHEN k = 0 THEN v ELSE 0 END) AS sr,
-                sum(CASE WHEN k = 1 THEN v ELSE 0 END) AS sg,
-                sum(CASE WHEN k = 2 THEN v ELSE 0 END) AS sb,
-                sum(v * ((r * w + c) * 3 + k + 1)) AS ws
-         FROM png_px GROUP BY doc_id
-       )"""
-
-_DUCK_PNG_AGG = """
-       SELECT source, CAST(count(*) AS BIGINT) AS n_media,
-              CAST(sum(w * h) AS BIGINT) AS total_px,
-              CAST(sum(sr) AS BIGINT) AS sum_r,
-              CAST(sum(sg) AS BIGINT) AS sum_g,
-              CAST(sum(sb) AS BIGINT) AS sum_b,
-              CAST(sum(ws) AS BIGINT) AS wsum,
-              round(CAST(sum(sr) + sum(sg) + sum(sb) AS DOUBLE)
-                    / CAST(sum(w * h) * 3 AS DOUBLE), 6) AS mean_px
-       FROM png_per GROUP BY source"""
-
-
-def _media_png_agg(spark: SparkSession, sf_dir: str, docs: DataFrame | None = None) -> DataFrame:
-    """The multimodal component's entropy-coded image path: per-document PNG
-    payloads (real 8-bit truecolor files, stdlib-zlib DEFLATE, scanline
-    filters cycling through all five types — multimodal/png.py) are decoded
-    by the chunk-walking CRC-verifying parser inside Arrow-batched
-    ``mapInPandas``, yielding the same integer-exact pixel features as
-    :func:`_media_bmp_agg`, aggregated per source. The oracle recomputes
-    the features from the closed-form pixel pattern: a bug anywhere in the
-    codec — chunk offsets, CRC math, inflate framing, any of the five filter
-    inversions (heights ≥5 guarantee each appears in every payload) —
-    changes a sum and breaks the match. Unlike BMP, the container size is
-    compression-dependent, so byte-size aggregates are deliberately not part
-    of this contract (pixel math is). All features are exact integers until
-    the final mean, so shuffle order cannot move any value."""
-    from switchback_test_dag_spark.multimodal.media import (
-        synth_decode_png_features,
-    )
-
-    docs = _suite_docs(spark, sf_dir) if docs is None else docs
-    feats = synth_decode_png_features(docs, "doc_id")
-    joined = feats.join(docs, feats.media_id == docs.doc_id)
-    return joined.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_media"),
-        F.sum(F.col("width").cast("long") * F.col("height")).cast("long").alias(
-            "total_px"
-        ),
-        F.sum("sum_r").cast("long").alias("sum_r"),
-        F.sum("sum_g").cast("long").alias("sum_g"),
-        F.sum("sum_b").cast("long").alias("sum_b"),
-        F.sum("wsum").cast("long").alias("wsum"),
-        F.round(
-            (F.sum("sum_r") + F.sum("sum_g") + F.sum("sum_b")).cast("double")
-            / (F.sum(F.col("width").cast("long") * F.col("height")) * 3).cast(
-                "double"
-            ),
-            6,
-        ).alias("mean_px"),
-    )
-
-
-_DUCK_AVI_PER = """avi_px AS (
-         SELECT d.doc_id, d.source, j.j, r.r, c.c, k.k,
-                ((d.doc_id * 1009 + j.j) * 7 + r.r * 5 + c.c * 3 + k.k * 11) % 256 AS v
-         FROM documents d,
-              unnest(generate_series(0, 5)) AS j(j),
-              unnest(generate_series(0, 5)) AS r(r),
-              unnest(generate_series(0, 7)) AS c(c),
-              unnest(generate_series(0, 2)) AS k(k)
-       ), avi_per AS (
-         SELECT doc_id, any_value(source) AS source,
-                sum(v) AS spx,
-                sum(CASE WHEN j = 0 THEN v * ((r * 8 + c) * 3 + k + 1) ELSE 0 END) AS f0w
-         FROM avi_px GROUP BY doc_id
-       )"""
-
-# uncompressed-DIB AVI container size is closed-form: 224 header bytes plus
-# n_frames chunks of (8 + stride*h), stride = 4-byte-aligned 3*w — the same
-# spec arithmetic the writer implements, derived independently here
-_DUCK_AVI_AGG = """
-       SELECT source, CAST(count(*) AS BIGINT) AS n_media,
-              CAST(count(*) * 6 AS BIGINT) AS total_frames,
-              CAST(10 AS BIGINT) AS fps_max,
-              CAST(count(*) * 6 * 8 * 6 AS BIGINT) AS total_px,
-              CAST(count(*) * (224 + 6 * (8 + ((3 * 8 + 3) // 4) * 4 * 6)) AS BIGINT)
-                  AS total_bytes,
-              CAST(sum(spx) AS BIGINT) AS sum_px,
-              CAST(sum(f0w) AS BIGINT) AS frame0_wsum
-       FROM avi_per GROUP BY source"""
-
-
-def _media_avi_agg(spark: SparkSession, sf_dir: str, docs: DataFrame | None = None) -> DataFrame:
-    """The multimodal component's REAL video path in the driver-oracled suite:
-    per-document AVI payloads (6 deterministic 8×6 RGB frames through the
-    uncompressed-DIB writer — multimodal/avi.py) are decoded by the real
-    container walker inside Arrow-batched ``mapInPandas``. Two independent
-    contracts ride the hash: pixel math (total/frame-0 checksums replayed
-    from the closed-form frame generator) and CONTAINER BYTE ACCOUNTING (the
-    oracle recomputes payload size from the RIFF spec arithmetic
-    ``224 + n·(8 + stride·h)``, so any header/chunk layout drift in the
-    writer or a short read in the walker breaks the match)."""
-    from switchback_test_dag_spark.multimodal.media import (
-        synth_decode_avi_features,
-    )
-
-    docs = _suite_docs(spark, sf_dir) if docs is None else docs
-    feats = synth_decode_avi_features(
-        docs, "doc_id", n_frames=6, width=8, height=6
-    )
-    joined = feats.join(docs, feats.media_id == docs.doc_id)
-    return joined.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_media"),
-        F.sum("n_frames").cast("long").alias("total_frames"),
-        F.max("fps").cast("long").alias("fps_max"),
-        F.sum(
-            F.col("width").cast("long") * F.col("height") * F.col("n_frames")
-        ).cast("long").alias("total_px"),
-        F.sum("n_bytes").cast("long").alias("total_bytes"),
-        F.sum("sum_px").cast("long").alias("sum_px"),
-        F.sum("frame0_wsum").cast("long").alias("frame0_wsum"),
-    )
-
-
-# MJPEG-in-AVI: frame count / fps / decoder-reported geometry are closed-form
-# per doc_id; byte size and reconstructed pixels are entropy-coded and stay
-# pytest-gated (the still-JPEG policy)
-_DUCK_MJPG_AGG = """
-       SELECT source, CAST(count(*) AS BIGINT) AS n_media,
-              CAST(sum(2 + doc_id % 3) AS BIGINT) AS total_frames,
-              CAST(12 AS BIGINT) AS fps_max,
-              CAST(sum((6 + doc_id % 7) * (6 + doc_id % 5) * (2 + doc_id % 3))
-                   AS BIGINT) AS total_px
-       FROM documents GROUP BY source"""
-
-_DUCK_MJPB_AGG = """
-       SELECT source, CAST(count(*) AS BIGINT) AS n_media,
-              CAST(sum(1 + doc_id % 4) AS BIGINT) AS total_frames,
-              CAST(10 AS BIGINT) AS fps_max,
-              CAST(sum((7 + doc_id % 6) * (5 + doc_id % 4) * (1 + doc_id % 4))
-                   AS BIGINT) AS total_px
-       FROM documents GROUP BY source"""
-
-_DUCK_M1V_AGG = """
-       SELECT source, CAST(count(*) AS BIGINT) AS n_media,
-              CAST(sum(1 + doc_id % 3) AS BIGINT) AS total_frames,
-              CAST(25 AS BIGINT) AS fps_max,
-              CAST(sum(2 * (5 + doc_id % 5) * 2 * (4 + doc_id % 3)
-                       * (1 + doc_id % 3)) AS BIGINT) AS total_px
-       FROM documents GROUP BY source"""
-
-
-def _media_m1v_agg(spark: SparkSession, sf_dir: str, docs: DataFrame | None = None) -> DataFrame:
-    """Intra-only MPEG-1 (round 13, ``multimodal/mpeg1.py``) in the
-    driver-oracled suite: per-document payloads — raw video elementary
-    streams on odd ids, minimal MPEG-1 PROGRAM STREAMS on even ids, so the
-    PES demux rides the hash too — decoded through the real sequence/GOP/
-    picture/slice/macroblock parse with MPEG quantization and VLC/escape
-    entropy coding. Geometry/frame-count formulas deliberately differ from
-    every other video branch; pixel fidelity is pytest-gated (lossy-path
-    policy)."""
-    from switchback_test_dag_spark.multimodal.media import (
-        synth_decode_mpeg1_features,
-    )
-
-    docs = _suite_docs(spark, sf_dir) if docs is None else docs
-    feats = synth_decode_mpeg1_features(docs, "doc_id", qscale=2)
-    joined = feats.join(docs, feats.media_id == docs.doc_id)
-    return joined.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_media"),
-        F.sum("n_frames").cast("long").alias("total_frames"),
-        F.max("fps").cast("long").alias("fps_max"),
-        F.sum(
-            F.col("width").cast("long") * F.col("height") * F.col("n_frames")
-        ).cast("long").alias("total_px"),
-    )
-
-
-def _media_mjpb_agg(spark: SparkSession, sf_dir: str, docs: DataFrame | None = None) -> DataFrame:
-    """Motion-JPEG-B (QuickTime's MARKER-LESS MJPEG layout, fourcc 'mjpb')
-    in the driver-oracled suite: per-document AVI payloads whose every frame
-    is an offset-table-headed, UNSTUFFED-scan MJPEG-B field
-    (``multimodal/mjpegb.py`` composing jpeg.py's machinery), decoded by the
-    container walk + marker-less per-frame parse. Geometry/frame-count
-    formulas deliberately differ from the MJPG branch so a codec-dispatch
-    swap breaks the hash; pixel fidelity is pytest-gated like every lossy
-    path."""
-    from switchback_test_dag_spark.multimodal.media import (
-        synth_decode_mjpegb_avi_features,
-    )
-
-    docs = _suite_docs(spark, sf_dir) if docs is None else docs
-    feats = synth_decode_mjpegb_avi_features(docs, "doc_id", quality=90)
-    joined = feats.join(docs, feats.media_id == docs.doc_id)
-    return joined.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_media"),
-        F.sum("n_frames").cast("long").alias("total_frames"),
-        F.max("fps").cast("long").alias("fps_max"),
-        F.sum(
-            F.col("width").cast("long") * F.col("height") * F.col("n_frames")
-        ).cast("long").alias("total_px"),
-    )
-
-
-def _media_mjpg_agg(spark: SparkSession, sf_dir: str, docs: DataFrame | None = None) -> DataFrame:
-    """COMPRESSED video in the driver-oracled suite: per-document MJPEG AVI
-    payloads (variable geometry and frame count, closed-form per doc_id;
-    each frame a real baseline JPEG inside a real RIFF container —
-    multimodal/avi.py + jpeg.py composed) are decoded by the container walk
-    + full per-frame JPEG parse inside ``mapInPandas``. The hash pins frame
-    counts, fps, and decoder-reported geometry — a chunk-slicing, fourcc, or
-    marker-parse bug breaks the match; a decode failure on any payload fails
-    the whole query, so the hash certifies the compressed-video path RUNS on
-    every payload. Reconstructed pixel fidelity is pytest-gated
-    (tests/test_multimodal.py), the same policy as the still-JPEG branch."""
-    from switchback_test_dag_spark.multimodal.media import (
-        synth_decode_mjpeg_avi_features,
-    )
-
-    docs = _suite_docs(spark, sf_dir) if docs is None else docs
-    feats = synth_decode_mjpeg_avi_features(docs, "doc_id", quality=90)
-    joined = feats.join(docs, feats.media_id == docs.doc_id)
-    return joined.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_media"),
-        F.sum("n_frames").cast("long").alias("total_frames"),
-        F.max("fps").cast("long").alias("fps_max"),
-        F.sum(
-            F.col("width").cast("long") * F.col("height") * F.col("n_frames")
-        ).cast("long").alias("total_px"),
-    )
-
-
-_DUCK_JPEG_PER = """jpeg_dims AS (
-         SELECT doc_id, source, 8 + doc_id % 9 AS w, 8 + doc_id % 5 AS h
-         FROM documents
-       )"""
-
-_DUCK_JPEG_AGG = """
-       SELECT source, CAST(count(*) AS BIGINT) AS n_media,
-              CAST(sum(w * h) AS BIGINT) AS total_px,
-              CAST(sum(w) AS BIGINT) AS total_w,
-              CAST(sum(h) AS BIGINT) AS total_h
-       FROM jpeg_dims GROUP BY source"""
-
-
-def _media_jpeg_agg(spark: SparkSession, sf_dir: str, docs: DataFrame | None = None) -> DataFrame:
-    """The lossy-codec path's driver-oracled slice: per-document baseline JPEG
-    payloads (optimal-Huffman encoder, multimodal/jpeg.py) are decoded by the
-    FULL entropy-decode + dequantize + IDCT parser inside ``mapInPandas``;
-    the suite hashes the decoder-reported geometry (closed-form per doc_id,
-    so a dimension/marker-parse bug breaks the match) and the per-source
-    payload counts. Reconstructed pixel values are quantization-dependent and
-    not SQL-replayable — their exactness contract (coefficient-bit-exact
-    roundtrip, byte-exact reference reconstruction, fidelity bound) lives in
-    tests/test_multimodal.py. A decode failure on any payload fails the whole
-    query, so the driver hash still certifies the decoder RUNS end-to-end on
-    every payload."""
-    from switchback_test_dag_spark.multimodal.media import (
-        synth_decode_jpeg_features,
-    )
-
-    docs = _suite_docs(spark, sf_dir) if docs is None else docs
-    feats = synth_decode_jpeg_features(docs, "doc_id", quality=90)
-    joined = feats.join(docs, feats.media_id == docs.doc_id)
-    return joined.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_media"),
-        F.sum(F.col("width").cast("long") * F.col("height")).cast("long").alias(
-            "total_px"
-        ),
-        F.sum("width").cast("long").alias("total_w"),
-        F.sum("height").cast("long").alias("total_h"),
-    )
-
-
-# --------------------------------------------------------------------------- #
-# generic magic-bytes dispatch (decode_features over a mixed-format corpus)
-# --------------------------------------------------------------------------- #
-
-# j's pooling bucket under exact_quantiles-style integer boundaries
-# a_b = (b*n)//dim is b = ((dim*(j+1) - 1) // n) — the closed form of
-# "largest b with (b*n)//dim <= j", replayed identically on both engines
-_DUCK_DISPATCH_PER = """bmpd AS (
-  SELECT doc_id, 8 + doc_id % 9 AS w, 6 + doc_id % 5 AS h
-  FROM documents WHERE doc_id % 5 = 0
-), bmp_vals AS (
-  SELECT d.doc_id, (r.r * d.w + c.c) * 3 + k.k AS j, d.w * d.h * 3 AS n,
-         ((d.doc_id * 7 + r.r * 5 + c.c * 3 + k.k * 11) % 256) / 255.0 AS v
-  FROM bmpd d,
-       unnest(generate_series(0, d.h - 1)) AS r(r),
-       unnest(generate_series(0, d.w - 1)) AS c(c),
-       unnest(generate_series(0, 2)) AS k(k)
-), pngd AS (
-  SELECT doc_id, 5 + doc_id % 11 AS w, 5 + doc_id % 7 AS h
-  FROM documents WHERE doc_id % 5 = 1
-), png_vals AS (
-  SELECT d.doc_id, (r.r * d.w + c.c) * 3 + k.k AS j, d.w * d.h * 3 AS n,
-         ((d.doc_id * 7 + r.r * 5 + c.c * 3 + k.k * 11) % 256) / 255.0 AS v
-  FROM pngd d,
-       unnest(generate_series(0, d.h - 1)) AS r(r),
-       unnest(generate_series(0, d.w - 1)) AS c(c),
-       unnest(generate_series(0, 2)) AS k(k)
-), wav_vals AS (
-  SELECT d.doc_id, t.i AS j, 256 AS n,
-         ((d.doc_id * 31 + t.i * 17) % 65536) / 65535.0 AS v
-  FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 3) d,
-       unnest(generate_series(0, 255)) AS t(i)
-), avi_vals AS (
-  SELECT d.doc_id, f.f * 144 + (r.r * 8 + c.c) * 3 + k.k AS j, 864 AS n,
-         (((d.doc_id * 1009 + f.f) * 7 + r.r * 5 + c.c * 3 + k.k * 11) % 256)
-             / 255.0 AS v
-  FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 4) d,
-       unnest(generate_series(0, 5)) AS f(f),
-       unnest(generate_series(0, 5)) AS r(r),
-       unnest(generate_series(0, 7)) AS c(c),
-       unnest(generate_series(0, 2)) AS k(k)
-), tagged AS (
-  SELECT 'bmp' AS fmt, * FROM bmp_vals
-  UNION ALL SELECT 'png', * FROM png_vals
-  UNION ALL SELECT 'wav', * FROM wav_vals
-  UNION ALL SELECT 'avi', * FROM avi_vals
-), pooled AS (
-  SELECT fmt, doc_id, CAST((8 * (j + 1) - 1) // n AS INTEGER) AS dim_idx,
-         avg(v) AS pv
-  FROM tagged GROUP BY fmt, doc_id, (8 * (j + 1) - 1) // n
-)"""
-
-# the dispatch facts reshaped onto the suite's tall (fmt, source, metric,
-# value) schema: per-dimension corpus means plus a per-format media count
-_DUCK_DISPATCH_TALL = """
-SELECT 'dispatch_' || fmt AS fmt, 'all' AS source,
-       'dim' || CAST(dim_idx AS VARCHAR) || '_mean' AS metric,
-       round(avg(pv), 6) AS value
-FROM pooled GROUP BY fmt, dim_idx
-UNION ALL
-SELECT 'dispatch_' || fmt AS fmt, 'all' AS source, 'n_media' AS metric,
-       CAST(count(DISTINCT doc_id) AS DOUBLE) AS value
-FROM pooled GROUP BY fmt
-"""
-
-
-def _media_dispatch_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The GENERIC decode path under the driver hash: a mixed-format corpus
-    (``synthesize_mixed_media`` — format = doc_id % 5, every payload built by
-    a real encoder) flows through ``decode_features``'s magic-bytes dispatch
-    (multimodal/media.py) with NO format hints, and the pooled feature
-    vectors are exploded and averaged per (format, dimension). The oracle
-    replays decode + bucket pooling closed-form for the four LOSSLESS
-    formats (bmp/png/wav/avi) — any dispatch mistake (wrong codec for a
-    magic), any decode bug, or any pooling-boundary drift moves a mean and
-    breaks the hash. JPEG payloads (doc_id % 5 = 2) are excluded here: their
-    reconstructed pixels are quantization-dependent, so their dispatch
-    coverage lives in the suite's jpeg rows and the pytest bit-exactness
-    contracts. NOT separately registered: the driver's correctness harness
-    samples the FIRST 50 registered queries, so these facts ride inside
-    ``media_decode_suite``'s tall schema instead of spilling past the
-    window."""
-    from switchback_test_dag_spark.multimodal.media import (
-        synth_decode_mixed_features,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    replayable = _fanout_docs(spark, docs.filter(F.col("doc_id") % 5 != 2))
-    feats = synth_decode_mixed_features(replayable, "doc_id", dim=8)
-    tall = feats.select(
-        "media_id", F.posexplode("feature").alias("dim_idx", "value")
-    )
-    fmt = (
-        F.when(F.col("media_id") % 5 == 0, "bmp")
-        .when(F.col("media_id") % 5 == 1, "png")
-        .when(F.col("media_id") % 5 == 3, "wav")
-        .otherwise("avi")
-    )
-    return tall.groupBy(fmt.alias("fmt"), "dim_idx").agg(
-        F.count(F.lit(1)).cast("long").alias("n_media"),
-        F.round(F.avg("value"), 6).alias("mean_feature"),
-    )
-
-
-def _unpivot_metrics(df: DataFrame, fmt: str) -> DataFrame:
-    """Per-source aggregate → tall (fmt, source, metric, value) frame.
-
-    All formats share one driver-hashable schema without NULL padding: every
-    feature is cast to DOUBLE (exact for these magnitudes — the largest, the
-    position-weighted checksum, stays far below 2^53 even at the 100× scale
-    fixture) and rounded to 6 so both engines see identical doubles.
-    """
-    vals = [c for c in df.columns if c != "source"]
-    casted = df.select(
-        "source", *[F.col(c).cast("double").alias(c) for c in vals]
-    )
-    tall = casted.unpivot(["source"], vals, "metric", "value")
-    return tall.select(
-        F.lit(fmt).alias("fmt"),
-        "source",
-        "metric",
-        F.round("value", 6).alias("value"),
-    )
-
-
-def _duck_unpivot(agg_cte: str, fmt: str, metrics: list[str]) -> str:
-    on = ", ".join(f"CAST({m} AS DOUBLE) AS {m}" for m in metrics)
-    return (
-        f"SELECT '{fmt}' AS fmt, source, metric, round(value, 6) AS value "
-        f"FROM (UNPIVOT {agg_cte} ON {on} INTO NAME metric VALUE value)"
-    )
-
-
-_DUCK_MEDIA_SUITE = (
-    "WITH "
-    + ",\n".join(
-        [
-            _DUCK_BMP_PER,
-            _DUCK_WAV_PER,
-            _DUCK_PNG_PER,
-            _DUCK_AVI_PER,
-            _DUCK_JPEG_PER,
-            _DUCK_DISPATCH_PER,
-        ]
-    )
-    + f",\nbmp_agg AS ({_DUCK_BMP_AGG}),\nwav_agg AS ({_DUCK_WAV_AGG}),"
-    + f"\npng_agg AS ({_DUCK_PNG_AGG}),\navi_agg AS ({_DUCK_AVI_AGG}),"
-    + f"\njpeg_agg AS ({_DUCK_JPEG_AGG}),\nmjpg_agg AS ({_DUCK_MJPG_AGG}),"
-    + f"\nmjpb_agg AS ({_DUCK_MJPB_AGG}),\nm1v_agg AS ({_DUCK_M1V_AGG})\n"
-    + "\nUNION ALL\n".join(
-        [
-            _duck_unpivot(
-                "bmp_agg",
-                "bmp",
-                [
-                    "n_media",
-                    "total_bytes",
-                    "max_bytes",
-                    "total_px",
-                    "sum_r",
-                    "sum_g",
-                    "sum_b",
-                    "wsum",
-                    "mean_px",
-                ],
-            ),
-            _duck_unpivot(
-                "wav_agg",
-                "wav",
-                [
-                    "n_media",
-                    "total_samples",
-                    "rms",
-                    "max_peak",
-                    "total_duration_ms",
-                ],
-            ),
-            _duck_unpivot(
-                "png_agg",
-                "png",
-                [
-                    "n_media",
-                    "total_px",
-                    "sum_r",
-                    "sum_g",
-                    "sum_b",
-                    "wsum",
-                    "mean_px",
-                ],
-            ),
-            _duck_unpivot(
-                "avi_agg",
-                "avi",
-                [
-                    "n_media",
-                    "total_frames",
-                    "fps_max",
-                    "total_px",
-                    "total_bytes",
-                    "sum_px",
-                    "frame0_wsum",
-                ],
-            ),
-            _duck_unpivot(
-                "jpeg_agg",
-                "jpeg",
-                ["n_media", "total_px", "total_w", "total_h"],
-            ),
-            _duck_unpivot(
-                "mjpg_agg",
-                "mjpg",
-                ["n_media", "total_frames", "fps_max", "total_px"],
-            ),
-            _duck_unpivot(
-                "mjpb_agg",
-                "mjpb",
-                ["n_media", "total_frames", "fps_max", "total_px"],
-            ),
-            _duck_unpivot(
-                "m1v_agg",
-                "m1v",
-                ["n_media", "total_frames", "fps_max", "total_px"],
-            ),
-            _DUCK_DISPATCH_TALL,
-        ]
-    )
-)
-
-
-@query("media_decode_suite", _DUCK_MEDIA_SUITE)
-def media_decode_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ALL EIGHT real codec paths in one (fmt, source, metric) contract — BMP
-    (uncompressed DIB), WAV (RIFF PCM16), PNG (DEFLATE + all five scanline
-    filters), AVI (RIFF container walk + per-frame DIB decode), baseline
-    JPEG (entropy decode + dequantize + IDCT), MJPEG-in-AVI (the
-    container walk COMPOSED with the JPEG parser — real compressed video),
-    Motion-JPEG-B in AVI (QuickTime's marker-less layout: offset-table
-    frame headers, UNSTUFFED scans — the same DCT/Huffman machinery under a
-    different byte discipline, fourcc 'mjpb'), and intra-only MPEG-1
-    (round 13, fmt='m1v': sequence/GOP/picture/slice/macroblock parse, MPEG
-    quantization + VLC/escape coding, PES demux for program-stream ids)
-    payloads decoded by the pure-Python parsers inside Arrow-batched
-    ``mapInPandas``
-    (multimodal/{bmp,wav,png,avi,jpeg}.py), features aggregated per source,
-    then unpivoted to a shared tall schema and unioned. The oracle never sees
-    bytes: each branch recomputes its metrics from closed-form payload
-    generators and spec arithmetic (BMP container size 54 + stride·h; AVI
-    container size 224 + n·(8 + stride·h)), so a parse bug anywhere — header
-    offsets, row stride, bottom-up flip, BGR order, chunk walking, CRC math,
-    inflate framing, filter inversion — changes a value and breaks the hash.
-    The suite also carries the GENERIC magic-bytes dispatch rows
-    (fmt='dispatch_*': ``decode_features`` over a mixed-format corpus with no
-    format hints, pooled features replayed closed-form — see
-    ``_media_dispatch_agg``). Compression-dependent quantities (PNG/JPEG byte
-    sizes, JPEG reconstructed pixel sums) are deliberately excluded from the hash — their exactness
-    contracts are pytest-gated (see ``_media_jpeg_agg``); everything else is
-    integer-exact until the final mean/rms."""
-    # pin: the dims and n_media branches below both read this tiny per-fmt
-    # aggregate — without the boundary the dispatch branch's whole
-    # mapInPandas decode (Python-worker work, invisible to cpu_total but
-    # real) runs once per consumer
-    from switchback_test_dag_spark.caching import pin as _pin
-
-    docs = _suite_docs(spark, sf_dir)
-    disp = _pin(_media_dispatch_agg(spark, sf_dir))
-    disp_dims = disp.select(
-        F.concat(F.lit("dispatch_"), F.col("fmt")).alias("fmt"),
-        F.lit("all").alias("source"),
-        F.concat(
-            F.lit("dim"), F.col("dim_idx").cast("string"), F.lit("_mean")
-        ).alias("metric"),
-        F.col("mean_feature").alias("value"),
-    )
-    disp_n = (
-        disp.groupBy("fmt")
-        .agg(F.first("n_media").alias("n"))
-        .select(
-            F.concat(F.lit("dispatch_"), F.col("fmt")).alias("fmt"),
-            F.lit("all").alias("source"),
-            F.lit("n_media").alias("metric"),
-            F.col("n").cast("double").alias("value"),
-        )
-    )
-    return (
-        _unpivot_metrics(_media_bmp_agg(spark, sf_dir, docs), "bmp")
-        .unionByName(_unpivot_metrics(_media_wav_agg(spark, sf_dir, docs), "wav"))
-        .unionByName(_unpivot_metrics(_media_png_agg(spark, sf_dir, docs), "png"))
-        .unionByName(_unpivot_metrics(_media_avi_agg(spark, sf_dir, docs), "avi"))
-        .unionByName(_unpivot_metrics(_media_jpeg_agg(spark, sf_dir, docs), "jpeg"))
-        .unionByName(_unpivot_metrics(_media_mjpg_agg(spark, sf_dir, docs), "mjpg"))
-        .unionByName(_unpivot_metrics(_media_mjpb_agg(spark, sf_dir, docs), "mjpb"))
-        .unionByName(_unpivot_metrics(_media_m1v_agg(spark, sf_dir, docs), "m1v"))
-        .unionByName(disp_dims)
-        .unionByName(disp_n)
-    )
-
-
-# --------------------------------------------------------------------------- #
 # composed corpus-cleaning pipeline
 # --------------------------------------------------------------------------- #
 
@@ -1702,8 +956,7 @@ def media_decode_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup (CCNet line dedup, Wenzek et al. 2020 -- text/lines) and DSIR
 # hashed-n-gram importance weights (Xie et al. 2023 -- text/dsir). Folded
 # rather than registered standalone because the driver's correctness harness
-# samples the first 50 registered queries (same reason the dispatch rows live
-# inside media_decode_suite).
+# samples only the first 50 registered queries.
 #
 # Segments for the fixture are 2-token chunks (the corpus has no newlines to
 # split on; 2-token chunks over its small vocabulary collide across documents

@@ -4,7 +4,11 @@ compare row counts + sorted values (order-insensitive, column-name aligned)."""
 
 from __future__ import annotations
 
+import ast
+import importlib
+import importlib.util
 import math
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -77,8 +81,8 @@ def test_entry_smoke(spark):
 
 def test_registry_fits_correctness_window():
     """The driver's correctness harness samples the FIRST 50 registered
-    queries. The registry is consolidated to exactly fit; a 51st registration
-    would silently push a query out of the hard oracle gate — merge into an
+    queries. The registry must stay within that window; a registration past
+    the 50th would silently fall out of the hard oracle gate — merge into an
     existing suite instead (see COVERAGE.md)."""
     assert len(entry_mod.queries()) <= 50, (
         "registry exceeds the driver's 50-query check window; "
@@ -86,3 +90,39 @@ def test_registry_fits_correctness_window():
     )
     # every oracle key must have a query (no orphaned oracles)
     assert set(entry_mod.oracle_sql()) <= set(entry_mod.queries())
+
+
+def test_package_imports_resolve():
+    """Every ``from switchback_test_dag_spark... import name`` in the package,
+    module-level or function-local, names a module that imports and a name it
+    has (attribute or submodule). Function-local imports only fail when their
+    function runs, so a deleted module would otherwise go unnoticed until a
+    caller reaches it."""
+    pkg = Path(entry_mod.__file__).parent / "switchback_test_dag_spark"
+    checked, broken = 0, []
+    for path in sorted(pkg.rglob("*.py")):
+        package = ".".join(path.relative_to(pkg.parent).parent.parts)
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.ImportFrom):
+                continue
+            module = importlib.util.resolve_name(
+                "." * node.level + (node.module or ""), package
+            )
+            if not module.startswith("switchback_test_dag_spark"):
+                continue
+            checked += 1
+            where = f"{path.relative_to(pkg.parent)}:{node.lineno}"
+            try:
+                mod = importlib.import_module(module)
+            except ImportError as exc:
+                broken.append(f"{where}: {module} ({exc})")
+                continue
+            for alias in node.names:
+                if alias.name == "*" or hasattr(mod, alias.name):
+                    continue
+                if not hasattr(mod, "__path__") or importlib.util.find_spec(
+                    f"{module}.{alias.name}"
+                ) is None:
+                    broken.append(f"{where}: {module}.{alias.name}")
+    assert checked > 100, checked
+    assert not broken, broken

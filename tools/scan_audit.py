@@ -5,8 +5,8 @@ parquet-scan nodes their executed plan carries than distinct tables read.
 An unpersisted frame consumed by two downstream branches plans as two
 independent subtrees — the whole upstream pipeline (scans included) runs
 once per consumer. This is the defect class the round-10 audit caught three
-times (exact_quantiles' totals re-scan, crse_ols' glob re-join, the media
-suite's dispatch double-decode); this tool makes the sweep repeatable.
+times (exact_quantiles' totals re-scan, crse_ols' glob re-join); this tool
+makes the sweep repeatable.
 
 Caveats (read before acting on a row):
 - Text counts include each cached relation's printed child description, so
