@@ -1,1 +1,1 @@
-"""Multimodal (image/audio/video) column plumbing for training-data pipelines."""
+"""Still-image codecs (BMP, PNG). No pipeline, query or workload calls them."""

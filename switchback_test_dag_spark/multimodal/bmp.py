@@ -1,6 +1,5 @@
-"""Real pure-Python BMP (Windows DIB) codec — the multimodal component's
-working IMAGE decode path, following the WAV precedent (``wav.py``): no
-native libraries, ``struct`` + numpy only, so it runs in any executor Python.
+"""Pure-Python BMP (Windows DIB) codec: no native libraries, ``struct`` +
+numpy only.
 
 The encoder writes canonical 24-bit bottom-up BI_RGB files
 (BITMAPFILEHEADER + BITMAPINFOHEADER, rows padded to 4-byte boundaries).
@@ -10,15 +9,7 @@ skipped correctly), supports 24- and 32-bit uncompressed BI_RGB, both
 bottom-up (positive height) and top-down (negative height) row orders, and
 raises ``ValueError`` on anything else (compressed, paletted, or truncated
 files) rather than mis-decoding.
-
-JPEG/PNG/video remain stubbed in ``media.py`` (entropy coding needs real
-codec libraries); BMP makes the image decode→feature path REAL bytes end to
-end, exactly as WAV did for audio.
-
-Scale shape: both directions run inside Arrow-batched ``mapInPandas``
-iterators (``media.py``) — payloads never leave the executor.
 """
-
 from __future__ import annotations
 
 import struct

@@ -1,7 +1,5 @@
-"""Real pure-Python PNG codec — stdlib ``zlib`` + ``struct`` + numpy only,
-following the WAV/BMP/AVI codec precedent (no native image libraries in this
-environment, and none needed: PNG's only entropy coder is DEFLATE, which the
-stdlib provides).
+"""Pure-Python PNG codec: stdlib ``zlib`` + ``struct`` + numpy only (PNG's
+only entropy coder is DEFLATE, which the stdlib provides).
 
 Encoder: canonical 8-bit non-interlaced truecolor (color type 2) files —
 signature, IHDR, one IDAT (zlib-compressed filtered scanlines), IEND, with
@@ -16,15 +14,7 @@ with ``zlib``, and inverts all five scanline filters. Supports 8-bit
 truecolor (type 2) and truecolor+alpha (type 6, alpha dropped); raises
 ``ValueError`` on palette/grayscale/16-bit/interlaced or corrupt files rather
 than mis-decoding.
-
-This replaces the former ``NotImplementedError`` PNG stub in ``media.py``:
-of the entropy-coded formats only JPEG/H.26x (which need DCT/arithmetic codec
-libraries) remain out of scope.
-
-Scale shape: used inside Arrow-batched ``mapInPandas`` iterators
-(``media.py``) — payloads never leave the executor.
 """
-
 from __future__ import annotations
 
 import struct

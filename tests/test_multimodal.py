@@ -1,222 +1,7 @@
-"""Multimodal plumbing tests: schema contract, Arrow batch shape, real
-magic-bytes dispatch across all five codecs, frame sampling fan-out, and the
-documented H.26x stub / unknown-payload rejection."""
+"""Still-image codec tests: BMP and PNG round trips, hand-assembled files
+pinned to their specs, and rejection of corrupt or unsupported inputs."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
-
-from switchback_test_dag_spark.io import load_table
-from switchback_test_dag_spark.multimodal import media as MM
-
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def media(spark):
-    docs = load_table(spark, SF, "documents").limit(50)
-    return MM.synthesize_media(docs, "doc_id", "text")
-
-
-@pytest.fixture(scope="module")
-def mixed(spark):
-    # ids 0..24 → five payloads of each of the five formats (fmt = id % 5)
-    return MM.synthesize_mixed_media(
-        spark.range(0, 25).withColumnRenamed("id", "doc_id"), "doc_id"
-    )
-
-
-def test_media_schema_contract(media):
-    # names + types must match the contract; nullability is advisory in Spark
-    got = [(f.name, f.dataType) for f in media.schema.fields]
-    want = [(f.name, f.dataType) for f in MM.MEDIA_SCHEMA.fields]
-    assert got == want
-
-
-def test_detect_media_format_all_branches():
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal.avi import encode_avi_dib
-    from switchback_test_dag_spark.multimodal.bmp import encode_bmp24
-    from switchback_test_dag_spark.multimodal.jpeg import encode_jpeg
-    from switchback_test_dag_spark.multimodal.png import encode_png
-    from switchback_test_dag_spark.multimodal.wav import encode_wav_pcm16
-
-    px = MM._bmp_pixels(1, 8, 8)
-    assert MM.detect_media_format(encode_bmp24(px)) == "bmp"
-    assert MM.detect_media_format(encode_png(px)) == "png"
-    assert MM.detect_media_format(encode_jpeg(px, quality=90)[0]) == "jpeg"
-    assert (
-        MM.detect_media_format(
-            encode_wav_pcm16(np.array([1, -1], dtype=np.int16), 8000)
-        )
-        == "wav"
-    )
-    assert MM.detect_media_format(encode_avi_dib(px[None, ...], fps=10)) == "avi"
-    with pytest.raises(ValueError, match="magic"):
-        MM.detect_media_format(b"plain utf-8 text, not media")
-    # documented H.26x-class stubs
-    with pytest.raises(NotImplementedError, match="ISO-BMFF"):
-        MM.detect_media_format(b"\x00\x00\x00\x20ftypisom" + b"\x00" * 16)
-    with pytest.raises(NotImplementedError, match="Annex-B"):
-        MM.detect_media_format(b"\x00\x00\x00\x01\x67\x42")
-
-
-def test_decode_features_real_dispatch(spark, mixed):
-    """decode_features must route every payload through its REAL codec: the
-    pooled features are cross-checked against a driver-side numpy replay of
-    decode + pooling for one payload of each modality."""
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal.avi import decode_avi_dib
-    from switchback_test_dag_spark.multimodal.wav import decode_wav_pcm16
-
-    feats = MM.decode_features(mixed, dim=8)
-    assert feats.schema == MM.FEATURE_SCHEMA
-    rows = {r["media_id"]: r for r in feats.collect()}
-    assert len(rows) == 25
-    payloads = {
-        r["media_id"]: bytes(r["payload"])
-        for r in mixed.select("media_id", "payload").collect()
-    }
-    for mid, raw in payloads.items():
-        assert rows[mid]["n_bytes"] == len(raw)
-    # one driver-side replay per modality: image (png id 1, jpeg id 2),
-    # audio (id 3), video (id 4)
-    for mid in (1, 2, 3, 4):
-        raw = payloads[mid]
-        fmt = MM.detect_media_format(raw)
-        if fmt in ("bmp", "png", "jpeg"):
-            vals = MM._decode_image(raw, fmt).astype(np.float64).ravel() / 255.0
-        elif fmt == "wav":
-            _r, _c, s = decode_wav_pcm16(raw)
-            vals = (s.astype(np.float64) + 32768.0) / 65535.0
-        else:
-            _f, frames = decode_avi_dib(raw)
-            vals = frames.astype(np.float64).ravel() / 255.0
-        assert rows[mid]["feature"] == MM._pooled(vals, 8), (mid, fmt)
-
-
-def test_decode_features_rejects_unknown_payloads(media):
-    with pytest.raises(Exception, match="ValueError|magic"):
-        MM.decode_features(media).collect()
-
-
-def test_sample_frames_real_dispatch(spark, mixed):
-    """Video payloads emit every 2nd decoded frame (6 frames → idx 0/2/4);
-    still images emit exactly one frame whose bytes are the decoded RGB;
-    audio payloads raise."""
-    import numpy as np
-
-    visual = mixed.filter(F.col("kind") != "audio")
-    frames = MM.sample_frames(visual, every_n=2, max_frames=8)
-    assert frames.schema == MM.FRAME_SCHEMA
-    rows = frames.collect()
-    per = {}
-    for r in rows:
-        per.setdefault(r["media_id"], []).append(r)
-    for mid, rs in per.items():
-        if mid % 5 == 4:  # avi
-            assert sorted(r["frame_idx"] for r in rs) == [0, 2, 4]
-            want = MM._bmp_pixels(mid * 1009 + 2, 8, 6).tobytes()
-            assert bytes(next(r for r in rs if r["frame_idx"] == 2)["frame_bytes"]) == want
-        else:  # still image: one frame, decoded RGB
-            assert [r["frame_idx"] for r in rs] == [0]
-            raw = bytes(
-                mixed.filter(F.col("media_id") == mid).select("payload").collect()[0][0]
-            )
-            fmt = MM.detect_media_format(raw)
-            got = np.frombuffer(bytes(rs[0]["frame_bytes"]), dtype=np.uint8)
-            assert np.array_equal(
-                got, MM._decode_image(raw, fmt).ravel()
-            )
-    audio = mixed.filter(F.col("kind") == "audio")
-    with pytest.raises(Exception, match="cannot sample frames"):
-        MM.sample_frames(audio).collect()
-
-
-def test_repartition_by_bytes(media):
-    out = MM.repartition_by_bytes(media, target_partition_bytes=4096)
-    assert out.rdd.getNumPartitions() >= 1
-    assert out.count() == media.count()
-
-
-# --------------------------------------------------------------------------- #
-# real WAV codec path
-# --------------------------------------------------------------------------- #
-
-
-def test_wav_roundtrip_and_stdlib_interop(tmp_path):
-    """Our encoder must produce files the stdlib wave module reads, and our
-    chunk-walking decoder must read files the stdlib wave module writes."""
-    import io
-    import wave
-
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal.wav import (
-        decode_wav_pcm16,
-        encode_wav_pcm16,
-    )
-
-    samples = np.array([0, 100, -100, 32767, -32768, 7], dtype=np.int16)
-
-    # ours -> stdlib
-    blob = encode_wav_pcm16(samples, 8000)
-    with wave.open(io.BytesIO(blob)) as w:
-        assert w.getframerate() == 8000
-        assert w.getnchannels() == 1
-        assert w.getsampwidth() == 2
-        assert np.array_equal(
-            np.frombuffer(w.readframes(w.getnframes()), dtype="<i2"), samples
-        )
-
-    # stdlib -> ours
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(44100)
-        w.writeframes(samples.tobytes())
-    rate, channels, decoded = decode_wav_pcm16(buf.getvalue())
-    assert (rate, channels) == (44100, 1)
-    assert np.array_equal(decoded, samples)
-
-
-def test_wav_decoder_walks_extra_chunks_and_rejects_garbage():
-    import struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from switchback_test_dag_spark.multimodal.wav import (
-        decode_wav_pcm16,
-        encode_wav_pcm16,
-    )
-
-    samples = np.array([1, -2, 3], dtype=np.int16)
-    blob = encode_wav_pcm16(samples, 16000)
-    # splice an odd-sized LIST chunk between 'WAVE' and 'fmt ' — a conformant
-    # reader must skip it (with pad byte) and still find fmt/data
-    extra = struct.pack("<4sI", b"LIST", 5) + b"INFOx" + b"\x00"
-    spliced = blob[:12] + extra + blob[12:]
-    rate, _, decoded = decode_wav_pcm16(spliced)
-    assert rate == 16000
-    assert np.array_equal(decoded, samples)
-
-    with _pytest.raises(ValueError):
-        decode_wav_pcm16(b"not a wav at all....")
-    # 8-bit PCM is not our contract
-    bad = bytearray(blob)
-    bad[34] = 8  # bits-per-sample field
-    with _pytest.raises(ValueError):
-        decode_wav_pcm16(bytes(bad))
-
-
-# --------------------------------------------------------------------------- #
-# real BMP codec path
-# --------------------------------------------------------------------------- #
 
 
 def test_bmp_roundtrip_with_padding():
@@ -287,193 +72,6 @@ def test_bmp_topdown_32bit_and_rejects():
         decode_bmp(bytes(bad_compr))
     with _pytest.raises(ValueError):
         decode_bmp(good[:-4])  # truncated pixel array
-
-
-def test_bmp_spark_pipeline_decodes_real_bytes(spark):
-    """End-to-end on the cluster path: synthesize real BMP payloads, decode
-    via mapInPandas, check every feature against the closed-form pattern."""
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal.media import (
-        _bmp_pixels,
-        decode_bmp_features,
-        synthesize_bmp_images,
-    )
-
-    df = spark.range(3, 6).withColumnRenamed("id", "doc_id")
-    media = synthesize_bmp_images(df, "doc_id")
-    rows = {r["media_id"]: r for r in decode_bmp_features(media).collect()}
-    assert set(rows) == {3, 4, 5}
-    for mid in (3, 4, 5):
-        w, h = 8 + mid % 9, 6 + mid % 5
-        arr = _bmp_pixels(mid, w, h).astype(np.int64)
-        weights = np.arange(1, h * w * 3 + 1, dtype=np.int64).reshape(h, w, 3)
-        r = rows[mid]
-        assert (r["width"], r["height"]) == (w, h)
-        assert r["n_bytes"] == 54 + ((3 * w + 3) // 4 * 4) * h
-        assert r["sum_r"] == int(arr[:, :, 0].sum())
-        assert r["sum_g"] == int(arr[:, :, 1].sum())
-        assert r["sum_b"] == int(arr[:, :, 2].sum())
-        assert r["wsum"] == int((arr * weights).sum())
-
-
-def test_fused_synth_decode_matches_staged_pipeline(spark):
-    """The fused single-worker paths (one Python eval node, payload never
-    crosses the JVM boundary — media._fuse_synth_decode) must return exactly
-    the per-stage synthesize→decode composition, row for row. Covers one
-    representative of each decode family: image (bmp), video (mjpeg avi),
-    audio (wav), and the magic-bytes dispatch."""
-    from switchback_test_dag_spark.multimodal.media import (
-        decode_bmp_features,
-        decode_features,
-        decode_mjpeg_avi_features,
-        decode_wav_features,
-        synth_decode_bmp_features,
-        synth_decode_mixed_features,
-        synth_decode_mjpeg_avi_features,
-        synth_decode_wav_features,
-        synthesize_bmp_images,
-        synthesize_mixed_media,
-        synthesize_mjpeg_avi_videos,
-        synthesize_wav_audio,
-    )
-
-    df = spark.range(10, 17).withColumnRenamed("id", "doc_id")
-    pairs = [
-        (
-            synth_decode_bmp_features(df, "doc_id"),
-            decode_bmp_features(synthesize_bmp_images(df, "doc_id")),
-        ),
-        (
-            synth_decode_mjpeg_avi_features(df, "doc_id", quality=85),
-            decode_mjpeg_avi_features(
-                synthesize_mjpeg_avi_videos(df, "doc_id", quality=85)
-            ),
-        ),
-        (
-            synth_decode_wav_features(df, "doc_id", n_samples=64),
-            decode_wav_features(synthesize_wav_audio(df, "doc_id", n_samples=64)),
-        ),
-        (
-            synth_decode_mixed_features(df, "doc_id", dim=4),
-            decode_features(synthesize_mixed_media(df, "doc_id"), dim=4),
-        ),
-    ]
-    for fused, staged in pairs:
-        f = sorted(map(tuple, fused.collect()))
-        s = sorted(map(tuple, staged.collect()))
-        assert f == s
-        # the fused plan must contain exactly ONE Python eval node
-        plan = fused._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("MapInPandas") == 1
-
-
-# --------------------------------------------------------------------------- #
-# real AVI codec path
-# --------------------------------------------------------------------------- #
-
-
-def test_avi_roundtrip_and_chunk_walking():
-    """Frame stacks round-trip pixel-exactly (stride padding + bottom-up flip
-    per frame); a spliced odd-sized junk chunk inside movi must be skipped
-    with RIFF word alignment; garbage and truncated frames raise."""
-    import struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from switchback_test_dag_spark.multimodal.avi import (
-        decode_avi_dib,
-        encode_avi_dib,
-    )
-
-    rng = np.random.default_rng(7)
-    frames = rng.integers(0, 256, size=(4, 5, 7, 3), dtype=np.uint8)  # 7→pad
-    blob = encode_avi_dib(frames, fps=10)
-    fps, decoded = decode_avi_dib(blob)
-    assert fps == 10
-    assert np.array_equal(decoded, frames)
-
-    # splice an odd-sized junk chunk right after 'movi' — walker must skip it
-    movi_at = blob.index(b"movi")
-    junk = struct.pack("<4sI", b"JUNK", 3) + b"abc" + b"\x00"
-    spliced = blob[: movi_at + 4] + junk + blob[movi_at + 4 :]
-    # fix the two enclosing sizes (RIFF total + movi LIST)
-    spliced = bytearray(spliced)
-    riff_size = struct.unpack_from("<I", spliced, 4)[0] + len(junk)
-    struct.pack_into("<I", spliced, 4, riff_size)
-    list_at = movi_at - 8
-    list_size = struct.unpack_from("<I", spliced, list_at + 4)[0] + len(junk)
-    struct.pack_into("<I", spliced, list_at + 4, list_size)
-    fps2, decoded2 = decode_avi_dib(bytes(spliced))
-    assert np.array_equal(decoded2, frames)
-
-    with _pytest.raises(ValueError):
-        decode_avi_dib(b"definitely not an avi file..")
-    with _pytest.raises(ValueError):
-        decode_avi_dib(blob[:-10])  # truncated last frame
-
-
-def test_avi_spark_pipeline_and_frame_sampling(spark):
-    """End-to-end video path: synthesize real AVI payloads, decode features
-    via mapInPandas against the closed-form generator, and REAL frame
-    sampling returns the exact raw RGB of every second frame."""
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal.media import (
-        _bmp_pixels,
-        decode_avi_features,
-        sample_avi_frames,
-        synthesize_avi_videos,
-    )
-
-    df = spark.range(3, 6).withColumnRenamed("id", "doc_id")
-    media = synthesize_avi_videos(df, "doc_id", n_frames=6, width=8, height=6)
-    rows = {r["media_id"]: r for r in decode_avi_features(media).collect()}
-    assert set(rows) == {3, 4, 5}
-    weights = np.arange(1, 6 * 8 * 3 + 1, dtype=np.int64).reshape(6, 8, 3)
-    for mid in (3, 4, 5):
-        stack = np.stack(
-            [_bmp_pixels(mid * 1009 + j, 8, 6) for j in range(6)]
-        ).astype(np.int64)
-        r = rows[mid]
-        assert (r["fps"], r["n_frames"], r["width"], r["height"]) == (10, 6, 8, 6)
-        assert r["sum_px"] == int(stack.sum())
-        assert r["frame0_wsum"] == int((stack[0] * weights).sum())
-
-    sampled = sample_avi_frames(media, every_n=2).collect()
-    by_key = {(r["media_id"], r["frame_idx"]): r["frame_bytes"] for r in sampled}
-    assert set(by_key) == {(m, j) for m in (3, 4, 5) for j in (0, 2, 4)}
-    for (mid, j), blob in by_key.items():
-        assert bytes(blob) == _bmp_pixels(mid * 1009 + j, 8, 6).tobytes()
-
-
-def test_wav_spark_pipeline_decodes_real_bytes(spark):
-    """End-to-end on the cluster path: synthesize real WAV payloads, decode
-    via mapInPandas, check one row against a hand-computed value."""
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal.media import (
-        decode_wav_features,
-        synthesize_wav_audio,
-    )
-
-    df = spark.range(3, 6).withColumnRenamed("id", "doc_id")
-    media = synthesize_wav_audio(df, "doc_id", n_samples=16, sample_rate=8000)
-    rows = {r["media_id"]: r for r in decode_wav_features(media).collect()}
-    assert set(rows) == {3, 4, 5}
-    i = np.arange(16, dtype=np.int64)
-    for mid in (3, 4, 5):
-        s = (mid * 31 + i * 17) % 65536 - 32768
-        assert rows[mid]["sample_rate"] == 8000
-        assert rows[mid]["n_samples"] == 16
-        assert rows[mid]["sum_sq"] == int(np.dot(s, s))
-        assert rows[mid]["peak"] == int(np.abs(s).max())
-
-
-# --------------------------------------------------------------------------- #
-# real PNG codec path
-# --------------------------------------------------------------------------- #
 
 
 def test_png_roundtrip_all_filters():
@@ -561,65 +159,6 @@ def test_png_rejects_corrupt_and_unsupported():
         decode_png(good[: len(good) // 2])  # truncated
 
 
-def test_png_spark_pipeline_decodes_real_bytes(spark):
-    """End-to-end on the cluster path: synthesize real PNG payloads, decode
-    via mapInPandas, check every feature against the closed-form pattern."""
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal.media import (
-        _bmp_pixels,
-        decode_png_features,
-        synthesize_png_images,
-    )
-
-    df = spark.range(3, 6).withColumnRenamed("id", "doc_id")
-    media = synthesize_png_images(df, "doc_id")
-    rows = {r["media_id"]: r for r in decode_png_features(media).collect()}
-    assert set(rows) == {3, 4, 5}
-    for mid in (3, 4, 5):
-        w, h = 5 + mid % 11, 5 + mid % 7
-        arr = _bmp_pixels(mid, w, h).astype(np.int64)
-        weights = np.arange(1, h * w * 3 + 1, dtype=np.int64).reshape(h, w, 3)
-        r = rows[mid]
-        assert (r["width"], r["height"]) == (w, h)
-        assert r["sum_r"] == int(arr[:, :, 0].sum())
-        assert r["sum_g"] == int(arr[:, :, 1].sum())
-        assert r["sum_b"] == int(arr[:, :, 2].sum())
-        assert r["wsum"] == int((arr * weights).sum())
-
-
-def test_codecs_reject_fuzz_without_crashing():
-    """Arbitrary byte soup must produce a clean ValueError (or decode, for a
-    lucky valid file) from every codec — never an IndexError/struct.error/
-    zlib.error leaking out of the parser, which inside mapInPandas would
-    surface as an opaque executor task failure instead of a data-quality
-    signal."""
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal.avi import decode_avi_dib
-    from switchback_test_dag_spark.multimodal.bmp import decode_bmp
-    from switchback_test_dag_spark.multimodal.jpeg import decode_jpeg
-    from switchback_test_dag_spark.multimodal.png import decode_png, encode_png
-    from switchback_test_dag_spark.multimodal.wav import decode_wav_pcm16
-
-    rng = np.random.default_rng(0)
-    base = encode_png(rng.integers(0, 256, (6, 5, 3), dtype=np.uint8))
-    blobs = [b"", b"\x00", rng.bytes(64), rng.bytes(4096)]
-    # structured corruption: valid prefix + garbage, truncations, bit flips
-    blobs += [base[:k] for k in (4, 8, 20, len(base) - 3)]
-    for _ in range(50):
-        b = bytearray(base)
-        for _ in range(rng.integers(1, 6)):
-            b[rng.integers(0, len(b))] ^= int(rng.integers(1, 256))
-        blobs.append(bytes(b))
-    for dec in (decode_png, decode_bmp, decode_wav_pcm16, decode_avi_dib, decode_jpeg):
-        for blob in blobs:
-            try:
-                dec(blob)
-            except ValueError:
-                pass  # the contract: clean rejection
-
-
 def test_png_rejects_crc_valid_garbage_deflate():
     """A chunk whose CRC is valid but whose IDAT body is not a DEFLATE stream
     must still raise ValueError (zlib.error wrapped), not leak."""
@@ -646,622 +185,3 @@ def test_png_rejects_crc_valid_garbage_deflate():
     )
     with _pytest.raises(ValueError):
         decode_png(payload)
-
-
-def test_jpeg_roundtrip_coefficient_exact_and_reference_equal():
-    """The lossy codec's exactness contract: (a) the decoder recovers the
-    encoder's quantized coefficient blocks BIT-exactly (entropy coding, DC
-    prediction, zigzag, byte stuffing are all integer-exact), and (b) its
-    pixel output equals the encoder-side reference reconstruction (same
-    dequantize+IDCT+color numpy path) byte-for-byte, across shapes that
-    exercise MCU padding and qualities that change every quant step."""
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal import jpeg as J
-
-    rng = np.random.default_rng(7)
-    for (h, w) in [(8, 8), (13, 21), (5, 9), (40, 40)]:
-        for q in (50, 90):
-            px = rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-            data, state = J.encode_jpeg(px, quality=q)
-            blocks, qtabs, shape = J.decode_jpeg_blocks(data)
-            assert shape == (h, w)
-            for b_dec, b_enc in zip(blocks, state["blocks"]):
-                assert np.array_equal(b_dec, b_enc)
-            for t_dec, t_enc in zip(qtabs, state["qtabs"]):
-                assert np.array_equal(t_dec, t_enc)
-            assert np.array_equal(
-                J.decode_jpeg(data), J.reference_reconstruction(state)
-            )
-
-
-def test_jpeg_quality_bounds_reconstruction_error():
-    """The reconstruction must be CLOSE to the source (catches transform
-    bugs the roundtrip contract cannot — e.g. a transposed IDCT reproduces
-    under (a)+(b) above but wrecks fidelity) and error must shrink as quality
-    rises; flat color is exactly lossless."""
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal import jpeg as J
-
-    yy, xx = np.mgrid[0:32, 0:32]
-    smooth = np.stack(
-        [
-            (20 + yy * 2 + xx * 3).clip(0, 255),
-            (50 + yy * 1 + xx * 2).clip(0, 255),
-            (100 + yy * 3).clip(0, 255),
-        ],
-        axis=-1,
-    ).astype(np.uint8)
-    errs = []
-    for q in (50, 75, 90, 100):
-        out = J.decode_jpeg(J.encode_jpeg(smooth, quality=q)[0])
-        errs.append(np.abs(out.astype(int) - smooth.astype(int)).mean())
-    assert errs[-1] < 1.0, f"q=100 error too high: {errs[-1]}"
-    assert errs[0] < 5.0, f"q=50 error too high on smooth ramp: {errs[0]}"
-    assert errs[-1] <= errs[0] + 1e-9, f"error must not grow with quality: {errs}"
-    flat = np.full((16, 16, 3), 137, dtype=np.uint8)
-    out = J.decode_jpeg(J.encode_jpeg(flat, quality=90)[0])
-    assert np.array_equal(out, flat)
-
-
-def test_jpeg_rejects_fuzz_and_unsupported():
-    """Byte soup, truncations, and bit flips must raise a clean ValueError
-    (never IndexError/struct.error); unsupported SOFs likewise."""
-    import struct as _struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from switchback_test_dag_spark.multimodal import jpeg as J
-
-    rng = np.random.default_rng(1)
-    base, _ = J.encode_jpeg(
-        rng.integers(0, 256, size=(10, 12, 3), dtype=np.uint8), quality=80
-    )
-    blobs = [b"", b"\xff\xd8", rng.bytes(64), rng.bytes(4096)]
-    blobs += [base[:k] for k in (2, 10, 40, len(base) - 3)]
-    for _ in range(50):
-        b = bytearray(base)
-        for _ in range(int(rng.integers(1, 6))):
-            b[int(rng.integers(0, len(b)))] ^= int(rng.integers(1, 256))
-        blobs.append(bytes(b))
-    for blob in blobs:
-        try:
-            J.decode_jpeg(blob)
-        except ValueError:
-            pass  # the contract: clean rejection
-    # progressive SOF2 must be refused, not mis-decoded
-    progressive = base.replace(b"\xff\xc0", b"\xff\xc2", 1)
-    with _pytest.raises(ValueError):
-        J.decode_jpeg(progressive)
-
-
-def test_jpeg_spark_pipeline_decodes_real_bytes(spark):
-    """End-to-end on the cluster path: synthesize real baseline JPEG payloads,
-    decode via mapInPandas, and check each feature row equals the driver-side
-    replay (decode of the same payload) — plus a fidelity bound vs the
-    closed-form source pattern."""
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal.jpeg import decode_jpeg, encode_jpeg
-    from switchback_test_dag_spark.multimodal.media import (
-        _bmp_pixels,
-        decode_jpeg_features,
-        synthesize_jpeg_images,
-    )
-
-    df = spark.range(3, 6).withColumnRenamed("id", "doc_id")
-    media = synthesize_jpeg_images(df, "doc_id", quality=90)
-    rows = {r["media_id"]: r for r in decode_jpeg_features(media).collect()}
-    assert set(rows) == {3, 4, 5}
-    for mid in (3, 4, 5):
-        w, h = 8 + mid % 9, 8 + mid % 5
-        src = _bmp_pixels(mid, w, h)
-        payload, _ = encode_jpeg(src, quality=90)
-        arr = decode_jpeg(payload).astype(np.int64)
-        weights = np.arange(1, h * w * 3 + 1, dtype=np.int64).reshape(h, w, 3)
-        r = rows[mid]
-        assert (r["width"], r["height"]) == (w, h)
-        assert r["n_bytes"] == len(payload)
-        assert r["sum_r"] == int(arr[:, :, 0].sum())
-        assert r["sum_g"] == int(arr[:, :, 1].sum())
-        assert r["sum_b"] == int(arr[:, :, 2].sum())
-        assert r["wsum"] == int((arr * weights).sum())
-        # fidelity: reconstructed pattern within quantization error of source
-        err = np.abs(arr - src.astype(np.int64)).mean()
-        assert err < 20.0, f"id {mid}: mean abs err {err}"
-
-
-def test_mjpeg_avi_roundtrip_hand_assembled():
-    """A hand-assembled 2-frame MJPEG AVI: encode two known frames (baseline
-    JPEG each), box them, decode — frame count/geometry/fps exact, fidelity
-    within quantization error of the sources, and the DIB/MJPG decoders
-    refuse each other's streams."""
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal.avi import (
-        decode_avi_dib,
-        decode_avi_mjpg,
-        encode_avi_dib,
-        encode_avi_mjpg,
-    )
-    from switchback_test_dag_spark.multimodal.jpeg import encode_jpeg
-    from switchback_test_dag_spark.multimodal.media import _bmp_pixels
-
-    w, h = 9, 7
-    srcs = [_bmp_pixels(41, w, h), _bmp_pixels(42, w, h)]
-    blobs = [encode_jpeg(s, quality=90)[0] for s in srcs]
-    payload = encode_avi_mjpg(blobs, width=w, height=h, fps=12)
-
-    fps, frames = decode_avi_mjpg(payload)
-    assert fps == 12 and frames.shape == (2, h, w, 3)
-    for got, src in zip(frames, srcs):
-        err = np.abs(got.astype(np.int64) - src.astype(np.int64)).mean()
-        assert err < 20.0, err
-
-    # odd-length JPEG chunks must be word-aligned without corrupting the walk
-    assert any(len(b) & 1 for b in blobs) or True  # layout exercised above
-
-    with pytest.raises(ValueError, match="unsupported stream"):
-        decode_avi_dib(payload)
-    dib = encode_avi_dib(np.stack(srcs), fps=10)
-    with pytest.raises(ValueError, match="not an MJPG stream"):
-        decode_avi_mjpg(dib)
-    with pytest.raises(ValueError, match="at least one frame"):
-        encode_avi_mjpg([], width=w, height=h)
-    # geometry disagreement between header and frames is caught
-    bad = encode_avi_mjpg(blobs, width=w + 1, height=h, fps=12)
-    with pytest.raises(ValueError, match="disagrees"):
-        decode_avi_mjpg(bad)
-
-
-def test_mjpeg_avi_spark_pipeline_decodes_real_bytes(spark):
-    """End-to-end on the cluster path: synthesize MJPEG AVI payloads
-    (variable geometry/frame count per id), decode via mapInPandas, check
-    features against the closed-form dims and a driver-side replay."""
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal.avi import decode_avi_mjpg
-    from switchback_test_dag_spark.multimodal.media import (
-        _bmp_pixels,
-        decode_mjpeg_avi_features,
-        synthesize_mjpeg_avi_videos,
-    )
-
-    df = spark.range(10, 14).withColumnRenamed("id", "doc_id")
-    media = synthesize_mjpeg_avi_videos(df, "doc_id", quality=90)
-    payloads = {r["media_id"]: bytes(r["payload"]) for r in media.collect()}
-    rows = {
-        r["media_id"]: r for r in decode_mjpeg_avi_features(media).collect()
-    }
-    assert set(rows) == {10, 11, 12, 13}
-    for mid in rows:
-        w, h, n = 6 + mid % 7, 6 + mid % 5, 2 + mid % 3
-        r = rows[mid]
-        assert (r["width"], r["height"], r["n_frames"], r["fps"]) == (w, h, n, 12)
-        fps, frames = decode_avi_mjpg(payloads[mid])
-        assert r["n_bytes"] == len(payloads[mid])
-        assert r["sum_px"] == int(frames.astype(np.int64).sum())
-        for j in range(n):
-            src = _bmp_pixels(mid * 1009 + j, w, h).astype(np.int64)
-            err = np.abs(frames[j].astype(np.int64) - src).mean()
-            assert err < 20.0, (mid, j, err)
-
-
-def test_mjpegb_frame_codec_exact_and_layout():
-    """MJPEG-B frame codec: decode equals the encoder's reference
-    reconstruction EXACTLY (same coefficients as the JFIF encoder — only the
-    byte layout differs), the scan is genuinely unstuffed (raw 0xFF bytes
-    allowed), and corrupt frames raise ValueError."""
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal.jpeg import (
-        encode_jpeg,
-        reference_reconstruction,
-    )
-    from switchback_test_dag_spark.multimodal.mjpegb import (
-        decode_mjpegb,
-        encode_mjpegb,
-    )
-    from switchback_test_dag_spark.multimodal.media import _bmp_pixels
-
-    px = _bmp_pixels(97, 19, 11)
-    frame, st = encode_mjpegb(px, quality=85)
-    out = decode_mjpegb(frame)
-    assert np.array_equal(out, reference_reconstruction(st))
-    # layout identity with JFIF: identical quantized coefficients
-    _, jst = encode_jpeg(px, quality=85)
-    assert all(np.array_equal(a, b) for a, b in zip(st["blocks"], jst["blocks"]))
-    # header pins
-    assert frame[4:8] == b"mjpg"
-    with pytest.raises(ValueError, match="mjpg tag"):
-        decode_mjpegb(b"\x00" * 64)
-    with pytest.raises(ValueError, match="corrupt|truncated|size"):
-        decode_mjpegb(frame[: len(frame) - 9])
-
-
-def test_mjpegb_avi_roundtrip_and_codec_separation():
-    """Motion-JPEG-B AVI: frame count/geometry/fps exact, fidelity within
-    quantization error, and the MJPG/mjpb decoders refuse each other's
-    streams (the fourcc dispatch is load-bearing)."""
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal.avi import (
-        decode_avi_mjpb,
-        decode_avi_mjpg,
-        encode_avi_mjpb,
-        encode_avi_mjpg,
-    )
-    from switchback_test_dag_spark.multimodal.jpeg import encode_jpeg
-    from switchback_test_dag_spark.multimodal.media import _bmp_pixels
-    from switchback_test_dag_spark.multimodal.mjpegb import encode_mjpegb
-
-    w, h = 10, 6
-    srcs = [_bmp_pixels(71, w, h), _bmp_pixels(72, w, h), _bmp_pixels(73, w, h)]
-    blobs = [encode_mjpegb(s, quality=90)[0] for s in srcs]
-    payload = encode_avi_mjpb(blobs, width=w, height=h, fps=10)
-    fps, frames = decode_avi_mjpb(payload)
-    assert fps == 10 and frames.shape == (3, h, w, 3)
-    for got, src in zip(frames, srcs):
-        err = np.abs(got.astype(np.int64) - src.astype(np.int64)).mean()
-        assert err < 20.0, err
-    # codec separation both ways
-    with pytest.raises(ValueError, match="not an MJPG stream"):
-        decode_avi_mjpg(payload)
-    jblobs = [encode_jpeg(s, quality=90)[0] for s in srcs]
-    javi = encode_avi_mjpg(jblobs, width=w, height=h, fps=12)
-    with pytest.raises(ValueError, match="not a mjpb stream"):
-        decode_avi_mjpb(javi)
-
-
-def test_mjpegb_avi_spark_pipeline_decodes_real_bytes(spark):
-    """End-to-end cluster path for Motion-JPEG-B: synthesize mjpb AVI
-    payloads, decode via mapInPandas, check features against the closed-form
-    dims (deliberately different formulas from the MJPG branch) and a
-    driver-side replay."""
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal.avi import decode_avi_mjpb
-    from switchback_test_dag_spark.multimodal.media import (
-        _bmp_pixels,
-        decode_mjpegb_avi_features,
-        synthesize_mjpegb_avi_videos,
-    )
-
-    df = spark.range(20, 24).withColumnRenamed("id", "doc_id")
-    media = synthesize_mjpegb_avi_videos(df, "doc_id", quality=90)
-    payloads = {r["media_id"]: bytes(r["payload"]) for r in media.collect()}
-    rows = {
-        r["media_id"]: r for r in decode_mjpegb_avi_features(media).collect()
-    }
-    assert set(rows) == {20, 21, 22, 23}
-    for mid in rows:
-        w, h, n = 7 + mid % 6, 5 + mid % 4, 1 + mid % 4
-        r = rows[mid]
-        assert (r["width"], r["height"], r["n_frames"], r["fps"]) == (w, h, n, 10)
-        fps, frames = decode_avi_mjpb(payloads[mid])
-        assert r["n_bytes"] == len(payloads[mid])
-        assert r["sum_px"] == int(frames.astype(np.int64).sum())
-        for j in range(n):
-            src = _bmp_pixels(mid * 2027 + j, w, h).astype(np.int64)
-            err = np.abs(frames[j].astype(np.int64) - src).mean()
-            assert err < 20.0, (mid, j, err)
-
-
-def test_decode_avi_any_routes_all_three_codecs():
-    """The codec dispatcher: one reader accepts DIB, MJPG and mjpb AVIs,
-    reports which codec it found, returns identical frames to the dedicated
-    decoders, and raises on an unknown compression value."""
-    import struct
-
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal.avi import (
-        decode_avi_any,
-        encode_avi_dib,
-        encode_avi_mjpb,
-        encode_avi_mjpg,
-    )
-    from switchback_test_dag_spark.multimodal.jpeg import encode_jpeg
-    from switchback_test_dag_spark.multimodal.media import _bmp_pixels
-    from switchback_test_dag_spark.multimodal.mjpegb import encode_mjpegb
-
-    w, h = 8, 6
-    srcs = [_bmp_pixels(5, w, h), _bmp_pixels(6, w, h)]
-    payloads = {
-        "dib": encode_avi_dib(np.stack(srcs), fps=9),
-        "mjpg": encode_avi_mjpg(
-            [encode_jpeg(s, 90)[0] for s in srcs], width=w, height=h, fps=12
-        ),
-        "mjpb": encode_avi_mjpb(
-            [encode_mjpegb(s, 90)[0] for s in srcs], width=w, height=h, fps=10
-        ),
-    }
-    for want, payload in payloads.items():
-        codec, fps, frames = decode_avi_any(payload)
-        assert codec == want and frames.shape == (2, h, w, 3)
-        assert fps == {"dib": 9, "mjpg": 12, "mjpb": 10}[want]
-    # unknown codec id raises, not crashes
-    bad = bytearray(payloads["mjpg"])
-    i = bad.find(b"strf") + 8  # strf body start
-    struct.pack_into("<I", bad, i + 16, 0x30385056)  # 'VP80'
-    with pytest.raises(ValueError, match="unsupported AVI codec"):
-        decode_avi_any(bytes(bad))
-
-
-def test_mpeg1_intra_roundtrip_fidelity_and_vlc_paths():
-    """The intra-only MPEG-1 codec: encode→decode is a fidelity roundtrip
-    through real VLC entropy coding (short Table B.5 codes + 8-bit escapes
-    on smooth frames; 16-bit escape levels on a high-contrast pattern at
-    qscale=1), DC predictors reset per slice, 4:2:0 chroma rides along, and
-    a P-picture raises the documented stub, not garbage."""
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal import mpeg1 as M
-
-    yy, xx = np.mgrid[0:22, 0:34]
-    frames = np.stack(
-        [
-            np.clip(
-                np.stack(
-                    [(xx * 4 + t * 10) % 256, (yy * 6 + 30) % 256,
-                     ((xx + yy) * 3 + t * 5) % 256],
-                    axis=-1,
-                ), 0, 255,
-            ).astype(np.uint8)
-            for t in range(3)
-        ]
-    )
-    es = M.encode_m1v(frames, qscale=2)
-    assert es[:4] == b"\x00\x00\x01\xb3" and es[-4:] == b"\x00\x00\x01\xb7"
-    dec, meta = M.decode_m1v(es)
-    assert dec.shape == frames.shape
-    assert meta == {"width": 34, "height": 22, "n_frames": 3, "fps": 25.0}
-    err = np.abs(dec.astype(int) - frames.astype(int))
-    assert err.max() <= 12 and err.mean() < 3.0  # smooth content, qscale=2
-
-    # grayscale noise: luma-only error (no 4:2:0 chroma smear), tight bound
-    g = np.random.default_rng(2).integers(0, 256, (1, 16, 16, 1), np.uint8)
-    gray = np.repeat(g, 3, axis=-1)
-    d, _ = M.decode_m1v(M.encode_m1v(gray, qscale=1))
-    assert np.abs(d.astype(int) - gray.astype(int)).max() <= 8
-
-    # 16-bit escape levels: a max-contrast vertical-bar block at qscale=1
-    # quantizes its strongest AC past ±127 — roundtrip must survive the
-    # 0x00/0x80-marker escape form
-    bars = np.zeros((1, 16, 16, 3), np.uint8)
-    bars[:, :, ::2, :] = 255
-    zz = M._dct_block(
-        M._rgb_to_ycbcr(bars[0])[..., 0][:8, :8]
-    ).flatten()[M._ZIGZAG]
-    wq = M._INTRA_Q.flatten()[M._ZIGZAG]
-    q = np.round(8.0 * zz[1:] / (1 * wq[1:]))
-    assert (np.abs(q) > 127).any(), "fixture no longer exercises 16-bit escapes"
-    d2, _ = M.decode_m1v(M.encode_m1v(bars, qscale=1))
-    assert np.abs(d2.astype(int) - bars.astype(int)).max() <= 24
-
-    # B/D pictures are the documented stub: flip picture_coding_type bits
-    # (I='001' sits 4 bits after the 10-bit temporal ref in the picture
-    # header; the header is byte-aligned right after the 32-bit start code)
-    p = bytearray(es)
-    i = p.find(b"\x00\x00\x01\x00")
-    # byte layout: [tr(10) type(3) vbv(16) ...] -> type bits are bits 10..12
-    # of the post-code payload: second byte bits 2..4 (mask 0b00111000)
-    p[i + 5] = (p[i + 5] & 0b11000111) | (0b011 << 3)  # type = B
-    with pytest.raises(NotImplementedError, match="bidirectional"):
-        M.decode_m1v(bytes(p))
-    # a P-picture with no preceding I reference is malformed, not a crash
-    p[i + 5] = (p[i + 5] & 0b11000111) | (0b010 << 3)  # type = P (first!)
-    with pytest.raises(ValueError, match="no reference frame"):
-        M.decode_m1v(bytes(p))
-
-
-def test_mpeg1_zero_motion_p_frames():
-    """The zero-motion P subset (conditional replenishment): static
-    macroblocks ride '001' MC-not-coded prediction — decoded BIT-IDENTICAL
-    to the previous frame, so error never accumulates — changed macroblocks
-    intra-refresh, the stream is materially smaller than all-intra, and
-    overall fidelity matches the intra path's bounds."""
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal import mpeg1 as M
-
-    h, w = 32, 48
-    yy, xx = np.mgrid[0:h, 0:w]
-    bg = ((yy * 5 + xx * 3) % 256).astype(np.uint8)
-    frames = []
-    for t in range(4):
-        f = np.stack([bg, bg, bg], axis=-1).copy()
-        x = 16 * t % (w - 16)
-        f[8:24, x:x + 16] = [200, 30, 90]  # moving 16x16 sprite
-        frames.append(f)
-    frames = np.stack(frames)
-
-    es_i = M.encode_m1v(frames, qscale=2)
-    es_p = M.encode_m1v(frames, qscale=2, p_frames=True)
-    assert len(es_p) < 0.7 * len(es_i)  # prediction must actually pay
-
-    dec, meta = M.decode_m1v(es_p)
-    assert meta["n_frames"] == 4 and dec.shape == frames.shape
-    err = np.abs(dec.astype(int) - frames.astype(int))
-    assert err.max() <= 12 and err.mean() < 2.0
-    # static macroblocks: bit-identical across P frames — the prediction
-    # path is a copy, not a re-code. The sprite position is 16·t mod 32 =
-    # 0, 16, 0, 16, so the MB column x ∈ [32, 48) never holds the sprite
-    # and is pred-coded in every P frame. (Bands that merely LOOK static
-    # can still move by ±1 via a refreshed neighbor MB's 4:2:0 chroma
-    # upsample — only whole static MBs carry the bit-exact guarantee.)
-    assert np.array_equal(dec[2][:, 32:], dec[1][:, 32:])
-    assert np.array_equal(dec[3][:, 32:], dec[2][:, 32:])
-
-
-def test_mpeg1_program_stream_demux_and_dispatch():
-    """The system layer: mux_mpeg_ps wraps the ES in pack/PES packets and
-    demux recovers it byte-exactly; decode_mpeg1 dispatches on the start
-    code; detect_media_format returns 'mpeg1' for BOTH layouts instead of
-    the Annex-B NotImplementedError; decode_features and sample_frames
-    route it end to end on Spark."""
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal import mpeg1 as M
-
-    frames = np.stack([MM._bmp_pixels(9 * 3011 + j, 12, 10) for j in range(2)])
-    es = M.encode_m1v(frames, qscale=2)
-    ps = M.mux_mpeg_ps(es, packet_size=128)  # many small PES packets
-    assert ps[:4] == b"\x00\x00\x01\xba" and ps[-4:] == b"\x00\x00\x01\xb9"
-    assert M.demux_mpeg_ps(ps) == es
-    a, _ = M.decode_mpeg1(es)
-    b, _ = M.decode_mpeg1(ps)
-    assert np.array_equal(a, b)
-    assert MM.detect_media_format(es) == "mpeg1"
-    assert MM.detect_media_format(ps) == "mpeg1"
-    # Annex-B H.26x still raises (only the MPEG-1 start codes were claimed)
-    with pytest.raises(NotImplementedError, match="Annex-B"):
-        MM.detect_media_format(b"\x00\x00\x00\x01\x67\x42")
-
-
-def test_mpeg1_spark_pipeline_decodes_real_bytes(spark):
-    """End-to-end cluster path for MPEG-1: synthesize payloads (even ids
-    program streams, odd ids raw ES), decode via mapInPandas, check the
-    closed-form dims the suite oracle replays, pixel fidelity per frame,
-    and the generic dispatch/sampling surfaces."""
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal.media import (
-        decode_features,
-        decode_mpeg1_features,
-        sample_frames,
-        synthesize_mpeg1_videos,
-    )
-
-    df = spark.range(30, 34).withColumnRenamed("id", "doc_id")
-    media = synthesize_mpeg1_videos(df, "doc_id", qscale=2)
-    payloads = {r["media_id"]: bytes(r["payload"]) for r in media.collect()}
-    assert payloads[30][:4] == b"\x00\x00\x01\xba"  # even: program stream
-    assert payloads[31][:4] == b"\x00\x00\x01\xb3"  # odd: elementary stream
-    rows = {r["media_id"]: r for r in decode_mpeg1_features(media).collect()}
-    assert set(rows) == {30, 31, 32, 33}
-    for mid, r in rows.items():
-        w, h, n = 2 * (5 + mid % 5), 2 * (4 + mid % 3), 1 + mid % 3
-        assert (r["width"], r["height"], r["n_frames"], r["fps"]) == (w, h, n, 25)
-        assert r["n_bytes"] == len(payloads[mid])
-    # fidelity vs the closed-form source frames
-    from switchback_test_dag_spark.multimodal.mpeg1 import decode_mpeg1
-
-    for mid in (30, 31):
-        w, h, n = 2 * (5 + mid % 5), 2 * (4 + mid % 3), 1 + mid % 3
-        frames, _meta = decode_mpeg1(payloads[mid])
-        for j in range(n):
-            src = MM._bmp_pixels(mid * 3011 + j, w, h).astype(np.int64)
-            err = np.abs(frames[j].astype(np.int64) - src).mean()
-            assert err < 20.0, (mid, j, err)
-    # generic surfaces: magic-bytes dispatch pools features; frame sampling
-    feats = decode_features(media, dim=4).collect()
-    assert len(feats) == 4 and all(len(r["feature"]) == 4 for r in feats)
-    sampled = sample_frames(media, every_n=1, max_frames=3).collect()
-    got = {(r["media_id"], r["frame_idx"]) for r in sampled}
-    assert all((mid, 0) in got for mid in range(30, 34))
-
-
-def test_ima_adpcm_roundtrip_and_wav_dispatch():
-    """The compressed-audio path: IMA ADPCM encode→decode reproduces a
-    speech-shaped signal within the quantizer's envelope (SNR ≥ 25 dB) at
-    ~4:1 bytes, exact sample count/rate (fact-chunk trim of the tail pad
-    nibble included), and decode_wav_any routes PCM16 and ADPCM by fmt tag
-    while raising on unknown tags."""
-    import struct
-
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal import adpcm as A
-    from switchback_test_dag_spark.multimodal.wav import (
-        decode_wav_any,
-        encode_wav_pcm16,
-    )
-
-    t = np.arange(7919)  # prime length: exercises the short tail block
-    x = (
-        6000 * np.sin(2 * np.pi * 220 * t / 8000)
-        + 3000 * np.sin(2 * np.pi * 440 * t / 8000)
-        + np.random.default_rng(3).normal(0, 300, len(t))
-    ).astype(np.int16)
-    wav = A.encode_wav_ima_adpcm(x, 8000)
-    sr, y = A.decode_wav_ima_adpcm(wav)
-    assert sr == 8000 and len(y) == len(x)
-    err = y.astype(np.int64) - x.astype(np.int64)
-    snr = 10 * np.log10((x.astype(np.int64) ** 2).mean() / (err**2).mean())
-    assert snr >= 25.0, snr
-    assert len(wav) < 0.3 * (2 * len(x))  # ~4:1 vs PCM16
-
-    # fmt-tag dispatch: both containers route; samples agree with the
-    # dedicated decoders
-    rate, ch, s = decode_wav_any(wav)
-    assert (rate, ch) == (8000, 1) and np.array_equal(s, y)
-    pcm = encode_wav_pcm16(x, 8000)
-    rate, ch, s = decode_wav_any(pcm)
-    assert np.array_equal(s, x)
-    # unknown tag raises with the tag named
-    bad = bytearray(pcm)
-    i = bad.find(b"fmt ") + 8
-    struct.pack_into("<H", bad, i, 0x0055)  # MP3 tag
-    with pytest.raises(ValueError, match="0x0055"):
-        decode_wav_any(bytes(bad))
-
-
-def test_ima_adpcm_blocks_decode_independently(spark):
-    """Every ADPCM block carries its own (predictor, index) header — a
-    decoder starting at any block boundary reproduces that block exactly
-    (the seekability property); and the generic Spark decode path pools an
-    ADPCM payload end-to-end through the magic-bytes + fmt-tag dispatch."""
-    import numpy as np
-
-    from switchback_test_dag_spark.multimodal import adpcm as A
-    from switchback_test_dag_spark.multimodal.media import decode_features
-
-    x = (
-        2000 * np.sin(2 * np.pi * np.arange(2021) * 0.07)
-    ).astype(np.int16)
-    wav = A.encode_wav_ima_adpcm(x, 16000, samples_per_block=505)
-    sr, full = A.decode_wav_ima_adpcm(wav)
-    # chop the data chunk to blocks 2..end and decode: identical samples
-    import struct as _s
-
-    pos, data_off, data_len = 12, None, None
-    while pos + 8 <= len(wav):
-        name, size = _s.unpack_from("<4sI", wav, pos)
-        pos += 8
-        if name == b"data":
-            data_off, data_len = pos, size
-        pos += size + (size & 1)
-    block_align = 4 + (505 - 1) // 2
-    tail = wav[data_off + block_align: data_off + data_len]
-    # decode the tail blocks alone by rebuilding a container around them
-    # (fact count shrunk by the dropped block's samples)
-    shell = (
-        wav[:data_off - 8]
-        .replace(_s.pack("<I", len(x)), _s.pack("<I", len(x) - 505), 1)
-    )
-    minimal = shell + _s.pack("<4sI", b"data", len(tail)) + tail
-    _sr2, tail_samples = A.decode_wav_ima_adpcm(minimal)
-    assert np.array_equal(tail_samples, full[505:])
-
-    # Spark end-to-end: the wav branch of decode_features routes ADPCM
-    from pyspark.sql.types import (
-        BinaryType, IntegerType, LongType, StringType, StructField, StructType,
-    )
-
-    rows = [(1, "audio", bytearray(wav), "audio/wav", None, None, 0)]
-    schema = StructType([
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),
-        StructField("payload", BinaryType()),
-        StructField("mime", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("duration_ms", LongType()),
-    ])
-    media = spark.createDataFrame(rows, schema)
-    feats = decode_features(media, dim=4).collect()
-    assert len(feats) == 1 and len(feats[0]["feature"]) == 4
-    assert feats[0]["n_bytes"] == len(wav)
