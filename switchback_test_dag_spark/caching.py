@@ -69,26 +69,8 @@ def barrier(df: DataFrame) -> DataFrame:
     return p
 
 
-def _release(df: DataFrame, blocking: bool) -> None:
-    df.unpersist(blocking)
-
-
 def release_all(blocking: bool = False) -> None:
     """Unpersist every pinned frame (all modules). Call after the plans built
     from them have been materialized (collect/count/write)."""
     while _PINNED:
-        _release(_PINNED.pop(), blocking)
-
-
-def mark() -> int:
-    """Watermark into the pin registry — pair with :func:`release_since` to
-    release exactly the pins an enclosed computation created (a long-lived
-    job, e.g. a foreachBatch callback, must not ``release_all`` and drop
-    pins its CALLER still holds)."""
-    return len(_PINNED)
-
-
-def release_since(marker: int, blocking: bool = False) -> None:
-    """Unpersist every frame pinned after ``marker`` (from :func:`mark`)."""
-    while len(_PINNED) > marker:
-        _release(_PINNED.pop(), blocking)
+        _PINNED.pop().unpersist(blocking)

@@ -38,7 +38,6 @@ from pyspark.sql import functions as F
 # self-join sides and the per-city std — must not re-scan the fact table)
 # registers in the session-wide registry (caching.py)
 from switchback_test_dag_spark.caching import pin as _pin
-from switchback_test_dag_spark.caching import release_all as release_caches  # noqa: F401
 
 
 def unit_city_means(

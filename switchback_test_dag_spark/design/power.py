@@ -40,7 +40,7 @@ def norm_ppf(q: float) -> float:
     lo, hi = -40.0, 40.0
     for _ in range(200):
         mid = 0.5 * (lo + hi)
-        if 1.0 - float(norm_sf(mid)[0]) < q:
+        if 1.0 - float(norm_sf(mid)) < q:
             lo = mid
         else:
             hi = mid
@@ -59,9 +59,9 @@ def power_two_sample(
     if n_per_group < 2:
         return float("nan")
     dof = 2.0 * n_per_group - 2.0
-    t_crit = float(t_ppf_two_sided(alpha, dof)[0])
+    t_crit = float(t_ppf_two_sided(alpha, dof))
     ncp = abs(effect_size) * math.sqrt(n_per_group / 2.0)
-    return float(norm_sf(t_crit - ncp)[0] + norm_sf(t_crit + ncp)[0])
+    return float(norm_sf(t_crit - ncp) + norm_sf(t_crit + ncp))
 
 
 def solve_mde(n_per_group: float, power: float = 0.8, alpha: float = 0.05) -> float:

@@ -236,27 +236,13 @@ def read_jsonl_table(spark: SparkSession, path: str, schema) -> DataFrame:
 # live and intact (crash-sim pytest: tests/test_io.py). Old versions remain
 # readable for in-flight jobs until `vacuum_versions`.
 #
-# Two commit protocols, chosen per write:
-#
-# - ``replace`` (default): the _CURRENT pointer flip above — one atomic
-#   POSIX rename. The LOCAL-filesystem fast path.
-# - ``marker``: S3-style object stores don't provide atomic rename, but
-#   they DO provide atomic single-object create and listing; the commit is
-#   the creation of ``<path>/_commits/<version>`` and the committed version
-#   is the MAX listed marker — no rename anywhere in the protocol (the
-#   same list-and-max scheme as Delta's numbered _delta_log entries). A
-#   crash before the marker create leaves nothing committed; a crash after
-#   is a completed commit.
-#
-# ``current_version`` resolves max(_CURRENT, markers), so the two protocols
-# compose on one table (a local table migrated to marker commits keeps its
-# history readable). Single-writer-per-table is assumed (the reference
-# pipeline is a daily Airflow task); concurrent writers are
-# last-commit-wins, and a staging-dir numbering race fails loudly on the
-# errorifexists write.
+# The pointer flip is the only commit protocol: every write here goes
+# through local ``os.*`` calls, where the rename is atomic.
+# Single-writer-per-table is assumed (the reference pipeline is a daily
+# Airflow task); concurrent writers are last-commit-wins, and a staging-dir
+# numbering race fails loudly on the errorifexists write.
 
 _CURRENT_PTR = "_CURRENT"
-_COMMITS_DIR = "_commits"
 _VERSION_FMT = "v{:010d}"
 
 
@@ -295,64 +281,21 @@ def _commit_pointer(path: str, version: str) -> None:
         pass  # directory fsync is a durability nicety, not correctness
 
 
-def _commit_marker(path: str, version: str) -> None:
-    """Object-store-safe commit: create ``<path>/_commits/<version>``. The
-    single-object create IS the commit — no rename required, so the same
-    protocol works where os.replace has no atomic equivalent. 'x' mode
-    makes a marker collision (two writers claiming one version) loud."""
-    cdir = os.path.join(path, _COMMITS_DIR)
-    os.makedirs(cdir, exist_ok=True)
-    with open(os.path.join(cdir, version), "x") as fh:
-        fh.write(version)
-        fh.flush()
-        os.fsync(fh.fileno())
-
-
-def _marker_versions(path: str) -> list[str]:
-    import re as _re
-
-    cdir = os.path.join(path, _COMMITS_DIR)
-    if not os.path.isdir(cdir):
-        return []
-    return sorted(n for n in os.listdir(cdir) if _re.fullmatch(r"v\d{10}", n))
-
-
 def current_version(path: str) -> str | None:
     """The committed version name at ``path`` (None = nothing committed):
-    the max over the ``_CURRENT`` pointer and the ``_commits`` markers, so
-    tables written under either protocol — or migrated between them —
-    resolve to their newest commit."""
-    candidates = _marker_versions(path)
+    the version the ``_CURRENT`` pointer names."""
     ptr = os.path.join(path, _CURRENT_PTR)
-    if os.path.exists(ptr):
-        with open(ptr) as fh:
-            v = fh.read().strip()
-        if v:
-            candidates = candidates + [v]
-    return max(candidates) if candidates else None
+    if not os.path.exists(ptr):
+        return None
+    with open(ptr) as fh:
+        return fh.read().strip() or None
 
 
-def atomic_overwrite(
-    df: DataFrame,
-    path: str,
-    fmt: str = "parquet",
-    extra_files: dict[str, str] | None = None,
-    protocol: str = "replace",
-) -> str:
+def atomic_overwrite(df: DataFrame, path: str, fmt: str = "parquet") -> str:
     """CREATE-OR-REPLACE ``path`` with ``df``, atomically: stage a fresh
     immutable version directory, verify Spark's ``_SUCCESS`` marker, then
-    commit — ``protocol="replace"`` flips the ``_CURRENT`` pointer (atomic
-    POSIX rename, the local-FS fast path); ``protocol="marker"`` creates a
-    numbered ``_commits/<version>`` file instead (atomic single-object
-    create + list-and-max on read — the object-store-safe protocol, since
-    S3-style stores have no atomic rename). Returns the committed version
-    directory.
-
-    ``extra_files`` maps sidecar names (must start with ``_`` so Spark's
-    hidden-file filter skips them at read time) to text contents, written
-    and fsynced into the staging dir BEFORE the pointer flip — so metadata
-    like :func:`compact_batches`'s watermark commits atomically with the
-    data it describes.
+    flip the ``_CURRENT`` pointer (atomic POSIX rename). Returns the
+    committed version directory.
 
     Failure contract: a crash/kill at any point — mid-file, between files,
     even between _SUCCESS and the pointer flip — leaves the previously
@@ -360,11 +303,6 @@ def atomic_overwrite(
     swept by the next writer's numbering (max+1) and by
     :func:`vacuum_versions`. Readers via :func:`read_committed` never see a
     partial table."""
-    if protocol not in ("replace", "marker"):
-        raise ValueError(
-            f"atomic_overwrite: unknown protocol {protocol!r}; "
-            "expected 'replace' or 'marker'"
-        )
     os.makedirs(path, exist_ok=True)
     versions = _version_dirs(path)
     ver = _VERSION_FMT.format((versions[-1] + 1) if versions else 1)
@@ -378,20 +316,7 @@ def atomic_overwrite(
             f"atomic_overwrite: staging write at {vdir} carries no _SUCCESS "
             "commit marker; refusing to flip the table pointer"
         )
-    for name, content in (extra_files or {}).items():
-        if not name.startswith("_"):
-            raise ValueError(
-                f"atomic_overwrite: extra file {name!r} must start with '_' "
-                "(Spark's hidden-file filter) so data readers never scan it"
-            )
-        with open(os.path.join(vdir, name), "w") as fh:
-            fh.write(content)
-            fh.flush()
-            os.fsync(fh.fileno())
-    if protocol == "marker":
-        _commit_marker(path, ver)
-    else:
-        _commit_pointer(path, ver)
+    _commit_pointer(path, ver)
     return vdir
 
 
@@ -443,168 +368,6 @@ def read_committed(
     return reader.load(os.path.join(path, ver))
 
 
-# --------------------------------------------------------------------------- #
-# batch-dir state: the append log behind the incremental/streaming dedup
-# indexes, plus its compaction
-# --------------------------------------------------------------------------- #
-#
-# The incremental dedup twins (text/dedup.*_vs_index) and the foreachBatch
-# streams (streaming/windows.stream_corpus_dedup / _near_dedup) persist their
-# state as one Hive-partitioned ``batch=<id>`` parquet directory per
-# micro-batch — idempotent under foreachBatch replay (per-batch overwrite),
-# but unbounded: a year of 15-minute triggers is ~35k directories and
-# millions of tiny files, the classic streaming-sink listing/small-file
-# failure mode. Compaction folds the log into ONE snapshot committed through
-# the atomic pointer protocol above, under ``<path>/_compacted`` — a name
-# Spark's hidden-file filter ignores, so the snapshot never leaks into a
-# naive ``spark.read.parquet(path)`` of the log itself.
-#
-# Reader contract (read_batch_state): committed snapshot ∪ batch dirs NEWER
-# than the snapshot's watermark. The snapshot PRESERVES the ``batch``
-# partition column, so (a) leftover already-folded dirs are harmless — the
-# watermark filter excludes them — which makes the post-commit sweep pure
-# garbage collection, and (b) the streams' replay-safety filter
-# (``batch < current_batch_id``) keeps working across a compaction.
-#
-# Operational contract: compact while no writer is mid-batch (stream stopped
-# after a clean drain, or between availableNow passes). Folding a batch dir
-# whose streaming commit never landed is safe for READERS (the replay
-# rewrites the dir and the watermark filter hides the folded copy from the
-# replayed batch itself), but the folded copy of the failed attempt would
-# remain in the snapshot's history — compact quiescent state.
-
-_COMPACTED_DIR = "_compacted"
-_WATERMARK_FILE = "_watermark"
-
-
-def _batch_ids(path: str) -> list[int]:
-    if not os.path.isdir(path):
-        return []
-    out = []
-    for name in os.listdir(path):
-        if name.startswith("batch=") and os.path.isdir(os.path.join(path, name)):
-            try:
-                out.append(int(name.split("=", 1)[1]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def compacted_watermark(path: str) -> int | None:
-    """The highest batch id folded into ``path``'s committed compacted
-    snapshot (None = never compacted). Reads the ``_watermark`` sidecar the
-    compaction committed atomically with the data."""
-    croot = os.path.join(path, _COMPACTED_DIR)
-    cur = current_version(croot)
-    if cur is None:
-        return None
-    with open(os.path.join(croot, cur, _WATERMARK_FILE)) as fh:
-        return int(fh.read().strip())
-
-
-def read_batch_state(
-    spark: SparkSession,
-    path: str,
-    before_batch: int | None = None,
-    fmt: str = "parquet",
-) -> DataFrame | None:
-    """Current state of a ``batch=<id>`` log at ``path``: the committed
-    compacted snapshot (if any) unioned with batch dirs NEWER than its
-    watermark. Returns None when nothing has been written — callers treat
-    that as "no index yet".
-
-    ``before_batch`` restricts the view to batches STRICTLY EARLIER — the
-    replay-safety filter for foreachBatch writers: a replayed batch N must
-    never see its own failed attempt's ``batch=N`` rows (which would make
-    every replayed doc look like a duplicate of itself and silently drop
-    the batch). The filter applies to the snapshot too (the ``batch``
-    column is preserved through compaction), so replay stays safe even if
-    a compaction folded the failed attempt.
-
-    Scale shape: listing is O(dirs newer than the watermark) + one pointer
-    read — after compaction a year of triggers reads one snapshot and a
-    handful of fresh dirs, not 35k directories."""
-    wm = compacted_watermark(path)
-    ids = [
-        i
-        for i in _batch_ids(path)
-        if (wm is None or i > wm) and (before_batch is None or i < before_batch)
-    ]
-    parts = []
-    if wm is not None:
-        snap = read_committed(spark, os.path.join(path, _COMPACTED_DIR), fmt=fmt)
-        if before_batch is not None:
-            from pyspark.sql import functions as F
-
-            snap = snap.filter(F.col("batch") < F.lit(before_batch))
-        parts.append(snap)
-    if ids:
-        reader = spark.read.format(fmt).option("basePath", path)
-        df = reader.load([os.path.join(path, f"batch={i}") for i in ids])
-        # basePath keeps the batch partition column, matching snapshot schema;
-        # normalize column ORDER (partition cols land last on a Hive read,
-        # but the snapshot stores batch wherever the fold put it)
-        parts.append(df)
-    if not parts:
-        return None
-    if len(parts) == 1:
-        return parts[0]
-    return parts[0].unionByName(parts[1])
-
-
-def compact_batches(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    sweep: bool = True,
-    vacuum_keep: int = 2,
-    target_partitions: int | None = None,
-    protocol: str = "replace",
-) -> int | None:
-    """Fold every ``batch=<id>`` dir (plus any previous compacted snapshot)
-    at ``path`` into ONE atomic snapshot, so readers stop paying the
-    per-trigger directory/small-file tax. Returns the new watermark (the
-    highest batch id folded), or the existing one when there is nothing new
-    to fold (no-op — no new version is committed).
-
-    The fold itself goes through :func:`atomic_overwrite`: a crash at any
-    point leaves the previous snapshot + untouched batch dirs live, and
-    :func:`read_batch_state` keeps returning the exact same rows before,
-    during, and after the commit. ``sweep`` then deletes the folded batch
-    dirs (pure GC — the watermark filter already hides them) and vacuums
-    snapshot versions older than the ``vacuum_keep`` newest.
-
-    ``target_partitions`` coalesces the snapshot write (small-file control:
-    a year of tiny per-trigger files becomes N healthy parquet files);
-    default leaves Spark's partitioning alone. ``protocol`` passes through
-    to :func:`atomic_overwrite` — ``"marker"`` commits the snapshot via the
-    rename-free numbered-marker protocol for object-store state dirs."""
-    state = read_batch_state(spark, path, fmt=fmt)
-    ids = _batch_ids(path)
-    wm = compacted_watermark(path)
-    new_ids = [i for i in ids if wm is None or i > wm]
-    if not new_ids:
-        return wm
-    new_wm = max(new_ids)
-    if target_partitions is not None:
-        state = state.coalesce(target_partitions)
-    atomic_overwrite(
-        state,
-        os.path.join(path, _COMPACTED_DIR),
-        fmt=fmt,
-        extra_files={_WATERMARK_FILE: str(new_wm)},
-        protocol=protocol,
-    )
-    if sweep:
-        import shutil as _shutil
-
-        for i in ids:
-            if i <= new_wm:
-                _shutil.rmtree(os.path.join(path, f"batch={i}"), ignore_errors=True)
-        vacuum_versions(os.path.join(path, _COMPACTED_DIR), keep=vacuum_keep)
-    return new_wm
-
-
 def vacuum_versions(path: str, keep: int = 1) -> list[str]:
     """Delete superseded version dirs, keeping the current version plus the
     ``keep``-1 newest PREVIOUS versions (versions older than current —
@@ -626,10 +389,4 @@ def vacuum_versions(path: str, keep: int = 1) -> list[str]:
         if name not in survivors:
             _shutil.rmtree(os.path.join(path, name))
             deleted.append(name)
-            # drop the version's commit marker too (marker protocol): a
-            # stale marker would otherwise advertise a vacuumed snapshot
-            try:
-                os.unlink(os.path.join(path, _COMMITS_DIR, name))
-            except FileNotFoundError:
-                pass
     return deleted

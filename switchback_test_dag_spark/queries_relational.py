@@ -958,44 +958,3 @@ def event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_sessions"),
         F.max("n_events").cast("long").alias("max_session_events"),
     )
-
-
-# --- §2.9: streaming tumbling-window aggregation (batch twin, driver-oracled) ----
-
-
-@query(
-    "stream_window_metrics",
-    """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS bucket_start_s,
-              CAST(epoch(date_trunc('hour', ts)) + 3600 AS BIGINT) AS bucket_end_s,
-              event_type,
-              CAST(count(*) AS BIGINT) AS n_events,
-              ((2 * sum(CAST(round((value) * 1000000) AS BIGINT)) + 10000 * count(value))
-               // (20000 * count(value))) / 100.0 AS mean_value,
-              ((sum(CAST(round((value) * 1000000) AS BIGINT)) + 5000) // 10000) / 100.0 AS sum_value
-       FROM events
-       GROUP BY 1, 2, 3""",
-)
-def stream_window_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.9: the tumbling-window bucket aggregation that backs the streaming
-    family, run on its batch side so the driver hash-checks the exact
-    expression tree the stream executes (``streaming/windows.py``
-    ``windowed_bucket_metrics`` — stream==batch equality is separately pinned
-    by the differential tests in tests/test_streaming.py, so this row
-    transitively oracles the streaming output too). Window bounds are emitted
-    as epoch seconds (integer) and mean/sum use order-independent micro-unit
-    arithmetic, so neither micro-batch order nor shuffle order can move any
-    value."""
-    from switchback_test_dag_spark.streaming.windows import windowed_bucket_metrics
-
-    ev = load_table(spark, sf_dir, "events")
-    out = windowed_bucket_metrics(
-        ev, window="1 hour", by=("event_type",), exact_decimals=True
-    )
-    return out.select(
-        F.unix_timestamp("bucket_start").cast("long").alias("bucket_start_s"),
-        F.unix_timestamp("bucket_end").cast("long").alias("bucket_end_s"),
-        "event_type",
-        "n_events",
-        "mean_value",
-        "sum_value",
-    )

@@ -57,7 +57,9 @@ def _betacf(a: np.ndarray, b: np.ndarray, x: np.ndarray) -> np.ndarray:
 
 
 def betainc(a, b, x) -> np.ndarray:
-    """Regularized incomplete beta I_x(a, b), elementwise."""
+    """Regularized incomplete beta I_x(a, b), elementwise, in the inputs'
+    broadcast shape (0-d for scalars)."""
+    shape = np.broadcast_shapes(np.shape(a), np.shape(b), np.shape(x))
     a = np.atleast_1d(np.asarray(a, dtype=float))
     b = np.atleast_1d(np.asarray(b, dtype=float))
     x = np.atleast_1d(np.asarray(x, dtype=float))
@@ -88,7 +90,7 @@ def betainc(a, b, x) -> np.ndarray:
     out = np.where(use_direct, val, 1.0 - val)
     out = np.where(x <= 0.0, 0.0, out)
     out = np.where(x >= 1.0, 1.0, out)
-    return out
+    return out.reshape(shape)
 
 
 def t_sf(t, dof) -> np.ndarray:
@@ -130,7 +132,8 @@ def t_ppf_two_sided(alpha, dof) -> np.ndarray:
 
 
 def norm_sf(z) -> np.ndarray:
-    """Standard normal survival function (exact via math.erfc)."""
-    z = np.atleast_1d(np.asarray(z, dtype=float))
+    """Standard normal survival function (exact via math.erfc), in the
+    input's shape (0-d for a scalar)."""
+    z = np.asarray(z, dtype=float)
     erfc = np.frompyfunc(math.erfc, 1, 1)
-    return (0.5 * erfc(z / math.sqrt(2.0))).astype(float)
+    return 0.5 * np.asarray(erfc(z / math.sqrt(2.0)), dtype=float)

@@ -10,9 +10,10 @@ the fixed-L suffix-dedup approximation, measured and then applied as the
 Lee et al. 2021 cut (spans.py), segment-level keep-first
 dedup and boilerplate removal — the CCNet line-dedup family (lines.py),
 DSIR hashed-n-gram importance weighting AND resampling for targeted corpus
-selection with a stateless pure-JVM streaming scorer (dsir.py), and the
-composed CCNet-order cleaning chain as a public API
-(pipeline.clean_corpus). Everything is native Spark SQL expressions except
-the documented Arrow-batched islands (embedding matmuls, the streaming
-contamination flagger / boilerplate scrubber).
+selection with a stateless pure-JVM scorer (dsir.py), and the composed
+CCNet-order cleaning chain as a public API (pipeline.clean_corpus). The
+stateless ingest scorers (contamination flagger, boilerplate scrubber, DSIR
+scorer) apply unchanged to batch or streaming frames. Everything is native
+Spark SQL expressions except the documented Arrow-batched islands
+(embedding matmuls, the contamination flagger / boilerplate scrubber).
 """

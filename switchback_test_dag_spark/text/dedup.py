@@ -48,7 +48,6 @@ from switchback_test_dag_spark.text.analysis import content_fingerprint, word_sh
 # materialized data, execution path, and release discipline are persist()'s,
 # bit-for-bit (see caching.barrier).
 from switchback_test_dag_spark.caching import barrier as _persist  # noqa: E402
-from switchback_test_dag_spark.caching import release_all as release_caches  # noqa: E402,F401
 
 
 # --------------------------------------------------------------------------- #

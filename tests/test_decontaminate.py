@@ -88,7 +88,7 @@ def test_plan_broadcasts_eval_side(spark):
 def test_stateless_flagger_matches_batch_join_and_streams(spark, tmp_path):
     import os
 
-    from switchback_test_dag_spark.streaming.windows import run_stream_to_memory
+    from conftest import run_stream_to_memory
     from switchback_test_dag_spark.text.decontaminate import contamination_flagger
 
     docs = load_table(spark, SF, "documents")
@@ -116,7 +116,7 @@ def test_stateless_flagger_matches_batch_join_and_streams(spark, tmp_path):
     out = flag(stream).filter(F.col("n_eval_grams") > 0).select(
         "doc_id", "n_eval_grams"
     )
-    run_stream_to_memory(out, "decon_flag_test", str(tmp_path), output_mode="append")
+    run_stream_to_memory(out, "decon_flag_test", str(tmp_path))
     sgot = {
         r["doc_id"]: r["n_eval_grams"] for r in spark.table("decon_flag_test").collect()
     }

@@ -59,7 +59,6 @@ _EVENTS_QUERIES = [
     "events_scalar_suite",
     "bucket_means_two_level",
     "time_bucket_suite",
-    "stream_window_metrics",
     "welch_mde_by_event_type",
     "crse_beta_se",
     "perm_dist_thresholds",

@@ -1,7 +1,7 @@
 """The events ``ts`` contract: whatever physical timestamp type the parquet
-stores, ``load_table``/``stream_events`` expose a µs ``ts`` TIMESTAMP plus an
-exact ``ts_ns`` long. Round 3's driver run failed on exactly this — the fixture
-moved to TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark 4 infers as
+stores, ``load_table`` exposes a µs ``ts`` TIMESTAMP plus an exact ``ts_ns``
+long. Round 3's driver run failed on exactly this — the fixture moved to
+TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark 4 infers as
 ``timestamp_ntz``, and the old dtype dispatch silently skipped ``ts_ns``."""
 
 from __future__ import annotations
@@ -342,295 +342,3 @@ def test_read_committed_rejects_malformed_version_name(spark, tmp_path):
     with pytest.raises(ValueError, match="malformed version name"):
         sio.read_committed(spark, path, version="v1")
 
-
-def test_compact_batches_roundtrip_sweep_and_noop(spark, tmp_path):
-    """compact_batches folds a batch=<id> log into one atomic snapshot:
-    read_batch_state returns identical rows before and after, the folded
-    dirs are swept, later batch dirs layer on top of the snapshot, a second
-    compaction folds them too, and compacting with nothing new is a no-op
-    (same watermark, no new version committed)."""
-    import os
-
-    import switchback_test_dag_spark.io as sio
-
-    path = str(tmp_path / "log")
-    for i in range(3):
-        spark.createDataFrame([(i * 10, f"d{i}")], "id long, s string").write.parquet(
-            os.path.join(path, f"batch={i}")
-        )
-    before = {
-        (r.id, r.s, r.batch) for r in sio.read_batch_state(spark, path).collect()
-    }
-    assert before == {(0, "d0", 0), (10, "d1", 1), (20, "d2", 2)}
-
-    wm = sio.compact_batches(spark, path)
-    assert wm == 2
-    assert sio.compacted_watermark(path) == 2
-    assert not [n for n in os.listdir(path) if n.startswith("batch=")]  # swept
-    after = {
-        (r.id, r.s, r.batch) for r in sio.read_batch_state(spark, path).collect()
-    }
-    assert after == before
-
-    # fresh batches layer on top of the snapshot
-    spark.createDataFrame([(30, "d3")], "id long, s string").write.parquet(
-        os.path.join(path, "batch=3")
-    )
-    layered = {
-        (r.id, r.s, r.batch) for r in sio.read_batch_state(spark, path).collect()
-    }
-    assert layered == before | {(30, "d3", 3)}
-
-    # second compaction folds the new batch; no-op compaction afterwards
-    assert sio.compact_batches(spark, path) == 3
-    croot = os.path.join(path, "_compacted")
-    versions_before_noop = sorted(os.listdir(croot))
-    assert sio.compact_batches(spark, path) == 3  # nothing new: same wm
-    assert sorted(os.listdir(croot)) == versions_before_noop  # no new version
-    final = {
-        (r.id, r.s, r.batch) for r in sio.read_batch_state(spark, path).collect()
-    }
-    assert final == layered
-
-
-def test_read_batch_state_before_batch_spans_compaction(spark, tmp_path):
-    """before_batch (the foreachBatch replay-safety filter) excludes the
-    batch's own rows whether they live in un-folded dirs OR inside the
-    compacted snapshot — the batch column is preserved through compaction
-    exactly so a replay stays safe after a compaction folded the failed
-    attempt."""
-    import os
-
-    import switchback_test_dag_spark.io as sio
-
-    path = str(tmp_path / "log")
-    for i in range(3):
-        spark.createDataFrame([(i,)], "id long").write.parquet(
-            os.path.join(path, f"batch={i}")
-        )
-    # un-compacted: dirs >= before_batch are not even listed
-    view = sio.read_batch_state(spark, path, before_batch=2)
-    assert {r.id for r in view.collect()} == {0, 1}
-    assert sio.read_batch_state(spark, path, before_batch=0) is None
-
-    sio.compact_batches(spark, path)
-    # compacted: the snapshot row with batch=2 is filtered out
-    view = sio.read_batch_state(spark, path, before_batch=2)
-    assert {r.id for r in view.collect()} == {0, 1}
-    # and a replayed LAST batch sees everything strictly earlier
-    spark.createDataFrame([(3,)], "id long").write.parquet(
-        os.path.join(path, "batch=3")
-    )
-    view = sio.read_batch_state(spark, path, before_batch=3)
-    assert {r.id for r in view.collect()} == {0, 1, 2}
-
-
-def test_compact_batches_crash_leaves_log_readable(spark, tmp_path, monkeypatch):
-    """A compaction killed before the pointer flip leaves the previous state
-    — prior snapshot and every batch dir — exactly readable, and a retry
-    commits cleanly (the fold is just atomic_overwrite underneath)."""
-    import os
-
-    import switchback_test_dag_spark.io as sio
-
-    path = str(tmp_path / "log")
-    for i in range(2):
-        spark.createDataFrame([(i,)], "id long").write.parquet(
-            os.path.join(path, f"batch={i}")
-        )
-
-    def dying_commit(p, v):
-        raise RuntimeError("killed before pointer flip")
-
-    real = sio._commit_pointer
-    monkeypatch.setattr(sio, "_commit_pointer", dying_commit)
-    with pytest.raises(RuntimeError):
-        sio.compact_batches(spark, path)
-    assert sio.compacted_watermark(path) is None  # nothing committed
-    assert len([n for n in os.listdir(path) if n.startswith("batch=")]) == 2
-    assert {r.id for r in sio.read_batch_state(spark, path).collect()} == {0, 1}
-
-    monkeypatch.setattr(sio, "_commit_pointer", real)
-    assert sio.compact_batches(spark, path) == 1
-    assert {r.id for r in sio.read_batch_state(spark, path).collect()} == {0, 1}
-
-
-def test_atomic_overwrite_extra_files_commit_with_data(spark, tmp_path):
-    """extra_files sidecars land inside the committed version dir (atomic
-    with the data), must be underscore-hidden so Spark's reader skips them,
-    and a non-hidden name is rejected up front."""
-    import os
-
-    import switchback_test_dag_spark.io as sio
-
-    path = str(tmp_path / "tbl")
-    df = spark.createDataFrame([(1,)], "id long")
-    vdir = sio.atomic_overwrite(df, path, extra_files={"_meta": "42"})
-    with open(os.path.join(vdir, "_meta")) as fh:
-        assert fh.read() == "42"
-    assert {r.id for r in sio.read_committed(spark, path).collect()} == {1}
-    with pytest.raises(ValueError, match="must start with '_'"):
-        sio.atomic_overwrite(df, path, extra_files={"meta": "42"})
-
-
-def test_marker_protocol_commit_crash_and_mixed(spark, tmp_path, monkeypatch):
-    """The object-store-safe commit path: protocol='marker' commits by
-    CREATING _commits/<version> (atomic single-object create, no rename
-    anywhere) and readers resolve max(markers, _CURRENT). Crash between
-    staging and the marker create leaves the previous commit live; the two
-    protocols compose on one table; vacuum drops stale markers with their
-    version dirs."""
-    import os
-
-    import switchback_test_dag_spark.io as sio
-
-    path = str(tmp_path / "tbl")
-    # v1 under the local 'replace' protocol, v2 under 'marker' — a migrated
-    # table keeps resolving to its newest commit
-    sio.atomic_overwrite(spark.createDataFrame([(1,)], "id long"), path)
-    sio.atomic_overwrite(
-        spark.createDataFrame([(2,)], "id long"), path, protocol="marker"
-    )
-    assert sio.current_version(path) == "v0000000002"
-    assert os.path.exists(os.path.join(path, "_commits", "v0000000002"))
-    assert {r.id for r in sio.read_committed(spark, path).collect()} == {2}
-    # time travel across the protocol boundary
-    old = sio.read_committed(spark, path, version="v0000000001")
-    assert {r.id for r in old.collect()} == {1}
-
-    # crash killed between the staging write and the marker create: nothing
-    # committed, previous version exactly readable, retry lands cleanly
-    real = sio._commit_marker
-
-    def dying_marker(p, v):
-        raise RuntimeError("killed before marker create")
-
-    monkeypatch.setattr(sio, "_commit_marker", dying_marker)
-    with pytest.raises(RuntimeError):
-        sio.atomic_overwrite(
-            spark.createDataFrame([(9,)], "id long"), path, protocol="marker"
-        )
-    assert sio.current_version(path) == "v0000000002"
-    assert {r.id for r in sio.read_committed(spark, path).collect()} == {2}
-    monkeypatch.setattr(sio, "_commit_marker", real)
-    sio.atomic_overwrite(
-        spark.createDataFrame([(9,)], "id long"), path, protocol="marker"
-    )
-    assert {r.id for r in sio.read_committed(spark, path).collect()} == {9}
-
-    # vacuum: superseded dirs AND their markers go; the live marker stays
-    deleted = sio.vacuum_versions(path)
-    assert "v0000000002" in deleted
-    assert not os.path.exists(os.path.join(path, "_commits", "v0000000002"))
-    assert sio.current_version(path) is not None
-    assert {r.id for r in sio.read_committed(spark, path).collect()} == {9}
-
-    with pytest.raises(ValueError, match="unknown protocol"):
-        sio.atomic_overwrite(
-            spark.createDataFrame([(1,)], "id long"), path, protocol="s3"
-        )
-
-
-def test_marker_protocol_concurrent_writer_race_fails_loudly(
-    spark, tmp_path, monkeypatch
-):
-    """Two marker-protocol writers racing on one version number: the loser
-    fails on the immutable staging dir (errorifexists) or on the marker
-    create ('x' mode) — never a silent overwrite of a committed snapshot."""
-    import os
-
-    import switchback_test_dag_spark.io as sio
-
-    path = str(tmp_path / "tbl")
-    sio.atomic_overwrite(
-        spark.createDataFrame([(1,)], "id long"), path, protocol="marker"
-    )
-    sio.atomic_overwrite(
-        spark.createDataFrame([(2,)], "id long"), path, protocol="marker"
-    )
-    # stale listing: this writer believes only v1 exists and targets v2
-    monkeypatch.setattr(sio, "_version_dirs", lambda p: [1])
-    with pytest.raises(Exception, match="(?i)already exists"):
-        sio.atomic_overwrite(
-            spark.createDataFrame([(9,)], "id long"), path, protocol="marker"
-        )
-    assert sio.current_version(path) == "v0000000002"
-    assert {r.id for r in sio.read_committed(spark, path).collect()} == {2}
-    # marker-level collision (staging somehow succeeded twice): 'x' create
-    with pytest.raises(FileExistsError):
-        sio._commit_marker(path, "v0000000002")
-    # the directory-fsync nicety of the replace path isn't part of this
-    # protocol; make sure markers survive a plain re-listing
-    assert sio._marker_versions(path) == ["v0000000001", "v0000000002"]
-    assert os.path.isdir(os.path.join(path, "_commits"))
-
-
-def test_compact_batches_marker_protocol(spark, tmp_path):
-    """compact_batches(protocol='marker') commits the snapshot via the
-    rename-free marker protocol — the object-store state-dir path — and
-    read_batch_state resolves it identically."""
-    import os
-
-    import switchback_test_dag_spark.io as sio
-
-    path = str(tmp_path / "log")
-    for i in range(2):
-        spark.createDataFrame([(i,)], "id long").write.parquet(
-            os.path.join(path, f"batch={i}")
-        )
-    assert sio.compact_batches(spark, path, protocol="marker") == 1
-    croot = os.path.join(path, "_compacted")
-    assert os.path.isdir(os.path.join(croot, "_commits"))
-    assert not os.path.exists(os.path.join(croot, "_CURRENT"))
-    assert {r.id for r in sio.read_batch_state(spark, path).collect()} == {0, 1}
-
-
-def test_randomized_fold_with_arbitrary_compactions_matches_batch(spark, tmp_path):
-    """Randomized differential for the fold×compaction interaction: random
-    corpora split into random batches folded through
-    exact_dedup_incremental with the on-disk batch-log layout, a compaction
-    landing after RANDOM batches (sometimes several, sometimes none) —
-    survivors must always equal batch exact_dedup of the concatenation.
-    Seeded, three corpora."""
-    import os
-    import random
-
-    import switchback_test_dag_spark.io as sio
-    import switchback_test_dag_spark.text.dedup as TD
-
-    schema = "doc_id long, text string"
-    vocab = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
-    for seed in (11, 22, 33):
-        rng = random.Random(seed)
-        rows = [
-            (i, " ".join(rng.choices(vocab, k=rng.randint(1, 3))))
-            for i in range(rng.randint(8, 20))
-        ]
-        # random batch split, ids increasing across batches (the canon)
-        cuts = sorted(rng.sample(range(1, len(rows)), rng.randint(1, 3)))
-        batches = [
-            rows[a:b] for a, b in zip([0] + cuts, cuts + [len(rows)])
-        ]
-        idx = str(tmp_path / f"idx{seed}")
-        out = str(tmp_path / f"out{seed}")
-        for bid, batch_rows in enumerate(batches):
-            bdf = spark.createDataFrame(batch_rows, schema)
-            index = sio.read_batch_state(spark, idx, before_batch=bid)
-            if index is not None:
-                index = index.select("fingerprint")
-            survivors, new_fps = TD.exact_dedup_incremental(
-                bdf, "doc_id", "text", index
-            )
-            survivors.write.parquet(os.path.join(out, f"batch={bid}"))
-            new_fps.write.parquet(os.path.join(idx, f"batch={bid}"))
-            if rng.random() < 0.5:  # compaction lands at arbitrary points
-                sio.compact_batches(spark, idx)
-                sio.compact_batches(spark, out)
-        got = {
-            r.doc_id for r in sio.read_batch_state(spark, out).collect()
-        }
-        full = spark.createDataFrame(rows, schema)
-        expect = {
-            r.doc_id for r in TD.exact_dedup(full, "doc_id", "text").collect()
-        }
-        assert got == expect, f"seed {seed}: {got} != {expect}"

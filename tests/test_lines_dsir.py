@@ -441,7 +441,7 @@ def test_dsir_scorer_matches_batch_and_streams(spark, tmp_path):
     literal map, pure JVM fold) must equal dsir_log_weights on the same
     corpus — float and fixed-point forms — and score a STREAM of the same
     documents identically, with no Python stage in the plan."""
-    from switchback_test_dag_spark.streaming.windows import run_stream_to_memory
+    from conftest import run_stream_to_memory
 
     docs, target = _dsir_fixture(spark)
     for fp in (None, 1_000_000):
@@ -470,7 +470,7 @@ def test_dsir_scorer_matches_batch_and_streams(spark, tmp_path):
     docs.coalesce(1).write.parquet(str(src / "b0"))
     stream = spark.readStream.schema(docs.schema).parquet(str(src) + "/*")
     out = score(stream).select("doc_id", "log_weight_fp")
-    run_stream_to_memory(out, "dsir_score_test", str(tmp_path), output_mode="append")
+    run_stream_to_memory(out, "dsir_score_test", str(tmp_path))
     sgot = {r["doc_id"]: r["log_weight_fp"]
             for r in spark.table("dsir_score_test").collect()}
     assert sgot == got
@@ -555,7 +555,7 @@ def test_boilerplate_scrubber_matches_batch_and_streams(spark, tmp_path):
     """The stateless scrubber must equal drop_boilerplate on the same corpus
     (modulo drop_boilerplate's NULL->empty normalization), and a STREAM of
     the same documents must scrub identically (no state store, no shuffle)."""
-    from switchback_test_dag_spark.streaming.windows import run_stream_to_memory
+    from conftest import run_stream_to_memory
     from switchback_test_dag_spark.text.lines import boilerplate_scrubber
 
     df = spark.createDataFrame(ROWS, SCHEMA)
@@ -572,7 +572,7 @@ def test_boilerplate_scrubber_matches_batch_and_streams(spark, tmp_path):
     df.coalesce(1).write.parquet(str(src / "batch0"))
     stream = spark.readStream.schema(df.schema).parquet(str(src) + "/*")
     out = scrub(stream).select("doc_id", "segs")
-    run_stream_to_memory(out, "boiler_scrub_test", str(tmp_path), output_mode="append")
+    run_stream_to_memory(out, "boiler_scrub_test", str(tmp_path))
     sgot = {r["doc_id"]: r["segs"] for r in spark.table("boiler_scrub_test").collect()}
     assert sgot == want
 

@@ -94,14 +94,19 @@ def test_registry_fits_correctness_window():
 
 def test_package_imports_resolve():
     """Every ``from switchback_test_dag_spark... import name`` in the package,
-    module-level or function-local, names a module that imports and a name it
-    has (attribute or submodule). Function-local imports only fail when their
-    function runs, so a deleted module would otherwise go unnoticed until a
-    caller reaches it."""
-    pkg = Path(entry_mod.__file__).parent / "switchback_test_dag_spark"
+    the tools and the benchmark, module-level or function-local, names a
+    module that imports and a name it has (attribute or submodule).
+    Function-local imports and scripts only fail when they run, so a deleted
+    module or name would otherwise go unnoticed until a caller reaches it."""
+    root = Path(entry_mod.__file__).parent
+    paths = [
+        *(root / "switchback_test_dag_spark").rglob("*.py"),
+        *(root / "tools").glob("*.py"),
+        *(root / "perfbench").glob("*.py"),
+    ]
     checked, broken = 0, []
-    for path in sorted(pkg.rglob("*.py")):
-        package = ".".join(path.relative_to(pkg.parent).parent.parts)
+    for path in sorted(paths):
+        package = ".".join(path.relative_to(root).parent.parts)
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
             if not isinstance(node, ast.ImportFrom):
                 continue
@@ -111,7 +116,7 @@ def test_package_imports_resolve():
             if not module.startswith("switchback_test_dag_spark"):
                 continue
             checked += 1
-            where = f"{path.relative_to(pkg.parent)}:{node.lineno}"
+            where = f"{path.relative_to(root)}:{node.lineno}"
             try:
                 mod = importlib.import_module(module)
             except ImportError as exc:
@@ -124,5 +129,5 @@ def test_package_imports_resolve():
                     f"{module}.{alias.name}"
                 ) is None:
                     broken.append(f"{where}: {module}.{alias.name}")
-    assert checked > 100, checked
+    assert checked > 130, checked
     assert not broken, broken

@@ -126,9 +126,7 @@ def test_sweep_and_finder_scan_once(spark, sf_dir):
         assert plan.count("InMemoryTableScan") == 3
         assert "CartesianProduct" not in plan
     finally:
-        from switchback_test_dag_spark.design.counterpart import release_caches
-
-        release_caches()
+        release_all()
 
 
 def test_date_partitioned_orders_prunes(spark, sf_dir, tmp_path):
@@ -236,9 +234,9 @@ def test_winnow_plan_shares_fingerprint_scan(spark, sf_dir):
         assert "CartesianProduct" not in plan
         assert "EvalPython" not in plan
     finally:
-        from switchback_test_dag_spark.text.dedup import release_caches
+        from switchback_test_dag_spark.caching import release_all
 
-        release_caches()
+        release_all()
 
 
 def test_salted_join_keys_include_salt(spark, sf_dir):

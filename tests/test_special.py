@@ -17,6 +17,7 @@ from switchback_test_dag_spark.stats.special import (
     betainc,
     norm_sf,
     t_ppf_two_sided,
+    t_sf,
     t_two_sided_p,
 )
 
@@ -45,9 +46,14 @@ def test_t_table_critical_values():
     # standard t-table 97.5th percentiles (two-sided alpha = 0.05)
     known = {1: 12.7062, 2: 4.3027, 5: 2.5706, 10: 2.2281, 30: 2.0423}
     for dof, crit in known.items():
-        assert float(t_ppf_two_sided(0.05, float(dof))) == pytest.approx(
-            crit, abs=5e-4
-        )
+        got = t_ppf_two_sided(0.05, float(dof))
+        assert float(got) == pytest.approx(crit, abs=5e-4)
+        # scalar in, scalar (0-d) out, all the way down the call chain
+        assert np.shape(got) == ()
+        assert np.shape(t_two_sided_p(got, float(dof))) == ()
+        sf = t_sf(got, float(dof))
+        assert np.shape(sf) == ()
+        assert float(sf) == pytest.approx(0.025, abs=1e-9)
 
 
 def test_t_p_monotone_in_t_and_dof():
@@ -74,6 +80,8 @@ def test_betainc_symmetry_and_bounds():
         betainc(a, b, xs) + betainc(b, a, 1.0 - xs), 1.0, atol=1e-12
     )
     assert betainc(a, b, 0.0) == 0.0 and betainc(a, b, 1.0) == 1.0
+    assert np.shape(betainc(a, b, 0.5)) == ()
+    assert np.shape(betainc(a, b, xs[:, None])) == (97, 1)
 
 
 def test_betainc_uniform_case():
@@ -84,5 +92,7 @@ def test_betainc_uniform_case():
 
 def test_norm_sf_known_values():
     assert norm_sf(0.0) == pytest.approx(0.5, abs=1e-15)
+    assert np.shape(norm_sf(0.0)) == ()
+    assert np.shape(norm_sf([0.0, 1.0])) == (2,)
     assert norm_sf(1.959963984540054) == pytest.approx(0.025, abs=1e-12)
     assert norm_sf(-1.0) == pytest.approx(1.0 - 0.15865525393145707, abs=1e-12)

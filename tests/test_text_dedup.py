@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from switchback_test_dag_spark import caching
 from switchback_test_dag_spark.io import load_table
 from switchback_test_dag_spark.text import dedup as TD
 from switchback_test_dag_spark.vectors import similarity as VS
@@ -328,7 +329,7 @@ def test_embedding_near_dup_lsh_recall_vs_exact(emb):
         emb, "vec_id", "embedding", threshold=0.4, n_planes=4
     )
     lsh = {(r["id_a"], r["id_b"]) for r in lsh_df.collect()}
-    TD.release_caches()
+    caching.release_all()
     assert exact, "fixture should contain near-dup pairs at threshold 0.4"
     assert lsh <= exact, f"false positives: {lsh - exact}"
     recall = len(lsh & exact) / len(exact)
@@ -341,7 +342,7 @@ def test_embedding_near_dup_lsh_recall_vs_exact(emb):
             emb, "vec_id", "embedding", threshold=0.4, n_planes=4, n_tables=8
         ).collect()
     }
-    TD.release_caches()
+    caching.release_all()
     assert multi <= exact, f"false positives: {multi - exact}"
     assert len(multi) >= len(lsh)
     assert len(multi & exact) / len(exact) >= 0.9, "multi-table recall too low"
@@ -360,11 +361,9 @@ def test_embedding_near_dup_lsh_empty_corpus(spark):
 
 
 def test_release_caches_unpins_intermediates(docs, spark):
-    from switchback_test_dag_spark import caching
-
     TD.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.85).count()
     assert len(caching._PINNED) > 0
-    TD.release_caches()
+    caching.release_all()
     assert caching._PINNED == []
     # nothing left cached in the Spark context
     jsc = spark.sparkContext._jsc.sc()

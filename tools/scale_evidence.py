@@ -843,83 +843,6 @@ ORDER BY k2.source
     return out
 
 
-def measure_compaction(spark, sf_dir: str) -> dict:
-    """The round-13 batch-log compaction, measured instead of asserted: a
-    200-batch fingerprint log (the shape a foreachBatch dedup stream leaves
-    after 200 triggers) is read through ``io.read_batch_state`` before and
-    after ``io.compact_batches(target_partitions=8)``. Records directory/
-    file counts, wall time of a full state read at both points, and the
-    row-count + id-hash checksum equality that proves the fold is purely
-    physical. The listing/small-file cost is the quantity that grows
-    without bound in an uncompacted log — at 15-minute triggers, 200
-    batches is under 3 days of ingest."""
-    import glob as _glob
-    import time as _time
-
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from switchback_test_dag_spark.io import (
-        compact_batches,
-        load_table,
-        read_batch_state,
-    )
-    from switchback_test_dag_spark.text.dedup import content_fingerprint
-
-    docs = load_table(spark, sf_dir, "documents")
-    log = os.path.join(tempfile.mkdtemp(prefix="compact_ev_"), "fp_log")
-    (
-        docs.select(
-            "doc_id",
-            content_fingerprint("text").alias("fingerprint"),
-            (F.col("doc_id") % 200).cast("int").alias("batch"),
-        )
-        .write.partitionBy("batch")
-        .parquet(log)
-    )
-
-    def _state_stats():
-        t0 = _time.monotonic()
-        row = (
-            read_batch_state(spark, log)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                # 40-bit per-row hash keeps the 50k-row sum far from long
-                # overflow under ANSI (the repo's checksum-sum convention)
-                F.sum(
-                    F.pmod(F.xxhash64("doc_id", "fingerprint"), F.lit(1 << 40))
-                ).alias("chk"),
-            )
-            .collect()[0]
-        )
-        return row["n"], int(row["chk"]), round(_time.monotonic() - t0, 3)
-
-    n_dirs_before = len(_glob.glob(os.path.join(log, "batch=*")))
-    n_files_before = len(_glob.glob(os.path.join(log, "batch=*", "*.parquet")))
-    n_before, chk_before, t_before = _state_stats()
-    wm = compact_batches(spark, log, target_partitions=8)
-    n_dirs_after = len(_glob.glob(os.path.join(log, "batch=*")))
-    n_files_after = len(
-        _glob.glob(os.path.join(log, "_compacted", "v*", "*.parquet"))
-    )
-    n_after, chk_after, t_after = _state_stats()
-    return {
-        "what": "batch-log compaction: listing/small-file cost + physical-only fold",
-        "n_batches": 200,
-        "watermark": wm,
-        "dirs_before": n_dirs_before,
-        "dirs_after": n_dirs_after,
-        "data_files_before": n_files_before,
-        "data_files_after": n_files_after,
-        "read_wall_s_before": t_before,
-        "read_wall_s_after": t_after,
-        "rows_match": n_before == n_after,
-        "checksum_match": chk_before == chk_after,
-        "n_rows": n_before,
-    }
-
-
 def measure_ivf_pq(spark, sf_dir: str) -> dict:
     """The round-13 IVF-PQ memory dial, measured on disk: the corpus
     embeddings are written twice — float vectors only, PQ codes only — and
@@ -987,7 +910,6 @@ _MEASURES = {
     "minhash_oph": measure_minhash_oph,
     "span_removal": measure_span_removal,
     "clean_corpus_full": measure_clean_corpus_full,
-    "compaction": measure_compaction,
     "ivf_pq": measure_ivf_pq,
 }
 
