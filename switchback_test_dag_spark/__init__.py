@@ -4,7 +4,7 @@ data-processing capabilities of the reference switchback-experiment pipeline
 
 Layout (see SURVEY.md §7):
 - ``session`` / ``io``    — SparkSession factory, fixture table loading
-- ``operators``           — relational ELT stages, dedup, similarity, text
+- ``operators``           — relational ELT stages, dedup, text
 - ``functions``           — scalar helpers (dates, buckets, geo, normalization)
 - ``plans``               — time-unit bucketing + seeded assignment strategies
 - ``stats``               — distributed hypothesis tests (MWU/t/Welch/CRSE),

@@ -1,3 +1,3 @@
 """Operator library: relational ELT stages, domain-fixture synthesis, and the
-large-scale data-pipeline extensions (dedup, similarity search, text
+large-scale data-pipeline extensions (dedup, text
 analysis)."""

@@ -6,9 +6,7 @@ A 100 TB orders fact read by a daily pipeline must not list or scan years of
 history for a one-week query. Hive-style ``partitionBy`` on a derived month
 (or day) column turns every date predicate into directory pruning at the
 FILE LISTING — the plan shows it under ``PartitionFilters``, and the bytes
-read track the queried window, not the table. Same mechanism the IVF cell
-layout uses for ANN probes (``vectors/similarity.ivf_persist_layout``); this
-module is the relational twin, pinned by
+read track the queried window, not the table. Pinned by
 ``tests/test_plans.py::test_date_partitioned_orders_prunes``.
 
 Partition-count hygiene: month grain bounds directory counts (~120 for a
@@ -111,8 +109,7 @@ def write_zorder_clustered(
     member of this layout family (the lakehouse technique Delta's OPTIMIZE
     ZORDER BY popularized, in plain parquet): values are quantile-binned
     per column (boundaries from ``approxQuantile`` — one bounded
-    driver-side pass, the same train-on-sample regime as the IVF
-    quantizers), bin indexes bit-interleaved into a Morton key, and the
+    driver-side pass), bin indexes bit-interleaved into a Morton key, and the
     table range-partitioned + sorted on that key. Because the Morton curve
     preserves locality in BOTH dimensions, every file's (min, max) stats
     box is small in BOTH columns — so a predicate on EITHER column (or a

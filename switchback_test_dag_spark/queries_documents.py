@@ -1,18 +1,16 @@
-"""Document / embedding operator queries (training-data pipeline extensions:
-dedup, similarity search, text analysis), each with a DuckDB oracle where
-SQL-expressible. Registered into ``queries.QUERIES`` on import (see bottom of
-``queries.py``).
+"""Document operator queries (training-data pipeline extensions: dedup and
+text analysis), each with a DuckDB oracle where SQL-expressible. Registered
+into ``queries.QUERIES`` on import (see bottom of ``queries.py``).
 
 Oracle parity notes:
 - tokenization is pinned on both engines as: lowercase → split on ``\\s+`` →
   drop empties; shingles are space-joined word 3-grams, distinct;
-- Jaccard/cosine are rounded to 4 decimals on both sides;
+- Jaccard is rounded to 4 decimals on both sides;
 - MinHash signatures use xxhash64, which DuckDB lacks → that query's oracle is
   the *brute-force exact* equivalent (the LSH result must equal the exact
   result at these similarity margins); SimHash uses portable md5-prefix token
-  hashes so its oracle replays the signatures verbatim; the approximate ANN
-  queries emit hash-checked recall@k contracts (``VS.recall_gate``) — every
-  registered query carries a value-level oracle.
+  hashes so its oracle replays the signatures verbatim — every registered
+  query carries a value-level oracle.
 """
 
 from __future__ import annotations
@@ -27,7 +25,6 @@ from switchback_test_dag_spark.queries import query
 from switchback_test_dag_spark.text import analysis as TA
 from switchback_test_dag_spark.text import dedup as TD
 from switchback_test_dag_spark.text import spans as SP
-from switchback_test_dag_spark.vectors import similarity as VS
 
 # DuckDB-side token/shingle builders (kept in one place so every oracle agrees)
 _DUCK_TOKS = "list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x != '')"
@@ -766,184 +763,6 @@ def doc_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     additionally pytest-verified (tests/test_text_dedup.py)."""
     docs = load_table(spark, sf_dir, "documents")
     return TD.simhash_pairs(docs, "doc_id", "text", max_hamming=3)
-
-
-# Bound sits far under the measured LSH pair-recall minima (0.997-1.000 at
-# 4 planes × 8 OR-ed tables across sf0.001/0.01/0.1 — this fixture's 0.4
-# threshold is the HARD case for hyperplane LSH; production 0.95 needs fewer
-# tables) yet far above where a real index regression (broken plane family,
-# wrong probe set, lost table) lands.
-_EMB_LSH_RECALL_BOUND = 0.8
-
-
-@query(
-    "emb_near_dup_pairs",
-    f"""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-              round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                           CAST(b.embedding AS DOUBLE[])), 4) AS cosine,
-              CAST({_EMB_LSH_RECALL_BOUND} AS DOUBLE) AS lsh_recall_floor
-       FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-       WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                    CAST(b.embedding AS DOUBLE[])) >= 0.4""",
-)
-def emb_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs. Fixture embeddings are cluster-sampled
-    (max pair cosine ≈ 0.51), so the demo threshold is 0.4; production
-    near-dup removal uses ≥ 0.95 with LSH candidate generation.
-
-    Carries the SCALE PATH's quality contract: the same pair set is also
-    computed by ``embedding_near_dup_pairs_lsh`` (hyperplane buckets, OR-ed
-    tables, no driver collect — what SCALE.md designates once the broadcast
-    cap trips) and every output row gets ``lsh_recall_floor =
-    least(round(pair_recall, 4), bound)`` — the ``recall_gate`` shape: the
-    oracle predicts the constant bound, so an LSH recall regression surfaces
-    as a lower value and fails the driver's hash check."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    from switchback_test_dag_spark.caching import pin as _pin
-
-    exact = _pin(
-        TD.embedding_near_dup_pairs(emb, "vec_id", "embedding", threshold=0.4)
-    )
-    lsh = TD.embedding_near_dup_pairs_lsh(
-        emb, "vec_id", "embedding", threshold=0.4, n_planes=4, n_tables=8
-    )
-    hits = lsh.join(exact.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi")
-    stats = hits.agg(F.count(F.lit(1)).alias("n_hit")).crossJoin(
-        exact.agg(F.count(F.lit(1)).alias("n_ex"))
-    )
-    floor = stats.select(
-        F.when(F.col("n_ex") == 0, F.lit(float(_EMB_LSH_RECALL_BOUND)))
-        .otherwise(
-            F.least(
-                F.round(F.col("n_hit") / F.col("n_ex"), 4),
-                F.lit(float(_EMB_LSH_RECALL_BOUND)),
-            )
-        )
-        .alias("lsh_recall_floor")
-    )
-    return exact.crossJoin(F.broadcast(floor))
-
-
-# --------------------------------------------------------------------------- #
-# similarity search
-# --------------------------------------------------------------------------- #
-
-
-@query(
-    "emb_cosine_topk",
-    """WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-                  FROM embeddings WHERE vec_id < 5),
-       scored AS (
-         SELECT q.query_id, e.vec_id AS neighbor_id,
-                round(list_cosine_similarity(qv, CAST(e.embedding AS DOUBLE[])), 4) AS cosine
-         FROM embeddings e, q WHERE e.vec_id != q.query_id
-       )
-       SELECT query_id, neighbor_id, cosine,
-              CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS INT) AS rank
-       FROM scored
-       QUALIFY rank <= 10""",
-)
-def emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact brute-force cosine top-10 for 5 query vectors: broadcast queries,
-    one corpus scan, window top-k keyed on query_id."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 5)
-    return VS.cosine_topk_bruteforce(emb, queries_df, "vec_id", "embedding", k=10)
-
-
-# Bounds sit well under the measured per-query minima (LSH 0.6–0.7, IVF
-# 0.8–0.9 across sf0.001/0.01/0.1) so a fixture regeneration with a new seed
-# cannot flip the gate, while any real index regression (broken hash, wrong
-# probe set, bad centroids) lands near zero and still fails the hash.
-_LSH_RECALL_BOUND = 0.5
-_IVF_RECALL_BOUND = 0.7
-
-
-def _ann_gate_oracle(bound: float, extra_cols: str = "") -> str:
-    """The recall-gate contract a SQL oracle can predict without replaying the
-    index: one row per query with the recall floor pinned at ``bound``. Any
-    query whose true recall@10 drops below the bound surfaces Spark-side as a
-    lower value and fails the hash check."""
-    return f"""SELECT vec_id AS query_id, 10 AS k,
-              CAST({bound} AS DOUBLE) AS recall_floor{extra_cols}
-       FROM embeddings WHERE vec_id < 5"""
-
-
-@query("emb_lsh_topk", _ann_gate_oracle(_LSH_RECALL_BOUND))
-def emb_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH approximate top-10 (n_planes=4, distance-2 multi-probe),
-    hash-checked as a quality contract: the query runs the LSH search AND the
-    exact brute force, then emits per-query score-threshold recall@10 floored
-    at the gate bound (``VS.recall_gate``). The oracle predicts the constant
-    floor, so recall regressions fail the driver's value hash — a stronger
-    check than rows-only for an index that is approximate by design. Raw
-    neighbor rows stay covered by tests/test_text_dedup.py."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 5)
-    approx = VS.hyperplane_lsh_topk(
-        emb, queries_df, "vec_id", "embedding", k=10, n_planes=4, multiprobe=2
-    )
-    exact = VS.cosine_topk_bruteforce(emb, queries_df, "vec_id", "embedding", k=10)
-    return VS.recall_gate(approx, exact, k=10, bound=_LSH_RECALL_BOUND)
-
-
-@query(
-    "emb_ivf_topk",
-    _ann_gate_oracle(
-        _IVF_RECALL_BOUND,
-        extra_cols=f",\n              CAST({_IVF_RECALL_BOUND} AS DOUBLE)"
-        " AS pq_recall_floor",
-    ),
-)
-def emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-10 (spherical-k-means coarse quantizer trained on a
-    deterministic sample; cell-keyed candidate join; n_probe=5 of 8 cells),
-    hash-checked as a recall@10 ≥ 0.7 quality contract exactly like
-    :func:`emb_lsh_topk` — PLUS the IVF-PQ memory dial's contract as a second
-    column: ``pq_recall_floor`` runs :func:`VS.ivf_pq_topk` (the probe scan
-    reads m-byte PQ codes instead of dim·4 float bytes — 16 bytes vs 256 at
-    the query's m=16/dim=64 — ADC-shortlists k·refine candidates per query,
-    then re-ranks with EXACT cosine from full vectors, so quantization can
-    lower recall but never distort a reported score) under the SAME 0.7
-    recall@10 floor. Folded into one query to stay inside the driver's
-    50-query correctness window — the same-grain-suite pattern."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 5)
-    # ONE training-sample fetch and ONE coarse-quantizer training shared by
-    # both indexes: the trainers are deterministic in (corpus, params, seed)
-    # and define their sample identically, so sharing changes nothing — it
-    # removes the duplicate corpus-wide TakeOrdered + driver transfer (the
-    # PQ codebooks previously re-fetched the same 4096-vector sample) and
-    # the duplicate driver k-means
-    smp = VS.train_sample_matrix(emb, "vec_id", "embedding")
-    cents = VS.train_ivf_centroids(
-        emb, "vec_id", "embedding", n_cells=8, sample=smp
-    )
-    approx = VS.ivf_topk(
-        emb, queries_df, "vec_id", "embedding", k=10, n_cells=8, n_probe=5,
-        centroids=cents,
-    )
-    pq = VS.ivf_pq_topk(
-        emb, queries_df, "vec_id", "embedding",
-        k=10, n_cells=8, n_probe=6, m=16, refine=8, centroids=cents,
-        sample=smp,
-    )
-    exact = VS.cosine_topk_bruteforce(emb, queries_df, "vec_id", "embedding", k=10)
-    from switchback_test_dag_spark.caching import pin as _pin
-
-    exact = _pin(exact)  # threshold side of BOTH gates — one brute-force pass
-    ivf_gate = VS.recall_gate(approx, exact, k=10, bound=_IVF_RECALL_BOUND)
-    pq_gate = VS.recall_gate(pq, exact, k=10, bound=_IVF_RECALL_BOUND).select(
-        "query_id", F.col("recall_floor").alias("pq_recall_floor")
-    )
-    # broadcast: one row per query (5 at any scale — the query set is the
-    # fixed vec_id < 5 slice), but the gate sides sit behind window/agg
-    # chains whose size estimates keep the planner on a sort-merge join
-    from pyspark.sql.functions import broadcast as _bc
-
-    return ivf_gate.join(_bc(pq_gate), "query_id").select(
-        "query_id", "k", "recall_floor", "pq_recall_floor"
-    )
 
 
 # --------------------------------------------------------------------------- #

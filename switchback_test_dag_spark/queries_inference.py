@@ -22,7 +22,6 @@ from switchback_test_dag_spark.plans.assignment import balanced_assignment
 from switchback_test_dag_spark.queries import query
 from switchback_test_dag_spark.stats import permutation as P
 from switchback_test_dag_spark.stats.crse import crse_ols
-from switchback_test_dag_spark.stats.ttests import welch_t_test
 
 N_SEEDS = 200
 CRIT = 1.959964

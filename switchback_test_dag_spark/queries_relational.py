@@ -9,15 +9,14 @@ fixture is ns-precision which Spark cannot represent).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from switchback_test_dag_spark.io import load_table
 from switchback_test_dag_spark.operators import relational as R
-from switchback_test_dag_spark.plans.buckets import hr_interval, time_bucket
+from switchback_test_dag_spark.plans.buckets import hr_interval
 from switchback_test_dag_spark.exact import (
-    duck_micro_sum,
     spark_micro_sum,
     spark_wide_total_from_micro,
 )

@@ -3,7 +3,7 @@
 These extend the reference's analytics surface (SURVEY §7.1 M6) with the
 operations a 100 TB training-data pipeline needs: tokenization, language ID,
 quality scoring, fingerprinting, repetition filters, PII hygiene
-(analysis.py), exact/MinHash-LSH/SimHash/n-gram-Jaccard/winnowing/embedding
+(analysis.py), exact/MinHash-LSH/SimHash/n-gram-Jaccard/winnowing
 deduplication with cluster resolution (dedup.py), train/eval benchmark
 decontamination (decontaminate.py), duplicated-span detection AND removal —
 the fixed-L suffix-dedup approximation, measured and then applied as the
@@ -12,8 +12,8 @@ dedup and boilerplate removal — the CCNet line-dedup family (lines.py),
 DSIR hashed-n-gram importance weighting AND resampling for targeted corpus
 selection with a stateless pure-JVM scorer (dsir.py), and the composed
 CCNet-order cleaning chain as a public API (pipeline.clean_corpus). The
-stateless ingest scorers (contamination flagger, boilerplate scrubber, DSIR
-scorer) apply unchanged to batch or streaming frames. Everything is native
-Spark SQL expressions except the documented Arrow-batched islands
-(embedding matmuls, the contamination flagger / boilerplate scrubber).
+ingest scorers (contamination flagger, boilerplate scrubber, DSIR scorer)
+are stateless row maps. Everything is native Spark SQL expressions except
+the documented Arrow-batched islands (the contamination flagger /
+boilerplate scrubber).
 """

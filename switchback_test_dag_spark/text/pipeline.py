@@ -59,7 +59,6 @@ def clean_corpus(
     span_policy: str | None = None,
     span_len: int = 13,
     span_min_count: int = 2,
-    near_dup_method: str = "jaccard",
 ) -> DataFrame:
     """Run the full cleaning chain; returns one row per SURVIVING document
     (quality-passed, scrubbed non-empty, fingerprint-unique, no near-dup
@@ -101,24 +100,7 @@ def clean_corpus(
       near-dup detection (order pin tested). The output then carries a
       ``spans_cut_tokens`` bigint column; documents cut to empty text are
       dropped (the scrubbed-to-nothing rule).
-
-    ``near_dup_method`` selects the near-dup pair generator:
-
-    - ``"jaccard"`` (default, the oracled contract): exact n-gram Jaccard
-      via AllPairs prefix filtering (``dedup.ngram_jaccard_pairs``) —
-      exhaustive, the right choice wherever it fits;
-    - ``"minhash"``: MinHash-LSH candidates + the SAME exact-Jaccard
-      verification (``dedup.minhash_lsh_pairs`` defaults, k=64/16 bands) —
-      the corpus-scale path when even prefix-filtered AllPairs is too wide;
-      drops only what Jaccard would drop (every candidate is
-      exact-verified), differing solely by LSH candidate recall
-      (≥ 1−(1−s⁴)¹⁶, ≈1 above the default threshold).
     """
-    if near_dup_method not in ("jaccard", "minhash"):
-        raise ValueError(
-            f"clean_corpus: unknown near_dup_method {near_dup_method!r} "
-            "(expected 'jaccard' or 'minhash')"
-        )
     if span_policy not in ("remove", None):
         raise ValueError(
             f"clean_corpus: unknown span_policy {span_policy!r} "
@@ -158,13 +140,8 @@ def clean_corpus(
             ).filter(F.col(text_col) != "")
         )
     kept1 = TD.exact_dedup(scrubbed, id_col, text_col)
-    pair_fn = (
-        TD.ngram_jaccard_pairs
-        if near_dup_method == "jaccard"
-        else TD.minhash_lsh_pairs
-    )
     near = (
-        pair_fn(
+        TD.ngram_jaccard_pairs(
             kept1, id_col, text_col, shingle_n=shingle_n,
             threshold=jaccard_threshold,
         )

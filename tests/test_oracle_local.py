@@ -131,3 +131,44 @@ def test_package_imports_resolve():
                     broken.append(f"{where}: {module}.{alias.name}")
     assert checked > 130, checked
     assert not broken, broken
+
+
+def test_no_unused_imports():
+    """Every name the package and the tools import, module-level or
+    function-local, is loaded somewhere in the same module. Imports kept for
+    their side effect (the registry modules ``queries.py`` pulls in) carry
+    ``# noqa: F401`` and are skipped; a package's re-exports count as loaded
+    through its ``__all__``."""
+    root = Path(entry_mod.__file__).parent
+    paths = [
+        *(root / "switchback_test_dag_spark").rglob("*.py"),
+        *(root / "tools").glob("*.py"),
+    ]
+    unused = []
+    for path in sorted(paths):
+        src = path.read_text()
+        lines = src.splitlines()
+        tree = ast.parse(src, str(path))
+        loaded = {
+            n.id
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+        }
+        for node in tree.body:
+            if isinstance(node, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+            ):
+                loaded.update(ast.literal_eval(node.value))
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            for alias in node.names:
+                marks = lines[node.lineno - 1] + lines[alias.lineno - 1]
+                if "noqa" in marks and "F401" in marks:
+                    continue
+                bound = alias.asname or alias.name.split(".")[0]
+                if bound not in loaded:
+                    unused.append(f"{path.relative_to(root)}:{alias.lineno}: {bound}")
+    assert not unused, unused

@@ -314,10 +314,6 @@ def test_cleaning_pipeline_plan_is_jvm_and_broadcasts_eval(spark, sf_dir):
 # defect (round 9 caught exactly that in dsir_select's constant-key max
 # attach, since fixed).
 _SCALAR_ATTACH_BNLJ = {
-    "emb_near_dup_pairs",   # query vector / threshold scalar (vectors/similarity.py)
-    "emb_cosine_topk",      # broadcast query-vector frame
-    "emb_lsh_topk",         # broadcast query-vector frame
-    "emb_ivf_topk",         # broadcast query-vector + probed-centroid set
     "perm_dist_thresholds", # global observed-stat scalar (queries_inference.py:123) + seed cross
     "power_ci_sim",         # seed cross (with_seeds)
     "fpr_by_window_size",   # seed cross (with_seeds)
@@ -331,7 +327,7 @@ def test_registry_wide_no_unbounded_nested_loop_joins(spark, sf_dir):
     """Every registry query's executed plan: CartesianProduct never appears,
     and BroadcastNestedLoopJoin appears only in the allowlisted bounded
     scalar-attach plans above — a new unintended nested loop anywhere in the
-    50-query surface fails here, not in a 100 TB run."""
+    registry fails here, not in a 100 TB run."""
     unexpected = {}
     for name in q.QUERIES:
         plan = _plan(spark, name, sf_dir)
@@ -369,8 +365,6 @@ def test_no_new_duplicated_scans(spark, sf_dir):
     the allowlist explicitly, with a reason.
 
     Allowlist reasons (the round-10 verdict's documented categories):
-    - recall contracts scan the corpus for the approximate AND the exact
-      path by design (emb_lsh_topk, emb_ivf_topk, emb_cosine_topk);
     - the ELT stage chain re-reads temp views by documented semantics
       (elt_orders_fact), and its tiny dims re-scan harmlessly
       (sb_metrics / sb_mwu_pvalues: nation);
@@ -390,9 +384,6 @@ def test_no_new_duplicated_scans(spark, sf_dir):
     from scan_audit import audit_registry
 
     ALLOWED_UNCACHED_EXCESS = {
-        "emb_lsh_topk": 3,
-        "emb_ivf_topk": 3,
-        "emb_cosine_topk": 1,
         "elt_orders_fact": 2,
         "region_nation_explode_modes": 2,
         "orders_semi_anti_join": 2,
@@ -433,7 +424,7 @@ def test_no_window_partitioned_by_content_hash(spark, sf_dir):
     task with no skew mitigation (unlike groupBy, which partial-aggregates
     map-side, or joins, which AQE skew-splits). The round-11 audit found
     exactly one such stage (ngram_jaccard_pairs' df-count window, since
-    replaced by groupBy + join); this test keeps the whole 50-query surface
+    replaced by groupBy + join); this test keeps the whole registry
     clean. Entity keys (doc, user_id, query_id, strata, ...) are fine —
     their per-key row counts are bounded by per-entity data, not by corpus-
     wide token popularity."""

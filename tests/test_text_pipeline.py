@@ -307,34 +307,3 @@ def test_clean_corpus_span_policy_remove(spark):
             docs, "doc_id", "text", segmenter=_segmenter(),
             span_policy="trim",
         )
-
-
-def test_clean_corpus_minhash_method_matches_jaccard(spark, sf_dir):
-    """near_dup_method='minhash' keeps exactly what the default exact-Jaccard
-    method keeps on the fixture corpus (every LSH candidate is exact-verified,
-    so the methods can differ only by candidate recall — ~1 at the default
-    banding above the threshold), and an unknown method raises."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from switchback_test_dag_spark.caching import release_all
-    from switchback_test_dag_spark.io import load_table
-    from switchback_test_dag_spark.text.pipeline import clean_corpus
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    seg = F.expr("filter(split(lower(text), '\\\\s+'), x -> x != '')")
-    kept = {}
-    try:
-        for method in ("jaccard", "minhash"):
-            kept[method] = {
-                r["doc_id"]
-                for r in clean_corpus(
-                    docs, "doc_id", "text", segmenter=seg,
-                    segment_policy=None, near_dup_method=method,
-                ).collect()
-            }
-    finally:
-        release_all()
-    assert kept["jaccard"] == kept["minhash"] and kept["jaccard"]
-    with pytest.raises(ValueError, match="near_dup_method"):
-        clean_corpus(docs, "doc_id", "text", segmenter=seg, near_dup_method="nope")

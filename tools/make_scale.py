@@ -22,8 +22,7 @@ so `tools/scale_evidence.py` can measure a real 10× data point:
   blowup, not the operator) and no sentinel shingle is shared across docs
   (which would fan out the inverted-index joins).
 - embeddings: vec_id offset; vector rotated by copy index — cheap, norm-
-  preserving, and decorrelates replicas so ANN/near-dup volumes scale
-  linearly.
+  preserving, and decorrelates replicas.
 - dims (region nation customer supplier part): byte-copied as-is.
 
 Usage: python tools/make_scale.py [--src DIR] [--dst DIR] [--k 10]

@@ -13,11 +13,6 @@ exercise, on the manufactured 10× directory (`tools/make_scale.py`):
   path always takes the driver branch because near-dup pair sets are tiny,
   so without this run their convergence behavior at a real pair graph is
   asserted only on unit fixtures.
-- ``emb_lsh``: time `embedding_near_dup_pairs_lsh` (bucketed candidates, no
-  driver collect — the designated scale path when the exact path's
-  broadcast cap trips) against the exact broadcast path on the sf1
-  embeddings, and record its pair recall vs the exact pair set at the same
-  threshold.
 
 Prints one JSON object per measurement AND merges every measurement — each
 bracketed by its own host probes (this box has shown 10-100x transient
@@ -31,8 +26,8 @@ DSIR contracts value-replayed in DuckDB at scale), and ``minhash_oph``
 (classic vs one-permutation MinHash executor CPU + pair-set equality on a
 deterministic long-document corpus).
 
-Usage: python tools/scale_evidence.py [components|emb_lsh|spans|decon|
-       selection|minhash_oph|span_removal|clean_corpus_full ...]
+Usage: python tools/scale_evidence.py [components|spans|decon|selection|
+       minhash_oph|span_removal|clean_corpus_full ...]
        [--sf DIR] [--no-write]
 """
 
@@ -189,44 +184,6 @@ def measure_components(spark, sf_dir: str) -> dict:
     return out
 
 
-def measure_emb_lsh(spark, sf_dir: str) -> dict:
-    emb = load_table(spark, sf_dir, "embeddings").localCheckpoint()
-    n_rows = emb.count()
-    threshold = 0.4  # the fixture's hard regime: mid-range cosine, many pairs
-
-    t0 = time.monotonic()
-    exact = TD.embedding_near_dup_pairs(
-        emb, "vec_id", "embedding", threshold=threshold, max_broadcast_rows=10**9
-    ).localCheckpoint()
-    n_exact = exact.count()
-    exact_s = time.monotonic() - t0
-
-    t0 = time.monotonic()
-    lsh = TD.embedding_near_dup_pairs_lsh(
-        emb, "vec_id", "embedding", threshold=threshold, n_planes=4, n_tables=8
-    ).localCheckpoint()
-    n_lsh = lsh.count()
-    lsh_s = time.monotonic() - t0
-
-    # recall vs the exact pair set (precision is 1.0 by construction: every
-    # candidate is cosine-verified before emission)
-    hit = lsh.select("id_a", "id_b").intersect(exact.select("id_a", "id_b")).count()
-    false_pos = n_lsh - hit
-    return {
-        "measurement": "emb_lsh",
-        "sf_dir": sf_dir,
-        "rows": n_rows,
-        "threshold": threshold,
-        "exact_broadcast": {"sec": round(exact_s, 2), "pairs": n_exact},
-        "lsh_bucketed": {
-            "sec": round(lsh_s, 2),
-            "pairs": n_lsh,
-            "recall": round(hit / n_exact, 4) if n_exact else 1.0,
-            "false_positive_pairs": false_pos,
-        },
-    }
-
-
 def measure_spans(spark, sf_dir: str) -> dict:
     """Duplicated-span stats (text/spans) on the 10x documents, production
     xxhash64 keys — the path the oracle never times (it replays the portable
@@ -289,7 +246,6 @@ def measure_selection(spark, sf_dir: str) -> dict:
         _DSIR_SEL_SEED,
         _DSIR_TOPK,
         _DSIR_WBITS,
-        _DUCK_ID_HASH,
         _DUCK_SELECTION_CTES,
         _SEG_BOILER_DF,
         _SEG_CHUNK,
@@ -843,81 +799,21 @@ ORDER BY k2.source
     return out
 
 
-def measure_ivf_pq(spark, sf_dir: str) -> dict:
-    """The round-13 IVF-PQ memory dial, measured on disk: the corpus
-    embeddings are written twice — float vectors only, PQ codes only — and
-    the parquet byte totals give the real stored-bytes-per-vector cut
-    (compression included, which quoted '32×' figures usually ignore). The
-    layout probe path's recall@10 vs brute force rides along so the cut is
-    never quoted without its accuracy price."""
-    import glob as _glob
-
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from switchback_test_dag_spark.io import load_table
-    from switchback_test_dag_spark.vectors import similarity as VS
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.count()
-    cents = VS.train_ivf_centroids(emb, "vec_id", "embedding", n_cells=16)
-    books = VS.train_pq_codebooks(emb, "vec_id", "embedding", m=16)
-    root = tempfile.mkdtemp(prefix="pq_ev_")
-
-    def _bytes(df, name):
-        p = os.path.join(root, name)
-        df.write.parquet(p)
-        return sum(
-            os.path.getsize(f) for f in _glob.glob(os.path.join(p, "*.parquet"))
-        )
-
-    enc = VS._pq_encoder(books)
-    float_bytes = _bytes(emb.select("vec_id", "embedding"), "float_vecs")
-    code_bytes = _bytes(
-        emb.select("vec_id", enc(F.col("embedding")).alias("code")), "pq_codes"
-    )
-
-    layout = os.path.join(root, "layout")
-    VS.ivf_pq_persist_layout(emb, "vec_id", "embedding", layout, cents, books)
-    queries = emb.filter(F.col("vec_id") < 5)
-    exact = VS.cosine_topk_bruteforce(emb, queries, "vec_id", "embedding", k=10)
-    approx = VS.ivf_pq_topk_from_layout(
-        spark, layout, queries, "embedding", cents, books,
-        k=10, n_probe=8, refine=8, query_id_col="vec_id",
-    )
-    es = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
-    gs = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
-    return {
-        "what": "IVF-PQ stored-bytes cut (parquet-real) + layout-path recall",
-        "n_vectors": n,
-        "float_bytes_per_vector": round(float_bytes / n, 1),
-        "pq_bytes_per_vector": round(code_bytes / n, 1),
-        "stored_bytes_ratio": round(float_bytes / max(code_bytes, 1), 2),
-        "recall_at_10": round(len(es & gs) / max(len(es), 1), 4),
-        "m": 16,
-        "n_cells": 16,
-        "n_probe": 8,
-    }
-
-
 _MEASURES = {
     "components": measure_components,
-    "emb_lsh": measure_emb_lsh,
     "spans": measure_spans,
     "decon": measure_decon,
     "selection": measure_selection,
     "minhash_oph": measure_minhash_oph,
     "span_removal": measure_span_removal,
     "clean_corpus_full": measure_clean_corpus_full,
-    "ivf_pq": measure_ivf_pq,
 }
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument(
-        "what", nargs="*", default=["components", "emb_lsh"],
+        "what", nargs="*", default=["components"],
         choices=sorted(_MEASURES),
     )
     ap.add_argument("--sf", default=os.path.join(_REPO, ".scale", "sf1"))
@@ -945,7 +841,7 @@ def main() -> None:
     # accumulates BESIDE the sf1 one instead of replacing it
     sf_tag = os.path.basename(os.path.normpath(args.sf))
     results = {}
-    for what in args.what or ["components", "emb_lsh"]:
+    for what in args.what or ["components"]:
         probe_start = _host_probe()
         res = _MEASURES[what](spark, args.sf)
         res["host"] = {"start": probe_start, "end": _host_probe()}
