@@ -145,6 +145,129 @@ def test_exact_dedup_removes_unioned_copies(docs):
     assert kept.filter(F.col("doc_id") >= 10_000).count() == 0
 
 
+def test_minhash_dedup_drops_one_side_per_pair(docs):
+    """The pairwise near-dup keeper policy of clean_corpus drops the higher
+    id (doc_b) of every MinHash-LSH pair and nothing else. Exact dedup runs
+    first inside clean_corpus, but an exact copy's keeper carries the same
+    text and so the same pairs, which leaves the loser set unchanged."""
+    from switchback_test_dag_spark.text.pipeline import clean_corpus
+
+    pairs = TD.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.85)
+    losers = {r["doc_b"] for r in pairs.collect()}
+    try:
+        kept_ids = {
+            r["doc_id"]
+            for r in clean_corpus(
+                docs.select("doc_id", "text"), "doc_id", "text",
+                segmenter=F.split(F.col("text"), "\n"), quality_min=0.0,
+                segment_policy=None, jaccard_threshold=0.85,
+            ).select("doc_id").collect()
+        }
+    finally:
+        caching.release_all()
+    assert losers and losers.isdisjoint(kept_ids)
+    assert len(kept_ids) == docs.count() - len(losers)
+
+
+def test_exact_dedup_incremental_fold_invariant_property(spark):
+    """Hypothesis property: for ANY corpus of short docs and ANY id-ordered
+    split into batches, running exact_dedup per batch and dropping the
+    fingerprints an earlier batch already kept keeps exactly the docs
+    exact_dedup keeps on the concatenation. The min-id keeper is what makes
+    exact dedup foldable over an appended corpus."""
+    from hypothesis import given, settings, strategies as st
+
+    from switchback_test_dag_spark.text.analysis import content_fingerprint
+
+    vocab = ["alpha", "beta", "gamma", "delta", "epsilon"]
+
+    @settings(max_examples=15, deadline=None)
+    @given(
+        texts=st.lists(
+            st.lists(st.sampled_from(vocab), min_size=1, max_size=4),
+            min_size=1, max_size=12,
+        ),
+        n_batches=st.integers(min_value=1, max_value=4),
+    )
+    def prop(texts, n_batches):
+        rows = [(i, " ".join(t)) for i, t in enumerate(texts)]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        full = {
+            r["doc_id"] for r in TD.exact_dedup(docs, "doc_id", "text").collect()
+        }
+        seen: set[str] = set()
+        kept: set[int] = set()
+        for b in range(n_batches):
+            batch = docs.filter(
+                F.col("doc_id").between(
+                    b * len(rows) // n_batches,
+                    (b + 1) * len(rows) // n_batches - 1,
+                )
+            )
+            surv = (
+                TD.exact_dedup(batch, "doc_id", "text")
+                .withColumn("fingerprint", content_fingerprint("text"))
+                .filter(~F.col("fingerprint").isin(list(seen)))
+                .collect()
+            )
+            kept |= {r["doc_id"] for r in surv}
+            seen |= {r["fingerprint"] for r in surv}
+        assert kept == full
+
+    prop()
+
+
+def test_bucketed_fingerprint_index_joins_without_exchange(spark):
+    """A fingerprint index of already-kept docs maintained as a BUCKETED
+    catalog table (plans.bucketing.write_bucketed) anti-joins a new batch's
+    exact_dedup survivors with fewer Exchanges than the same index read as
+    plain parquet (the index-side shuffle is amortized into the bucketed
+    write), and both forms keep identical survivors. Broadcast is disabled
+    for the comparison so AQE cannot hide the exchange on the tiny fixture."""
+    import os
+    import tempfile
+
+    from switchback_test_dag_spark.plans.bucketing import (
+        exchange_count,
+        write_bucketed,
+    )
+    from switchback_test_dag_spark.text.analysis import content_fingerprint
+
+    # batch B repeats every text of A and adds three new ones (ids 15-17)
+    docs = spark.createDataFrame(
+        [(i, f"text number {i % 6 if i < 15 else i % 9}") for i in range(30)],
+        "doc_id long, text string",
+    )
+    A, B = docs.filter("doc_id < 15"), docs.filter("doc_id >= 15")
+    fps = TD.exact_dedup(A, "doc_id", "text").select(
+        content_fingerprint("text").alias("fingerprint")
+    )
+    new = TD.exact_dedup(B, "doc_id", "text").withColumn(
+        "fingerprint", content_fingerprint("text")
+    )
+
+    old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        spark.sql("DROP TABLE IF EXISTS fp_index_test")
+        write_bucketed(fps, "fp_index_test", ["fingerprint"], 4)
+        surv_b = new.join(spark.table("fp_index_test"), "fingerprint", "left_anti")
+        with tempfile.TemporaryDirectory() as d:
+            fps.write.parquet(os.path.join(d, "idx"))
+            surv_p = new.join(
+                spark.read.parquet(os.path.join(d, "idx")), "fingerprint",
+                "left_anti",
+            )
+            nb, np_ = exchange_count(surv_b), exchange_count(surv_p)
+            assert nb < np_, (nb, np_)
+            got_b = {r["doc_id"] for r in surv_b.collect()}
+            got_p = {r["doc_id"] for r in surv_p.collect()}
+        assert got_b == got_p == {15, 16, 17}
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
+        spark.sql("DROP TABLE IF EXISTS fp_index_test")
+
+
 def test_release_caches_unpins_intermediates(docs, spark):
     TD.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.85).count()
     assert len(caching._PINNED) > 0
@@ -363,6 +486,26 @@ def test_driver_threshold_bounds_presymmetrization_edges(spark):
     assert "Join" not in plan, "3 edges at threshold 3 must stay on the driver"
     got = {r["node"]: r["component"] for r in out.collect()}
     assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+
+
+def test_component_dedup_collapses_clusters(spark):
+    """Cluster-canonical keeper from connected_components labels: {A~C, B~C}
+    is ONE cluster labelled by its min id, so keeping every doc that is its
+    own label (or in no pair) keeps only A, while the pairwise policy of
+    clean_corpus would keep A and B."""
+    docs = spark.createDataFrame(
+        [(i, f"text {i}") for i in (1, 2, 3, 9)], "doc_id long, text string"
+    )
+    pairs = spark.createDataFrame([(1, 3), (2, 3)], "doc_a long, doc_b long")
+    losers = (
+        TD.connected_components(pairs, "doc_a", "doc_b")
+        .filter(F.col("node") != F.col("component"))
+        .select(F.col("node").alias("doc_id"))
+    )
+    kept = sorted(
+        r["doc_id"] for r in docs.join(losers, "doc_id", "left_anti").collect()
+    )
+    assert kept == [1, 9]  # 2 and 3 collapse into cluster keeper 1; 9 untouched
 
 
 def test_winnow_window_one_is_distinct_hashes(spark):

@@ -307,3 +307,38 @@ def test_clean_corpus_span_policy_remove(spark):
             docs, "doc_id", "text", segmenter=_segmenter(),
             span_policy="trim",
         )
+
+
+def test_clean_corpus_minhash_method_matches_jaccard(spark, sf_dir):
+    """clean_corpus's exact-Jaccard near-dup stage keeps exactly what the
+    same chain keeps with MinHash-LSH candidates (minhash_lsh_pairs, every
+    candidate exact-verified) on the fixture corpus: the two can differ only
+    by candidate recall, ~1 at the default banding above the threshold."""
+    from switchback_test_dag_spark.caching import release_all
+    from switchback_test_dag_spark.io import load_table
+    from switchback_test_dag_spark.text import dedup as TD
+    from switchback_test_dag_spark.text.analysis import quality_score
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    seg = F.expr("filter(split(lower(text), '\\\\s+'), x -> x != '')")
+    try:
+        jaccard = {
+            r["doc_id"]
+            for r in clean_corpus(
+                docs, "doc_id", "text", segmenter=seg, segment_policy=None,
+            ).collect()
+        }
+        kept1 = TD.exact_dedup(
+            docs.filter(quality_score("text") >= 0.5), "doc_id", "text"
+        )
+        near = TD.minhash_lsh_pairs(
+            kept1, "doc_id", "text", shingle_n=3, threshold=0.85
+        ).select(F.col("doc_b").alias("doc_id"))
+        minhash = {
+            r["doc_id"]
+            for r in kept1.join(near, "doc_id", "left_anti").collect()
+        }
+    finally:
+        release_all()
+    assert jaccard == minhash and jaccard
+    assert len(minhash) < kept1.count()  # the near-dup stage did drop docs
