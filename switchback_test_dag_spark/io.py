@@ -92,21 +92,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> None:
-    """Register each fixture table as a temp view so ``spark.sql`` queries can use
-    the same table names the DuckDB oracle sees."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 # --------------------------------------------------------------------------- #
 # interchange formats (CSV / JSON-lines)
 # --------------------------------------------------------------------------- #

@@ -348,18 +348,6 @@ def iqr_filter(
     return joined.filter(cond).drop(*drop_cols)
 
 
-def minmax_normalize(col: str, by: Sequence[str] = ()) -> Column:
-    """F24 (grouped): ``(x − min)/(max − min)`` per group as a window expression
-    (deep_dive_analyses.ipynb:~2739). For the global (ungrouped) case use
-    :func:`minmax_normalize_global` — an empty-partition window would move ALL
-    rows to a single partition."""
-    if not by:
-        raise ValueError("use minmax_normalize_global for the ungrouped case")
-    w = Window.partitionBy(*by)
-    lo, hi = F.min(col).over(w), F.max(col).over(w)
-    return F.when(hi != lo, (F.col(col) - lo) / (hi - lo)).otherwise(F.lit(0.0))
-
-
 def minmax_normalize_global(df: DataFrame, col: str, out_col: str) -> DataFrame:
     """F24 (global): two-phase — tiny min/max aggregate broadcast back onto the
     frame. Scales: the agg is a map-side-combined reduce, the join is a broadcast

@@ -412,8 +412,8 @@ def power_ci_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("power"),
         F.count(F.lit(1)).alias("n_sims"),
-        # avg skips NULLs, so gating the indicator on se IS NOT NULL is the
-        # filter(se notnull) of ci_coverage expressed as one aggregate column
+        # avg skips NULLs, so gating the indicator on se IS NOT NULL drops
+        # the seeds without a valid se from the coverage denominator
         F.round(
             F.avg(
                 F.when(

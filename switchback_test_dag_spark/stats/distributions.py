@@ -3,8 +3,9 @@
 The normal survival function uses the Abramowitz & Stegun 7.1.26 erf approximation
 (max abs error 1.5e-7) so p-values stay JVM-side (whole-stage codegen) instead of
 round-tripping through Python. Student-t tails need the incomplete beta function,
-which has no closed column form — those run as a scipy Pandas UDF, but only ever on
-the already-aggregated result table (tests × KPIs rows, i.e. tiny).
+which has no closed column form — those run as a Pandas UDF over the pure-numpy
+``stats/special.py``, but only ever on the already-aggregated result table
+(tests × KPIs rows, i.e. tiny).
 """
 
 from __future__ import annotations
@@ -34,12 +35,6 @@ def erfc_approx(x: Column) -> Column:
         + t * (F.lit(_A2) + t * (F.lit(_A3) + t * (F.lit(_A4) + t * F.lit(_A5))))
     )
     return poly * F.exp(-(x * x))
-
-
-def normal_sf(z: Column) -> Column:
-    """P(Z > z) for standard normal, any sign of z."""
-    sf_abs = F.lit(0.5) * erfc_approx(F.abs(z) / F.lit(_SQRT2))
-    return F.when(z >= 0, sf_abs).otherwise(F.lit(1.0) - sf_abs)
 
 
 def normal_two_sided_p(z: Column) -> Column:

@@ -1,5 +1,10 @@
 """Randomization-inference engine — multi-seed vectorized permutation tests,
 FPR / power simulation and CI coverage (SURVEY §2 T5, T7, T8, T10, T18).
+FPR, power and coverage all come from one path, ``fused_sweep_stats``, which
+``queries_inference.fpr_by_window_size`` and ``power_ci_sim`` aggregate into
+rates; ``order_level_t``, ``bucket_level_t`` and
+``crse.crse_from_cluster_moments`` are the per-method references it is
+differential-tested against.
 
 The reference runs these as **serial driver loops**: N re-randomizations ×
 window sizes × KPIs, each iteration re-assigning a pandas column and re-running
@@ -18,8 +23,11 @@ Spark-first design — the seed dimension lives in the *plan*, not in a loop:
    ``substring(md5(concat(bucket, '|', seed)), 1, 4) < '8000'`` — exactly
    Bernoulli(p) for a 4-hex-digit threshold, reproducible on any cluster size
    AND expressible verbatim in DuckDB, so the whole engine is oracle-diffable
-   (xxhash64, Spark's fast path, has no DuckDB twin; md5 costs a few ns more
-   per *bucket×seed*, not per order — irrelevant after step 1).
+   (xxhash64, Spark's fast path, has no DuckDB twin). md5 runs once per
+   *bucket×seed* row, not per order, yet that is not cheap: on
+   ``fpr_by_window_size``'s 6.55M seeded rows (4-core VM, warm) the md5 arm
+   took 2.9–4.4 s of exec against 1.4–2.1 s with xxhash64 — about half of
+   the sweep's executor time.
 4. Every statistic (permutation mean-difference, bucket-level t, injected-effect
    power, CI coverage) is closed-form column math over those moments — one
    aggregation of step 2's output by seed (by (seed, arm) first, then pivoted,
@@ -161,23 +169,10 @@ def permutation_thresholds(
     )
 
 
-def permutation_p_value(
-    diffs: DataFrame, observed: DataFrame, by: Sequence[str]
-) -> DataFrame:
-    """Permutation p-value: share of re-randomized |diffs| ≥ |observed diff|
-    (add-one smoothed). ``observed`` carries (by, mean_diff AS observed_diff)."""
-    joined = diffs.join(observed, on=list(by))
-    return joined.groupBy(*by).agg(
-        (
-            (F.sum(F.when(F.abs("mean_diff") >= F.abs("observed_diff"), 1).otherwise(0)) + 1)
-            / (F.count(F.lit(1)) + 1)
-        ).alias("p_value")
-    )
-
-
-def _bucket_level_t(seeded: DataFrame, by: Sequence[str]) -> DataFrame:
+def bucket_level_t(seeded: DataFrame, by: Sequence[str] = ()) -> DataFrame:
     """Bucket-mean two-sample t statistic per (by, seed) — T3 semantics (t-test
     over time-unit means), closed-form from bucket moments."""
+    by = list(by)
     bm = F.col("s1") / F.col("n")  # bucket mean
     g = seeded.withColumn("bm", bm)
     on_ = F.when(F.col("arm") == ON, F.col("bm"))
@@ -260,11 +255,6 @@ def order_level_t(seeded: DataFrame, by: Sequence[str] = ()) -> DataFrame:
         F.when(se.isNotNull(), (m_on - m_off) / se).alias("t_stat"),
         F.when(valid, (n_on + n_off - 2).cast("double")).alias("dof"),
     )
-
-
-def bucket_level_t(seeded: DataFrame, by: Sequence[str] = ()) -> DataFrame:
-    """Public alias of the bucket-mean t (T3) used by the method sweep."""
-    return _bucket_level_t(seeded, list(by))
 
 
 def _arm_sums(seeded: DataFrame, by: list[str]) -> DataFrame:
@@ -433,91 +423,4 @@ def _sweep_stats(g: DataFrame, effect: float, by: list[str]) -> DataFrame:
         cr_se.alias("cr_se"),
         (beta + d).alias("cr_diff_p"),
         cr_se.alias("cr_se_p"),
-    )
-
-
-def fpr_simulation(
-    df: DataFrame,
-    value_col: str,
-    bucket_col: str | Column,
-    n_seeds: int,
-    critical_value: float,
-    by: Sequence[str] = (),
-    p: float = 0.5,
-    moments: DataFrame | None = None,
-) -> DataFrame:
-    """T7: false-positive rate of the bucket-level t-test under the null — the
-    share of N re-randomizations whose |t| exceeds ``critical_value``. On A/A
-    (null) data this must come out ≈ α: the reference's own acceptance
-    criterion for an inference method (SURVEY §5).
-
-    ``critical_value`` is the t critical point for the (fixed) dof; compute it
-    driver-side once via ``stats.special.t_ppf_two_sided`` — keeping the
-    distributed plan free of special functions (and the oracle SQL-pure).
-    """
-    by = list(by)
-    if moments is None:
-        moments = bucket_moments(df, value_col, bucket_col, by)
-    seeded = with_seeds(moments, n_seeds, p)
-    t = _bucket_level_t(seeded, by)
-    return t.groupBy(*by).agg(
-        F.avg(
-            F.when(F.abs("t_stat") > critical_value, 1.0).otherwise(0.0)
-        ).alias("fpr"),
-        F.count(F.lit(1)).alias("n_sims"),
-    )
-
-
-def power_simulation(
-    df: DataFrame,
-    value_col: str,
-    bucket_col: str | Column,
-    n_seeds: int,
-    effect: float,
-    critical_value: float,
-    by: Sequence[str] = (),
-    p: float = 0.5,
-    moments: DataFrame | None = None,
-) -> DataFrame:
-    """T8: detection power for an injected additive effect δ on the treated arm.
-    Injection is exact on moments (s1 += δ·n; s2 += 2δ·s1 + δ²·n), so no second
-    pass over the fact table is needed."""
-    by = list(by)
-    if moments is None:
-        moments = bucket_moments(df, value_col, bucket_col, by)
-    seeded = with_seeds(moments, n_seeds, p)
-    t = _bucket_level_t(inject_additive_effect(seeded, effect), by)
-    return t.groupBy(*by).agg(
-        F.avg(
-            F.when(F.abs("t_stat") > critical_value, 1.0).otherwise(0.0)
-        ).alias("power"),
-        F.count(F.lit(1)).alias("n_sims"),
-    )
-
-
-def ci_coverage(
-    df: DataFrame,
-    value_col: str,
-    bucket_col: str | Column,
-    n_seeds: int,
-    critical_value: float,
-    by: Sequence[str] = (),
-    p: float = 0.5,
-    moments: DataFrame | None = None,
-) -> DataFrame:
-    """T10: share of re-randomizations whose (mean_diff ± crit·se) interval
-    covers 0 — on null data must ≈ the nominal level (the reference checks 68%
-    for 1-σ intervals, ``method_evaluation.ipynb:883-895``)."""
-    by = list(by)
-    if moments is None:
-        moments = bucket_moments(df, value_col, bucket_col, by)
-    seeded = with_seeds(moments, n_seeds, p)
-    t = _bucket_level_t(seeded, by)
-    covered = (
-        (F.col("mean_diff") - critical_value * F.col("se") <= 0)
-        & (F.col("mean_diff") + critical_value * F.col("se") >= 0)
-    )
-    return t.filter(F.col("se").isNotNull()).groupBy(*by).agg(
-        F.avg(F.when(covered, 1.0).otherwise(0.0)).alias("coverage"),
-        F.count(F.lit(1)).alias("n_sims"),
     )

@@ -93,16 +93,6 @@ def betainc(a, b, x) -> np.ndarray:
     return out.reshape(shape)
 
 
-def t_sf(t, dof) -> np.ndarray:
-    """Student-t survival function P(T > t), elementwise."""
-    t = np.asarray(t, dtype=float)
-    dof = np.asarray(dof, dtype=float)
-    t, dof = np.broadcast_arrays(t, dof)
-    x = dof / (dof + t * t)
-    half_two_sided = 0.5 * betainc(0.5 * dof, 0.5, x)
-    return np.where(t >= 0, half_two_sided, 1.0 - half_two_sided)
-
-
 def t_two_sided_p(t, dof) -> np.ndarray:
     """Two-sided p-value 2·P(T > |t|)."""
     t = np.abs(np.asarray(t, dtype=float))

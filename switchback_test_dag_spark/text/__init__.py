@@ -10,10 +10,7 @@ the fixed-L suffix-dedup approximation, measured and then applied as the
 Lee et al. 2021 cut (spans.py), segment-level keep-first
 dedup and boilerplate removal — the CCNet line-dedup family (lines.py),
 DSIR hashed-n-gram importance weighting AND resampling for targeted corpus
-selection with a stateless pure-JVM scorer (dsir.py), and the composed
-CCNet-order cleaning chain as a public API (pipeline.clean_corpus). The
-ingest scorers (contamination flagger, boilerplate scrubber, DSIR scorer)
-are stateless row maps. Everything is native Spark SQL expressions except
-the documented Arrow-batched islands (the contamination flagger /
-boilerplate scrubber).
+selection (dsir.py), and the composed CCNet-order cleaning chain as a public
+API (pipeline.clean_corpus). Everything is native Spark SQL expressions; no
+Python worker runs in this package.
 """

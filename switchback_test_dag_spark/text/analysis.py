@@ -113,13 +113,6 @@ def word_shingles(text_col: str, n: int = 3) -> Column:
     return F.expr(_array_ngrams_sql(toks, n, " "))
 
 
-def char_ngrams(text_col: str, n: int = 3) -> Column:
-    """Distinct character n-grams of the lowercased text (SimHash/lang-ID
-    features)."""
-    chars = f"split(lower({text_col}), '')"
-    return F.expr(_array_ngrams_sql(chars, n, ""))
-
-
 def _profile_score(text_col: str, words: tuple[str, ...]) -> str:
     lst = ", ".join(f"'{w}'" for w in words)
     return (
@@ -197,19 +190,6 @@ def content_fingerprint(text_col: str) -> Column:
     xxhash64 (cheaper, same grouping semantics)."""
     return F.md5(
         F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
-    )
-
-
-def rolling_fingerprint(text_col: str, window: int = 8, keep_every: int = 16) -> Column:
-    """Winnowing-style rolling fingerprint: xxhash64 each ``window``-gram of
-    words, keep hashes ≡ 0 (mod ``keep_every``) — a sorted sketch of the
-    document usable for containment / partial-overlap detection. Pure expression
-    (no UDF): transform + filter over the shingle array."""
-    toks = f"filter(split(lower({text_col}), '{TOKEN_SPLIT_RE}'), x -> x != '')"
-    grams = _array_ngrams_sql(toks, window, " ")
-    return F.expr(
-        f"""array_sort(filter(transform({grams}, s -> xxhash64(s)),
-                              h -> pmod(h, {keep_every}) = 0))"""
     )
 
 

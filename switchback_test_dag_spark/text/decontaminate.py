@@ -28,7 +28,6 @@ still linear, just not map-side).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
@@ -95,82 +94,3 @@ def decontaminate(
         docs, eval_df, id_col, text_col, n, min_hits, broadcast_eval
     ).select(id_col)
     return docs.join(bad, id_col, "left_anti")
-
-
-def contamination_flagger(
-    spark,
-    eval_df: DataFrame | None,
-    text_col: str,
-    n: int = 13,
-    max_eval_grams: int = 50_000_000,
-    eval_grams: DataFrame | None = None,
-    max_eval_gram_bytes: int = 1 << 30,
-):
-    """STATELESS contamination flagging for the ingest path — the streaming
-    twin of ``contaminated_ids``.
-
-    The batch shape (explode → join → groupBy → anti) is two stream-stream
-    steps Structured Streaming cannot run stateless, and it doesn't need to:
-    the eval side is a STATIC artifact (benchmarks change at human cadence),
-    so the production streaming plan pins the eval gram set once driver-side,
-    broadcasts it, and flags each document row-locally — zero state, no
-    shuffle, identical per-batch and per-stream semantics. This is one of the
-    repo's documented Python-unavoidable cases (UDF policy, SURVEY §2.9): a
-    membership test against a driver-held set has no Column-expression form
-    that doesn't inline the whole set into the plan.
-
-    Returns a function ``df -> df + n_eval_grams int column`` (count of
-    DISTINCT contaminated grams, same semantics as ``contaminated_ids``;
-    0 for clean/short/NULL docs) applicable to batch or streaming frames.
-    Raises if the eval gram set exceeds ``max_eval_grams`` grams OR
-    ``max_eval_gram_bytes`` total string bytes (a count cap alone under-
-    protects the driver: a few million pathologically long grams can be
-    gigabytes) — past either, flag offline with the batch join instead.
-
-    The cap-count and the collect each evaluate the gram frame once; a
-    caller building flaggers for SEVERAL streams from one eval set should
-    derive the grams once — ``eval_ngrams(eval_df, text_col, n).persist()``
-    — and pass them as ``eval_grams`` (one ``gram`` string column;
-    ``eval_df`` may then be None) so the shingle+distinct job runs once,
-    not twice per flagger."""
-    from pyspark.sql.functions import pandas_udf
-
-    if eval_df is None and eval_grams is None:
-        raise ValueError("contamination_flagger: pass eval_df or eval_grams")
-    ev = (
-        eval_grams.select("gram")
-        if eval_grams is not None
-        else eval_ngrams(eval_df, text_col, n)
-    )
-    # measure BEFORE collecting: the caps must protect the driver, not
-    # report the OOM they failed to prevent — one agg job carries both the
-    # count and the byte size
-    meas = ev.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum(F.octet_length("gram")), F.lit(0)).alias("nbytes"),
-    ).collect()[0]
-    n_grams, n_bytes = meas["n"], meas["nbytes"]
-    if n_grams > max_eval_grams:
-        raise ValueError(
-            f"eval gram set ({n_grams} grams) exceeds max_eval_grams="
-            f"{max_eval_grams}; use the batch contaminated_ids join instead"
-        )
-    if n_bytes > max_eval_gram_bytes:
-        raise ValueError(
-            f"eval gram set ({n_bytes} bytes) exceeds max_eval_gram_bytes="
-            f"{max_eval_gram_bytes}; use the batch contaminated_ids join instead"
-        )
-    grams = [r["gram"] for r in ev.collect()]
-    bc = spark.sparkContext.broadcast(frozenset(grams))
-
-    @pandas_udf("int")
-    def _n_hits(gram_arrays: pd.Series) -> pd.Series:
-        ev = bc.value
-        return gram_arrays.map(
-            lambda gs: 0 if gs is None else sum(1 for g in set(gs) if g in ev)
-        ).astype("int32")
-
-    def apply(df: DataFrame) -> DataFrame:
-        return df.withColumn("n_eval_grams", _n_hits(word_shingles(text_col, n)))
-
-    return apply

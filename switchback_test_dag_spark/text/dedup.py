@@ -86,7 +86,7 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def _shingle_hash_frame(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int, par: int = 0
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int
 ) -> DataFrame:
     """(doc, int-hashed positional-distinct shingles) with the tokenization
     materialized FIRST, behind the repartition Exchange: the token
@@ -105,8 +105,7 @@ def _shingle_hash_frame(
     near-empty tasks, and every downstream hash-aggregate/join task pays a
     fixed buffer-allocation cost (measured: a 32-task partial aggregate
     over 100k rows burned ~9 s executor CPU vs 0.3 s on 4 tasks; guide
-    §2.2's fewer-larger-partitions rule). ``par`` is retained for call
-    compatibility and ignored."""
+    §2.2's fewer-larger-partitions rule)."""
     from switchback_test_dag_spark.text.analysis import (
         TOKEN_SPLIT_RE,
         _array_ngrams_sql,
@@ -119,54 +118,6 @@ def _shingle_hash_frame(
         .repartition("doc")
         .select("doc", F.expr(_array_ngrams_sql("tk", shingle_n)).alias("sh_str"))
         .select("doc", hashed_shingles("sh_str").alias("sh"))
-    )
-
-
-def minhash_signature_oph(shingle_col: str, k: int = 64, seed: int = 0) -> Column:
-    """One-permutation MinHash signature (Li et al. 2012, "One Permutation
-    Hashing") with densification (Shrivastava & Li 2014; public methods):
-    ONE xxhash64 per shingle instead of k — the k-independent CPU form for
-    long documents. Each shingle's single hash is binned by ``pmod(h, k)``;
-    signature[j] is the minimum hash in bin j, and an EMPTY bin borrows the
-    nearest non-empty bin's value cyclically WITH the paper's offset term:
-    the borrowed value is mixed with the borrow distance
-    (``xxhash64(v, d)`` — the ANSI-overflow-safe equivalent of the additive
-    ``v + d·C``), so two documents collide on an empty bin only when they
-    borrow the SAME value from the SAME distance. Without the offset,
-    borrowed positions are correlated for sparse-bin documents (every empty
-    bin of both docs borrows the same raw value) and the banding recall
-    formula ``1−(1−s^r)^bands`` overstates detection; with it the
-    densified collision probability tracks the Jaccard similarity and the
-    classic banding math applies. Per-document cost drops from O(|sh|·k)
-    hash mixes to O(|sh| log |sh| + k²) with k² a fixed 64²-op
-    densification scan — at k=64 and a few hundred shingles, ~10× less
-    mixing work.
-
-    Everything is bound through single-element ``transform(array(e), x ->
-    …)`` wrappers so the sorted pair array, the bin map, and the borrowed
-    (value, distance) struct are each evaluated ONCE per row
-    (CollapseProject would otherwise inline the sort into every reference).
-    Empty shingle arrays produce all-NULL signatures (``try_element_at``
-    everywhere, and the offset mix is NULL-guarded — ANSI mode). Candidate
-    semantics are interchangeable with the classic signature because
-    :func:`minhash_lsh_pairs` verifies every candidate with exact Jaccard —
-    only candidate RECALL depends on the scheme (differential-tested in
-    ``tests/test_text_dedup.py``)."""
-    hs = f"transform({shingle_col}, h -> xxhash64(h, {seed}))"
-    pairs = f"array_sort(transform({hs}, h -> struct(pmod(h, {k}) AS bin, h AS v)))"
-    return F.expr(
-        f"""try_element_at(transform(array({pairs}), p ->
-      try_element_at(transform(array(map_from_entries(
-            filter(p, (x, i) -> i = 0 OR x.bin != element_at(p, i).bin))), m ->
-        transform(sequence(0, {k - 1}), j ->
-          coalesce(try_element_at(m, CAST(j AS BIGINT)),
-                   try_element_at(transform(array(
-                       try_element_at(filter(transform(sequence(1, {k}),
-                           d -> struct(d AS d, try_element_at(m,
-                               CAST(pmod(j + d, {k}) AS BIGINT)) AS v)),
-                         x -> x.v IS NOT NULL), 1)), s ->
-                     CASE WHEN s IS NULL THEN NULL
-                          ELSE xxhash64(s.v, s.d) END), 1)))), 1)), 1)"""
     )
 
 
@@ -206,7 +157,6 @@ def minhash_lsh_pairs(
     k: int = 64,
     bands: int = 16,
     threshold: float = 0.85,
-    scheme: str = "classic",
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, exact Jaccard ≥ threshold) via
     MinHash-LSH candidate generation + exact verification.
@@ -215,64 +165,33 @@ def minhash_lsh_pairs(
     1−(1−s^r)^bands (defaults: ≥1−4e-8 at s=0.9). The candidate self-join is
     keyed on uniform band hashes — no skew; verification joins shingle sets
     back only for candidates (LSH output ≪ docs²).
-
-    ``scheme="oph"`` swaps the k-permutation signature for one-permutation
-    hashing with densification (:func:`minhash_signature_oph`) — one hash
-    per shingle instead of k, the CPU-bound scale path for long documents.
-    Final pair semantics are identical either way (every candidate is
-    verified with exact Jaccard); only candidate recall depends on the
-    scheme, and both schemes' banding detection math is the same.
-
-    **Choosing the scheme — the crossover rule.** Signature cost is
-    ~k hash-mins per shingle for classic vs ~1 hash per shingle plus O(k)
-    densification per document for OPH, so OPH's win grows with
-    shingles-per-document and shrinks with k. Measured on this engine
-    (SCALE_evidence.json ``minhash_oph``: 1 200 docs, ~3 000 tokens/doc,
-    k=64): OPH 1.88× less executor CPU with byte-identical verified pairs.
-    Rule of thumb: prefer ``"oph"`` when typical documents carry more than
-    ~10·k shingles (long-form corpora — the codegen'd classic aggregates
-    close most of the gap below that, and at ≲k shingles OPH's bins are
-    mostly empty so densification does the work for no saving); prefer
-    ``"classic"`` for short-text corpora and wherever an external engine
-    must replay the exact signature (the oracle replays classic).
     """
-    if scheme not in ("classic", "oph"):
-        raise ValueError(f"minhash_lsh_pairs: unknown scheme {scheme!r}")
     rows = k // bands
     # persist() is load-bearing, not a cache nicety: without the materialization
     # boundary CollapseProject inlines the O(tokens) shingle expression into the
     # signature lambda and it is re-evaluated k times per row (64× slowdown
     # measured). The shingle set is also reused by the verification join.
-    # repartition: a few big parquet files would otherwise serialize the
-    # CPU-heavy shingling/hashing onto as few cores; spread rows first.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    shingled = _persist(_shingle_hash_frame(df, id_col, text_col, shingle_n, par))
-    if scheme == "classic":
-        # k-permutation signature via explode + k codegen'd MIN aggregates
-        # instead of a nested-transform HOF (j -> array_min(transform(sh,
-        # h -> xxhash64(h, j)))): the HOF form is interpreted per element
-        # and allocates one k-hash array per permutation per doc; the
-        # aggregate form keeps all k·|sh| xxhash64 mixes inside
-        # WholeStageCodegen. Identical values (min over the same multiset —
-        # duplicates cannot move a min; `{j}` literals parse as INT,
-        # matching sequence(0, k-1) element typing, so the seeded hashes are
-        # bit-for-bit the HOF ones). The shingled frame is persisted and
-        # hash-partitioned on doc, so the groupBy adds no Exchange.
-        mins = (
-            shingled.select("doc", F.explode("sh").alias("h"))
-            .groupBy("doc")
-            .agg(
-                *[
-                    F.min(F.expr(f"xxhash64(h, {j})")).alias(f"__m{j}")
-                    for j in range(k)
-                ]
-            )
+    shingled = _persist(_shingle_hash_frame(df, id_col, text_col, shingle_n))
+    # k-permutation signature via explode + k codegen'd MIN aggregates instead
+    # of a nested-transform HOF (j -> array_min(transform(sh, h -> xxhash64(h,
+    # j)))): the HOF form is interpreted per element and allocates one k-hash
+    # array per permutation per doc; the aggregate form keeps all k·|sh|
+    # xxhash64 mixes inside WholeStageCodegen. Identical values (min over the
+    # same multiset — duplicates cannot move a min; `{j}` literals parse as
+    # INT, matching sequence(0, k-1) element typing, so the seeded hashes are
+    # bit-for-bit the HOF ones). The shingled frame is persisted and
+    # hash-partitioned on doc, so the groupBy adds no Exchange.
+    mins = (
+        shingled.select("doc", F.explode("sh").alias("h"))
+        .groupBy("doc")
+        .agg(
+            *[
+                F.min(F.expr(f"xxhash64(h, {j})")).alias(f"__m{j}")
+                for j in range(k)
+            ]
         )
-        sig = mins.select(
-            "doc", F.array(*[f"__m{j}" for j in range(k)]).alias("sig")
-        )
-    else:
-        sig = shingled.select("doc", minhash_signature_oph("sh", k).alias("sig"))
+    )
+    sig = mins.select("doc", F.array(*[f"__m{j}" for j in range(k)]).alias("sig"))
     banded = sig.select(
         "doc", F.explode(lsh_band_keys("sig", bands, rows)).alias("bk")
     ).select("doc", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
@@ -588,8 +507,7 @@ def ngram_jaccard_pairs(
     (by prefix shingle) + verification (by doc) — all keyed, no all-pairs.
     ``prefix_filter=False`` keeps the single-join form (fine for small or
     low-overlap corpora; differential-tested equal)."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    shingled = _persist(_shingle_hash_frame(df, id_col, text_col, shingle_n, par))
+    shingled = _persist(_shingle_hash_frame(df, id_col, text_col, shingle_n))
     sizes = shingled.select("doc", F.size("sh").alias("sz"))
     ex = shingled.select("doc", F.explode("sh").alias("h"))
 

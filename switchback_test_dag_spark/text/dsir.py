@@ -178,130 +178,6 @@ def dsir_log_weights(
     )
 
 
-def dsir_ratio_table(
-    docs: DataFrame,
-    target: DataFrame,
-    text_col: str,
-    n_buckets: int = 256,
-    portable: bool = False,
-    fixed_point_scale: int | None = None,
-) -> DataFrame:
-    """The fitted model as data: ``(bucket, dl)`` — per-bucket log-probability
-    ratio (``dl_fp`` integer when ``fixed_point_scale`` is set), B rows of
-    metadata. This is the artifact the streaming scorer consumes; persist it
-    (or write it out) once per model refresh."""
-    dc = doc_bucket_counts(
-        docs.select(F.lit(0).alias("_rid"), F.col(text_col)),
-        "_rid",
-        text_col,
-        n_buckets,
-        portable,
-    )
-    raw_dist = _bucket_distribution(dc, n_buckets)
-    tgt_counts = doc_bucket_counts(
-        target.select(F.lit(0).alias("_tid"), F.col(text_col)),
-        "_tid",
-        text_col,
-        n_buckets,
-        portable,
-    )
-    tgt_dist = _bucket_distribution(tgt_counts, n_buckets)
-    dl = F.col("lt") - F.col("lr")
-    if fixed_point_scale is not None:
-        if fixed_point_scale <= 0:
-            raise ValueError(
-                f"dsir_ratio_table: fixed_point_scale must be positive, "
-                f"got {fixed_point_scale}"
-            )
-        dl = F.round(dl * F.lit(int(fixed_point_scale))).cast("long")
-    return (
-        tgt_dist.withColumnRenamed("logp", "lt")
-        .join(raw_dist.withColumnRenamed("logp", "lr"), _B)
-        .select(F.col(_B).alias("bucket"), dl.alias("dl"))
-    )
-
-
-def dsir_scorer(ratio_table: DataFrame, text_col: str, n_buckets: int,
-                portable: bool = False, max_buckets: int = 1 << 16):
-    """STATELESS DSIR scoring for the ingest path — the streaming twin of
-    :func:`dsir_log_weights`, and unlike the boilerplate scrubber /
-    contamination flagger it needs NO Python island: the fitted model is
-    exactly ``n_buckets`` values, small enough to inline as a literal MAP in
-    a Column expression, so each arriving document is scored row-locally by
-    pure JVM codegen — ``aggregate(grams, 0, (acc, g) -> acc +
-    element_at(model, bucket(g)))`` — zero state, zero shuffle, identical
-    per-batch and per-stream semantics (the model is a static artifact that
-    changes at refit cadence, same reasoning as the scrubber's boilerplate
-    set).
-
-    ``ratio_table`` is :func:`dsir_ratio_table` output (or the broadcast
-    ratio frame of a batch fit); its ``dl`` column may be the float or the
-    fixed-point integer form — the scorer emits the matching ``log_weight``
-    / ``log_weight_fp`` column type. Collects exactly ``n_buckets`` rows
-    (guarded by ``max_buckets``) — metadata, not data.
-
-    Plan-size regime: the model is inlined as ``2·n_buckets`` literals in a
-    single MAP expression, so the codegen'd plan grows linearly with the
-    bucket count — ~25 bytes/entry, i.e. ~1.6 MB of expression at the 2^16
-    guard, which analysis/codegen still handles in well under a second. The
-    default ``max_buckets`` is deliberately 2^16 (not the 2^20 the hashed
-    model could in principle use): past it the expression tree itself
-    becomes the cost (driver-side planning is outside executor CPU — see
-    BASELINE.md blind spot #2). For bigger models score in batch via
-    :func:`dsir_log_weights`'s broadcast ratio join, or raise the guard
-    explicitly if the planning cost is measured and acceptable.
-
-    Returns a function ``df -> df`` adding the weight column (NULL text →
-    no tokens → weight 0, matching the batch operator's "unscored" docs
-    up to the 0-vs-absent representation a stream row cannot drop)."""
-    rows = ratio_table.select("bucket", "dl").collect()
-    if len(rows) > max_buckets:
-        raise ValueError(
-            f"ratio table has {len(rows)} buckets > max_buckets={max_buckets}"
-        )
-    # fixed-vs-float is a property of the MODEL ARTIFACT, so read it off the
-    # schema — sniffing the first collected row's Python type would mislabel
-    # an empty ratio table (or a NULL dl in row 0) as the float form
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    fixed = isinstance(
-        ratio_table.schema["dl"].dataType,
-        (ByteType, ShortType, IntegerType, LongType),
-    )
-    # a NULL dl (possible in a hand-loaded artifact) means "no signal for
-    # this bucket" — same as an absent bucket, which defaults to 0 below
-    dl_by_bucket = {
-        int(r["bucket"]): r["dl"] for r in rows if r["dl"] is not None
-    }
-    entries = ", ".join(
-        f"{b}L, {dl_by_bucket.get(b, 0)}{'L' if fixed else 'D'}"
-        for b in range(n_buckets)
-    )
-    out_col = "log_weight_fp" if fixed else "log_weight"
-    zero = "0L" if fixed else "CAST(0.0 AS DOUBLE)"
-
-    def apply(df: DataFrame) -> DataFrame:
-        # gram array -> bucket ids (the shared _gram_buckets transform, via a
-        # temp column so the map-lookup fold references a plain column) ->
-        # literal-map lookups summed in one JVM fold
-        return (
-            df.withColumn("_dsir_bks", _gram_buckets(text_col, n_buckets, portable))
-            .withColumn(
-                out_col,
-                F.coalesce(  # NULL text -> NULL gram array -> weight 0
-                    F.expr(
-                        f"aggregate(_dsir_bks, {zero}, "
-                        f"(acc, b) -> acc + element_at(map({entries}), b))"
-                    ),
-                    F.expr(zero),
-                ),
-            )
-            .drop("_dsir_bks")
-        )
-
-    return apply
-
-
 DSIR_WEIGHT_BITS = 20
 
 
@@ -378,8 +254,8 @@ def dsir_select(
     # strata the max is a single scalar — a constant-column equi join would
     # constant-fold into the scalar-attach BroadcastNestedLoopJoin the
     # repo's plan pins forbid, so it is fetched driver-side instead (one
-    # 1-row job, the same bounded-metadata exception as the flagger caps)
-    # and subtracted as a literal. Plan pinned in tests/test_lines_dsir.py.
+    # 1-row job of bounded metadata) and subtracted as a literal. Plan
+    # pinned in tests/test_lines_dsir.py.
     if strata:
         mx = weights.groupBy(*strata).agg(
             F.max("log_weight_fp").alias("_dsir_mx")

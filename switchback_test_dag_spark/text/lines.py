@@ -38,7 +38,6 @@ granularity below the document.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
@@ -150,75 +149,3 @@ def drop_boilerplate(
     seg = _exploded(docs, id_col, segs_col)
     kept = seg.join(boiler, _SEG, "left_anti")
     return _reassembled(docs, kept, id_col, segs_col)
-
-
-def boilerplate_scrubber(
-    spark,
-    corpus: DataFrame,
-    id_col: str,
-    segs_col: str,
-    min_df: int,
-    max_boiler_segments: int = 10_000_000,
-    max_boiler_bytes: int = 1 << 30,
-):
-    """STATELESS boilerplate removal for the ingest path — the streaming twin
-    of :func:`drop_boilerplate` (same pattern as
-    ``text/decontaminate.contamination_flagger``, the repo's documented
-    Python-unavoidable case: a membership test against a driver-held set has
-    no Column-expression form that doesn't inline the whole set into the
-    plan).
-
-    Boilerplate is a property of an already-observed corpus (nav bars and
-    banners change at site-redesign cadence, not per document), so the
-    production streaming plan computes the df-thresholded segment set ONCE
-    from ``corpus`` offline, pins it driver-side, broadcasts it, and scrubs
-    each arriving document row-locally — zero state, no shuffle, identical
-    per-batch and per-stream semantics.
-
-    Returns a function ``df -> df`` with ``segs_col`` replaced by the
-    scrubbed array (NULL arrays pass through as NULL; other columns
-    untouched), applicable to batch or streaming frames. Raises if the
-    boilerplate set exceeds ``max_boiler_segments`` segments OR
-    ``max_boiler_bytes`` total string bytes (a count cap alone under-
-    protects the driver: 10M kilobyte-long segments are 10 GB) — both
-    measured in one agg job BEFORE collecting, so the caps protect the
-    driver rather than reporting the OOM they failed to prevent; past
-    either, scrub offline with :func:`drop_boilerplate` instead."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
-    boiler = (
-        segment_df(corpus, id_col, segs_col)
-        .filter(F.col("df") >= min_df)
-        .select("segment")
-    )
-    meas = boiler.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum(F.octet_length("segment")), F.lit(0)).alias("nbytes"),
-    ).collect()[0]
-    n, n_bytes = meas["n"], meas["nbytes"]
-    if n > max_boiler_segments:
-        raise ValueError(
-            f"boilerplate set ({n} segments) exceeds max_boiler_segments="
-            f"{max_boiler_segments}; use the batch drop_boilerplate join instead"
-        )
-    if n_bytes > max_boiler_bytes:
-        raise ValueError(
-            f"boilerplate set ({n_bytes} bytes) exceeds max_boiler_bytes="
-            f"{max_boiler_bytes}; use the batch drop_boilerplate join instead"
-        )
-    bc = spark.sparkContext.broadcast(
-        frozenset(r["segment"] for r in boiler.collect())
-    )
-
-    @pandas_udf(ArrayType(StringType()))
-    def _scrub(seg_arrays: pd.Series) -> pd.Series:
-        bad = bc.value
-        return seg_arrays.map(
-            lambda xs: xs if xs is None else [s for s in xs if s not in bad]
-        )
-
-    def apply(df: DataFrame) -> DataFrame:
-        return df.withColumn(segs_col, _scrub(F.col(segs_col)))
-
-    return apply

@@ -85,44 +85,6 @@ def test_plan_broadcasts_eval_side(spark):
     assert plan.count("Exchange hashpartitioning") <= 2
 
 
-def test_stateless_flagger_matches_batch_join_and_streams(spark, tmp_path):
-    import os
-
-    from conftest import run_stream_to_memory
-    from switchback_test_dag_spark.text.decontaminate import contamination_flagger
-
-    docs = load_table(spark, SF, "documents")
-    eval_df = docs.filter(F.col("doc_id") % 13 == 0)
-    want = {
-        r["doc_id"]: r["n_eval_grams"]
-        for r in contaminated_ids(docs, eval_df, "doc_id", "text", n=4).collect()
-    }
-    assert want  # non-trivial on the fixture
-    flag = contamination_flagger(spark, eval_df, "text", n=4)
-    got = {
-        r["doc_id"]: r["n_eval_grams"]
-        for r in flag(docs).filter(F.col("n_eval_grams") > 0).collect()
-    }
-    assert got == want
-    # the same flagger applied to a STREAM of the same documents emits the
-    # same per-doc hit counts (stateless: no watermark, no state store);
-    # the file source wants a directory, so stage the fixture file into one
-    import shutil
-
-    src_dir = tmp_path / "docs_stream"
-    src_dir.mkdir()
-    shutil.copy(os.path.join(SF, "documents.parquet"), src_dir / "part-0.parquet")
-    stream = spark.readStream.schema(docs.schema).parquet(str(src_dir))
-    out = flag(stream).filter(F.col("n_eval_grams") > 0).select(
-        "doc_id", "n_eval_grams"
-    )
-    run_stream_to_memory(out, "decon_flag_test", str(tmp_path))
-    sgot = {
-        r["doc_id"]: r["n_eval_grams"] for r in spark.table("decon_flag_test").collect()
-    }
-    assert sgot == want
-
-
 def test_duckdb_replay_on_fixture(spark):
     docs = load_table(spark, SF, "documents")
     eval_df = docs.filter(F.col("doc_id") % 13 == 0)
@@ -227,43 +189,3 @@ GROUP BY gr.id
         )
     )
     assert got == want and len(got) == 3
-
-
-def test_flagger_accepts_precomputed_grams(spark):
-    """One persisted gram frame reused across flaggers must flag identically
-    to deriving grams from the eval frame inside the flagger."""
-    from switchback_test_dag_spark.text.decontaminate import (
-        contamination_flagger,
-        eval_ngrams,
-    )
-
-    docs, eval_df, planted = _planted_corpus(spark)
-    grams = eval_ngrams(eval_df, "text", 13).persist()
-    try:
-        flag = contamination_flagger(spark, None, "text", n=13, eval_grams=grams)
-        got = {
-            r["id"]: r["n_eval_grams"]
-            for r in flag(docs).filter(F.col("n_eval_grams") > 0).collect()
-        }
-        assert set(got) == set(planted) and all(v == 8 for v in got.values())
-    finally:
-        grams.unpersist()
-
-
-def test_flagger_gram_cap_raises_before_collect(spark):
-    from switchback_test_dag_spark.text.decontaminate import contamination_flagger
-
-    docs = load_table(spark, SF, "documents")
-    eval_df = docs.filter(F.col("doc_id") % 13 == 0)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="max_eval_grams"):
-        contamination_flagger(spark, eval_df, "text", n=4, max_eval_grams=10)
-    # byte cap: a small COUNT of huge grams must also trip before collect
-    with _pytest.raises(ValueError, match="max_eval_gram_bytes"):
-        contamination_flagger(
-            spark, eval_df, "text", n=4, max_eval_gram_bytes=100
-        )
-    # passing neither side is a clear validation error, not an AttributeError
-    with _pytest.raises(ValueError, match="eval_df or eval_grams"):
-        contamination_flagger(spark, None, "text", n=4)

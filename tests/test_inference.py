@@ -29,26 +29,54 @@ def _binom_ci(p, n, z=3.0):
     return p - half, p + half
 
 
+def _sweep(events, n_seeds, effect=0.0):
+    """Per-seed statistics of the shipped sweep path (``fpr_by_window_size``,
+    ``power_ci_sim``) at the one-hour window."""
+    moments = P.bucket_moments(events, "value", F.expr(BUCKET))
+    return P.fused_sweep_stats(P.with_seeds(moments, n_seeds), effect)
+
+
+def _exact_crit(events):
+    g = events.select(F.expr(BUCKET).alias("b")).distinct().count()
+    return float(t_ppf_two_sided(0.05, float(g - 2)))
+
+
+def _reject_rate(stats, diff, se, crit):
+    """Share of seeds whose |diff / se| exceeds ``crit``; a NULL se (invalid
+    split) counts as no rejection, as in ``power_ci_sim``."""
+    rejects = F.col(se).isNotNull() & (F.abs(F.col(diff) / F.col(se)) > crit)
+    return stats.agg(F.avg(F.when(rejects, 1.0).otherwise(0.0))).collect()[0][0]
+
+
 def test_fpr_calibrated_at_exact_t_crit(events):
     """A/A FPR of the bucket-level t-test must sit in the 3σ binomial band
     around α = 5% when using the exact t critical value for the actual dof."""
     n_seeds = 400
-    g = events.select(F.expr(BUCKET).alias("b")).distinct().count()
-    crit = float(t_ppf_two_sided(0.05, float(g - 2)))
-    fpr = P.fpr_simulation(events, "value", F.expr(BUCKET), n_seeds, crit).collect()[
-        0
-    ]["fpr"]
+    fpr = _reject_rate(
+        _sweep(events, n_seeds), "bt_diff", "bt_se", _exact_crit(events)
+    )
     lo, hi = _binom_ci(0.05, n_seeds)
     assert lo <= fpr <= hi, f"FPR {fpr} outside [{lo:.3f}, {hi:.3f}]"
 
 
 def test_coverage_calibrated(events):
     n_seeds = 400
-    g = events.select(F.expr(BUCKET).alias("b")).distinct().count()
-    crit = float(t_ppf_two_sided(0.05, float(g - 2)))
-    cov = P.ci_coverage(events, "value", F.expr(BUCKET), n_seeds, crit).collect()[0][
-        "coverage"
-    ]
+    crit = _exact_crit(events)
+    covered = (F.col("bt_diff") - crit * F.col("bt_se") <= 0) & (
+        F.col("bt_diff") + crit * F.col("bt_se") >= 0
+    )
+    # avg skips the NULLs of seeds without a valid se, as power_ci_sim does
+    cov = (
+        _sweep(events, n_seeds)
+        .agg(
+            F.avg(
+                F.when(
+                    F.col("bt_se").isNotNull(), F.when(covered, 1.0).otherwise(0.0)
+                )
+            )
+        )
+        .collect()[0][0]
+    )
     lo, hi = _binom_ci(0.95, n_seeds)
     assert lo <= cov <= hi, f"coverage {cov} outside [{lo:.3f}, {hi:.3f}]"
 
@@ -56,12 +84,10 @@ def test_coverage_calibrated(events):
 def test_power_monotone_in_effect(events):
     """Bigger injected effects must not reduce detection power, and a huge
     effect must be detected (power → 1)."""
-    powers = []
-    for effect in (0.0, 5.0, 50.0):
-        r = P.power_simulation(
-            events, "value", F.expr(BUCKET), 100, effect, 1.959964
-        ).collect()[0]["power"]
-        powers.append(r)
+    powers = [
+        _reject_rate(_sweep(events, 100, effect), "bt_diff_p", "bt_se_p", 1.959964)
+        for effect in (0.0, 5.0, 50.0)
+    ]
     assert powers[0] <= powers[1] + 0.05
     assert powers[1] <= powers[2] + 0.05
     assert powers[2] > 0.95
@@ -87,28 +113,24 @@ def test_permutation_deterministic(events):
 
 
 def test_permutation_p_value_detects_planted_effect(events):
-    """Inject a large effect with a REAL (seed-0) assignment; the permutation
-    p-value against re-randomizations must be small."""
+    """Inject a large effect with a REAL (seed-0) assignment; the observed
+    difference must fall outside the adjusted-p thresholds (the permutation
+    distribution's 2.5/97.5 percentiles) of the re-randomizations."""
     labeled = events.withColumn("arm", P.portable_arm(BUCKET, "0")).withColumn(
         "value", F.when(F.col("arm") == "On", F.col("value") + 50).otherwise(
             F.col("value")
         )
     )
-    obs_row = (
-        labeled.groupBy()
-        .agg(
-            (
-                F.avg(F.when(F.col("arm") == "On", F.col("value")))
-                - F.avg(F.when(F.col("arm") == "Off", F.col("value")))
-            ).alias("observed_diff")
-        )
-        .withColumn("k", F.lit(1))
-    )
+    observed = labeled.agg(
+        F.avg(F.when(F.col("arm") == "On", F.col("value")))
+        - F.avg(F.when(F.col("arm") == "Off", F.col("value")))
+    ).collect()[0][0]
     diffs = P.permutation_mean_diffs(
         labeled.filter(F.col("arm").isNotNull()), "value", F.expr(BUCKET), 200
-    ).withColumn("k", F.lit(1))
-    p = P.permutation_p_value(diffs, obs_row, by=["k"]).collect()[0]["p_value"]
-    assert p < 0.02
+    )
+    th = P.permutation_thresholds(diffs).collect()[0]
+    assert th["n_seeds"] == 200
+    assert not th["lower"] <= observed <= th["upper"], (observed, th)
 
 
 def test_hex_threshold_bounds():

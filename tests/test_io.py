@@ -246,11 +246,15 @@ def test_run_script_materializes_stages_atomically(spark, sf_dir, tmp_path):
     """run_script(materialize_dir=...): CREATE OR REPLACE TABLE stages land
     as committed snapshot tables, downstream statements read the committed
     files, and re-running replaces each stage atomically (version 2)."""
-    from switchback_test_dag_spark.io import current_version, read_committed
-    from switchback_test_dag_spark.io import register_views
+    from switchback_test_dag_spark.io import (
+        current_version,
+        load_table,
+        read_committed,
+    )
     from switchback_test_dag_spark.sql_script import run_script
 
-    register_views(spark, sf_dir, ("region", "nation"))
+    for name in ("region", "nation"):
+        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
     script = """
     CREATE OR REPLACE TABLE proj.ds.stage1 AS
       SELECT n_regionkey, count(*) AS n FROM nation GROUP BY n_regionkey;

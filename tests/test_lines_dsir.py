@@ -436,49 +436,6 @@ SELECT source, doc_id FROM ranked WHERE rk <= 3
     assert got == want
 
 
-def test_dsir_scorer_matches_batch_and_streams(spark, tmp_path):
-    """The stateless streaming scorer (fitted B-row model inlined as a
-    literal map, pure JVM fold) must equal dsir_log_weights on the same
-    corpus — float and fixed-point forms — and score a STREAM of the same
-    documents identically, with no Python stage in the plan."""
-    from conftest import run_stream_to_memory
-
-    docs, target = _dsir_fixture(spark)
-    for fp in (None, 1_000_000):
-        col = "log_weight" if fp is None else "log_weight_fp"
-        ratio = DS.dsir_ratio_table(
-            docs, target, "text", n_buckets=64, portable=True,
-            fixed_point_scale=fp,
-        )
-        score = DS.dsir_scorer(ratio, "text", n_buckets=64, portable=True)
-        got = {r["doc_id"]: r[col] for r in score(docs).collect()}
-        want = {
-            r["doc_id"]: r[col]
-            for r in DS.dsir_log_weights(
-                docs, target, "doc_id", "text", n_buckets=64, portable=True,
-                fixed_point_scale=fp,
-            ).collect()
-        }
-        # batch drops unscored (NULL/empty) docs; the scorer emits 0 for them
-        assert {k: v for k, v in got.items() if k in want} == pytest.approx(want)
-        assert got[4] == 0 and got[5] == 0
-        plan = score(docs)._jdf.queryExecution().executedPlan().toString()
-        assert "EvalPython" not in plan and "Exchange" not in plan
-    # streaming twin: the same scorer over a parquet stream
-    src = tmp_path / "dsir_stream"
-    src.mkdir()
-    docs.coalesce(1).write.parquet(str(src / "b0"))
-    stream = spark.readStream.schema(docs.schema).parquet(str(src) + "/*")
-    out = score(stream).select("doc_id", "log_weight_fp")
-    run_stream_to_memory(out, "dsir_score_test", str(tmp_path))
-    sgot = {r["doc_id"]: r["log_weight_fp"]
-            for r in spark.table("dsir_score_test").collect()}
-    assert sgot == got
-    # the collect is bounded by max_buckets
-    with pytest.raises(ValueError, match="max_buckets"):
-        DS.dsir_scorer(ratio, "text", n_buckets=64, max_buckets=3)
-
-
 def test_ccnet_order_scrub_before_dedup_is_load_bearing(spark):
     """The composed pipeline's stage order pin (CCNet, Wenzek et al. 2020):
     two documents that differ ONLY in boilerplate dedup together when
@@ -520,20 +477,6 @@ def test_ccnet_order_scrub_before_dedup_is_load_bearing(spark):
     assert len(texts) != len(set(texts))  # duplicate leakage
 
 
-def test_streaming_caps_bound_bytes_not_just_counts(spark):
-    """A small-COUNT boilerplate set of huge segments must trip the byte cap
-    before any collect reaches the driver."""
-    big = "x" * 10_000
-    df = spark.createDataFrame(
-        [(1, [big]), (2, [big]), (3, [big])],
-        "doc_id long, segs array<string>",
-    )
-    with pytest.raises(ValueError, match="max_boiler_bytes"):
-        L.boilerplate_scrubber(
-            spark, df, "doc_id", "segs", min_df=2, max_boiler_bytes=1000
-        )
-
-
 def test_empty_frames_run_to_empty_not_crash(spark):
     """ANSI-mode hardening: zero-row corpora are routine at warehouse scale;
     both operator families must run to empty output, never throw."""
@@ -549,32 +492,6 @@ def test_empty_frames_run_to_empty_not_crash(spark):
     empty_target = spark.createDataFrame([], "text string")
     got = DS.dsir_log_weights(docs, empty_target, "doc_id", "text", n_buckets=64)
     assert got.count() == 3  # scored docs unchanged; no division/ln error
-
-
-def test_boilerplate_scrubber_matches_batch_and_streams(spark, tmp_path):
-    """The stateless scrubber must equal drop_boilerplate on the same corpus
-    (modulo drop_boilerplate's NULL->empty normalization), and a STREAM of
-    the same documents must scrub identically (no state store, no shuffle)."""
-    from conftest import run_stream_to_memory
-    from switchback_test_dag_spark.text.lines import boilerplate_scrubber
-
-    df = spark.createDataFrame(ROWS, SCHEMA)
-    scrub = boilerplate_scrubber(spark, df, "doc_id", "segs", min_df=3)
-    got = _by_id(scrub(df))
-    want = _by_id(L.drop_boilerplate(df, "doc_id", "segs", min_df=3))
-    assert got == want
-    # cap counts BEFORE collecting
-    with pytest.raises(ValueError, match="max_boiler_segments"):
-        boilerplate_scrubber(spark, df, "doc_id", "segs", 1, max_boiler_segments=2)
-    # the same scrubber applied to a STREAM emits the same scrubbed arrays
-    src = tmp_path / "segs_stream"
-    src.mkdir()
-    df.coalesce(1).write.parquet(str(src / "batch0"))
-    stream = spark.readStream.schema(df.schema).parquet(str(src) + "/*")
-    out = scrub(stream).select("doc_id", "segs")
-    run_stream_to_memory(out, "boiler_scrub_test", str(tmp_path))
-    sgot = {r["doc_id"]: r["segs"] for r in spark.table("boiler_scrub_test").collect()}
-    assert sgot == want
 
 
 def test_dsir_scoring_join_is_broadcast(spark):
@@ -610,74 +527,3 @@ def test_dsir_select_null_stratum_is_its_own_stratum(spark):
     assert len(by_src[None]) == 3 and len(by_src["a"]) == 3
     assert all(i <= 10 for i in by_src[None])
     assert set(sel.columns) == {"source", "doc_id", "log_weight_fp", "weight"}
-
-
-def test_dsir_scorer_output_type_comes_from_schema(spark):
-    """Fixed-vs-float is a property of the model ARTIFACT (its dl column
-    type), not of whatever row collects first: an EMPTY fixed-point ratio
-    table must still emit the integer log_weight_fp column, and a NULL dl
-    row must score as 0 signal rather than break the literal map."""
-    docs, _ = _dsir_fixture(spark)
-    empty_fixed = spark.createDataFrame([], "bucket long, dl long")
-    score = DS.dsir_scorer(empty_fixed, "text", n_buckets=64, portable=True)
-    out = score(docs)
-    assert dict(out.dtypes)["log_weight_fp"] == "bigint"
-    assert all(r["log_weight_fp"] == 0 for r in out.collect())
-    empty_float = spark.createDataFrame([], "bucket long, dl double")
-    out2 = DS.dsir_scorer(empty_float, "text", n_buckets=64, portable=True)(docs)
-    assert dict(out2.dtypes)["log_weight"] == "double"
-    # NULL dl in row 0 (a hand-loaded artifact): treated as absent -> 0
-    holey = spark.createDataFrame(
-        [(0, None), (1, 5)], "bucket long, dl long"
-    )
-    out3 = DS.dsir_scorer(holey, "text", n_buckets=64, portable=True)(docs)
-    assert dict(out3.dtypes)["log_weight_fp"] == "bigint"
-    out3.collect()  # must not raise on the literal-map build or the fold
-
-
-def test_dsir_ratio_table_round_trips_through_parquet(spark, tmp_path):
-    """The model-artifact path the docstring promises: write the fitted
-    ratio table to parquet once per model refresh, reload it in a fresh
-    session, and build the streaming scorer from the RELOADED artifact —
-    scores must equal the batch operator exactly (fixed-point form, so
-    equality is integer-exact, not approx)."""
-    docs, target = _dsir_fixture(spark)
-    ratio = DS.dsir_ratio_table(
-        docs, target, "text", n_buckets=64, portable=True,
-        fixed_point_scale=1_000_000,
-    )
-    path = str(tmp_path / "dsir_model.parquet")
-    ratio.write.parquet(path)
-    # a fresh session state (shared context, clean catalog/conf) stands in
-    # for the "next job reads the artifact" path
-    fresh = spark.newSession()
-    reloaded = fresh.read.parquet(path)
-    assert dict(reloaded.dtypes) == {"bucket": "bigint", "dl": "bigint"}
-    score = DS.dsir_scorer(reloaded, "text", n_buckets=64, portable=True)
-    got = {
-        r["doc_id"]: r["log_weight_fp"]
-        for r in score(fresh.createDataFrame(docs.collect(), docs.schema)).collect()
-    }
-    want = {
-        r["doc_id"]: r["log_weight_fp"]
-        for r in DS.dsir_log_weights(
-            docs, target, "doc_id", "text", n_buckets=64, portable=True,
-            fixed_point_scale=1_000_000,
-        ).collect()
-    }
-    assert {k: v for k, v in got.items() if k in want} == want
-    assert got[4] == 0 and got[5] == 0  # unscored docs -> 0, not absent
-
-
-def test_dsir_scorer_default_guard_bounds_inlined_plan(spark):
-    """The default max_buckets is 2^16: the model is inlined as 2*n_buckets
-    literals in one MAP expression, and past ~64k entries the codegen'd
-    expression tree itself becomes the cost (driver-side planning is outside
-    executor CPU). Bigger models must go through the batch broadcast join
-    or raise the guard explicitly."""
-    n = (1 << 16) + 1
-    big = spark.range(n).select(
-        F.col("id").alias("bucket"), F.lit(1).cast("long").alias("dl")
-    )
-    with pytest.raises(ValueError, match="max_buckets"):
-        DS.dsir_scorer(big, "text", n_buckets=n)

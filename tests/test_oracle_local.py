@@ -92,6 +92,21 @@ def test_registry_fits_correctness_window():
     assert set(entry_mod.oracle_sql()) <= set(entry_mod.queries())
 
 
+def test_plan_captures_name_registry_queries():
+    """Every captured plan ``plans/r13/<query>_{before,after}.txt`` names a
+    registered query, so deleting a query cannot leave its captures behind."""
+    root = Path(entry_mod.__file__).parent
+    captures = sorted((root / "plans" / "r13").glob("*.txt"))
+    assert captures
+    names = set(entry_mod.queries())
+    stale = []
+    for path in captures:
+        query, _, phase = path.stem.rpartition("_")
+        if phase not in ("before", "after") or query not in names:
+            stale.append(path.name)
+    assert not stale, stale
+
+
 def test_package_imports_resolve():
     """Every ``from switchback_test_dag_spark... import name`` in the package,
     the tools and the benchmark, module-level or function-local, names a

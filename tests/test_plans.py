@@ -129,72 +129,6 @@ def test_sweep_and_finder_scan_once(spark, sf_dir):
         release_all()
 
 
-def test_date_partitioned_orders_prunes(spark, sf_dir, tmp_path):
-    """SURVEY §4 layout: orders partitioned by order month must turn a date
-    window into PartitionFilters (directory pruning at listing time), and the
-    pruned read must return exactly the rows a full-scan filter returns."""
-    from switchback_test_dag_spark.io import load_table
-    from switchback_test_dag_spark.plans.layouts import (
-        read_month_range,
-        write_date_partitioned,
-    )
-
-    orders = load_table(spark, sf_dir, "orders")
-    path = str(tmp_path / "orders_by_month")
-    write_date_partitioned(orders, path)
-
-    win = read_month_range(spark, path, "1995-01", "1995-03")
-    plan = win._jdf.queryExecution().executedPlan().toString()
-    start = plan.index("PartitionFilters")
-    pf = plan[start : plan.index("]", start) + 1]
-    assert "order_month" in pf and pf != "PartitionFilters: []"
-
-    expect = orders.filter(
-        F.date_format(F.to_date("o_orderdate"), "yyyy-MM").between(
-            "1995-01", "1995-03"
-        )
-    ).count()
-    assert win.count() == expect > 0
-
-
-def test_time_clustered_events_have_disjoint_file_ranges(spark, sf_dir, tmp_path):
-    """Range-clustered events must land in files whose [min ts, max ts]
-    footer stats are pairwise disjoint — the property that lets a time-window
-    scan skip whole files on stats alone (the switchback access pattern)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from switchback_test_dag_spark.io import load_table
-    from switchback_test_dag_spark.plans.layouts import write_time_clustered
-
-    # cluster on the exact ts_ns long: int64 columns always carry footer
-    # min/max stats (timestamp_ntz stats are writer-dependent)
-    ev = load_table(spark, sf_dir, "events").select("event_id", "ts_ns", "value")
-    path = str(tmp_path / "events_by_ts")
-    write_time_clustered(ev, path, ts_col="ts_ns", n_files=8)
-
-    ranges = []
-    for f in glob.glob(os.path.join(path, "*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        col_idx = next(
-            i for i in range(md.num_columns)
-            if md.row_group(0).column(i).path_in_schema == "ts_ns"
-        )
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(col_idx).statistics
-            mins.append(st.min)
-            maxs.append(st.max)
-        ranges.append((min(mins), max(maxs)))
-    assert len(ranges) > 1
-    ranges.sort()
-    for (lo_a, hi_a), (lo_b, _hi_b) in zip(ranges, ranges[1:]):
-        assert hi_a <= lo_b, f"file ranges overlap: {hi_a} > {lo_b}"
-    # round-trip: no rows lost by the re-layout
-    assert spark.read.parquet(path).count() == ev.count()
-
-
 def test_welch_mde_single_fact_scan(spark, sf_dir):
     # welch_mde_by_event_type: the whole-group MDE moments ride the same
     # groupBy as the per-arm Welch moments — exactly one events scan, no join
@@ -246,50 +180,6 @@ def test_salted_join_keys_include_salt(spark, sf_dir):
     assert "_salt" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_bucketed_join_eliminates_shuffle(spark, sf_dir):
-    # the 100-TB strategy for recurring big-x-big joins: both sides bucketed
-    # by the join key -> SortMergeJoin with ZERO Exchange (and, with sorted
-    # buckets, no Sort either); broadcast disabled to force the general case
-    from switchback_test_dag_spark.io import load_table
-    from switchback_test_dag_spark.plans.bucketing import (
-        co_located_join,
-        exchange_count,
-        write_bucketed,
-    )
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        write_bucketed(
-            load_table(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_custkey", "o_totalprice"
-            ),
-            "bkt_orders",
-            ["o_custkey"],
-            8,
-            sort_keys=["o_custkey"],
-        )
-        write_bucketed(
-            load_table(spark, sf_dir, "customer").select(
-                "c_custkey", "c_mktsegment"
-            ).withColumnRenamed("c_custkey", "o_custkey"),
-            "bkt_customer",
-            ["o_custkey"],
-            8,
-            sort_keys=["o_custkey"],
-        )
-        joined = co_located_join(spark, "bkt_orders", "bkt_customer", ["o_custkey"])
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert exchange_count(joined) == 0, plan
-        # and it actually computes the right thing
-        assert joined.count() == load_table(spark, sf_dir, "orders").count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bkt_orders")
-        spark.sql("DROP TABLE IF EXISTS bkt_customer")
 
 
 def test_cleaning_pipeline_plan_is_jvm_and_broadcasts_eval(spark, sf_dir):
@@ -457,71 +347,6 @@ def test_no_window_partitioned_by_content_hash(spark, sf_dir):
         "key through an unmitigated single-task-per-key operator — use "
         f"groupBy + join instead): {offenders}"
     )
-
-
-def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
-    """The Z-order layout's whole point, MEASURED from written footers: with
-    two independent filter columns, every file's (min, max) stats box is
-    small in BOTH dimensions, so a slice predicate on EITHER column can
-    skip most files on stats alone — where single-column range clustering
-    prunes its own column and nothing else. Computed as the stats-based
-    skipping set (files whose box intersects the predicate), the honest
-    quantity a reader's footer filter uses."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from switchback_test_dag_spark.plans.layouts import (
-        write_time_clustered,
-        write_zorder_clustered,
-    )
-
-    n = 20_000
-    df = spark.range(n).selectExpr(
-        "id",
-        "id % 1000 AS x",
-        "CAST(pmod(id * 2654435761, 1000) AS BIGINT) AS y",  # independent of x
-    )
-    zpath = str(tmp_path / "zorder")
-    xpath = str(tmp_path / "xrange")
-    write_zorder_clustered(df, zpath, "x", "y", n_files=16)
-    write_time_clustered(df, xpath, ts_col="x", n_files=16)
-
-    def boxes(path, cols):
-        out = []
-        for f in glob.glob(os.path.join(path, "*.parquet")):
-            md = pq.ParquetFile(f).metadata
-            box = {}
-            for c in cols:
-                ci = next(
-                    i for i in range(md.num_columns)
-                    if md.row_group(0).column(i).path_in_schema == c
-                )
-                stats = [
-                    md.row_group(rg).column(ci).statistics
-                    for rg in range(md.num_row_groups)
-                ]
-                box[c] = (min(s.min for s in stats), max(s.max for s in stats))
-            out.append(box)
-        return out
-
-    def touched(bxs, col, lo, hi):
-        return sum(1 for b in bxs if not (b[col][1] < lo or b[col][0] > hi))
-
-    zb = boxes(zpath, ["x", "y"])
-    xb = boxes(xpath, ["x", "y"])
-    assert len(zb) == len(xb) == 16
-    # 10%-of-range slices on each dimension
-    z_x, z_y = touched(zb, "x", 100, 199), touched(zb, "y", 100, 199)
-    x_x, x_y = touched(xb, "x", 100, 199), touched(xb, "y", 100, 199)
-    # single-column layout: perfect on its own column, useless on the other
-    assert x_x <= 3
-    assert x_y == 16
-    # z-order: BOTH dimensions prune (Morton locality: ~sqrt-fraction of
-    # files per 1-D slice; deterministic data, so exact counts are stable)
-    assert z_x <= 8 and z_y <= 8, (z_x, z_y)
-    # and nothing was lost in the re-layout
-    assert spark.read.parquet(zpath).count() == n
 
 
 def test_barrier_truncates_plan_and_releases_cache(spark):

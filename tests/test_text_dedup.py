@@ -34,39 +34,6 @@ def test_minhash_lsh_equals_exact(docs):
     assert lsh == exact
 
 
-def test_minhash_oph_scheme_equals_classic_on_fixture(docs, spark):
-    """scheme="oph" (one-permutation hashing + rotation densification — the
-    k-independent-CPU signature for long documents; measured 3.2x executor
-    CPU vs classic on 3000-token docs, SCALE.md) must recover the same
-    verified pair set at the fixture's similarity margins, stay
-    partitioning-invariant, and validate its scheme name. Short/NULL docs
-    produce all-NULL signatures without ANSI errors, same as classic."""
-    import pytest as _pytest
-
-    classic = _pair_set(
-        TD.minhash_lsh_pairs(docs, "doc_id", "text", k=64, bands=16, threshold=0.85)
-    )
-    oph = _pair_set(
-        TD.minhash_lsh_pairs(
-            docs, "doc_id", "text", k=64, bands=16, threshold=0.85, scheme="oph"
-        )
-    )
-    assert classic and oph == classic
-    oph2 = _pair_set(
-        TD.minhash_lsh_pairs(
-            docs.repartition(7), "doc_id", "text", k=64, bands=16,
-            threshold=0.85, scheme="oph",
-        )
-    )
-    assert oph2 == oph
-    tiny = spark.createDataFrame(
-        [(1, "a b"), (2, None)], "doc_id long, text string"
-    )
-    assert TD.minhash_lsh_pairs(tiny, "doc_id", "text", scheme="oph").count() == 0
-    with _pytest.raises(ValueError, match="scheme"):
-        TD.minhash_lsh_pairs(docs, "doc_id", "text", scheme="turbo")
-
-
 def test_prefix_filter_is_exact(docs):
     """AllPairs prefix filtering must be a pure optimization: identical pair
     set and jaccard values to the unfiltered inverted-index join, on the
@@ -215,57 +182,6 @@ def test_exact_dedup_incremental_fold_invariant_property(spark):
         assert kept == full
 
     prop()
-
-
-def test_bucketed_fingerprint_index_joins_without_exchange(spark):
-    """A fingerprint index of already-kept docs maintained as a BUCKETED
-    catalog table (plans.bucketing.write_bucketed) anti-joins a new batch's
-    exact_dedup survivors with fewer Exchanges than the same index read as
-    plain parquet (the index-side shuffle is amortized into the bucketed
-    write), and both forms keep identical survivors. Broadcast is disabled
-    for the comparison so AQE cannot hide the exchange on the tiny fixture."""
-    import os
-    import tempfile
-
-    from switchback_test_dag_spark.plans.bucketing import (
-        exchange_count,
-        write_bucketed,
-    )
-    from switchback_test_dag_spark.text.analysis import content_fingerprint
-
-    # batch B repeats every text of A and adds three new ones (ids 15-17)
-    docs = spark.createDataFrame(
-        [(i, f"text number {i % 6 if i < 15 else i % 9}") for i in range(30)],
-        "doc_id long, text string",
-    )
-    A, B = docs.filter("doc_id < 15"), docs.filter("doc_id >= 15")
-    fps = TD.exact_dedup(A, "doc_id", "text").select(
-        content_fingerprint("text").alias("fingerprint")
-    )
-    new = TD.exact_dedup(B, "doc_id", "text").withColumn(
-        "fingerprint", content_fingerprint("text")
-    )
-
-    old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        spark.sql("DROP TABLE IF EXISTS fp_index_test")
-        write_bucketed(fps, "fp_index_test", ["fingerprint"], 4)
-        surv_b = new.join(spark.table("fp_index_test"), "fingerprint", "left_anti")
-        with tempfile.TemporaryDirectory() as d:
-            fps.write.parquet(os.path.join(d, "idx"))
-            surv_p = new.join(
-                spark.read.parquet(os.path.join(d, "idx")), "fingerprint",
-                "left_anti",
-            )
-            nb, np_ = exchange_count(surv_b), exchange_count(surv_p)
-            assert nb < np_, (nb, np_)
-            got_b = {r["doc_id"] for r in surv_b.collect()}
-            got_p = {r["doc_id"] for r in surv_p.collect()}
-        assert got_b == got_p == {15, 16, 17}
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
-        spark.sql("DROP TABLE IF EXISTS fp_index_test")
 
 
 def test_release_caches_unpins_intermediates(docs, spark):

@@ -22,12 +22,11 @@ so scale audits are machine-diffable like BENCH artifacts instead of living
 only in SCALE.md prose.
 
 Further measurements: ``spans``, ``decon``, ``selection`` (segment dedup +
-DSIR contracts value-replayed in DuckDB at scale), and ``minhash_oph``
-(classic vs one-permutation MinHash executor CPU + pair-set equality on a
-deterministic long-document corpus).
+DSIR contracts value-replayed in DuckDB at scale), ``span_removal`` and
+``clean_corpus_full``.
 
 Usage: python tools/scale_evidence.py [components|spans|decon|selection|
-       minhash_oph|span_removal|clean_corpus_full ...]
+       span_removal|clean_corpus_full ...]
        [--sf DIR] [--no-write]
 """
 
@@ -70,58 +69,6 @@ def _host_probe(trials: int = 2) -> dict:
         al.append(time.monotonic() - t0)
         del s, buf
     return {"matmul_s": round(min(mm), 3), "alloc200mb_s": round(min(al), 3)}
-
-
-def _make_cpu_reader(spark):
-    """Per-stage executor CPU time from the UI REST status store (CPU consumed
-    by a plan's tasks is a property of the plan + data, not of the host's
-    wall-clock mood). Returns a zero-arg callable yielding
-    {(stageId, attemptId): cpu_ns} over COMPLETED stages, or None when the UI
-    is off. A measurement's CPU is the delta of NEW stage ids between two
-    reads, so old-stage eviction cannot perturb it.
-
-    executorCpuTime counts JVM task CPU only — Python/Arrow worker CPU is
-    outside it. The status store is updated ASYNCHRONOUSLY from the event
-    bus, so snapshots must go through ``_stable_cpu_read``."""
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    if not ui:
-        return None
-    app_id = spark.sparkContext.applicationId
-    url = f"{ui}/api/v1/applications/{app_id}/stages?status=complete"
-
-    def read():
-        try:
-            with urllib.request.urlopen(url, timeout=10) as resp:
-                stages = json.load(resp)
-            return {
-                (s["stageId"], s["attemptId"]): s.get("executorCpuTime", 0)
-                for s in stages
-            }
-        except Exception:  # noqa: BLE001 - CPU metrics are best-effort
-            return None
-
-    return read
-
-
-def _stable_cpu_read(cpu_read, tries: int = 5, sleep_s: float = 0.15):
-    """Take a status-store snapshot only once the completed-stage-id set has
-    stopped moving (two consecutive reads agree), bounding the event-bus lag
-    described in ``_make_cpu_reader``. A read that never stabilizes within
-    ``tries`` returns the last view (best-effort)."""
-    cur = cpu_read()
-    for _ in range(tries):
-        if cur is None:
-            return None
-        time.sleep(sleep_s)
-        nxt = cpu_read()
-        if nxt is None:
-            return cur
-        if set(nxt) == set(cur):
-            return nxt
-        cur = nxt
-    return cur
 
 
 def measure_components(spark, sf_dir: str) -> dict:
@@ -386,111 +333,6 @@ FROM sgagg JOIN dsagg USING (source) JOIN dsselagg USING (source)
         "value_match": match,
     }
     assert match, "selection contracts diverge from the DuckDB replay at scale"
-    return out
-
-
-def measure_minhash_oph(spark, sf_dir: str) -> dict:
-    """Classic vs one-permutation MinHash on a LONG-DOCUMENT corpus:
-    executor CPU per scheme (the box-independent number, via the REST
-    status-store reader ``_make_cpu_reader``) and pair-set equality of the
-    verified output. This is the machine-readable twin of the round-9
-    SCALE.md prose claim — OPH is the documented long-document scale path
-    precisely because the classic signature's O(|shingles|·k) mixing
-    dominates there.
-
-    The corpus is built DETERMINISTICALLY from the scale directory's
-    documents: consecutive id-groups concatenated in id order into ~3000-
-    token documents, plus a planted near-dup twin for every 5th long doc
-    (every 97th token dropped) so the verified pair set is non-trivial.
-    Both schemes run on the SAME materialized corpus; each scheme is run
-    twice and the WARM run is recorded (first run pays parquet/codegen
-    warmup)."""
-    from switchback_test_dag_spark.caching import release_all
-
-    # 50 consecutive sf1 docs ≈ 3000 tokens — the corpus the docstring and
-    # the committed SCALE.md numbers describe (25 would halve the document
-    # length and understate the classic scheme's O(|shingles|·k) term)
-    group = int(os.environ.get("SPARK_GRAFT_OPH_GROUP", "50"))
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    longdocs = (
-        docs.withColumn("g", F.floor(F.col("doc_id") / group))
-        .groupBy("g")
-        .agg(
-            F.expr(
-                "array_join(transform(array_sort(collect_list(struct(doc_id, text))),"
-                " s -> s.text), ' ')"
-            ).alias("text")
-        )
-        .select((F.col("g") * 2).alias("doc_id"), "text")
-    )
-    twins = longdocs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1).alias("doc_id"),
-        F.expr(
-            "concat_ws(' ', filter(split(text, ' '), (x, i) -> i % 97 != 0))"
-        ).alias("text"),
-    )
-    corpus = longdocs.unionByName(twins).localCheckpoint()
-    prof = corpus.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.avg(F.size(F.split("text", r"\s+"))), 1).alias("avg_toks"),
-    ).collect()[0]
-    cpu_read = _make_cpu_reader(spark)
-
-    def run(scheme: str) -> dict:
-        rec: dict = {}
-        for attempt in ("cold", "warm"):
-            before = _stable_cpu_read(cpu_read) if cpu_read else None
-            t0 = time.monotonic()
-            pairs = TD.minhash_lsh_pairs(
-                corpus, "doc_id", "text", shingle_n=3, k=64, bands=16,
-                threshold=0.85, scheme=scheme,
-            ).localCheckpoint()
-            n = pairs.count()
-            wall = time.monotonic() - t0
-            after = _stable_cpu_read(cpu_read) if before is not None else None
-            release_all()
-            cpu = (
-                round(sum(v for k, v in after.items() if k not in before) / 1e9, 2)
-                if after is not None
-                else None
-            )
-            rec = {
-                "pairs_df": pairs,
-                "pairs": n,
-                "wall_sec": round(wall, 2),
-                "cpu_sec": cpu,
-            }
-        return rec
-
-    classic = run("classic")
-    oph = run("oph")
-    mismatch = (
-        classic["pairs_df"].select("doc_a", "doc_b")
-        .exceptAll(oph["pairs_df"].select("doc_a", "doc_b"))
-        .unionAll(
-            oph["pairs_df"].select("doc_a", "doc_b")
-            .exceptAll(classic["pairs_df"].select("doc_a", "doc_b"))
-        )
-        .count()
-    )
-    classic.pop("pairs_df")
-    oph.pop("pairs_df")
-    out = {
-        "measurement": "minhash_oph",
-        "sf_dir": sf_dir,
-        "n_docs": prof["n"],
-        "avg_tokens": float(prof["avg_toks"]),
-        "classic": classic,
-        "oph": oph,
-        "cpu_ratio_classic_over_oph": (
-            round(classic["cpu_sec"] / oph["cpu_sec"], 2)
-            if classic["cpu_sec"] and oph["cpu_sec"]
-            else None
-        ),
-        "pair_mismatch_rows": mismatch,
-        "pairs_identical": mismatch == 0,
-    }
-    assert mismatch == 0, f"schemes disagree on {mismatch} pair rows"
     return out
 
 
@@ -804,7 +646,6 @@ _MEASURES = {
     "spans": measure_spans,
     "decon": measure_decon,
     "selection": measure_selection,
-    "minhash_oph": measure_minhash_oph,
     "span_removal": measure_span_removal,
     "clean_corpus_full": measure_clean_corpus_full,
 }
@@ -822,19 +663,7 @@ def main() -> None:
         help="print only; skip merging into SCALE_evidence.json",
     )
     args = ap.parse_args()
-    spark = get_spark(
-        app_name="scale-evidence",
-        cpus=32,
-        shuffle_partitions=32,
-        # the UI powers the REST status store the minhash_oph measurement
-        # reads executor CPU from (``_make_cpu_reader``)
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.port": "0",
-            "spark.ui.retainedStages": "20000",
-            "spark.ui.retainedJobs": "20000",
-        },
-    )
+    spark = get_spark(app_name="scale-evidence", cpus=32, shuffle_partitions=32)
     path = os.path.join(_REPO, "SCALE_evidence.json")
     # the default-sf (sf1) run owns the bare measurement key; a different
     # scale directory gets a suffixed key so e.g. the sf10 selection audit
