@@ -42,29 +42,19 @@ def spark_micro_sum(expr: str) -> Column:
     )
 
 
-def spark_micro_sum_wide(expr: str) -> Column:
-    """As :func:`spark_micro_sum`, with a DECIMAL(38,0) accumulator — the
-    documented headroom escape for sums whose absolute micro total can exceed
-    BIGINT (~9.2e18). Needed wherever the summed row count is itself a join
-    EXPANSION (e.g. a K²-growing range-join pair set: 100× data → ~3e18 micro
-    units overflowed the long sum under ANSI mode). DuckDB needs no twin
-    change: its BIGINT sum already promotes to HUGEINT. ``div`` on the
-    decimal returns BIGINT, so the final cents math is unchanged."""
-    return _wide_cents(f"CAST(round(({expr}) * 1000000, 0) AS DECIMAL(38,0))")
-
-
 def spark_wide_total_from_micro(micro_col: str) -> Column:
     """Wide 2-decimal total over PRE-ROUNDED micro-unit partial sums — the
-    aggregate-pushdown companion of :func:`spark_micro_sum_wide`: when a
-    money sum is pushed below a join as per-group BIGINT ``micro_col``
-    partials, the post-join re-aggregation still needs the DECIMAL(38,0)
-    accumulator (the join expansion is exactly where BIGINT overflowed at
-    100×), and the half-up cents division must happen exactly once, here."""
-    return _wide_cents(f"CAST({micro_col} AS DECIMAL(38,0))")
-
-
-def _wide_cents(micro_expr: str) -> Column:
-    return F.expr(f"(sum({micro_expr}) + 5000) div 10000") / 100.0
+    aggregate-pushdown form of :func:`spark_micro_sum`: when a money sum is
+    pushed below a join as per-group BIGINT ``micro_col`` partials, the
+    post-join re-aggregation needs a DECIMAL(38,0) accumulator (the join
+    expansion is exactly where a BIGINT sum overflowed at 100× under ANSI
+    mode; DuckDB needs no twin change, its BIGINT sum promotes to HUGEINT),
+    and the half-up cents division must happen exactly once, here. ``div``
+    on the decimal returns BIGINT, so the final cents math is unchanged."""
+    return (
+        F.expr(f"(sum(CAST({micro_col} AS DECIMAL(38,0))) + 5000) div 10000")
+        / 100.0
+    )
 
 
 def spark_micro_avg(expr: str) -> Column:

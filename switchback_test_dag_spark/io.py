@@ -93,111 +93,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------- #
-# interchange formats (CSV / JSON-lines)
-# --------------------------------------------------------------------------- #
-#
-# Parquet stays the canonical storage format (columnar pruning + pushdown);
-# CSV and JSONL are INTERCHANGE surfaces — what upstream systems hand a
-# pipeline and what downstream consumers ask for. Two disciplines, both
-# scale-driven:
-#
-# - Explicit schema ALWAYS, never inference: `inferSchema` costs one extra
-#   full scan of the data at 100 TB and drifts types between runs (a column
-#   of "1"s infers int today and string tomorrow when a stray value lands).
-#   Readers here require a StructType, exactly like the parquet path's
-#   explicit-schema policy (SURVEY §2.1 S1/F22).
-# - Fail loudly: reads run FAILFAST so a malformed row aborts the job at the
-#   scan instead of surfacing as silent NULLs that corrupt aggregates.
-#
-# CSV carries FLAT rows only (arrays/structs/maps have no CSV encoding);
-# `write_csv_table` rejects nested schemas with a pointer at JSONL. The CSV
-# convention pins `\N` as the NULL marker so NULL and empty-string survive a
-# round trip distinctly, and quotes/escapes embedded delimiters and newlines
-# (readers therefore run multiLine=true — correct first; for multi-TB CSV
-# prefer many input files, or JSONL, which stays line-splittable).
-#
-# KNOWN CAVEAT of the `\N` convention: a string field whose value is EXACTLY
-# the two characters backslash-N collides with the NULL marker — Spark's CSV
-# writer emits it unquoted (it only quotes on delimiter/quote/newline), and
-# the reader maps any whole unquoted field equal to nullValue back to NULL.
-# Values that merely CONTAIN `\N` round-trip fine; only the exact-match whole
-# field is lossy (NULL-on-read). Data where the literal string `\N` is a
-# possible whole-field value must go through JSONL, which has a real null
-# token and escapes backslashes. Pinned by test_io.py's
-# `test_csv_backslash_n_literal_collides_with_null`.
-
-# Spark's default CSV/JSON timestampFormat carries milliseconds only — a
-# silent µs truncation that would corrupt the events ts contract on a round
-# trip; pin a µs-precise format on BOTH sides of both formats
-_TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
-
-_CSV_OPTS = {
-    "header": "true",
-    "nullValue": "\\N",
-    "escape": '"',
-    "timestampFormat": _TS_FMT,
-}
-
-
-def _atomic_only(df: DataFrame, caller: str) -> None:
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    bad = [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (ArrayType, MapType, StructType))
-    ]
-    if bad:
-        raise ValueError(
-            f"{caller}: CSV cannot encode nested columns {bad}; use "
-            "write_jsonl_table/read_jsonl_table for array/map/struct data"
-        )
-
-
-def write_csv_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Write a FLAT table as headered CSV (NULL as ``\\N``, embedded
-    delimiters/newlines quoted). Nested columns raise — CSV has no encoding
-    for them (JSONL does)."""
-    _atomic_only(df, "write_csv_table")
-    df.write.mode(mode).options(**_CSV_OPTS).csv(path)
-
-
-def read_csv_table(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Read headered CSV written by :func:`write_csv_table` (or any CSV
-    following the same conventions) under an EXPLICIT schema, FAILFAST.
-
-    ``schema`` is a StructType or DDL string — never inferred (inference is
-    an extra full scan at scale and drifts types between runs). multiLine
-    handles quoted embedded newlines; for bulk ingest where line-splittable
-    scans matter more than embedded newlines, prefer JSONL."""
-    return (
-        spark.read.options(**_CSV_OPTS, mode="FAILFAST", multiLine="true")
-        .schema(schema)
-        .csv(path)
-    )
-
-
-def write_jsonl_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Write as JSON-lines — the interchange format for nested data
-    (arrays/structs/maps encode natively) that stays line-splittable, so a
-    100 TB directory still fans out across executors without multiLine
-    parsing. Timestamps serialize at full µs precision."""
-    df.write.mode(mode).option("timestampFormat", _TS_FMT).json(path)
-
-
-def read_jsonl_table(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Read JSON-lines under an EXPLICIT schema (StructType or DDL string),
-    FAILFAST — same no-inference, fail-loud discipline as
-    :func:`read_csv_table`."""
-    return (
-        spark.read.option("mode", "FAILFAST")
-        .option("timestampFormat", _TS_FMT)
-        .schema(schema)
-        .json(path)
-    )
-
-
-# --------------------------------------------------------------------------- #
 # atomic table materialization — the Delta/Iceberg-shaped sink boundary
 # --------------------------------------------------------------------------- #
 #

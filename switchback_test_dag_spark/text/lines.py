@@ -1,35 +1,23 @@
-"""Segment-level (line/paragraph) corpus deduplication — the CCNet-style
+"""Segment-level (line/paragraph) boilerplate removal — the CCNet-style
 cleaning stage (Wenzek et al. 2020, "CCNet: Extracting High Quality
 Monolingual Datasets from Web Crawl Data"; public method) that the document-
 level dedup family cannot express: web corpora repeat SEGMENTS (nav bars,
 cookie banners, boilerplate headers/footers) across documents that are not
-themselves duplicates, and the published fix is per-segment — keep one
-occurrence of each distinct segment corpus-wide, and/or drop segments whose
-document frequency marks them as boilerplate.
+themselves duplicates, and the published fix is per-segment — drop segments
+whose document frequency marks them as boilerplate.
 
 Operators take an ``array<string>`` segments column rather than re-splitting
 text so the segmentation policy stays with the caller (production splits on
 ``\\n`` / paragraph breaks; fixtures without newlines can chunk tokens —
-see ``queries_documents.doc_segment_dedup_stats``).
+see ``queries_documents.corpus_clean_stats``).
 
-Scale shape (100 TB design point):
-
-- :func:`dedup_segments` (keep-first): ONE shuffle of (doc, pos, seg) rows
-  keyed on the segment — ``min(struct(doc, pos))`` per segment, map-side
-  combinable — and the aggregate's output IS the survivor set (the min is a
-  total order, so the keeper row equals the agg result; no join back to the
-  occurrences is ever needed), then ONE shuffle keyed on the doc id
-  reassembles ordered survivor arrays. Nothing quadratic, no driver state,
-  and no hot-key straggler: a segment repeated a billion times reduces to
-  one ``min`` per partition before the exchange and to a single row after
-  it — no plan step ever gathers a hot segment's occurrences into one task
-  (the plan is pinned in ``tests/test_lines_dsir.py``).
-- :func:`drop_boilerplate` (df threshold): the segment document-frequency
-  table is map-side-combined per-doc-distinct counts; only segments with
-  ``df >= min_df`` survive the filter — at any honest threshold a SMALL set
-  (boilerplate is few distinct strings repeated everywhere), broadcast for
-  a map-side anti join, so the corpus is never shuffled on segment at all;
-  reassembly is the same single doc-keyed shuffle.
+Scale shape (100 TB design point): the segment document-frequency table
+(:func:`segment_df`) is map-side-combined per-doc-distinct counts; only
+segments with ``df >= min_df`` survive the filter — at any honest threshold
+a SMALL set (boilerplate is few distinct strings repeated everywhere),
+broadcast for a map-side anti join, so the corpus is never shuffled on
+segment at all; reassembly is a single doc-keyed shuffle (the broadcast is
+pinned in ``tests/test_lines_dsir.py``).
 
 Reference tie-in: extends the exact/near dedup family of ``text/dedup``
 (reference corpus-cleaning role, SURVEY §2 training-data extensions) one
@@ -64,37 +52,6 @@ def segment_df(docs: DataFrame, id_col: str, segs_col: str) -> DataFrame:
     )
 
 
-def dedup_segments(docs: DataFrame, id_col: str, segs_col: str) -> DataFrame:
-    """Keep-first segment dedup: corpus-wide, each distinct segment survives
-    only at its FIRST occurrence — minimum ``(id, position)``, a total order,
-    so the result is deterministic and partitioning-independent (CCNet's
-    line-dedup semantics; repeats inside one document collapse to the
-    earliest position too).
-
-    Returns ``docs`` with ``segs_col`` replaced by the survivor array in
-    original order (possibly empty — callers filter empty docs downstream;
-    every other column passes through). Documents with empty input arrays
-    are preserved with empty output arrays.
-
-    The survivor set needs NO join: ``min(struct(doc, pos))`` is a total
-    order over occurrences, so each segment's aggregate row (segment, first
-    doc, first pos) IS its unique keeper — the only segment-keyed stage is
-    the map-side-combined min itself, which reduces even a
-    billion-occurrence boilerplate segment to one row per input partition
-    before the exchange (no hot-key straggler task).
-    """
-    seg = _exploded(docs, id_col, segs_col)
-    firsts = seg.groupBy(_SEG).agg(
-        F.min(F.struct(F.col(id_col), F.col(_POS))).alias("_first")
-    )
-    kept = firsts.select(
-        F.col(f"_first.{id_col}").alias(id_col),
-        F.col(f"_first.{_POS}").alias(_POS),
-        _SEG,
-    )
-    return _reassembled(docs, kept, id_col, segs_col)
-
-
 def _reassembled(
     docs: DataFrame, kept: DataFrame, id_col: str, segs_col: str
 ) -> DataFrame:
@@ -122,30 +79,22 @@ def _reassembled(
 
 
 def drop_boilerplate(
-    docs: DataFrame,
-    id_col: str,
-    segs_col: str,
-    min_df: int,
-    broadcast_boiler: bool = True,
+    docs: DataFrame, id_col: str, segs_col: str, min_df: int
 ) -> DataFrame:
     """Remove segments whose document frequency is ``>= min_df`` (boilerplate:
-    nav/footer/banner strings shared across many documents). Unlike
-    :func:`dedup_segments` NO occurrence survives — a segment frequent enough
-    to be boilerplate is noise everywhere, including its first document.
+    nav/footer/banner strings shared across many documents). NO occurrence
+    survives — a segment frequent enough to be boilerplate is noise
+    everywhere, including its first document.
 
     Returns ``docs`` with ``segs_col`` replaced by the surviving segments in
-    original order (other columns pass through). ``broadcast_boiler=False``
-    exists for a pathological threshold that makes the boilerplate set too
-    big to broadcast (the join then shuffles — still linear)."""
+    original order (other columns pass through)."""
     if min_df <= 0:
         raise ValueError(f"drop_boilerplate: min_df must be positive, got {min_df}")
-    boiler = (
+    boiler = broadcast(
         segment_df(docs, id_col, segs_col)
         .filter(F.col("df") >= min_df)
         .select(F.col("segment").alias(_SEG))
     )
-    if broadcast_boiler:
-        boiler = broadcast(boiler)
     seg = _exploded(docs, id_col, segs_col)
     kept = seg.join(boiler, _SEG, "left_anti")
     return _reassembled(docs, kept, id_col, segs_col)

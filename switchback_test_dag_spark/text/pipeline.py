@@ -39,7 +39,6 @@ from switchback_test_dag_spark.text import analysis as TA
 from switchback_test_dag_spark.text import decontaminate as DC
 from switchback_test_dag_spark.text import dedup as TD
 from switchback_test_dag_spark.text import lines as LN
-from switchback_test_dag_spark.text import spans as SP
 
 
 def clean_corpus(
@@ -55,10 +54,6 @@ def clean_corpus(
     eval_df: DataFrame | None = None,
     decon_n: int = 13,
     quality_col: str = "quality",
-    segment_policy: str | None = "boilerplate",
-    span_policy: str | None = None,
-    span_len: int = 13,
-    span_min_count: int = 2,
 ) -> DataFrame:
     """Run the full cleaning chain; returns one row per SURVIVING document
     (quality-passed, scrubbed non-empty, fingerprint-unique, no near-dup
@@ -71,74 +66,27 @@ def clean_corpus(
     ``segmenter`` is a Column producing ``array<string>`` segments from the
     document (production: ``F.split(F.col(text), '\\n')``; token-chunk
     policies work too — segmentation stays with the caller, as in
-    ``text/lines``). Scrubbed text is the surviving segments joined with
-    ``rejoin_sep``; documents scrubbed to nothing are dropped.
-
-    ``segment_policy`` selects the segment-level stage:
-
-    - ``"boilerplate"`` (default, the oracled contract): drop segments with
-      document frequency ≥ ``boiler_min_df`` (``lines.drop_boilerplate``);
-    - ``"dedup"``: CCNet's literal line-dedup — corpus-wide keep-FIRST
-      occurrence of each distinct segment (``lines.dedup_segments``;
-      ``boiler_min_df`` is ignored);
-    - ``None``: skip the segment stage (text passes through unscrubbed;
-      ``segmenter`` is not evaluated).
-
-    Whatever the policy, the stage runs BEFORE fingerprinting — the CCNet
-    order pin applies to both segment policies (scrubbing changes
-    fingerprints), and is load-bearing-tested for both.
-
-    ``span_policy`` selects a duplicated-SPAN stage between segment
-    scrubbing and exact dedup:
-
-    - ``None`` (default, the oracled contract): no span stage;
-    - ``"remove"``: cut every token covered by a corpus-duplicated
-      ``span_len``-token window (``spans.remove_duplicated_spans`` — Lee et
-      al. 2021's substring dedup applied). Runs on the SCRUBBED text and
-      BEFORE fingerprinting for the same reason the segment stage does:
-      cutting changes fingerprints, so span removal must precede exact and
-      near-dup detection (order pin tested). The output then carries a
-      ``spans_cut_tokens`` bigint column; documents cut to empty text are
-      dropped (the scrubbed-to-nothing rule).
+    ``text/lines``). The segment stage drops every segment whose document
+    frequency is ≥ ``boiler_min_df`` (``lines.drop_boilerplate``); scrubbed
+    text is the surviving segments joined with ``rejoin_sep``, and documents
+    scrubbed to nothing are dropped. The stage runs BEFORE fingerprinting —
+    the CCNet order pin (scrubbing changes fingerprints), load-bearing-tested
+    in ``tests/test_lines_dsir.py``.
     """
-    if span_policy not in ("remove", None):
-        raise ValueError(
-            f"clean_corpus: unknown span_policy {span_policy!r} "
-            "(expected 'remove' or None)"
-        )
-    if segment_policy not in ("boilerplate", "dedup", None):
-        raise ValueError(
-            f"clean_corpus: unknown segment_policy {segment_policy!r} "
-            "(expected 'boilerplate', 'dedup', or None)"
-        )
     scored = docs.withColumn(quality_col, TA.quality_score(text_col)).filter(
         F.col(quality_col) >= quality_min
     )
     # CCNet order: scrub BEFORE fingerprinting. seg frame pinned — the
     # boilerplate stage traverses its input three times (df table,
     # occurrence explode, reassembly base)
-    if segment_policy is None:
-        scrubbed = scored
-    else:
-        seg = pin(scored.withColumn("_cc_segs", segmenter).drop(text_col))
-        kept_segs = (
-            LN.drop_boilerplate(seg, id_col, "_cc_segs", boiler_min_df)
-            if segment_policy == "boilerplate"
-            else LN.dedup_segments(seg, id_col, "_cc_segs")
-        )
-        scrubbed = pin(
-            kept_segs.select(
-                *[c for c in kept_segs.columns if c != "_cc_segs"],
-                F.concat_ws(rejoin_sep, "_cc_segs").alias(text_col),
-            ).filter(F.col(text_col) != "")
-        )
-    if span_policy == "remove":
-        scrubbed = pin(
-            SP.remove_duplicated_spans(
-                scrubbed, id_col, text_col,
-                span_len=span_len, min_count=span_min_count,
-            ).filter(F.col(text_col) != "")
-        )
+    seg = pin(scored.withColumn("_cc_segs", segmenter).drop(text_col))
+    kept_segs = LN.drop_boilerplate(seg, id_col, "_cc_segs", boiler_min_df)
+    scrubbed = pin(
+        kept_segs.select(
+            *[c for c in kept_segs.columns if c != "_cc_segs"],
+            F.concat_ws(rejoin_sep, "_cc_segs").alias(text_col),
+        ).filter(F.col(text_col) != "")
+    )
     kept1 = TD.exact_dedup(scrubbed, id_col, text_col)
     near = (
         TD.ngram_jaccard_pairs(

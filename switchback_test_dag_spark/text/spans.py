@@ -32,10 +32,9 @@ all.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from switchback_test_dag_spark.caching import pin
 from switchback_test_dag_spark.text.analysis import TOKEN_SPLIT_RE, _array_ngrams_sql
 
 _TOKS, _PS = "_dspan_toks", "_dspan_ps"
@@ -116,105 +115,3 @@ def duplicated_span_stats(
         )
     )
     return out
-
-def remove_duplicated_spans(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    span_len: int,
-    min_count: int = 2,
-    portable: bool = False,
-    cut_col: str = "spans_cut_tokens",
-) -> DataFrame:
-    """Duplicated-span REMOVAL — the deduplication act itself (Lee et al.
-    2021's ExactSubstr applied, not just measured): every token covered by at
-    least one corpus-duplicated length-``span_len`` window is CUT from the
-    text. All occurrences are removed (the behavior of the paper's released
-    suffix-array tool, which drops every marked byte range); a keep-one
-    variant would need a global occurrence order and is deliberately not
-    implied here — detection (:func:`duplicated_span_stats`) counts all
-    occurrences too, so the two operators agree on what "duplicated" means.
-
-    Returns ``docs`` with every input column preserved, ``text_col``
-    REPLACED by the cut text for affected documents, plus ``cut_col``
-    (bigint — tokens removed; 0 for untouched documents). Affected
-    documents are rebuilt as their surviving ORIGINAL-CASE tokens joined by
-    a single space (token-level cutting whitespace-normalizes, inherently);
-    documents with no duplicated window — including short and NULL-text
-    ones — pass through byte-identical. A fully-covered document survives
-    with empty text (callers drop or keep; the pipeline stage drops, the
-    same rule as scrubbed-to-nothing segments).
-
-    Detection keys lowercased windows (same as the stats op); cutting
-    operates on the original-case token array — positions align because the
-    tokenizer splits on whitespace and lowercasing never moves whitespace.
-
-    Scale shape — linear, no per-doc quadratic step: the duplicated-start
-    set comes from the same three bounded shuffles as the stats op; then
-    ONLY affected documents (semi-join on the start set) explode into token
-    rows, a per-doc running max of window ends marks coverage in one pass
-    (positions ascend, so each token compares against the furthest end seen
-    — the same interval-union trick the stats op uses in aggregate form),
-    and a per-doc sorted reassembly emits the cut text. Untouched documents
-    never enter the token shuffle. The start frame is pinned (consumed by
-    the semi-join and the mark join).
-    """
-    L = span_len
-    toks_lower = (
-        f"filter(split(lower({text_col}), '{TOKEN_SPLIT_RE}'), x -> x != '')"
-    )
-    toks_orig = f"filter(split({text_col}, '{TOKEN_SPLIT_RE}'), x -> x != '')"
-    grams_sql = _array_ngrams_sql(toks_lower, L, " ", distinct=False)
-    occ = (
-        docs.select(F.col(id_col), F.posexplode(F.expr(grams_sql)).alias("_pos", "_gram"))
-        .withColumn("_wk", _window_key(F.col("_gram"), portable))
-        .drop("_gram")
-    )
-    dup = (
-        occ.groupBy("_wk")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") >= min_count)
-        .select("_wk")
-    )
-    starts = pin(
-        occ.join(dup, "_wk").select(
-            F.col(id_col).alias("_sid"), F.col("_pos").alias("_sp")
-        )
-    )
-    cut_docs = starts.select(F.col("_sid").alias(id_col)).distinct()
-    toks = (
-        docs.join(cut_docs, id_col, "semi")
-        .select(F.col(id_col), F.posexplode(F.expr(toks_orig)).alias("_pos", "_tok"))
-    )
-    marked = toks.join(
-        starts,
-        on=(F.col(id_col) == F.col("_sid")) & (F.col("_pos") == F.col("_sp")),
-        how="left",
-    ).select(id_col, "_pos", "_tok", "_sp")
-    w = (
-        Window.partitionBy(id_col)
-        .orderBy("_pos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cur_end = F.max(
-        F.when(F.col("_sp").isNotNull(), F.col("_pos") + F.lit(L))
-    ).over(w)
-    keep = cur_end.isNull() | (F.col("_pos") >= cur_end)
-    rebuilt = (
-        marked.withColumn("_keep", keep)
-        .groupBy(id_col)
-        .agg(
-            F.expr(
-                "concat_ws(' ', transform(sort_array("
-                "collect_list(CASE WHEN _keep THEN struct(_pos, _tok) END)), "
-                "s -> s._tok))"
-            ).alias("_span_new_text"),
-            F.count(F.when(~F.col("_keep"), 1)).cast("long").alias("_span_cut"),
-        )
-    )
-    others = [c for c in docs.columns if c != text_col]
-    return docs.join(rebuilt, id_col, "left").select(
-        *others,
-        F.coalesce("_span_new_text", F.col(text_col)).alias(text_col),
-        F.coalesce("_span_cut", F.lit(0)).cast("long").alias(cut_col),
-    )

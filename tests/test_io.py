@@ -53,121 +53,6 @@ def test_normalize_events_ts_rejects_unknown_dtype(spark):
         normalize_events_ts(df)
 
 
-def test_csv_roundtrip_flat_fixture_tables(spark, sf_dir, tmp_path):
-    """CSV interchange: a flat fixture table written with write_csv_table and
-    read back under its explicit schema is row-for-row identical — including
-    NULL vs empty-string (the \\N convention) and embedded
-    quotes/commas/newlines (quoted + multiLine read)."""
-    from switchback_test_dag_spark.io import (
-        load_table,
-        read_csv_table,
-        write_csv_table,
-    )
-
-    for name in ("nation", "orders"):
-        src = load_table(spark, sf_dir, name)
-        p = str(tmp_path / f"{name}_csv")
-        write_csv_table(src, p)
-        back = read_csv_table(spark, p, src.schema)
-        assert back.schema == src.schema
-        a = sorted(map(tuple, src.collect()))
-        b = sorted(map(tuple, back.collect()))
-        assert a == b, name
-
-    # hostile flat rows: NULL vs '', embedded comma/quote/newline
-    rows = [
-        (1, None, 3.5),
-        (2, "", -0.25),
-        (3, 'comma, quote " and\nnewline', 0.0),
-        (4, "\\N literal backslash-N text", None),
-    ]
-    hostile = spark.createDataFrame(rows, "id long, s string, x double")
-    p = str(tmp_path / "hostile_csv")
-    write_csv_table(hostile, p)
-    back = read_csv_table(spark, p, hostile.schema)
-    assert sorted(map(tuple, back.collect())) == sorted(rows)
-
-
-def test_csv_backslash_n_literal_collides_with_null(spark, tmp_path):
-    """The documented limitation of the \\N NULL convention (io.py header):
-    a string field whose WHOLE value is exactly the two characters
-    backslash-N is emitted unquoted and read back as NULL — indistinguishable
-    from a true NULL after one round trip. Values merely containing \\N
-    survive (covered by the hostile-rows test). This pin asserts the
-    limitation stays exactly this narrow, and that JSONL — the documented
-    escape hatch for such data — round-trips the same value faithfully."""
-    from switchback_test_dag_spark.io import (
-        read_csv_table,
-        read_jsonl_table,
-        write_csv_table,
-        write_jsonl_table,
-    )
-
-    rows = [(1, "\\N"), (2, None), (3, "x\\N"), (4, "\\Nx")]
-    df = spark.createDataFrame(rows, "id long, s string")
-
-    p = str(tmp_path / "nul_csv")
-    write_csv_table(df, p)
-    back = {r.id: r.s for r in read_csv_table(spark, p, df.schema).collect()}
-    assert back[1] is None  # the collision: literal "\N" became NULL
-    assert back[2] is None
-    assert back[3] == "x\\N" and back[4] == "\\Nx"  # containment is safe
-
-    pj = str(tmp_path / "nul_jsonl")
-    write_jsonl_table(df, pj)
-    backj = {r.id: r.s for r in read_jsonl_table(spark, pj, df.schema).collect()}
-    assert backj[1] == "\\N" and backj[2] is None  # JSONL keeps them distinct
-
-
-def test_csv_rejects_nested_and_failfast_rejects_malformed(spark, sf_dir, tmp_path):
-    from switchback_test_dag_spark.io import (
-        load_table,
-        read_csv_table,
-        write_csv_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    with pytest.raises(ValueError, match="jsonl_table"):
-        write_csv_table(emb, str(tmp_path / "nope"))
-
-    # FAILFAST: a row whose type cannot be parsed must abort the read
-    bad_dir = tmp_path / "bad_csv"
-    bad_dir.mkdir()
-    (bad_dir / "part-000.csv").write_text("id,x\n1,2.5\nnot_a_long,3.0\n")
-    with pytest.raises(Exception, match="(?i)malformed|failfast"):
-        read_csv_table(spark, str(bad_dir), "id long, x double").collect()
-
-
-def test_jsonl_roundtrip_nested_and_events(spark, sf_dir, tmp_path):
-    """JSONL interchange: nested data (embeddings array<float>) and the
-    ts-normalized events contract survive a write/read round trip under the
-    explicit schema."""
-    from switchback_test_dag_spark.io import (
-        load_table,
-        read_jsonl_table,
-        write_jsonl_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    p = str(tmp_path / "emb_jsonl")
-    write_jsonl_table(emb, p)
-    back = read_jsonl_table(spark, p, emb.schema)
-    assert back.schema == emb.schema
-    a = {r["vec_id"]: r["embedding"] for r in emb.collect()}
-    b = {r["vec_id"]: r["embedding"] for r in back.collect()}
-    assert set(a) == set(b)
-    for k in a:
-        assert a[k] == b[k], k  # float values bit-exact through JSON text
-
-    ev = load_table(spark, sf_dir, "events")  # carries ts timestamp + ts_ns
-    p = str(tmp_path / "ev_jsonl")
-    write_jsonl_table(ev, p)
-    back = read_jsonl_table(spark, p, ev.schema)
-    a = sorted((r["event_id"], r["ts_ns"], r["ts"]) for r in ev.collect())
-    b = sorted((r["event_id"], r["ts_ns"], r["ts"]) for r in back.collect())
-    assert a == b
-
-
 def test_atomic_overwrite_roundtrip_and_vacuum(spark, tmp_path):
     """Snapshot-pointer sink basics: commit, replace, snapshot isolation of
     an already-planned reader, vacuum of superseded versions."""

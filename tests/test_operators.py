@@ -260,14 +260,12 @@ def test_iqr_filter_keeps_all_null_groups(spark):
 
 
 def test_wide_micro_sum_forms_agree(spark):
-    """The DECIMAL(38,0) wide accumulator must produce the same cents as the
-    BIGINT form within its range, and the pushdown companion
-    (spark_wide_total_from_micro over pre-rounded per-group partials) must
-    equal the direct row-level wide sum — the invariant the range-join
-    aggregate pushdown rests on."""
+    """The pushdown total (spark_wide_total_from_micro over pre-rounded
+    per-group micro-unit partials, with its DECIMAL(38,0) accumulator) must
+    produce the same cents as the row-level BIGINT form spark_micro_sum —
+    the invariant the range-join aggregate pushdown rests on."""
     from switchback_test_dag_spark.exact import (
         spark_micro_sum,
-        spark_micro_sum_wide,
         spark_wide_total_from_micro,
     )
 
@@ -281,8 +279,6 @@ def test_wide_micro_sum_forms_agree(spark):
     ]
     df = spark.createDataFrame(rows, "g string, v double")
     base = df.agg(spark_micro_sum("v").alias("t")).collect()[0]["t"]
-    wide = df.agg(spark_micro_sum_wide("v").alias("t")).collect()[0]["t"]
-    assert wide == base
     # push partial micro sums below a "join" (per-group grain), re-aggregate
     partial = df.groupBy("g").agg(
         F.expr("sum(CAST(round(v * 1000000, 0) AS BIGINT))").alias("micro_sum")
@@ -290,4 +286,4 @@ def test_wide_micro_sum_forms_agree(spark):
     pushed = partial.agg(
         spark_wide_total_from_micro("micro_sum").alias("t")
     ).collect()[0]["t"]
-    assert pushed == wide
+    assert pushed == base

@@ -144,7 +144,7 @@ def test_package_imports_resolve():
                     f"{module}.{alias.name}"
                 ) is None:
                     broken.append(f"{where}: {module}.{alias.name}")
-    assert checked > 130, checked
+    assert checked > 110, checked
     assert not broken, broken
 
 
@@ -187,3 +187,59 @@ def test_no_unused_imports():
                 if bound not in loaded:
                     unused.append(f"{path.relative_to(root)}:{alias.lineno}: {bound}")
     assert not unused, unused
+
+
+# Top-level definitions that nothing outside tests calls, each kept on
+# purpose. Any other such definition is code only tests reach: delete it.
+_TEST_ONLY_ALLOWED = {
+    "order_level_t": "reference implementation for differential tests",
+    "bucket_level_t": "reference implementation for differential tests",
+    "inject_additive_effect": "reference implementation for differential tests",
+    "crse_from_cluster_moments": "reference implementation for differential tests",
+    "run_daily": "the public DAG entry",
+    "vacuum_versions": "retention for the atomic publish",
+}
+
+
+def test_no_test_only_definitions():
+    """Every top-level ``def``/``class`` in the package is referenced
+    somewhere in the package, ``tools/``, ``perfbench/`` or
+    ``__spark_entry__.py`` — by a load, an attribute or an import alias —
+    unless it is a ``@query`` (the registry reaches it) or allowlisted in
+    ``_TEST_ONLY_ALLOWED``."""
+    root = Path(entry_mod.__file__).parent
+    package = sorted((root / "switchback_test_dag_spark").rglob("*.py"))
+    paths = [
+        *package,
+        *(root / "tools").glob("*.py"),
+        *(root / "perfbench").glob("*.py"),
+        root / "__spark_entry__.py",
+    ]
+    trees = {path: ast.parse(path.read_text(), str(path)) for path in paths}
+    referenced = set()
+    for tree in trees.values():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                referenced.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                referenced.add(node.attr)
+            elif isinstance(node, ast.alias):
+                referenced.add(node.name.rpartition(".")[2])
+
+    def is_query(node):
+        return any(
+            isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+            for d in node.decorator_list
+        )
+
+    defs = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    unreached = [
+        f"{path.relative_to(root)}:{node.lineno}: {node.name}"
+        for path in package
+        for node in trees[path].body
+        if isinstance(node, defs)
+        and not is_query(node)
+        and node.name not in referenced
+        and node.name not in _TEST_ONLY_ALLOWED
+    ]
+    assert not unreached, unreached

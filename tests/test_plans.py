@@ -201,8 +201,7 @@ def test_cleaning_pipeline_plan_is_jvm_and_broadcasts_eval(spark, sf_dir):
 # output IS the seeds × buckets frame; the stream side is the constant seed
 # count, never data-sized). The forbidden shape is an UNBOUNDED nested-loop
 # (both sides data-sized); any query not on this list growing a BNLJ is a
-# defect (round 9 caught exactly that in dsir_select's constant-key max
-# attach, since fixed).
+# defect.
 _SCALAR_ATTACH_BNLJ = {
     "perm_dist_thresholds", # global observed-stat scalar (queries_inference.py:123) + seed cross
     "power_ci_sim",         # seed cross (with_seeds)

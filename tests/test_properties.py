@@ -243,48 +243,3 @@ def test_exact_quantiles_property(spark, rows, probs):
                     got[g],
                     want[g],
                 )
-
-
-# tiny vocabulary + short docs force shared windows within and across docs
-_WORDS = st.sampled_from(["aa", "bb", "cc", "dd"])
-_DOC = st.lists(_WORDS, min_size=0, max_size=10).map(" ".join)
-
-
-@_SLOW
-@given(docs=st.lists(_DOC, min_size=1, max_size=6))
-def test_remove_duplicated_spans_matches_reference(spark, docs):
-    """Differential vs a pure-Python reference on generated corpora: a token
-    survives iff NO corpus-duplicated span_len-window covers it; cut counts
-    equal the interval union; untouched docs pass through byte-identical."""
-    from collections import Counter
-
-    from switchback_test_dag_spark.text.spans import remove_duplicated_spans
-
-    L = 2
-    rows = list(enumerate(docs))
-    toks = {i: d.split() if d else [] for i, d in rows}
-    windows = Counter(
-        tuple(t[p : p + L])
-        for t in toks.values()
-        for p in range(len(t) - L + 1)
-    )
-    expected = {}
-    for i, t in toks.items():
-        covered = set()
-        for p in range(len(t) - L + 1):
-            if windows[tuple(t[p : p + L])] >= 2:
-                covered.update(range(p, p + L))
-        if covered:
-            kept = [w for j, w in enumerate(t) if j not in covered]
-            expected[i] = (" ".join(kept), len(covered))
-        else:
-            expected[i] = (docs[i], 0)  # byte-identical passthrough
-
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: (r["text"], r["spans_cut_tokens"])
-        for r in remove_duplicated_spans(
-            df, "doc_id", "text", span_len=L, portable=True
-        ).collect()
-    }
-    assert got == expected

@@ -122,62 +122,3 @@ FROM tk LEFT JOIN cov USING (doc_id) LEFT JOIN ndp USING (doc_id)
         for r in rows
     }
     assert got == want and len(got) > 0
-
-
-def test_remove_duplicated_spans_hand_computed(spark):
-    """Cut semantics: all occurrences of covered tokens removed, original
-    case preserved for survivors, untouched/short/NULL docs byte-identical,
-    fully-covered docs survive with empty text and full cut count."""
-    from switchback_test_dag_spark.text.spans import remove_duplicated_spans
-
-    docs = _docs(
-        spark,
-        [
-            (1, "The quick brown fox jumps over the lazy dog today"),
-            (2, "intro words then the quick brown fox jumps over everything"),
-            (3, "entirely unrelated content with no shared windows at all"),
-            (4, None),
-            (5, "tiny"),
-            # 6 and 7: every window duplicated -> fully covered
-            (6, "aa bb cc dd"),
-            (7, "aa bb cc dd"),
-        ],
-    )
-    out = {
-        r["id"]: (r["text"], r["spans_cut_tokens"])
-        for r in remove_duplicated_spans(
-            docs, "id", "text", span_len=4, portable=True
-        ).collect()
-    }
-    # docs 1/2 share the 6-token run "the quick brown fox jumps over"
-    # (case-insensitive): three duplicated 4-windows cover tokens 0-5 of
-    # doc 1 and 3-8 of doc 2
-    assert out[1] == ("the lazy dog today", 6)
-    assert out[2] == ("intro words then everything", 6)
-    assert out[3] == ("entirely unrelated content with no shared windows at all", 0)
-    assert out[4] == (None, 0)
-    assert out[5] == ("tiny", 0)
-    assert out[6] == ("", 4) and out[7] == ("", 4)
-
-
-def test_remove_agrees_with_stats_coverage(spark):
-    """Tokens cut by the removal op must equal the stats op's interval-union
-    coverage count per document (same windows, same union) on fixture data."""
-    from switchback_test_dag_spark.text.spans import remove_duplicated_spans
-
-    docs = load_table(spark, SF, "documents").select(
-        F.col("doc_id").alias("id"), "text"
-    )
-    stats = {
-        r["id"]: (r["n_tokens"], round(r["dup_token_frac"] * r["n_tokens"]))
-        for r in duplicated_span_stats(docs, "id", "text", span_len=4).collect()
-    }
-    cut = {
-        r["id"]: r["spans_cut_tokens"]
-        for r in remove_duplicated_spans(docs, "id", "text", span_len=4).collect()
-    }
-    assert set(stats) == set(cut)
-    n_affected = sum(1 for v in cut.values() if v > 0)
-    assert n_affected > 0, "fixture must contain duplicated spans"
-    for doc, (_, covered) in stats.items():
-        assert cut[doc] == covered, doc

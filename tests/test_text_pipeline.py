@@ -89,14 +89,40 @@ def test_clean_corpus_partition_invariant(spark):
     assert a == b
 
 
+def test_clean_corpus_dedup_policy_fingerprints_after_rejoin(spark):
+    """The CCNet order pin holds for the dedup stage: fingerprints are
+    computed on the REJOINED scrubbed text, so two raw texts with different
+    segmentations that rejoin equal ("x y" vs "x\\ny" with rejoin_sep " ")
+    collapse to the min id — raw-text fingerprinting would miss them. The
+    scrub is a no-op here (boiler_min_df above the two-document count), so
+    only the rejoin tells the texts apart from their raw forms."""
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "alpha beta\ngamma delta")],
+        "doc_id long, text string",
+    )
+    out = clean_corpus(
+        docs,
+        "doc_id",
+        "text",
+        segmenter=_segmenter(),
+        quality_min=0.0,
+        boiler_min_df=3,
+        rejoin_sep=" ",
+        jaccard_threshold=0.99,
+    )
+    rows = {r["doc_id"]: r["text"] for r in out.collect()}
+    assert rows == {1: "alpha beta gamma delta"}
+
+
 def test_pretraining_recipe_clean_select_pack(spark):
     """Integration: the end-to-end pretraining-data recipe the extension
-    operators exist for — clean_corpus (CCNet chain) → dsir_select
-    (target-conditioned subset, ∝ importance weight) → pack_documents
-    (fixed-budget training sequences) — composes deterministically, with
-    every stage's membership a pure function of (id, seed)."""
+    operators exist for — clean_corpus (CCNet chain) →
+    weighted_priority_sample (token-count-weighted subset per source) →
+    pack_documents (fixed-budget training sequences) — composes
+    deterministically, with every stage's membership a pure function of
+    (id, seed)."""
     from switchback_test_dag_spark.plans.packing import pack_documents
-    from switchback_test_dag_spark.text.dsir import dsir_select
+    from switchback_test_dag_spark.plans.sampling import weighted_priority_sample
 
     rows = []
     for i in range(1, 61):
@@ -109,7 +135,6 @@ def test_pretraining_recipe_clean_select_pack(spark):
         rows.append((i, src, f"nav bar home\n{body} {i}"))
     docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
     eval_df = spark.createDataFrame([("secret eval",)], "text string")
-    target = spark.createDataFrame([("spark broadcast join plan",)], "text string")
 
     cleaned = clean_corpus(
         docs,
@@ -123,28 +148,31 @@ def test_pretraining_recipe_clean_select_pack(spark):
         eval_df=eval_df,
         decon_n=2,
     )
-    survivors = cleaned.filter(~F.col("contaminated"))
+    survivors = cleaned.filter(~F.col("contaminated")).select(
+        "doc_id",
+        "source",
+        "text",
+        F.size(F.split("text", r"\s+")).cast("long").alias("toks"),
+    )
     srows = survivors.collect()
     assert all("nav bar home" not in r["text"] for r in srows)
 
-    sel = dsir_select(
-        survivors, target, "doc_id", "text",
-        k=5, strata=["source"], n_buckets=256, portable=True, seed=7,
-    )
-    sel_rows = sel.collect()
+    def sample(frame):
+        return weighted_priority_sample(
+            frame, ["source"], "doc_id", "toks", k=5, seed=7, portable=True
+        )
+
+    sel_rows = sample(survivors).collect()
     by_src: dict = {}
     for r in sel_rows:
         by_src.setdefault(r["source"], []).append(r["doc_id"])
     assert sorted(len(v) for v in by_src.values()) == [5, 5]
-    # the selected set is target-like (i % 3 == 0 bodies dominate the race)
-    assert sum(1 for r in sel_rows if r["doc_id"] % 3 == 0) == len(sel_rows)
+    # the sample draws from the clean survivors only
+    assert {r["doc_id"] for r in sel_rows} <= {r["doc_id"] for r in srows}
 
-    chosen = sel.select("doc_id", "source").join(
-        survivors.select(
-            "doc_id",
-            F.size(F.split("text", r"\s+")).cast("long").alias("toks"),
-        ),
-        "doc_id",
+    chosen = spark.createDataFrame(
+        [(r["doc_id"], r["source"], r["toks"]) for r in sel_rows],
+        "doc_id long, source string, toks long",
     )
     packed = pack_documents(
         chosen, "doc_id", "toks", budget=16, strata=["source"],
@@ -159,154 +187,10 @@ def test_pretraining_recipe_clean_select_pack(spark):
     )
     assert fills.filter((F.col("fill") > 16) & (F.col("nd") > 1)).count() == 0
     # the whole recipe is partitioning-invariant end-to-end
-    sel2 = dsir_select(
-        survivors.repartition(13), target, "doc_id", "text",
-        k=5, strata=["source"], n_buckets=256, portable=True, seed=7,
-    )
+    sel2 = sample(survivors.repartition(13))
     assert sorted(r["doc_id"] for r in sel2.collect()) == sorted(
         r["doc_id"] for r in sel_rows
     )
-
-
-def test_clean_corpus_segment_policy_dedup(spark):
-    """CCNet's literal line-dedup through the public API: keep-FIRST
-    occurrence corpus-wide. On the fixture: doc 1 keeps both its lines
-    (first occurrences), doc 2's lines are both already seen -> scrubbed
-    empty -> dropped, docs 3/4 lose the banner (first seen in doc 1)."""
-    docs, eval_df = _fix(spark)
-    out = clean_corpus(
-        docs,
-        "doc_id",
-        "text",
-        segmenter=_segmenter(),
-        quality_min=0.5,
-        rejoin_sep="\n",
-        jaccard_threshold=0.9,
-        eval_df=eval_df,
-        decon_n=2,
-        segment_policy="dedup",
-    )
-    rows = {r["doc_id"]: r for r in out.collect()}
-    assert sorted(rows) == [1, 3, 6]
-    assert rows[1]["text"] == "cookie banner ok\nalpha beta gamma delta"
-    assert rows[3]["text"] == "wholly different words here"
-    assert rows[6]["contaminated"] is True
-    import pytest
-
-    with pytest.raises(ValueError, match="segment_policy"):
-        clean_corpus(
-            docs, "doc_id", "text", segmenter=_segmenter(),
-            segment_policy="nope",
-        )
-
-
-def test_clean_corpus_dedup_policy_fingerprints_after_rejoin(spark):
-    """The CCNet order pin holds for the dedup policy too: fingerprints are
-    computed on the REJOINED scrubbed text, so two raw texts with different
-    segmentations that rejoin equal ("x y" vs "x\\ny" with rejoin_sep " ")
-    collapse to the min id — raw-text fingerprinting would miss them. (For
-    shared segments the order is structurally self-enforcing under global
-    keep-first: two survivors can never share a segment at all.)"""
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta"), (2, "alpha beta\ngamma delta")],
-        "doc_id long, text string",
-    )
-    out = clean_corpus(
-        docs,
-        "doc_id",
-        "text",
-        segmenter=_segmenter(),
-        quality_min=0.0,
-        rejoin_sep=" ",
-        jaccard_threshold=0.99,
-        segment_policy="dedup",
-    )
-    rows = {r["doc_id"]: r["text"] for r in out.collect()}
-    assert rows == {1: "alpha beta gamma delta"}
-
-
-def test_clean_corpus_segment_policy_none(spark):
-    """segment_policy=None skips the segment stage entirely: text passes
-    through raw (all six fixture texts are raw-distinct, so only the
-    quality gate drops anything) and the segmenter column is never
-    evaluated."""
-    docs, eval_df = _fix(spark)
-    out = clean_corpus(
-        docs,
-        "doc_id",
-        "text",
-        segmenter=F.raise_error(F.lit("segmenter must not be evaluated")),
-        quality_min=0.5,
-        jaccard_threshold=0.9,
-        eval_df=eval_df,
-        decon_n=2,
-        segment_policy=None,
-    )
-    rows = {r["doc_id"]: r for r in out.collect()}
-    assert sorted(rows) == [1, 2, 3, 4, 6]
-    assert rows[1]["text"] == ROWS[0][1]  # raw text untouched
-    assert rows[6]["contaminated"] is True
-
-
-def test_clean_corpus_span_policy_remove(spark):
-    """span_policy='remove' cuts corpus-duplicated spans BEFORE
-    fingerprinting (the order pin: two docs that become identical only
-    after the cut must exact-dedup), drops docs cut to empty, carries the
-    spans_cut_tokens column, and rejects unknown policies."""
-    import pytest as _pytest
-
-    # docs 10/11 share the 5-token run "one two three four five" (two
-    # duplicated 4-windows cover it; the boundary windows differ between
-    # the docs, so only the run is cut); the remainder "zz yy xx" is
-    # IDENTICAL but SHORTER than span_len (3 < 4), so it is never a window
-    # of its own — after the cut the docs are exact duplicates and the
-    # fingerprint stage keeps min id 10 (the order pin: cut BEFORE
-    # fingerprinting). doc 12 is ONLY a duplicated span (shared with 13's
-    # prefix) -> cut to empty -> dropped; 13 keeps its unique tail.
-    rows = [
-        (10, "one two three four five zz yy xx"),
-        (11, "zz yy xx one two three four five"),
-        (12, "red orange yellow green blue"),
-        (13, "red orange yellow green blue plus unique trailing words here"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = clean_corpus(
-        docs,
-        "doc_id",
-        "text",
-        segmenter=_segmenter(),
-        quality_min=0.0,
-        segment_policy=None,
-        span_policy="remove",
-        span_len=4,
-        jaccard_threshold=0.95,
-    )
-    got = {r["doc_id"]: r for r in out.collect()}
-    assert sorted(got) == [10, 13]
-    assert got[10]["text"] == "zz yy xx"
-    assert got[10]["spans_cut_tokens"] == 5
-    assert got[13]["text"] == "plus unique trailing words here"
-    assert got[13]["spans_cut_tokens"] == 5
-    assert "spans_cut_tokens" in out.columns
-
-    # default policy unchanged: no span column, no cutting
-    out_none = clean_corpus(
-        docs,
-        "doc_id",
-        "text",
-        segmenter=_segmenter(),
-        quality_min=0.0,
-        segment_policy=None,
-        jaccard_threshold=0.95,
-    )
-    assert "spans_cut_tokens" not in out_none.columns
-    assert {r["doc_id"] for r in out_none.collect()} == {10, 11, 12, 13}
-
-    with _pytest.raises(ValueError, match="span_policy"):
-        clean_corpus(
-            docs, "doc_id", "text", segmenter=_segmenter(),
-            span_policy="trim",
-        )
 
 
 def test_clean_corpus_minhash_method_matches_jaccard(spark, sf_dir):
@@ -320,12 +204,15 @@ def test_clean_corpus_minhash_method_matches_jaccard(spark, sf_dir):
     from switchback_test_dag_spark.text.analysis import quality_score
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    seg = F.expr("filter(split(lower(text), '\\\\s+'), x -> x != '')")
+    # one segment per line, and a document-frequency threshold no segment
+    # can reach: the boilerplate scrub passes every text through unchanged
+    n_docs = docs.count()
     try:
         jaccard = {
             r["doc_id"]
             for r in clean_corpus(
-                docs, "doc_id", "text", segmenter=seg, segment_policy=None,
+                docs, "doc_id", "text", segmenter=_segmenter(),
+                boiler_min_df=n_docs + 1,
             ).collect()
         }
         kept1 = TD.exact_dedup(
