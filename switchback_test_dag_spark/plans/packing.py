@@ -9,11 +9,10 @@ it is per-bucket independence: each document is routed to one of
 and a deterministic next-fit walk packs each bucket independently. One
 shuffle (the groupBy), no global coordination, and the parallelism knob is
 ``n_buckets`` — sized so a bucket's documents fit one task comfortably
-(corpus / n_buckets rows), exactly the bucket-occupancy discipline the LSH
-sieve documents. Cross-bucket packing loss is bounded: next-fit wastes at
-most one partially-filled trailing sequence PER BUCKET, so the overhead is
-``n_buckets × budget`` tokens — noise against a corpus that needed
-distribution in the first place.
+(corpus / n_buckets rows). Cross-bucket packing loss is bounded: next-fit
+wastes at most one partially-filled trailing sequence PER BUCKET, so the
+overhead is ``n_buckets × budget`` tokens — noise against a corpus that
+needed distribution in the first place.
 
 Determinism is the contract (same reasoning as ``plans/sampling``): bucket
 and within-bucket order are pure functions of (id, seed) — never of

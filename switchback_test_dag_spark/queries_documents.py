@@ -6,11 +6,7 @@ Oracle parity notes:
 - tokenization is pinned on both engines as: lowercase → split on ``\\s+`` →
   drop empties; shingles are space-joined word 3-grams, distinct;
 - Jaccard is rounded to 4 decimals on both sides;
-- MinHash signatures use xxhash64, which DuckDB lacks → that query's oracle is
-  the *brute-force exact* equivalent (the LSH result must equal the exact
-  result at these similarity margins); SimHash uses portable md5-prefix token
-  hashes so its oracle replays the signatures verbatim — every registered
-  query carries a value-level oracle.
+- every registered query carries a value-level oracle.
 """
 
 from __future__ import annotations
@@ -558,153 +554,17 @@ def doc_fingerprint_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TD.exact_duplicate_groups(docs.unionByName(copies), "doc_id", "text")
 
 
-@query(
-    "doc_winnow_pairs",
-    f"""WITH tk AS (
-         SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents
-       ), sh AS (
-         SELECT doc_id,
-                [array_to_string(toks[i:i+2], ' ') for i in generate_series(1, len(toks) - 2)] AS sh
-         FROM tk WHERE len(toks) >= 6
-       ), h AS (
-         SELECT doc_id, list_transform(sh, s -> substring(md5(s), 1, 16)) AS h FROM sh
-       ), fp AS (
-         SELECT doc_id, unnest(list_distinct([list_min(h[j:j+3]) for j in generate_series(1, len(h) - 3)])) AS fingerprint
-         FROM h
-       ), keep AS (
-         SELECT fingerprint FROM fp GROUP BY fingerprint HAVING count(*) <= 10
-       ), fpc AS (
-         SELECT fp.doc_id, fp.fingerprint FROM fp JOIN keep USING (fingerprint)
-       ), pairs AS (
-         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
-         FROM fpc a JOIN fpc b ON a.fingerprint = b.fingerprint AND a.doc_id < b.doc_id
-         GROUP BY 1, 2
-       )
-       SELECT doc_a, doc_b, CAST(n_shared AS BIGINT) AS n_shared
-       FROM pairs WHERE n_shared >= 2""",
-)
-def doc_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling-hash document fingerprinting (MOSS winnowing, word 3-grams,
-    window 4): doc pairs sharing ≥ 2 selected fingerprints — the
-    plagiarism-detector shape. The md5-prefix rolling hash is kept as a hex
-    STRING so window minima are engine-portable, and the oracle replays the
-    exact winnowing selection in SQL (not just a downstream aggregate).
-
-    Runs the production configuration: MOSS's boilerplate rule ``max_df=10``
-    (Schleimer et al. §4 — fingerprints in "many documents" are template
-    text, and each contributes df² join rows). The cap is replayed in the
-    oracle as a plain HAVING on fingerprint document frequency, so the
-    capped semantics are value-diffed too. At the sf0.01 fixture the corpus
-    max df is 7 — the cap provably changes nothing there — while at sf1 it
-    removes the dominant quadratic term (measured 13.4× wall at 10× data
-    uncapped)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return TD.winnow_shared_pairs(
-        docs, "doc_id", "text", shingle_n=3, window=4, min_shared=2, max_df=10
-    )
-
-
 # --------------------------------------------------------------------------- #
 # dedup
 # --------------------------------------------------------------------------- #
 
 
-# the LSH pair query also labels each pair with its duplicate CLUSTER
-# (connected component, canonical min-id label); the oracle replays the
-# component computation as a recursive reachability CTE over the exact pairs
-_DUCK_LSH_COMPONENTS = (
-    _DUCK_JACCARD_PAIRS.replace(
-        "SELECT doc_a, doc_b, round(i * 1.0 / u, 4) AS jaccard\nFROM pairs WHERE u > 0 AND i * 1.0 / u >= 0.85",
-        """, fpairs AS (
-  SELECT doc_a, doc_b, round(i * 1.0 / u, 4) AS jaccard
-  FROM pairs WHERE u > 0 AND i * 1.0 / u >= 0.85
-), sym AS (
-  SELECT doc_a AS a, doc_b AS b FROM fpairs
-  UNION SELECT doc_b, doc_a FROM fpairs
-), reach AS (
-  SELECT a AS node, a AS r FROM sym
-  UNION
-  SELECT s.a, rr.r FROM sym s JOIN reach rr ON s.b = rr.node
-), comp AS (
-  SELECT node, min(r) AS component FROM reach GROUP BY node
-)
-SELECT p.doc_a, p.doc_b, p.jaccard, c.component
-FROM fpairs p JOIN comp c ON p.doc_a = c.node""",
-    ).replace("WITH tk AS (", "WITH RECURSIVE tk AS (")
-)
-
-
-@query("doc_minhash_lsh_pairs", _DUCK_LSH_COMPONENTS)
-def doc_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs, exact-Jaccard verified at threshold 0.85,
-    each pair labeled with its duplicate CLUSTER id
-    (``text/dedup.connected_components`` — iterative min-label propagation,
-    the canonical-keeper step pairwise dedup policies get wrong on
-    transitive duplicates).
-
-    Oracle is the brute-force all-pairs Jaccard (at the fixture's similarity
-    margins — planted dups ≥ 0.9 — the LSH miss probability is < 1e-7, so
-    the approximate path must reproduce the exact result) with the component
-    labels replayed as a recursive reachability CTE: an iteration bug that
-    under-propagates a label, or a symmetry bug that misses a direction,
-    breaks the hash."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = TD.minhash_lsh_pairs(
-        docs, "doc_id", "text", shingle_n=3, k=64, bands=16, threshold=0.85
-    # materialize the pair set once: it feeds BOTH the component computation
-    # and the final label join — without the boundary the whole LSH pipeline
-    # runs twice
-    ).localCheckpoint()
-    comp = TD.connected_components(pairs, "doc_a", "doc_b")
-    return pairs.join(
-        comp.select(F.col("node").alias("doc_a"), "component"), "doc_a"
-    )
-
-
 @query("doc_ngram_jaccard_pairs", _DUCK_JACCARD_PAIRS)
 def doc_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force n-gram Jaccard near-dup pairs (the exact verification path —
-    direct parity with the oracle)."""
+    """Exact n-gram Jaccard near-dup pairs (prefix-filtered candidates, exact
+    verification — direct parity with the brute-force oracle)."""
     docs = load_table(spark, sf_dir, "documents")
     return TD.ngram_jaccard_pairs(docs, "doc_id", "text", shingle_n=3, threshold=0.85)
-
-
-@query(
-    "doc_simhash_pairs",
-    f"""WITH tk AS (
-         SELECT doc_id, {_DUCK_TOKS} AS toks FROM documents
-       ), th AS (
-         SELECT doc_id,
-                list_transform(toks, t -> ('0x' || substring(md5(t), 1, 15))::BIGINT) AS th
-         FROM tk WHERE len(toks) > 0
-       ), sig AS (
-         SELECT doc_id,
-                CAST(list_sum(
-                  [CASE WHEN list_sum([CASE WHEN (h >> i) & 1 != 0 THEN 1 ELSE -1 END
-                                       for h in th]) > 0
-                        THEN 1::BIGINT << i ELSE 0::BIGINT END
-                   for i in generate_series(0, 59)]) AS BIGINT) AS sig
-         FROM th
-       ), ck AS (
-         SELECT doc_id, sig, c AS chunk, (sig >> (c * 15)) & 32767 AS val
-         FROM sig, unnest(generate_series(0, 3)) AS t(c)
-       ), pairs AS (
-         SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                CAST(bit_count(xor(a.sig, b.sig)) AS INTEGER) AS hamming
-         FROM ck a JOIN ck b
-           ON a.chunk = b.chunk AND a.val = b.val AND a.doc_id < b.doc_id
-       )
-       SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= 3""",
-)
-def doc_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs (Hamming ≤ 3 of 60 bits via 15-bit chunk
-    pigeonhole candidates — exact for this radius). Token hashes are portable
-    md5-prefix bigints (the winnowing trick, text/dedup.py), so the oracle
-    replays signature construction, pigeonhole candidate generation, and
-    Hamming verification bit-for-bit in DuckDB. Recall against planted dups is
-    additionally pytest-verified (tests/test_text_dedup.py)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return TD.simhash_pairs(docs, "doc_id", "text", max_hamming=3)
 
 
 # --------------------------------------------------------------------------- #

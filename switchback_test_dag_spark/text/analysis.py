@@ -106,7 +106,7 @@ def _array_ngrams_sql(
 
 
 def word_shingles(text_col: str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (space-joined), the MinHash input unit.
+    """Distinct word n-gram shingles (space-joined), the near-dup input unit.
     Documents shorter than ``n`` words yield an empty array (callers must guard
     any division by |shingles| — ANSI mode)."""
     toks = f"filter(split(lower({text_col}), '{TOKEN_SPLIT_RE}'), x -> x != '')"

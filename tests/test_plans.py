@@ -74,7 +74,7 @@ def test_jvm_path_queries_have_no_python_nodes(spark, sf_dir):
         "iqr_filtered_stats",
         "perm_dist_thresholds",
         "doc_text_profile",
-        "doc_minhash_lsh_pairs",
+        "doc_ngram_jaccard_pairs",
     ]:
         plan = _plan(spark, name, sf_dir)
         assert "EvalPython" not in plan, f"{name} fell off the JVM path"
@@ -147,26 +147,6 @@ def test_lineitem_stats_shares_cell_frame(spark, sf_dir):
         # printed description repeats the parquet text per consumer; the
         # runtime fact scan happens once, on first cache materialization)
         assert plan.count("InMemoryTableScan") == 2  # pivot side + stats side
-    finally:
-        from switchback_test_dag_spark.caching import release_all
-
-        release_all()
-
-
-def test_winnow_plan_shares_fingerprint_scan(spark, sf_dir):
-    # the winnow pair join persists the fingerprint frame: one documents scan,
-    # all-JVM arrays, no cartesian
-    try:
-        plan = _plan(spark, "doc_winnow_pairs", sf_dir)
-        # the pair self-join reads the BARRIERED capped-postings frame on
-        # both sides (caching.barrier: the frame is rooted directly at its
-        # InMemoryRelation, so the md5/winnowing work, the documents scan,
-        # and the df-cap stage materialize once and are served from cache
-        # per side; the parquet text below appears only inside the cached
-        # subtree's printed description)
-        assert plan.count("InMemoryTableScan") >= 2
-        assert "CartesianProduct" not in plan
-        assert "EvalPython" not in plan
     finally:
         from switchback_test_dag_spark.caching import release_all
 

@@ -170,7 +170,7 @@ def test_prefix_filtered_jaccard_matches_reference(spark, docs, threshold):
     got = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
         for r in ngram_jaccard_pairs(
-            df, "doc_id", "text", threshold=threshold, prefix_filter=True
+            df, "doc_id", "text", threshold=threshold
         ).collect()
     }
     assert got == expected

@@ -1,18 +1,12 @@
 """Skewed-key robustness: the reference's real data is heavily skewed (one
 dataset dwarfs the others — CI_for_different_datasets.ipynb:80-92, FP_TW ≫
-PY_CR), so the package's join shapes must survive a hot key. Two gates:
-
-1. **AQE skew-join splitting engages** on the J3-shaped fact⋈dim equi-join
-   when one key holds half the fact (plan assertion on the finalized adaptive
-   plan: ``skew=true``). At 100 TB the mitigation for equi-joins is exactly
-   this config path — no hand-salting required — so the test pins that the
-   session's AQE settings actually fire, with thresholds scaled down to
-   fixture size the way production scales them to executor memory.
-2. **LSH candidate generation stays bounded and correct** on a duplicate-heavy
-   corpus (one cluster holding half the documents): the banded self-join's
-   per-bucket volume is the square of the cluster size, which is the
-   worst-case the operator's contract documents — the pair output must still
-   be the exact-Jaccard result with no driver-side blowup.
+PY_CR), so the package's join shapes must survive a hot key. The gate:
+**AQE skew-join splitting engages** on the J3-shaped fact⋈dim equi-join when
+one key holds half the fact (plan assertion on the finalized adaptive plan:
+``skew=true``). At 100 TB the mitigation for equi-joins is exactly this config
+path — no hand-salting required — so the test pins that the session's AQE
+settings actually fire, with thresholds scaled down to fixture size the way
+production scales them to executor memory.
 """
 
 from __future__ import annotations
@@ -126,40 +120,3 @@ def test_salted_join_equals_plain_join(spark):
     plan = salted_equi_join(left, right, ["k"], salt=4)._jdf.queryExecution(
     ).executedPlan().toString()
     assert "_salt" in plan  # the shuffle key space is k × salt
-
-
-def test_lsh_band_join_correct_on_duplicate_heavy_corpus(spark):
-    """One near-duplicate cluster holding half the corpus: the banded
-    self-join's hot bucket is the documented worst case. Output must equal the
-    exact-Jaccard ground truth (every cluster pair found, nothing else) and
-    the candidate join must stay distributed (no driver collect to audit —
-    the operator has none by construction; this pins correctness under the
-    hot key)."""
-    from switchback_test_dag_spark.text.dedup import (
-        minhash_lsh_pairs,
-        ngram_jaccard_pairs,
-    )
-
-    n_dup, n_unique = 60, 60
-    base = "the quick brown fox jumps over the lazy dog again and again "
-    rows = [(i, base + f"tail {i % 3}") for i in range(n_dup)] + [
-        (
-            1000 + j,
-            " ".join(f"unique{j}w{t}" for t in range(12)),
-        )
-        for j in range(n_unique)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    exact = {
-        (r["doc_a"], r["doc_b"])
-        for r in ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.85
-        ).collect()
-    }
-    lsh = {
-        (r["doc_a"], r["doc_b"])
-        for r in minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.85).collect()
-    }
-    # the duplicate cluster forms dense pairs; LSH must recover them exactly
-    assert len(exact) >= (n_dup // 3) * (n_dup // 3 - 1) // 2
-    assert lsh == exact

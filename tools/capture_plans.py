@@ -32,7 +32,7 @@ def main() -> int:
     names = args.names or list(q.QUERIES)
     out_dir = os.path.join(_REPO, "plans", args.tag)
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name="capture-plans", cpus=8, shuffle_partitions=8)
+    spark = get_spark(app_name="capture-plans")
     rc = 0
     for name in names:
         try:

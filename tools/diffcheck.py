@@ -42,7 +42,7 @@ def main() -> int:
     from switchback_test_dag_spark import queries as q
 
     names = args or list(q.QUERIES)
-    spark = get_spark(app_name="diffcheck", cpus=8, shuffle_partitions=8)
+    spark = get_spark(app_name="diffcheck")
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf}/{t}.parquet"

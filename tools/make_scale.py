@@ -54,7 +54,7 @@ def main() -> None:
     ap.add_argument("--k", type=int, default=10)
     args = ap.parse_args()
 
-    spark = get_spark(app_name="make-scale", cpus=16, shuffle_partitions=16)
+    spark = get_spark(app_name="make-scale")
     os.makedirs(args.dst, exist_ok=True)
 
     for t in FIXED_DIMS:

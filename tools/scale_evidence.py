@@ -2,17 +2,10 @@
 """Measure the scale-regime paths that the sf0.01 oracle fixtures never
 exercise, on the manufactured 10× directory (`tools/make_scale.py`):
 
-- ``components``: run connected components over the sf1 MinHash-LSH
-  near-dup pair graph in ALL THREE regimes — bounded driver union-find (the
-  production default at this pair count), the distributed min-label
-  propagation loop (forced with ``driver_threshold=0``), and the alternating
-  large-star/small-star contraction (forced with ``max_iter=0``, the
-  diameter-independent fallback) — assert the three labelings are IDENTICAL
-  row-for-row, and record edge count, rounds-to-convergence, and wall time
-  per regime. This is the evidence the fallback regimes need: the oracled
-  path always takes the driver branch because near-dup pair sets are tiny,
-  so without this run their convergence behavior at a real pair graph is
-  asserted only on unit fixtures.
+- ``spans``: duplicated-span statistics with the production xxhash64 keys;
+- ``decon``: decontamination against the ``doc_id % 13`` eval slice;
+- ``clean_corpus_full``: the composed cleaning chain, value-checked against
+  a DuckDB replay of the whole chain.
 
 Prints one JSON object per measurement AND merges every measurement — each
 bracketed by its own host probes (this box has shown 10-100x transient
@@ -21,10 +14,7 @@ comparable round over round) — into the committed ``SCALE_evidence.json``,
 so scale audits are machine-diffable like BENCH artifacts instead of living
 only in SCALE.md prose.
 
-Further measurements: ``spans``, ``decon`` and ``clean_corpus_full``.
-
-Usage: python tools/scale_evidence.py [components|spans|decon|
-       clean_corpus_full ...]
+Usage: python tools/scale_evidence.py {spans|decon|clean_corpus_full} ...
        [--sf DIR] [--no-write]
 """
 
@@ -45,7 +35,6 @@ from pyspark.sql import functions as F  # noqa: E402
 from switchback_test_dag_spark import text as _text  # noqa: E402,F401
 from switchback_test_dag_spark.io import load_table  # noqa: E402
 from switchback_test_dag_spark.session import get_spark  # noqa: E402
-from switchback_test_dag_spark.text import dedup as TD  # noqa: E402
 
 
 def _host_probe(trials: int = 2) -> dict:
@@ -67,66 +56,6 @@ def _host_probe(trials: int = 2) -> dict:
         al.append(time.monotonic() - t0)
         del s, buf
     return {"matmul_s": round(min(mm), 3), "alloc200mb_s": round(min(al), 3)}
-
-
-def measure_components(spark, sf_dir: str) -> dict:
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = TD.minhash_lsh_pairs(
-        docs, "doc_id", "text", shingle_n=3, k=64, bands=16, threshold=0.85
-    ).localCheckpoint()  # pair generation is not what this measures
-    n_pairs = pairs.count()
-
-    t0 = time.monotonic()
-    driver_stats: dict = {}
-    labels_driver = TD.connected_components(
-        pairs, "doc_a", "doc_b", stats=driver_stats
-    ).localCheckpoint()
-    n_nodes = labels_driver.count()
-    driver_s = time.monotonic() - t0
-
-    t0 = time.monotonic()
-    dist_stats: dict = {}
-    labels_dist = TD.connected_components(
-        pairs, "doc_a", "doc_b", driver_threshold=0, stats=dist_stats
-    ).localCheckpoint()
-    labels_dist.count()
-    dist_s = time.monotonic() - t0
-
-    # third regime: force the diameter-independent alternating-star fallback
-    # (max_iter=0 skips every propagation round) on the same REAL graph —
-    # the only regime whose at-scale behavior was previously evidenced by
-    # property tests on random toy graphs alone
-    t0 = time.monotonic()
-    star_stats: dict = {}
-    labels_star = TD.connected_components(
-        pairs, "doc_a", "doc_b", max_iter=0, driver_threshold=0, stats=star_stats
-    ).localCheckpoint()
-    labels_star.count()
-    star_s = time.monotonic() - t0
-
-    def _mismatch(x, y):
-        return x.exceptAll(y).unionAll(y.exceptAll(x)).count()
-
-    mismatch = _mismatch(labels_driver, labels_dist)
-    mismatch_star = _mismatch(labels_driver, labels_star)
-    n_components = labels_driver.select("component").distinct().count()
-    out = {
-        "measurement": "components",
-        "sf_dir": sf_dir,
-        "pair_rows": n_pairs,
-        "nodes": n_nodes,
-        "components": n_components,
-        "driver_regime": {"sec": round(driver_s, 2), **driver_stats},
-        "distributed_regime": {"sec": round(dist_s, 2), **dist_stats},
-        "alternating_star_regime": {"sec": round(star_s, 2), **star_stats},
-        "label_mismatch_rows": mismatch,
-        "label_mismatch_rows_star": mismatch_star,
-    }
-    assert mismatch == 0, f"regimes disagree on {mismatch} label rows"
-    assert mismatch_star == 0, f"star regime disagrees on {mismatch_star} label rows"
-    assert dist_stats.get("regime") == "propagation", dist_stats
-    assert star_stats.get("regime") == "alternating_star", star_stats
-    return out
 
 
 def measure_spans(spark, sf_dir: str) -> dict:
@@ -361,7 +290,6 @@ ORDER BY k2.source
 
 
 _MEASURES = {
-    "components": measure_components,
     "spans": measure_spans,
     "decon": measure_decon,
     "clean_corpus_full": measure_clean_corpus_full,
@@ -371,8 +299,7 @@ _MEASURES = {
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument(
-        "what", nargs="*", default=["components"],
-        choices=sorted(_MEASURES),
+        "what", nargs="+", choices=sorted(_MEASURES),
     )
     ap.add_argument("--sf", default=os.path.join(_REPO, ".scale", "sf1"))
     ap.add_argument(
@@ -380,14 +307,14 @@ def main() -> None:
         help="print only; skip merging into SCALE_evidence.json",
     )
     args = ap.parse_args()
-    spark = get_spark(app_name="scale-evidence", cpus=32, shuffle_partitions=32)
+    spark = get_spark(app_name="scale-evidence")
     path = os.path.join(_REPO, "SCALE_evidence.json")
     # the default-sf (sf1) run owns the bare measurement key; a different
     # scale directory gets a suffixed key so e.g. an sf10 audit
     # accumulates BESIDE the sf1 one instead of replacing it
     sf_tag = os.path.basename(os.path.normpath(args.sf))
     results = {}
-    for what in args.what or ["components"]:
+    for what in args.what:
         probe_start = _host_probe()
         res = _MEASURES[what](spark, args.sf)
         res["host"] = {"start": probe_start, "end": _host_probe()}

@@ -79,7 +79,7 @@ def main() -> None:
 
     from switchback_test_dag_spark import queries as q
 
-    spark = get_spark(app_name="scan-audit", cpus=8, shuffle_partitions=8)
+    spark = get_spark(app_name="scan-audit")
     if args.show:
         plan = (
             q.QUERIES[args.show](spark, args.sf)
