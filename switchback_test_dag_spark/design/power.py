@@ -47,6 +47,22 @@ def norm_ppf(q: float) -> float:
     return 0.5 * (lo + hi)
 
 
+def _t_crit(n_per_group: float, alpha: float) -> float:
+    """Two-sided central-t critical value at ``2n-2`` dof (NaN below n = 2)."""
+    if n_per_group < 2:
+        return float("nan")
+    return float(t_ppf_two_sided(alpha, 2.0 * n_per_group - 2.0))
+
+
+def _power(effect_size: float, n_per_group: float, t_crit: float) -> float:
+    """``power_two_sample`` at a precomputed critical value, so callers that
+    hold ``n`` fixed run the ``t_ppf_two_sided`` bisection once."""
+    if n_per_group < 2:
+        return float("nan")
+    ncp = abs(effect_size) * math.sqrt(n_per_group / 2.0)
+    return float(norm_sf(t_crit - ncp) + norm_sf(t_crit + ncp))
+
+
 def power_two_sample(
     effect_size: float, n_per_group: float, alpha: float = 0.05
 ) -> float:
@@ -56,25 +72,21 @@ def power_two_sample(
     sizes, equal variance): noncentrality ``d·sqrt(n/2)``, central-t critical
     value at ``2n-2`` dof, normal approximation of the noncentral t.
     """
-    if n_per_group < 2:
-        return float("nan")
-    dof = 2.0 * n_per_group - 2.0
-    t_crit = float(t_ppf_two_sided(alpha, dof))
-    ncp = abs(effect_size) * math.sqrt(n_per_group / 2.0)
-    return float(norm_sf(t_crit - ncp) + norm_sf(t_crit + ncp))
+    return _power(effect_size, n_per_group, _t_crit(n_per_group, alpha))
 
 
 def solve_mde(n_per_group: float, power: float = 0.8, alpha: float = 0.05) -> float:
     """Minimum detectable standardized effect for given n — the
     ``tt_ind_solve_power(effect_size=None)`` direction, by bisection."""
+    t_crit = _t_crit(n_per_group, alpha)
     lo, hi = 0.0, 1.0
     for _ in range(200):
-        if power_two_sample(hi, n_per_group, alpha) >= power:
+        if _power(hi, n_per_group, t_crit) >= power:
             break
         hi *= 2.0
     for _ in range(100):
         mid = 0.5 * (lo + hi)
-        if power_two_sample(mid, n_per_group, alpha) < power:
+        if _power(mid, n_per_group, t_crit) < power:
             lo = mid
         else:
             hi = mid
@@ -101,7 +113,8 @@ def power_curve(
     effect_sizes: Sequence[float], n_per_group: float, alpha: float = 0.05
 ) -> list[tuple[float, float]]:
     """(effect, power) pairs — the reference's power-vs-effect sweep."""
-    return [(d, power_two_sample(d, n_per_group, alpha)) for d in effect_sizes]
+    t_crit = _t_crit(n_per_group, alpha)
+    return [(d, _power(d, n_per_group, t_crit)) for d in effect_sizes]
 
 
 def interp_power_intercept(

@@ -200,8 +200,8 @@ def exact_quantiles(
         # subtotal branch both consume this frame, and RangePartitioner
         # samples fresh boundaries per execution — two independent executions
         # of the exchange can partition differently, silently corrupting the
-        # reconstructed cumsum (the same defect the 100x re-diff caught in
-        # the samplers' shared rank machinery). Persisting makes both
+        # reconstructed cumsum (a defect a 100x re-diff once caught in a
+        # range-partitioned sampler). Persisting makes both
         # branches read the one materialized partitioning; the frame is the
         # (by, value)-distinct counts, already aggregate-sized.
         from switchback_test_dag_spark.caching import pin

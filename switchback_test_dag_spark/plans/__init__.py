@@ -1,22 +1,10 @@
-"""Time-unit bucketing, seeded On/Off assignment strategies (SURVEY §2 F18-F20,
-T12-T17) — the switchback randomization layer — plus deterministic stratified
-sampling (sampling.py) and token-budget sequence packing (packing.py), which
-extend the same portable-seeded-hash idiom to corpus subsetting / data mixing
-and training-sequence assembly."""
+"""Time-unit bucketing and seeded On/Off assignment strategies (SURVEY §2
+F18-F20, T12-T17) — the switchback randomization layer."""
 
 from switchback_test_dag_spark.plans.buckets import (
     hr_interval,
     hr_of_day,
     time_bucket,
-)
-from switchback_test_dag_spark.plans.packing import (
-    pack_documents,
-    pack_stats,
-)
-from switchback_test_dag_spark.plans.sampling import (
-    stratified_exact_sample,
-    stratified_fraction_sample,
-    weighted_priority_sample,
 )
 from switchback_test_dag_spark.plans.assignment import (
     alternating_assignment,
@@ -37,9 +25,4 @@ __all__ = [
     "counterpart_assignment",
     "time_city_assignment",
     "zone_flip",
-    "stratified_exact_sample",
-    "stratified_fraction_sample",
-    "weighted_priority_sample",
-    "pack_documents",
-    "pack_stats",
 ]

@@ -59,7 +59,7 @@ def _array_ngrams_sql(
 ) -> str:
     """n-gram array over an array expression via a zip_with chain of slices
     (distinct by default — shingle semantics; ``distinct=False`` keeps every
-    occurrence, the repetition-counting semantics).
+    occurrence).
 
     Performance-critical shape, two regimes:
 
@@ -190,135 +190,4 @@ def content_fingerprint(text_col: str) -> Column:
     xxhash64 (cheaper, same grouping semantics)."""
     return F.md5(
         F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
-    )
-
-
-# --------------------------------------------------------------------------- #
-# PII detection / redaction (pretraining-corpus hygiene)
-# --------------------------------------------------------------------------- #
-
-# Conservative, high-precision patterns (the standard pre-redaction set a
-# training-data pipeline runs BEFORE tokenization). Each is spliced into Spark
-# SQL literals via F.expr, hence the doubled backslashes. Order matters for
-# redaction: emails first (their local part would otherwise survive as a
-# word), then long digit runs (cards), then phones, then IPs.
-PII_PATTERNS: dict[str, str] = {
-    "email": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}",
-    # 13-19 digits with optional single space/dash separators (card-shaped)
-    "card": r"\\b\\d(?:[ -]?\\d){12,18}\\b",
-    # +intl or (area) prefixed, 7+ digits with common separators
-    "phone": r"(?:\\+\\d{1,3}[ -]?)?(?:\\(\\d{2,4}\\)[ -]?)?\\d{3}[ -]\\d{3,4}[ -]?\\d{0,4}\\b",
-    "ipv4": r"\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b",
-}
-
-
-def pii_counts(text_col: str) -> Column:
-    """Per-document PII hit counts as a ``map<string, int>`` — one codegen
-    pass, no UDF; the corpus-audit side of redaction (sum the map values per
-    source to rank leaky slices before deciding scrub policy)."""
-    entries = ", ".join(
-        f"'{name}', CAST(size(regexp_extract_all({text_col}, '{pat}', 0)) AS INT)"
-        for name, pat in PII_PATTERNS.items()
-    )
-    return F.expr(f"map({entries})")
-
-
-def redact_pii(text_col: str, token_fmt: str = "<{kind}>") -> Column:
-    """Replace every PII match with a typed placeholder token (``<email>``,
-    ``<card>``, ...): a chain of native ``regexp_replace`` calls — pure
-    column expression inside whole-stage codegen, so scrubbing a 100 TB
-    corpus is a narrow map stage with zero shuffle. Patterns apply in
-    ``PII_PATTERNS`` order (emails before digit runs).
-
-    ``token_fmt`` is validated up front: rendered placeholders must contain
-    no ``$`` or ``\\`` (Java's ``regexp_replace`` treats them as group
-    references/escapes in the replacement) and no ``'`` (the token is
-    spliced into a SQL string literal), and no rendered token may itself be
-    re-matched by any LATER pattern in the chain (e.g. a caller format
-    rendering ``555-1234`` would be re-redacted by the phone pattern) — the
-    no-re-match invariant the default ``<kind>`` tokens satisfy."""
-    import re as _re
-
-    items = list(PII_PATTERNS.items())
-    out = f"({text_col})"
-    for i, (name, pat) in enumerate(items):
-        token = token_fmt.format(kind=name)
-        bad = sorted({ch for ch in token if ch in "$\\'"})
-        if bad:
-            raise ValueError(
-                f"redact_pii token_fmt renders {token!r} for kind {name!r}, "
-                f"which contains {bad}: $ and \\ are group references/escapes "
-                "in the Java replacement string, and ' breaks the spliced SQL "
-                "literal — pick placeholder text without them"
-            )
-        for later_name, later_pat in items[i + 1 :]:
-            if _re.search(later_pat.replace("\\\\", "\\"), token):
-                raise ValueError(
-                    f"redact_pii token_fmt renders {token!r} for kind "
-                    f"{name!r}, which the later {later_name!r} pattern "
-                    "re-matches — the placeholder would be redacted again; "
-                    "pick tokens no PII pattern matches"
-                )
-        out = f"regexp_replace({out}, '{pat}', '{token}')"
-    return F.expr(out)
-
-
-def repetition_stats(
-    df, id_col: str, text_col: str, ngram_n: int = 2
-):
-    """Per-document repetition signals — the corpus-filter rules pretraining
-    pipelines apply after cheap quality scoring (the Gopher/MassiveText
-    "repetition" family, Rae et al. 2021 §A1.1, public method):
-
-    - ``top_token_frac``: occurrences of the document's most frequent token /
-      total tokens (prompt-injection spam, keyword stuffing, boilerplate);
-    - ``dup_ngram_frac``: fraction of word ``ngram_n``-gram OCCURRENCES that
-      are repeats of an n-gram already seen in the document (looping text,
-      template churn). Documents with no tokens (or too few for an n-gram)
-      score 0.0 — empty is not repetitive.
-
-    Scale shape: both signals need per-(doc, unit) counts, so tokens and
-    n-grams are tagged and exploded in ONE pass and share ONE shuffle keyed
-    on (doc, kind, unit); per-doc reduction is map-side combinable and
-    bounded by vocabulary, never docs². Skew is bounded by document length
-    (one document's units land in one reducer group only per distinct unit).
-
-    Returns ``(id_col, top_token_frac double, dup_ngram_frac double)`` with
-    every input row present (left join back over ``id_col``).
-    """
-    from pyspark.sql import DataFrame  # noqa: F401 (signature documentation)
-
-    toks_sql = f"filter(split(lower({text_col}), '{TOKEN_SPLIT_RE}'), x -> x != '')"
-    grams_sql = _array_ngrams_sql(toks_sql, ngram_n, " ", distinct=False)
-    units = (
-        f"concat(transform({toks_sql}, t -> struct('t' AS kind, t AS unit)), "
-        f"transform({grams_sql}, g -> struct('g' AS kind, g AS unit)))"
-    )
-    counts = (
-        df.select(F.col(id_col).alias("_rid"), F.explode(F.expr(units)).alias("u"))
-        .groupBy("_rid", F.col("u.kind").alias("kind"), F.col("u.unit").alias("unit"))
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
-    per_id = counts.groupBy("_rid").agg(
-        F.max(F.when(F.col("kind") == "t", F.col("_c"))).alias("_tmx"),
-        F.sum(F.when(F.col("kind") == "t", F.col("_c"))).alias("_ttot"),
-        F.sum(
-            F.when((F.col("kind") == "g") & (F.col("_c") > 1), F.col("_c"))
-        ).alias("_gdup"),
-        F.sum(F.when(F.col("kind") == "g", F.col("_c"))).alias("_gtot"),
-    )
-    stats = per_id.select(
-        F.col("_rid").alias(id_col),
-        (F.col("_tmx") / F.col("_ttot")).alias("top_token_frac"),
-        F.when(
-            F.col("_gtot").isNotNull(),
-            F.coalesce(F.col("_gdup"), F.lit(0)) / F.col("_gtot"),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("dup_ngram_frac"),
-    )
-    return (
-        df.select(id_col)
-        .join(stats, id_col, "left")
-        .fillna(0.0, ["top_token_frac", "dup_ngram_frac"])
     )

@@ -109,15 +109,18 @@ def test_plan_captures_name_registry_queries():
 
 def test_package_imports_resolve():
     """Every ``from switchback_test_dag_spark... import name`` in the package,
-    the tools and the benchmark, module-level or function-local, names a
-    module that imports and a name it has (attribute or submodule).
-    Function-local imports and scripts only fail when they run, so a deleted
-    module or name would otherwise go unnoticed until a caller reaches it."""
+    the tools, the benchmark, the driver entry and the tests, module-level or
+    function-local, names a module that imports and a name it has (attribute
+    or submodule). Function-local imports and scripts only fail when they
+    run, so a deleted module or name would otherwise go unnoticed until a
+    caller reaches it."""
     root = Path(entry_mod.__file__).parent
     paths = [
         *(root / "switchback_test_dag_spark").rglob("*.py"),
         *(root / "tools").glob("*.py"),
         *(root / "perfbench").glob("*.py"),
+        root / "__spark_entry__.py",
+        *(root / "tests").glob("*.py"),
     ]
     checked, broken = 0, []
     for path in sorted(paths):

@@ -63,11 +63,9 @@ def test_column_pruning_reaches_scan(spark, sf_dir):
 
 
 def test_jvm_path_queries_have_no_python_nodes(spark, sf_dir):
-    # Everything except the sanctioned Pandas-UDF operators must run entirely
-    # JVM-side (whole-stage codegen territory). Sanctioned grouped-map ops
-    # (FlatMapGroupsInPandas, e.g. doc_text_profile's packing contract) are
-    # allowed; what this pins is that no SCALAR expression work fell off the
-    # JVM path into per-row/ArrowEval Python
+    # these queries run entirely JVM-side (whole-stage codegen territory):
+    # no scalar expression work falls into per-row/ArrowEval Python, and no
+    # grouped-map operator hands groups to pandas
     for name in [
         "sb_metrics",
         "revenue_by_segment",
@@ -78,6 +76,7 @@ def test_jvm_path_queries_have_no_python_nodes(spark, sf_dir):
     ]:
         plan = _plan(spark, name, sf_dir)
         assert "EvalPython" not in plan, f"{name} fell off the JVM path"
+        assert "FlatMapGroupsInPandas" not in plan, f"{name} runs a grouped map"
 
 
 def test_aggregations_are_partial(spark, sf_dir):
@@ -163,8 +162,8 @@ def test_salted_join_keys_include_salt(spark, sf_dir):
 
 
 def test_cleaning_pipeline_plan_is_jvm_and_broadcasts_eval(spark, sf_dir):
-    # the composed cleaning pipeline (quality -> dedup -> near-dup ->
-    # decontamination -> weighted sample) must stay JVM-side end to end, keep
+    # the composed cleaning pipeline (quality -> boilerplate -> dedup ->
+    # near-dup -> decontamination) must stay JVM-side end to end, keep
     # the eval gram set on a broadcast join, and never go cartesian
     plan = _plan(spark, "corpus_clean_stats", sf_dir)
     assert "EvalPython" not in plan, "cleaning pipeline fell off the JVM path"
@@ -396,28 +395,21 @@ def test_barrier_reroot_canary_fails_loud_on_fallback(spark):
         release_all()
 
 
-def test_doc_text_profile_text_pin_gate_paths_agree(
-    spark, sf_dir, monkeypatch, tmp_path
-):
-    """The size gate (queries_documents._TEXT_PIN_MAX_BYTES) switches
-    doc_text_profile between pinning the text column (small inputs) and
-    per-branch pruned parquet scans (large inputs / unknown size). Both
-    paths must produce IDENTICAL rows — the gate is a physical-plan choice,
-    never a result choice."""
-    import switchback_test_dag_spark.queries_documents as QD
-    from switchback_test_dag_spark.caching import release_all
-
+def test_doc_text_profile_text_pin_gate_paths_agree(spark, sf_dir):
+    """doc_text_profile has one physical path: one aggregate over one
+    documents scan, with no text pin, no branch join and no size gate to
+    pick between plans. The shuffle width is a physical-plan choice, never a
+    result choice, so the rows must be IDENTICAL at any partition count."""
+    plan = _plan(spark, "doc_text_profile", sf_dir)
+    assert plan.count("Scan parquet") == 1
+    assert "Join" not in plan
+    assert "InMemoryTableScan" not in plan
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        monkeypatch.setattr(QD, "_TEXT_PIN_MAX_BYTES", 1 << 62)  # pin path
-        # a path that cannot be statted never passes the gate, however high
-        assert not (
-            QD._local_parquet_bytes(str(tmp_path / "missing"), "documents")
-            <= QD._TEXT_PIN_MAX_BYTES
-        )
-        pinned = {tuple(r) for r in QD.doc_text_profile(spark, sf_dir).collect()}
-        release_all()
-        monkeypatch.setattr(QD, "_TEXT_PIN_MAX_BYTES", 0)  # scan path
-        scanned = {tuple(r) for r in QD.doc_text_profile(spark, sf_dir).collect()}
+        spark.conf.set("spark.sql.shuffle.partitions", "1")
+        narrow = {tuple(r) for r in q.QUERIES["doc_text_profile"](spark, sf_dir).collect()}
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        wide = {tuple(r) for r in q.QUERIES["doc_text_profile"](spark, sf_dir).collect()}
     finally:
-        release_all()
-    assert pinned == scanned and len(pinned) > 0
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert narrow == wide and len(narrow) > 0

@@ -1,364 +1,46 @@
-"""Deterministic stratified sampling: exact counts, partition-invariance, and
-an in-process DuckDB replay of the portable-hash sample membership (the same
-oracle shape the registry queries use, without spending a registry slot)."""
+"""The range-partitioned rank machinery: exact_quantiles' wide-groups path
+ranks each group's values by a parallel cumulative sum over a range
+partitioning (per-partition local sums plus per-group partition offsets).
+These pins guard its scale contract — no whole group through one task — and
+its correctness contract — both branches read one materialized partitioning.
+"""
 
 from __future__ import annotations
 
-import duckdb
-from pyspark.sql import functions as F
+import random
 
-from switchback_test_dag_spark.io import load_table
-from switchback_test_dag_spark.plans.sampling import (
-    stratified_exact_sample,
-    stratified_fraction_sample,
-)
-
-SF = "/root/testdata/sf0.001"
+from switchback_test_dag_spark.operators.relational import exact_quantiles
 
 
-def test_exact_k_per_stratum_and_partition_invariance(spark):
-    docs = load_table(spark, SF, "documents")
-    sizes = {r["source"]: r["n"] for r in docs.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()}
-    sample = stratified_exact_sample(docs, ["source"], "doc_id", k=7, seed=3)
-    got = {r["source"]: r["n"] for r in sample.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert got == {s: min(7, n) for s, n in sizes.items()}
-    # membership is a pure function of (id, seed): any repartitioning of the
-    # input must produce the SAME ids, and a different seed a different set
-    ids = {r["doc_id"] for r in sample.select("doc_id").collect()}
-    ids_repart = {
-        r["doc_id"]
-        for r in stratified_exact_sample(
-            docs.repartition(13), ["source"], "doc_id", k=7, seed=3
-        ).select("doc_id").collect()
-    }
-    assert ids == ids_repart
-    ids_seed4 = {
-        r["doc_id"]
-        for r in stratified_exact_sample(docs, ["source"], "doc_id", k=7, seed=4)
-        .select("doc_id").collect()
-    }
-    assert ids != ids_seed4
-
-
-def test_fraction_sample_exact_counts_and_mix_map(spark):
-    docs = load_table(spark, SF, "documents")
-    sizes = {r["source"]: r["n"] for r in docs.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()}
-    some = sorted(sizes)[:3]
-    mix = {some[0]: 1.0, some[1]: 0.5, some[2]: 0.2}  # data-mixing recipe
-    sample = stratified_fraction_sample(docs, ["source"], "doc_id", mix, seed=1)
-    got = {r["source"]: r["n"] for r in sample.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()}
-    want = {s: int(sizes[s] * f + 0.5) for s, f in mix.items() if int(sizes[s] * f + 0.5) > 0}
-    assert got == want  # strata outside the recipe are dropped entirely
-
-
-def _legacy_rank_sample(docs, strata, id_col, k, seed, portable):
-    """The round-6 single-window form (one task per stratum) — kept here ONLY
-    as the differential reference for the scale-safe reconstruction."""
-    from pyspark.sql import Window
-
-    if portable:
-        h = F.substring(
-            F.md5(F.concat_ws(":", F.col(id_col).cast("string"), F.lit(str(seed)))),
-            1,
-            16,
-        )
-    else:
-        h = F.xxhash64(F.col(id_col), F.lit(seed))
-    w = Window.partitionBy(*strata).orderBy(h, F.col(id_col))
-    return (
-        docs.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
-
-
-def test_scale_safe_rank_matches_legacy_window_membership(spark):
-    """The range-partitioned local-rank + broadcast-offset reconstruction must
-    produce EXACTLY the membership of the per-stratum row_number window it
-    replaced (the rank is a pure function of the (hash, id) total order, not
-    of partition boundaries)."""
-    docs = load_table(spark, SF, "documents")
-    for portable in (False, True):
-        for k in (1, 7, 10_000):  # k > |stratum| = keep-everything edge
-            new = {
-                r["doc_id"]
-                for r in stratified_exact_sample(
-                    docs, ["source"], "doc_id", k=k, seed=11, portable=portable
-                ).select("doc_id").collect()
-            }
-            old = {
-                r["doc_id"]
-                for r in _legacy_rank_sample(
-                    docs, ["source"], "doc_id", k=k, seed=11, portable=portable
-                ).select("doc_id").collect()
-            }
-            assert new == old, (portable, k)
+def _wide_quantiles(spark):
+    rng = random.Random(3)
+    rows = [(g, rng.uniform(0, 100)) for g in ("a", "b", "c") for _ in range(50)]
+    df = spark.createDataFrame(rows, "g string, v double")
+    return exact_quantiles(df, "v", [0.25, 0.5, 0.75], by=["g"], wide_groups=True)
 
 
 def test_sampling_plan_has_no_single_task_per_stratum_stage(spark):
-    """100 TB pin: the data-path rank must never put a whole stratum through
-    one task. Every row_number window over the data must be partitioned by
-    (_sgs_pid, strata) — partition-size-bounded — and the data shuffle must be
-    the RANGE partitioning on (strata, hash, id), not a hash exchange on the
-    strata alone."""
-    docs = load_table(spark, SF, "documents")
-    sample = stratified_exact_sample(docs, ["source"], "doc_id", k=7, seed=3)
-    plan = sample._jdf.queryExecution().executedPlan().toString()
-    rn_lines = [ln for ln in plan.splitlines() if "row_number()" in ln]
-    assert rn_lines, "rank window missing from plan"
-    for ln in rn_lines:
-        assert "_sgs_pid" in ln, f"per-stratum single-task window remains: {ln}"
-    assert "rangepartitioning(source" in plan, "range shuffle on (strata, hash) missing"
+    """100 TB pin: the data-path rank must never put a whole group through
+    one task. The running-sum window over the data must be partitioned by
+    (_pid, group) — partition-size-bounded — and the data shuffle must be the
+    RANGE partitioning on (group, value), not a hash exchange on the group
+    alone. Only the offset window, over the ≤ #partitions subtotal rows, may
+    be keyed on the group alone."""
+    from switchback_test_dag_spark.caching import release_all
 
-
-def test_null_stratum_is_sampled_not_dropped(spark):
-    """A NULL stratum value is a stratum (groupBy semantics): the offset join
-    is null-safe, so exact sampling keeps min(k, n) of its rows."""
-    docs = load_table(spark, SF, "documents").withColumn(
-        "src2", F.when(F.col("doc_id") % 3 == 0, F.lit(None)).otherwise(F.col("source"))
-    )
-    n_null = docs.filter(F.col("src2").isNull()).count()
-    assert n_null > 5
-    sample = stratified_exact_sample(docs, ["src2"], "doc_id", k=5, seed=2)
-    got = sample.filter(F.col("src2").isNull()).count()
-    assert got == min(5, n_null)
-
-
-def test_portable_sample_membership_replays_in_duckdb(spark):
-    """The portable-hash variant's EXACT membership must be reproducible by
-    an independent engine: DuckDB computes the same md5-prefix permutation
-    ranks over the same parquet and must select the same doc_ids."""
-    docs = load_table(spark, SF, "documents")
-    sample = stratified_exact_sample(
-        docs, ["source"], "doc_id", k=5, seed=9, portable=True
-    )
-    got = {r["doc_id"] for r in sample.select("doc_id").collect()}
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{SF}/documents.parquet')"
-    )
-    want = {
-        r[0]
-        for r in con.execute(
-            """
-            SELECT doc_id FROM (
-              SELECT doc_id,
-                     row_number() OVER (
-                       PARTITION BY source
-                       ORDER BY substring(md5(CAST(doc_id AS VARCHAR) || ':9'), 1, 16),
-                                doc_id
-                     ) AS rk
-              FROM documents
-            ) WHERE rk <= 5
-            """
-        ).fetchall()
-    }
-    assert got == want
-
-
-def _wbase(spark):
-    docs = load_table(spark, SF, "documents")
-    return docs.select(
-        "doc_id",
-        "source",
-        F.size(
-            F.expr("filter(split(lower(text), '\\\\s+'), x -> x != '')")
-        ).alias("w"),
-    )
-
-
-def test_weighted_priority_sample_matches_integer_reference(spark):
-    """The portable path must equal a bit-exact Python replay of the integer
-    priority math (no float op anywhere in the ordering)."""
-    import hashlib
-
-    from switchback_test_dag_spark.plans.sampling import weighted_priority_sample
-
-    base = _wbase(spark)
-    got = {
-        r["doc_id"]
-        for r in weighted_priority_sample(
-            base, ["source"], "doc_id", "w", k=3, seed=7, portable=True
-        ).collect()
-    }
-    ref: dict = {}
-    for r in base.collect():
-        a = int(hashlib.md5(f"{r['doc_id']}:7".encode()).hexdigest()[:10], 16) or 1
-        if r["w"] and r["w"] > 0:
-            ref.setdefault(r["source"], []).append(
-                (-((r["w"] << 40) // a), r["doc_id"])
-            )
-    want = {did for lst in ref.values() for _, did in sorted(lst)[:3]}
-    assert got == want and len(got) > 0
-
-
-def test_weighted_priority_sample_invariance_and_weight_rules(spark):
-    from switchback_test_dag_spark.plans.sampling import weighted_priority_sample
-
-    base = _wbase(spark)
-    ids = {
-        r["doc_id"]
-        for r in weighted_priority_sample(
-            base, ["source"], "doc_id", "w", k=5, seed=1
-        ).collect()
-    }
-    # partition-invariant, seed-sensitive
-    ids_rp = {
-        r["doc_id"]
-        for r in weighted_priority_sample(
-            base.repartition(13), ["source"], "doc_id", "w", k=5, seed=1
-        ).collect()
-    }
-    assert ids == ids_rp
-    ids_s2 = {
-        r["doc_id"]
-        for r in weighted_priority_sample(
-            base, ["source"], "doc_id", "w", k=5, seed=2
-        ).collect()
-    }
-    assert ids != ids_s2
-    # zero/NULL weights are never sampled
-    rows = [(1, "a", 5), (2, "a", 0), (3, "a", None), (4, "a", 2)]
-    df = spark.createDataFrame(rows, "doc_id long, source string, w long")
-    got = {
-        r["doc_id"]
-        for r in weighted_priority_sample(
-            df, ["source"], "doc_id", "w", k=10, seed=0
-        ).collect()
-    }
-    assert got == {1, 4}
-
-
-def test_fraction_map_keys_address_first_stratum_only(spark):
-    """Documented semantics pin: with len(strata) > 1 the fractions map is
-    keyed by the FIRST stratum column's value — counts and targets are
-    per (a, b) tuple, but every tuple under one first-column value gets that
-    value's fraction."""
-    from switchback_test_dag_spark.plans.sampling import stratified_fraction_sample
-
-    rows = [(i, "web" if i < 40 else "books", i % 2) for i in range(60)]
-    df = spark.createDataFrame(rows, "doc_id long, src string, sub int")
-    got = (
-        stratified_fraction_sample(
-            df, ["src", "sub"], "doc_id", {"web": 0.5, "books": 1.0}, seed=2
+    try:
+        plan = _wide_quantiles(spark)._jdf.queryExecution().executedPlan().toString()
+    finally:
+        release_all()
+    data_windows = [
+        ln for ln in plan.splitlines() if "Window [" in ln and "_lcum" in ln
+    ]
+    assert data_windows, "local running-sum window missing from plan"
+    for ln in data_windows:
+        assert "windowspecdefinition(_pid" in ln, (
+            f"per-group single-task window remains: {ln}"
         )
-        .groupBy("src", "sub")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    counts = {(r["src"], r["sub"]): r["n"] for r in got}
-    # 20 rows per (web, sub) tuple at 0.5 -> 10 each; 10 per (books, sub) at 1.0
-    assert counts == {("web", 0): 10, ("web", 1): 10, ("books", 0): 10, ("books", 1): 10}
-
-
-def test_weighted_priority_sample_huge_weights_replay_in_duckdb(spark):
-    """Weights past the former 2^22 cap (10M-token docs, up to near BIGINT
-    max) must sample correctly AND still replay bit-for-bit in an external
-    engine — the DECIMAL(38,0) split-arithmetic priority vs DuckDB's native
-    HUGEINT floor division on the same integers."""
-    from switchback_test_dag_spark.plans.sampling import weighted_priority_sample
-
-    rows = [
-        (i, "a", [10_000_000, 1, (1 << 62) + 3, 123_456_789_012, 7, 2**40][i % 6] + i)
-        for i in range(60)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, source string, w long")
-    got = {
-        r["doc_id"]
-        for r in weighted_priority_sample(
-            df, ["source"], "doc_id", "w", k=9, seed=5, portable=True
-        ).collect()
-    }
-    con = duckdb.connect()
-    con.execute("CREATE TABLE t (doc_id BIGINT, source VARCHAR, w BIGINT)")
-    con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
-    want = {
-        r[0]
-        for r in con.execute(
-            """
-WITH ww AS (
-  SELECT doc_id, source, w,
-         greatest(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':5'), 1, 10))::BIGINT, 1) AS a
-  FROM t
-), p AS (
-  SELECT doc_id,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY -((w::HUGEINT * 1099511627776) // a), doc_id) AS rk
-  FROM ww WHERE w > 0
-)
-SELECT doc_id FROM p WHERE rk <= 9
-"""
-        ).fetchall()
-    }
-    assert got == want and len(got) == 9
-
-
-def test_weighted_priority_sample_heavy_weights_dominate(spark):
-    """Statistical sanity: with weights 1000 vs 1, the heavy stratum slice
-    should be (nearly) all heavy rows — inclusion ∝ weight."""
-    from switchback_test_dag_spark.plans.sampling import weighted_priority_sample
-
-    rows = [(i, "a", 1000 if i < 20 else 1) for i in range(2000)]
-    df = spark.createDataFrame(rows, "doc_id long, source string, w long")
-    got = [
-        r["doc_id"]
-        for r in weighted_priority_sample(
-            df, ["source"], "doc_id", "w", k=10, seed=4
-        ).collect()
-    ]
-    assert sum(1 for d in got if d < 20) >= 8
-
-
-def test_weighted_priority_sample_replays_in_duckdb(spark):
-    from switchback_test_dag_spark.plans.sampling import weighted_priority_sample
-
-    base = _wbase(spark)
-    got = {
-        r["doc_id"]
-        for r in weighted_priority_sample(
-            base, ["source"], "doc_id", "w", k=4, seed=11, portable=True
-        ).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{SF}/documents.parquet')"
-    )
-    toks = "len(list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x != ''))"
-    want = {
-        r[0]
-        for r in con.execute(
-            f"""
-WITH w AS (
-  SELECT doc_id, source, {toks} AS w,
-         greatest(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || ':11'), 1, 10))::BIGINT, 1) AS a
-  FROM documents
-), p AS (
-  SELECT doc_id, source,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY -((w * 1099511627776) // a), doc_id) AS rk
-  FROM w WHERE w > 0
-)
-SELECT doc_id FROM p WHERE rk <= 4
-"""
-        ).fetchall()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_weighted_sample_plan_has_no_single_task_per_stratum_stage(spark):
-    """Same 100 TB pin as the uniform samplers: the priority rank must never
-    put a whole stratum through one task."""
-    from switchback_test_dag_spark.plans.sampling import weighted_priority_sample
-
-    base = _wbase(spark)
-    sample = weighted_priority_sample(base, ["source"], "doc_id", "w", k=5, seed=1)
-    plan = sample._jdf.queryExecution().executedPlan().toString()
-    rn_lines = [ln for ln in plan.splitlines() if "row_number()" in ln]
-    assert rn_lines, "rank window missing from plan"
-    for ln in rn_lines:
-        assert "_sgs_pid" in ln, f"per-stratum single-task window remains: {ln}"
-    assert "rangepartitioning(source" in plan, "range shuffle on (strata, key) missing"
+    assert "rangepartitioning(g" in plan, "range shuffle on (group, value) missing"
 
 
 def test_rank_machinery_pins_the_partitioning(spark):
@@ -366,13 +48,14 @@ def test_rank_machinery_pins_the_partitioning(spark):
     branches must read ONE materialized range partitioning (persist), not two
     independent executions of the exchange — RangePartitioner samples fresh
     boundaries per execution, and divergent boundaries silently corrupt deep
-    ranks (measured: 4948/6250 rows sampled in a stratum at sf10)."""
+    ranks (measured: 4948/6250 rows sampled in a stratum at sf10, in a
+    sampler built on the same machinery)."""
     from switchback_test_dag_spark.caching import release_all
 
-    docs = load_table(spark, SF, "documents")
-    sample = stratified_exact_sample(docs, ["source"], "doc_id", k=7, seed=3)
-    plan = sample._jdf.queryExecution().executedPlan().toString()
-    release_all()
+    try:
+        plan = _wide_quantiles(spark)._jdf.queryExecution().executedPlan().toString()
+    finally:
+        release_all()
     # both the local-rank branch and the offset branch must read the cache
     # (the cached relation's own stored plan also prints a rangepartitioning
     # line, so counting exchanges in the plan STRING is not meaningful)

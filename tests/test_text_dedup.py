@@ -1,7 +1,7 @@
 """Tests for the dedup operators beyond their registry oracles: the
 prefix-filtered n-gram Jaccard against a brute-force reference, exact dedup
 and its fold invariance, clean_corpus' near-dup keeper policy, cache
-release, PII scrubbing and the n-gram array builder."""
+release and the n-gram array builder."""
 
 from __future__ import annotations
 
@@ -156,70 +156,6 @@ def test_release_caches_unpins_intermediates(docs, spark):
     # nothing left cached in the Spark context
     jsc = spark.sparkContext._jsc.sc()
     assert jsc.getPersistentRDDs().size() == 0
-
-
-# --------------------------------------------------------------------------- #
-# PII detection / redaction
-# --------------------------------------------------------------------------- #
-
-
-def test_pii_counts_and_redaction(spark):
-    from pyspark.sql import functions as F
-
-    from switchback_test_dag_spark.text import analysis as TA
-
-    rows = [
-        (1, "mail me at jo.doe+x@example.co.uk or call +49 170-555 1234 now"),
-        (2, "server 10.0.42.7 billed card 4111 1111 1111 1111 yesterday"),
-        (3, "clean text, nothing to scrub: 7 items at 3.50 each"),
-        (4, None),
-    ]
-    df = spark.createDataFrame(rows, "id long, text string")
-    out = {
-        r["id"]: r
-        for r in df.select(
-            "id",
-            TA.pii_counts("text").alias("hits"),
-            TA.redact_pii("text").alias("red"),
-        ).collect()
-    }
-    assert out[1]["hits"]["email"] == 1 and out[1]["hits"]["phone"] == 1
-    assert out[2]["hits"]["ipv4"] == 1 and out[2]["hits"]["card"] == 1
-    assert all(v == 0 for v in out[3]["hits"].values())
-    # NULL text: counts are NULL per kind (not 0 — absence, not cleanliness)
-    assert all(v is None for v in out[4]["hits"].values())
-    assert out[4]["red"] is None
-    r1, r2 = out[1]["red"], out[2]["red"]
-    assert "<email>" in r1 and "@" not in r1
-    assert "<phone>" in r1 and "555" not in r1
-    assert "<ipv4>" in r2 and "10.0.42.7" not in r2
-    assert "<card>" in r2 and "4111" not in r2
-    # non-PII digits survive redaction (precision, not a digit nuke)
-    assert "3.50" in out[3]["red"] and "7 items" in out[3]["red"]
-    # scrubbing is a pure column expression: no Python eval nodes in the plan
-    plan = (
-        df.select(TA.redact_pii("text"))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "EvalPython" not in plan
-
-
-def test_redact_pii_token_fmt_validation(spark):
-    """Caller-supplied token formats: safe ones work (and stay un-re-matched),
-    unsafe ones — group references, SQL-literal breakers, or tokens a later
-    PII pattern would re-redact — raise up front instead of corrupting text."""
-    import pytest
-
-    from switchback_test_dag_spark.text import analysis as TA
-
-    df = spark.createDataFrame(
-        [(1, "mail a@b.com or call 170-555 1234")], "id long, text string"
-    )
-    red = df.select(TA.redact_pii("text", token_fmt="[{kind}]").alias("r")).first()["r"]
-    assert "[email]" in red and "[phone]" in red and "@" not in red
-    for fmt in ("${kind}", "x\\{kind}", "it's-{kind}", "555-1234-{kind}"):
-        with pytest.raises(ValueError):
-            TA.redact_pii("text", token_fmt=fmt)
 
 
 def test_array_ngrams_regimes_identical_with_null_elements(spark):

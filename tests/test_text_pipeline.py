@@ -115,15 +115,12 @@ def test_clean_corpus_dedup_policy_fingerprints_after_rejoin(spark):
 
 
 def test_pretraining_recipe_clean_select_pack(spark):
-    """Integration: the end-to-end pretraining-data recipe the extension
-    operators exist for — clean_corpus (CCNet chain) →
-    weighted_priority_sample (token-count-weighted subset per source) →
-    pack_documents (fixed-budget training sequences) — composes
-    deterministically, with every stage's membership a pure function of
-    (id, seed)."""
-    from switchback_test_dag_spark.plans.packing import pack_documents
-    from switchback_test_dag_spark.plans.sampling import weighted_priority_sample
-
+    """Integration: the cleaning stage of a pretraining-data recipe on a
+    multi-source corpus — clean_corpus (CCNet chain) with an extra per-doc
+    column riding through, then the clean, uncontaminated survivors with
+    their token counts as a downstream selection or packing step would take
+    them — composes deterministically: survivor membership and text are a
+    pure function of the input rows, not of its partitioning."""
     rows = []
     for i in range(1, 61):
         src = "a" if i % 2 else "b"
@@ -136,58 +133,33 @@ def test_pretraining_recipe_clean_select_pack(spark):
     docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
     eval_df = spark.createDataFrame([("secret eval",)], "text string")
 
-    cleaned = clean_corpus(
-        docs,
-        "doc_id",
-        "text",
-        segmenter=_segmenter(),
-        quality_min=0.0,
-        boiler_min_df=30,  # "nav bar home" df=60 -> scrubbed everywhere
-        rejoin_sep="\n",
-        jaccard_threshold=0.95,
-        eval_df=eval_df,
-        decon_n=2,
-    )
-    survivors = cleaned.filter(~F.col("contaminated")).select(
-        "doc_id",
-        "source",
-        "text",
-        F.size(F.split("text", r"\s+")).cast("long").alias("toks"),
-    )
-    srows = survivors.collect()
-    assert all("nav bar home" not in r["text"] for r in srows)
-
-    def sample(frame):
-        return weighted_priority_sample(
-            frame, ["source"], "doc_id", "toks", k=5, seed=7, portable=True
+    def survivors(frame):
+        cleaned = clean_corpus(
+            frame,
+            "doc_id",
+            "text",
+            segmenter=_segmenter(),
+            quality_min=0.0,
+            boiler_min_df=30,  # "nav bar home" df=60 -> scrubbed everywhere
+            rejoin_sep="\n",
+            jaccard_threshold=0.95,
+            eval_df=eval_df,
+            decon_n=2,
+        )
+        return cleaned.filter(~F.col("contaminated")).select(
+            "doc_id",
+            "source",
+            "text",
+            F.size(F.split("text", r"\s+")).cast("long").alias("toks"),
         )
 
-    sel_rows = sample(survivors).collect()
-    by_src: dict = {}
-    for r in sel_rows:
-        by_src.setdefault(r["source"], []).append(r["doc_id"])
-    assert sorted(len(v) for v in by_src.values()) == [5, 5]
-    # the sample draws from the clean survivors only
-    assert {r["doc_id"] for r in sel_rows} <= {r["doc_id"] for r in srows}
-
-    chosen = spark.createDataFrame(
-        [(r["doc_id"], r["source"], r["toks"]) for r in sel_rows],
-        "doc_id long, source string, toks long",
-    )
-    packed = pack_documents(
-        chosen, "doc_id", "toks", budget=16, strata=["source"],
-        n_buckets=2, seed=11, portable=True,
-    ).localCheckpoint()
-    # every selected doc lands in exactly one sequence; next-fit never
-    # overflows the budget with a multi-doc sequence
-    assert packed.count() == 10
-    assert packed.select("doc_id").distinct().count() == 10
-    fills = packed.groupBy("source", "bucket", "seq").agg(
-        F.sum("toks").alias("fill"), F.count(F.lit(1)).alias("nd")
-    )
-    assert fills.filter((F.col("fill") > 16) & (F.col("nd") > 1)).count() == 0
-    # the whole recipe is partitioning-invariant end-to-end
-    sel2 = sample(survivors.repartition(13))
-    assert sorted(r["doc_id"] for r in sel2.collect()) == sorted(
-        r["doc_id"] for r in sel_rows
-    )
+    srows = survivors(docs).collect()
+    assert all("nav bar home" not in r["text"] for r in srows)
+    # the numbered bodies are all distinct: nothing is a duplicate or
+    # contaminated, so every doc survives, scrubbed, with its source
+    assert sorted(r["doc_id"] for r in srows) == list(range(1, 61))
+    assert all(r["source"] == ("a" if r["doc_id"] % 2 else "b") for r in srows)
+    assert all(r["toks"] == 7 for r in srows)
+    # the whole stage is partitioning-invariant end-to-end
+    again = survivors(docs.repartition(13)).collect()
+    assert sorted(tuple(r) for r in again) == sorted(tuple(r) for r in srows)

@@ -2,7 +2,6 @@
 """Measure the scale-regime paths that the sf0.01 oracle fixtures never
 exercise, on the manufactured 10× directory (`tools/make_scale.py`):
 
-- ``spans``: duplicated-span statistics with the production xxhash64 keys;
 - ``decon``: decontamination against the ``doc_id % 13`` eval slice;
 - ``clean_corpus_full``: the composed cleaning chain, value-checked against
   a DuckDB replay of the whole chain.
@@ -14,7 +13,7 @@ comparable round over round) — into the committed ``SCALE_evidence.json``,
 so scale audits are machine-diffable like BENCH artifacts instead of living
 only in SCALE.md prose.
 
-Usage: python tools/scale_evidence.py {spans|decon|clean_corpus_full} ...
+Usage: python tools/scale_evidence.py {decon|clean_corpus_full} ...
        [--sf DIR] [--no-write]
 """
 
@@ -56,31 +55,6 @@ def _host_probe(trials: int = 2) -> dict:
         al.append(time.monotonic() - t0)
         del s, buf
     return {"matmul_s": round(min(mm), 3), "alloc200mb_s": round(min(al), 3)}
-
-
-def measure_spans(spark, sf_dir: str) -> dict:
-    """Duplicated-span stats (text/spans) on the 10x documents, production
-    xxhash64 keys — the path the oracle never times (it replays the portable
-    md5 form at sf0.01)."""
-    from switchback_test_dag_spark.text import spans as SP
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    t0 = time.monotonic()
-    st = SP.duplicated_span_stats(docs, "doc_id", "text", span_len=4)
-    agg = st.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.count(F.when(F.col("n_dup_positions") > 0, 1)).alias("n_dup_docs"),
-        F.round(F.avg("dup_token_frac"), 6).alias("avg_cov"),
-    ).collect()[0]
-    wall = time.monotonic() - t0
-    return {
-        "measurement": "spans",
-        "sf_dir": sf_dir,
-        "sec": round(wall, 2),
-        "n_docs": agg["n_docs"],
-        "n_dup_docs": agg["n_dup_docs"],
-        "avg_dup_token_frac": float(agg["avg_cov"]),
-    }
 
 
 def measure_decon(spark, sf_dir: str) -> dict:
@@ -290,7 +264,6 @@ ORDER BY k2.source
 
 
 _MEASURES = {
-    "spans": measure_spans,
     "decon": measure_decon,
     "clean_corpus_full": measure_clean_corpus_full,
 }
