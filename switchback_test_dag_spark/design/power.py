@@ -33,18 +33,29 @@ Z_975 = 1.959963984540054  # norm_ppf(0.975), two-sided alpha=0.05
 Z_80 = 0.8416212335729143  # norm_ppf(0.80), power=80%
 
 
+def _bisect(below, lo: float, hi: float, steps: int) -> float:
+    """Midpoint of ``[lo, hi]`` after up to ``steps`` halvings that move ``lo``
+    up to the midpoint where ``below(mid)`` holds and ``hi`` down where not.
+    A step that leaves the bracket unchanged would repeat on every later step,
+    so the loop stops there with the result the full ``steps`` give."""
+    for _ in range(steps):
+        mid = 0.5 * (lo + hi)
+        if below(mid):
+            if mid == lo:
+                break
+            lo = mid
+        else:
+            if mid == hi:
+                break
+            hi = mid
+    return 0.5 * (lo + hi)
+
+
 def norm_ppf(q: float) -> float:
     """Standard-normal quantile via bisection on the exact erfc-based sf."""
     if not 0.0 < q < 1.0:
         raise ValueError(f"q must be in (0,1), got {q}")
-    lo, hi = -40.0, 40.0
-    for _ in range(200):
-        mid = 0.5 * (lo + hi)
-        if 1.0 - float(norm_sf(mid)) < q:
-            lo = mid
-        else:
-            hi = mid
-    return 0.5 * (lo + hi)
+    return _bisect(lambda z: 1.0 - float(norm_sf(z)) < q, -40.0, 40.0, 200)
 
 
 def _t_crit(n_per_group: float, alpha: float) -> float:
@@ -84,13 +95,7 @@ def solve_mde(n_per_group: float, power: float = 0.8, alpha: float = 0.05) -> fl
         if _power(hi, n_per_group, t_crit) >= power:
             break
         hi *= 2.0
-    for _ in range(100):
-        mid = 0.5 * (lo + hi)
-        if _power(mid, n_per_group, t_crit) < power:
-            lo = mid
-        else:
-            hi = mid
-    return 0.5 * (lo + hi)
+    return _bisect(lambda d: _power(d, n_per_group, t_crit) < power, lo, hi, 100)
 
 
 def solve_n(effect_size: float, power: float = 0.8, alpha: float = 0.05) -> float:
@@ -100,13 +105,9 @@ def solve_n(effect_size: float, power: float = 0.8, alpha: float = 0.05) -> floa
         if power_two_sample(effect_size, hi, alpha) >= power:
             break
         hi *= 2.0
-    for _ in range(100):
-        mid = 0.5 * (lo + hi)
-        if power_two_sample(effect_size, mid, alpha) < power:
-            lo = mid
-        else:
-            hi = mid
-    return 0.5 * (lo + hi)
+    return _bisect(
+        lambda n: power_two_sample(effect_size, n, alpha) < power, lo, hi, 100
+    )
 
 
 def power_curve(

@@ -171,7 +171,7 @@ def current_version(path: str) -> str | None:
         return fh.read().strip() or None
 
 
-def atomic_overwrite(df: DataFrame, path: str, fmt: str = "parquet") -> str:
+def atomic_overwrite(df: DataFrame, path: str) -> str:
     """CREATE-OR-REPLACE ``path`` with ``df``, atomically: stage a fresh
     immutable version directory, verify Spark's ``_SUCCESS`` marker, then
     flip the ``_CURRENT`` pointer (atomic POSIX rename). Returns the
@@ -190,7 +190,7 @@ def atomic_overwrite(df: DataFrame, path: str, fmt: str = "parquet") -> str:
     # errorifexists: a version dir is immutable once created — a collision
     # means a concurrent writer raced this one; fail loudly instead of
     # corrupting its staging
-    df.write.mode("errorifexists").format(fmt).save(vdir)
+    df.write.mode("errorifexists").parquet(vdir)
     if not os.path.exists(os.path.join(vdir, "_SUCCESS")):
         raise IOError(
             f"atomic_overwrite: staging write at {vdir} carries no _SUCCESS "
@@ -200,52 +200,23 @@ def atomic_overwrite(df: DataFrame, path: str, fmt: str = "parquet") -> str:
     return vdir
 
 
-def read_committed(
-    spark: SparkSession, path: str, fmt: str = "parquet", schema=None,
-    version: str | None = None,
-) -> DataFrame:
+def read_committed(spark: SparkSession, path: str) -> DataFrame:
     """Read the COMMITTED version of an :func:`atomic_overwrite` table —
     resolves ``_CURRENT`` once at plan time, so the returned frame keeps
     reading its snapshot even if a writer commits a newer version mid-job
-    (snapshot isolation, the reader half of the protocol).
-
-    ``version`` pins a specific past snapshot instead (time travel — the
-    same capability the Delta/Iceberg pointer protocol provides, bounded
-    here by what :func:`vacuum_versions` has not yet deleted). Only
-    versions at or before the committed pointer are readable: anything
-    newer is an uncommitted staging dir from an in-flight or failed write
-    and reading it would break the atomicity contract."""
-    import re as _re
-
+    (snapshot isolation, the reader half of the protocol)."""
     cur = current_version(path)
     if cur is None:
         raise FileNotFoundError(
             f"read_committed: no committed version at {path} (no "
             f"{_CURRENT_PTR} pointer — never written, or only failed writes)"
         )
-    if version is not None and not _re.fullmatch(r"v\d{10}", version):
-        # the 'newer than committed' guard below compares names
-        # LEXICOGRAPHICALLY; a non-canonical name like 'v1' would fall
-        # through it and surface as a misleading error — reject it up front
-        raise ValueError(
-            f"read_committed: malformed version name {version!r}; expected "
-            f"the canonical zero-padded form {_VERSION_FMT.format(1)!r}"
-        )
-    ver = version or cur
-    if ver > cur:
-        raise ValueError(
-            f"read_committed: {ver} is newer than the committed pointer "
-            f"{cur} — an uncommitted staging dir, not a snapshot"
-        )
-    if not os.path.isdir(os.path.join(path, ver)):
+    if not os.path.isdir(os.path.join(path, cur)):
         raise FileNotFoundError(
-            f"read_committed: version {ver} not found at {path} "
+            f"read_committed: version {cur} not found at {path} "
             "(vacuumed, or never committed)"
         )
-    reader = spark.read.format(fmt)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.load(os.path.join(path, ver))
+    return spark.read.parquet(os.path.join(path, cur))
 
 
 def vacuum_versions(path: str, keep: int = 1) -> list[str]:

@@ -78,33 +78,12 @@ def anti_join_on_keys(
     return df.join(broadcast(keys_df.select(*keys).distinct()), on=list(keys), how="left_anti")
 
 
-def _null_safe_equi_join(
-    left: DataFrame, right: DataFrame, keys: Sequence[str], hint_broadcast: bool = False
-) -> DataFrame:
-    """Equi-join on ``keys`` with ``<=>`` semantics so a NULL key matches a NULL
-    key (groupBy treats NULL as a group; a plain equi-join would silently drop
-    it). Right-side key columns are dropped after the join, mirroring
-    ``on=list`` output shape. Still a hash-joinable equality condition —
-    EqualNullSafe compiles to a null-safe hash key, not a nested loop."""
-    renamed = right
-    for k in keys:
-        renamed = renamed.withColumnRenamed(k, f"__nsj_{k}")
-    cond = None
-    for k in keys:
-        c = F.col(k).eqNullSafe(F.col(f"__nsj_{k}"))
-        cond = c if cond is None else cond & c
-    if hint_broadcast:
-        renamed = broadcast(renamed)
-    return left.join(renamed, cond).drop(*[f"__nsj_{k}" for k in keys])
-
-
 def exact_quantiles(
     df: DataFrame,
     value_col: str,
     probs: Sequence[float],
     by: Sequence[str] = (),
     out_cols: Sequence[str] | None = None,
-    wide_groups: bool | None = None,
 ) -> DataFrame:
     """Exact interpolated quantiles (``percentile``/``quantile_cont``
     semantics) with BOUNDED executor memory — the warehouse-scale form.
@@ -130,118 +109,36 @@ def exact_quantiles(
        non-dyadic probs).
 
     NULL *values* are ignored like the builtin; empty groups yield no row.
-    NULL *group keys* form a group of their own (the internal by-key joins are
-    null-safe), matching ``groupBy(by).agg(percentile(...))``. Returns one row
-    per group with ``out_cols`` (default ``q0, q1, ...``) as DOUBLE.
-
-    ``wide_groups`` picks the cumulative-sum strategy (default: True iff
-    ``by`` is empty):
-
-    - False (many modest groups, e.g. per-(bucket, test-group)): one
-      ``Window.partitionBy(by).orderBy(value)`` running sum — one shuffle,
-      external spillable sort per group.
-    - True (zero or FEW groups, each potentially huge — the 100 TB hazard
-      where a per-group window serializes a whole group through one task):
-      range-partition on ``(by..., value)`` so each group's values ascend
-      across ascending partition ids, run parallel per-partition local sums,
-      then broadcast back a tiny one-row-per-(partition, group) offset frame.
-      The offset frame has ≤ partitions + groups rows, so this mode is for
-      low-cardinality ``by`` only — with millions of groups the offsets stop
-      being broadcastable, and the per-group window is the right plan anyway.
+    NULL *group keys* form a group of their own (window partitions and
+    ``groupBy`` both keep NULL as a key), matching
+    ``groupBy(by).agg(percentile(...))``. Returns one row per group with
+    ``out_cols`` (default ``q0, q1, ...``) as DOUBLE. With ``by`` empty the
+    running-sum window has no partition keys and runs as one task.
     """
     if out_cols is None:
         out_cols = [f"q{i}" for i in range(len(probs))]
-    if wide_groups is None:
-        wide_groups = not by
     vals = df.filter(F.col(value_col).isNotNull()).select(*by, value_col)
-    if not wide_groups:
-        # Two exchanges, deliberately. The distinct-count aggregate keys on
-        # (by, value) — HIGH cardinality — so its hash exchange spreads the
-        # raw-row scan over every core with map-side tie-collapse; the
-        # window's (by) exchange then moves only the already-distinct rows.
-        # A shared single exchange on the GROUP keys alone (hash-partition
-        # first, reuse for aggregate + windows + final agg) was tried and
-        # REVERTED: with low-cardinality ``by`` it lands all raw rows on
-        # ≤|groups| tasks, so the heavy aggregate loses its parallelism and
-        # its partial (map-side) reduction — measured at 100× scale
-        # (sf10, back-to-back same-window A/B): executor CPU 78 → 112 s,
-        # wall 14 → 24 s for the IQR query. The second exchange is the
-        # cheap one (distinct rows only); the aggregate's width is what
-        # scales.
-        counts = vals.groupBy(*by, value_col).agg(F.count(F.lit(1)).alias("_c"))
-        w = Window.partitionBy(*by).orderBy(value_col)
-        cum = counts.withColumn("_cum", F.sum("_c").over(w))
-        # _n per group is the group's LAST cumulative count — a second
-        # window over the same partitioning (already sorted; no new
-        # exchange). The previous counts→totals aggregation re-evaluated
-        # the whole distinct-count scan a second time and joined it back.
-        joined = cum.withColumn(
-            "_n", F.max("_cum").over(Window.partitionBy(*by))
-        )
-    else:
-        # Parallel cumulative sum: ascending (by..., value) ranges land on
-        # ascending partition ids (the range partitioner's invariant), so a
-        # per-(pid, by) local running sum plus a per-(by) prefix offset over
-        # partition subtotals reconstructs the exact global cumsum. The
-        # offset window orders the per-(pid, group) subtotal frame by _pid —
-        # a single task per group, but over ≤ #partitions rows, not data.
-        #
-        # The distinct-count aggregate runs ON TOP of the range exchange
-        # (grouping by (_pid, by, value): RangePartitioning(by, value) is a
-        # valid clustering for it, and equal values share a _pid by the
-        # range invariant) — one full-data exchange instead of the previous
-        # groupBy-then-repartitionByRange pair (guide §2.4). _pid is stamped
-        # below the aggregate, so the reconstruction stays correct even if a
-        # planner change ever re-partitioned the aggregate: the math needs
-        # only "_pid buckets are value-ascending and disjoint per group",
-        # not physical row placement.
-        #
-        # pin() is CORRECTNESS-load-bearing: the local-cumsum branch and the
-        # subtotal branch both consume this frame, and RangePartitioner
-        # samples fresh boundaries per execution — two independent executions
-        # of the exchange can partition differently, silently corrupting the
-        # reconstructed cumsum (a defect a 100x re-diff once caught in a
-        # range-partitioned sampler). Persisting makes both
-        # branches read the one materialized partitioning; the frame is the
-        # (by, value)-distinct counts, already aggregate-sized.
-        from switchback_test_dag_spark.caching import pin
-
-        parts = pin(
-            vals.repartitionByRange(*[F.col(c) for c in by], F.col(value_col))
-            .withColumn("_pid", F.spark_partition_id())
-            .groupBy("_pid", *by, value_col)
-            .agg(F.count(F.lit(1)).alias("_c"))
-        )
-        local_w = Window.partitionBy("_pid", *by).orderBy(value_col)
-        local = parts.withColumn("_lcum", F.sum("_c").over(local_w))
-        ptot = local.groupBy("_pid", *by).agg(F.sum("_c").alias("_pc"))
-        off_w = Window.partitionBy(*by).orderBy("_pid").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        offs = ptot.withColumn(
-            "_off", F.coalesce(F.sum("_pc").over(off_w), F.lit(0))
-        )
-        cum = (
-            _null_safe_equi_join(
-                local,
-                offs.select("_pid", *by, "_off"),
-                ["_pid", *by],
-                hint_broadcast=True,
-            )
-            .withColumn("_cum", F.col("_lcum") + F.col("_off"))
-            .drop("_pid", "_lcum", "_off")
-        )
-        # group totals off the PINNED range-partitioned frame (an
-        # aggregate-sized cache read; deriving them from `counts` would
-        # re-run the distinct-count scan from the raw table). null-safe: a
-        # group whose key is NULL must keep its quantile row, exactly like
-        # the builtin percentile's groupBy semantics.
-        totals = parts.groupBy(*by).agg(F.sum("_c").alias("_n"))
-        joined = (
-            _null_safe_equi_join(cum, totals, list(by))
-            if by
-            else cum.crossJoin(broadcast(totals))
-        )
+    # Two exchanges, deliberately. The distinct-count aggregate keys on
+    # (by, value) — HIGH cardinality — so its hash exchange spreads the
+    # raw-row scan over every core with map-side tie-collapse; the
+    # window's (by) exchange then moves only the already-distinct rows.
+    # A shared single exchange on the GROUP keys alone (hash-partition
+    # first, reuse for aggregate + windows + final agg) was tried and
+    # REVERTED: with low-cardinality ``by`` it lands all raw rows on
+    # ≤|groups| tasks, so the heavy aggregate loses its parallelism and
+    # its partial (map-side) reduction — measured at 100× scale
+    # (sf10, back-to-back same-window A/B): executor CPU 78 → 112 s,
+    # wall 14 → 24 s for the IQR query. The second exchange is the
+    # cheap one (distinct rows only); the aggregate's width is what
+    # scales.
+    counts = vals.groupBy(*by, value_col).agg(F.count(F.lit(1)).alias("_c"))
+    w = Window.partitionBy(*by).orderBy(value_col)
+    cum = counts.withColumn("_cum", F.sum("_c").over(w))
+    # _n per group is the group's LAST cumulative count — a second
+    # window over the same partitioning (already sorted; no new
+    # exchange). The previous counts→totals aggregation re-evaluated
+    # the whole distinct-count scan a second time and joined it back.
+    joined = cum.withColumn("_n", F.max("_cum").over(Window.partitionBy(*by)))
     v = F.col(value_col).cast("double")
     prev = F.col("_cum") - F.col("_c")
     # Only a row whose (prev, _cum] position span contains some requested
@@ -300,9 +197,7 @@ def iqr_bounds(
     ``exact_quantiles`` pass over ``(by..., _kpi)``, and pivoted back to the
     wide ``{kpi}_lo/{kpi}_hi`` fence frame — so the reference's 13-KPI IQR
     cleaning costs one quantile pipeline, not 13 (the pivot's value list is
-    ``value_cols``, so no extra distinct scan and a stable schema). When
-    ``by`` is empty the melted groups are just the KPIs — few and huge — so
-    the pass uses the range-partitioned parallel cumsum (``wide_groups``)."""
+    ``value_cols``, so no extra distinct scan and a stable schema)."""
     assert value_cols, "iqr_bounds needs at least one value column"
     pairs = ", ".join(f"'{c}', cast(`{c}` as double)" for c in value_cols)
     melted = df.select(
@@ -314,7 +209,6 @@ def iqr_bounds(
         [0.25, 0.75],
         by=[*by, "_kpi"],
         out_cols=["_q1", "_q3"],
-        wide_groups=not by,
     )
     q1, q3 = F.col("_q1"), F.col("_q3")
     fenced = q.select(
@@ -420,49 +314,3 @@ def asof_join_backward(
         out = out.withColumn(c, F.col("_rvals")[c])
     return out.drop("_t", "_side", "_rvals")
 
-
-def salted_equi_join(
-    left: DataFrame,
-    right: DataFrame,
-    keys: Sequence[str],
-    salt: int = 8,
-    how: str = "inner",
-    extra_condition=None,  # callable (salted_left, salted_right) -> Column
-) -> DataFrame:
-    """Equi join for LOW-CARDINALITY or hot keys: salt the larger ``left``
-    side into ``salt`` sub-keys, replicate the ``right`` side once per salt
-    value, and join on (keys..., salt).
-
-    A plain shuffle join on k distinct keys runs at most k reduce tasks no
-    matter how many executors exist — a 15-key join on a 1000-core cluster
-    leaves 985 cores idle (and AQE skew splitting only helps the SORT-side
-    imbalance, not the task-count ceiling, when every key is equally big).
-    Salting multiplies usable parallelism to k·salt at the cost of
-    replicating the smaller side ``salt`` times — the standard trade for
-    hot/low-cardinality equi keys. Join semantics are preserved exactly for
-    inner/left joins: each left row carries ONE deterministic salt value
-    (uniform via xxhash64 over the whole row's monotonically-unique id), and
-    every right row exists under every salt value, so each matching pair
-    meets exactly once. ``extra_condition`` (e.g. a range predicate) is a
-    callable ``(salted_left, salted_right) -> Column`` so its refs bind to
-    the frames actually joined."""
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_equi_join supports inner/left, got {how!r}")
-    sl = left.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt))
-    )
-    sr = right.withColumn(
-        "_salt", F.explode(F.lit(list(range(salt))))
-    )
-    on = [sl[k] == sr[k] for k in keys] + [sl["_salt"] == sr["_salt"]]
-    cond = on[0]
-    for c in on[1:]:
-        cond = cond & c
-    if extra_condition is not None:
-        cond = cond & extra_condition(sl, sr)
-    out = sl.join(sr, cond, how)
-    # drop the salt and the right side's duplicate key columns
-    out = out.drop(sl["_salt"]).drop(sr["_salt"])
-    for k in keys:
-        out = out.drop(sr[k])
-    return out

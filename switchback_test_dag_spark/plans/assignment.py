@@ -4,15 +4,17 @@ The reference draws assignments with Python RNGs on the driver
 (``method_evaluation.ipynb:226-233`` ``{unit: choice(['A','B'])}``;
 ``deep_dive_analyses.ipynb:371-460`` balanced ``rng.choice(replace=False)`` maps;
 ``counterpart_method.ipynb:358-383``). A driver-side dict cannot scale to millions
-of units, so every strategy here is a *deterministic column expression* keyed on
-``xxhash64(unit, seed)``:
+of units, so every strategy here is a *deterministic column expression*:
 
 - fully distributed (no driver round-trip, no shuffle for the map itself);
-- reproducible: the same (unit, seed) always maps to the same arm, on any cluster
-  size, which is what makes permutation inference (stats/permutation.py) and
-  oracle re-runs deterministic;
-- for the *balanced* strategy, a per-day ``row_number`` over hash order emulates
-  drawing from a balanced urn without replacement.
+- reproducible: the same inputs always map to the same arm, on any cluster size;
+- for the *balanced* strategy, a per-day ``row_number`` over ``xxhash64(unit,
+  seed)`` order emulates drawing from a balanced urn without replacement.
+
+The seeded Bernoulli strategies (T12 per time unit, T16 per (time unit, city))
+are ``stats.permutation.portable_arm``, the md5 arm that DuckDB reproduces
+exactly; the registry's ``assignment_battery`` and ``assign_spatial_battery``
+compute them.
 
 Each function either tags a unit-level DataFrame or returns a column expression
 to attach to the fact table directly.
@@ -24,23 +26,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 ON, OFF = "On", "Off"
-
-
-def _unit_hash(unit: Column, seed: int) -> Column:
-    """Uniform-ish value in [0, 1) derived from (unit, seed)."""
-    h = F.xxhash64(unit.cast("string"), F.lit(int(seed)))
-    # map signed 64-bit to [0,1): shift into non-negative then scale
-    return (h.cast("double") / F.lit(float(2**64))) + F.lit(0.5)
-
-
-def random_assignment(
-    unit: Column | str, seed: int, p: float = 0.5, labels: tuple[str, str] = (ON, OFF)
-) -> Column:
-    """T12: independent Bernoulli(p) assignment per time unit (seeded)."""
-    unit = F.col(unit) if isinstance(unit, str) else unit
-    return F.when(_unit_hash(unit, seed) < F.lit(p), F.lit(labels[0])).otherwise(
-        F.lit(labels[1])
-    )
 
 
 def balanced_assignment(
@@ -91,20 +76,6 @@ def counterpart_assignment(
     city = F.col(city) if isinstance(city, str) else city
     a = F.col(assignment) if isinstance(assignment, str) else assignment
     return F.when(city == F.lit(counterpart_city), invert(a, labels)).otherwise(a)
-
-
-def time_city_assignment(
-    unit: Column | str,
-    city: Column | str,
-    seed: int,
-    p: float = 0.5,
-    labels: tuple[str, str] = (ON, OFF),
-) -> Column:
-    """T16: independent assignment per (time unit, city) pair."""
-    unit = F.col(unit) if isinstance(unit, str) else unit
-    city = F.col(city) if isinstance(city, str) else city
-    key = F.concat_ws("|", unit.cast("string"), city.cast("string"))
-    return random_assignment(key, seed, p, labels)
 
 
 def zone_flip(

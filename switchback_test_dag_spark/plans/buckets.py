@@ -1,8 +1,6 @@
 """Time-unit bucketing — the switchback experiment's unit of randomization.
 
 Reference semantics:
-- ``dt.floor('H'/'4H'/'1D')`` on order timestamps (``switchback_analysis.ipynb:158``,
-  ``method_evaluation.ipynb:~397``) → arbitrary-width tumbling windows.
 - ``hr_of_day = hour + minute/60 + second/3600`` (``deep_dive_analyses.ipynb:507``).
 - ``pd.cut(np.arange(0,25,Δ), right=False)`` half-open hour-of-day intervals for
   Δ ∈ {0.25, 0.5, 1..12, 24} (``deep_dive_analyses.ipynb:371-462``,
@@ -19,19 +17,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def time_bucket(ts, minutes: float) -> Column:
-    """Floor ``ts`` to a tumbling window of ``minutes`` (≈ pandas ``dt.floor``).
-
-    Windows align to the Unix epoch (consistent with pandas' floor for divisors
-    of a day). Returns a timestamp column marking the bucket start.
-    """
-    ts = F.col(ts) if isinstance(ts, str) else ts
-    secs = int(round(minutes * 60))
-    return F.timestamp_seconds(
-        (F.floor(F.unix_timestamp(ts) / F.lit(secs)) * F.lit(secs)).cast("long")
-    )
-
-
 def hr_of_day(ts) -> Column:
     """Fractional hour of day: ``hour + minute/60 + second/3600``."""
     ts = F.col(ts) if isinstance(ts, str) else ts
@@ -42,17 +27,13 @@ def hr_of_day(ts) -> Column:
     )
 
 
-def hr_interval(ts, delta_hours: float, labeled: bool = True) -> Column:
-    """Half-open hour-of-day interval of width ``delta_hours`` (``pd.cut``
-    ``right=False`` equivalent).
-
-    Returns the interval label ``'[start, end)'`` when ``labeled`` (matching the
-    reference's printable interval semantics) or the integer bucket index.
+def hr_interval(ts, delta_hours: float) -> Column:
+    """Half-open hour-of-day interval label ``'[start, end)'`` of width
+    ``delta_hours`` (``pd.cut`` ``right=False`` equivalent, matching the
+    reference's printable interval semantics).
     """
     ts = F.col(ts) if isinstance(ts, str) else ts
     idx = F.floor(hr_of_day(ts) / F.lit(delta_hours)).cast("int")
-    if not labeled:
-        return idx
     start = idx.cast("double") * F.lit(delta_hours)
     end = start + F.lit(delta_hours)
     fmt = lambda c: F.format_number(c, 2)  # noqa: E731

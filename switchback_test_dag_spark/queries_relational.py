@@ -194,9 +194,7 @@ def temporal_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
        ceiling), each event row matching ≤ window-width date groups instead
        of every individual order. Totals are then weighted integer-exact
        sums, accumulated in DECIMAL(38,0) for K² headroom (BIGINT micro sums
-       overflowed at 100×). The salted variant of the same shape (for when
-       the compressed side ISN'T broadcastable) is
-       ``salted_range_join_totals``."""
+       overflowed at 100×)."""
     ev_date = F.date_add(
         F.lit("1995-01-01").cast("date"),
         (F.expr("ts_ns div 86400000000000") % 2400).cast("int"),
@@ -239,88 +237,6 @@ def temporal_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(
             F.sum("n_orders").cast("long").alias("n_pairs"),
-            spark_wide_total_from_micro("micro_sum").alias("total"),
-        )
-    )
-
-
-@query(
-    "salted_range_join_totals",
-    """WITH e AS (
-         SELECT event_type, user_id,
-                CAST('1995-01-01' AS DATE)
-                + CAST(epoch_ns(ts) // 86400000000000 % 2400 AS INTEGER) AS ev_date
-         FROM events WHERE user_id BETWEEN 0 AND 14
-       )
-       SELECT e.event_type, e.user_id, count(*) AS n_pairs,
-              ((sum(CAST(round((o.o_totalprice) * 1000000) AS BIGINT)) + 5000) // 10000) / 100.0 AS total
-       FROM e JOIN orders o
-         ON o.o_custkey % 15 = e.user_id
-        AND CAST(o.o_orderdate AS DATE) BETWEEN e.ev_date - 2 AND e.ev_date + 2
-       GROUP BY e.event_type, e.user_id""",
-)
-def salted_range_join_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The BOTH-SIDES-BIG variant of J5's low-cardinality temporal join,
-    executed through ``operators.relational.salted_equi_join`` — plus the
-    aggregate-pushdown rewrite that makes it survive data growth. Because
-    this shape's candidate volume grows ~K² under K× data (fixed-cardinality
-    key: K× orders match K× events per key — measured 14.8× wall at 10×
-    data in the expanded form), the orders side is pre-aggregated BELOW the
-    join to (jk, o_date) grain carrying (n_orders, exact micro-unit sum):
-    the join then expands events × compressed-date-groups (bounded by
-    15 keys × distinct dates, independent of |orders|), and the final
-    per-(event_type, user_id) totals are weighted sums — integer-exact, so
-    the result is IDENTICAL to the expanded join's. The events side (the
-    remaining big side) is salted into 8 sub-keys and the compressed side
-    replicated per salt, lifting the 15-task reduce ceiling to 120. Both
-    claims are pinned by the oracle, which stays the NAIVE plain unsalted
-    expanded join in DuckDB, value-hashed at (event_type, user_id) grain:
-    a pair met twice under salting, or a pushdown that miscounts a weight,
-    breaks the hash."""
-    from switchback_test_dag_spark.operators.relational import salted_equi_join
-
-    ev_date = F.date_add(
-        F.lit("1995-01-01").cast("date"),
-        (F.expr("ts_ns div 86400000000000") % 2400).cast("int"),
-    )
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("user_id").between(0, 14))
-        .select(
-            "event_type",
-            F.col("user_id").alias("jk"),
-            F.date_sub(ev_date, 2).alias("win_lo"),
-            F.date_add(ev_date, 2).alias("win_hi"),
-        )
-    )
-    orders_agg = (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            (F.col("o_custkey") % 15).alias("jk"),
-            F.to_date("o_orderdate").alias("o_date"),
-            F.expr("CAST(round(o_totalprice * 1000000, 0) AS BIGINT)").alias(
-                "micro"
-            ),
-        )
-        .groupBy("jk", "o_date")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum("micro").alias("micro_sum"),
-        )
-    )
-    joined = salted_equi_join(
-        ev,
-        orders_agg,
-        keys=["jk"],
-        salt=8,
-        extra_condition=lambda l, r: r["o_date"].between(l["win_lo"], l["win_hi"]),
-    )
-    return (
-        joined.groupBy("event_type", F.col("jk").alias("user_id"))
-        .agg(
-            F.sum("n_orders").cast("long").alias("n_pairs"),
-            # same K^2-headroom reasoning as temporal_range_join: accumulate
-            # the pushed-down micro partials in DECIMAL(38,0)
             spark_wide_total_from_micro("micro_sum").alias("total"),
         )
     )

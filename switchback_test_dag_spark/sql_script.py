@@ -8,7 +8,7 @@ runner:
 
 1. strips comments, splits the script on ``;`` outside string literals;
 2. interprets ``DECLARE name TYPE`` / ``SET name = value`` statements into a
-   variable environment (Python values can also be injected via ``variables``);
+   variable environment;
 3. substitutes each variable occurrence — including the BigQuery-ism
    ``IN UNNEST(name)`` — with a literal SQL rendering;
 4. turns ``CREATE OR REPLACE TABLE name AS select`` into a temp view (staged
@@ -120,27 +120,11 @@ def substitute_variables(stmt: str, env: dict) -> str:
     return stmt
 
 
-def run_script(
-    spark: SparkSession,
-    script: str,
-    variables: dict | None = None,
-    materialize_dir: str | None = None,
-) -> DataFrame | None:
+def run_script(spark: SparkSession, script: str) -> DataFrame | None:
     """Execute a multi-statement script; returns the last statement's DataFrame
-    (or None for a script of pure DDL/SET statements).
-
-    ``materialize_dir=None`` (default) keeps CREATE OR REPLACE TABLE stages as
-    lazy temp views — one fused Catalyst plan end-to-end, the right shape when
-    the script runs as a single job. With a directory, every CREATE OR REPLACE
-    TABLE stage is PHYSICALLY materialized under
-    ``<materialize_dir>/<table>`` through the atomic snapshot-pointer
-    protocol (:func:`switchback_test_dag_spark.io.atomic_overwrite`), and
-    downstream statements read the COMMITTED files — the reference warehouse's
-    ACID CREATE OR REPLACE semantics
-    (`data_extraction_queries_automated_script.sql:7,24`): a stage that dies
-    mid-write leaves the table's previous version live and complete for the
-    next reader, never a truncated directory."""
-    env: dict = dict(variables or {})
+    (or None for a script of pure DDL/SET statements). CREATE OR REPLACE TABLE
+    stages stay lazy temp views — one fused Catalyst plan end-to-end."""
+    env: dict = {}
     last: DataFrame | None = None
     for stmt in split_statements(strip_comments(script)):
         m = _DECLARE_RE.match(stmt)
@@ -156,19 +140,7 @@ def run_script(
         if m:
             name, select = m.group(1), m.group(2)
             last = spark.sql(select)
-            view = name.split(".")[-1]
-            if materialize_dir is not None:
-                import os as _os
-
-                from switchback_test_dag_spark.io import (
-                    atomic_overwrite,
-                    read_committed,
-                )
-
-                table_path = _os.path.join(materialize_dir, view)
-                atomic_overwrite(last, table_path)
-                last = read_committed(spark, table_path)
-            last.createOrReplaceTempView(view)
+            last.createOrReplaceTempView(name.split(".")[-1])
         else:
             last = spark.sql(stmt)
     return last

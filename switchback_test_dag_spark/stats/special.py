@@ -116,8 +116,13 @@ def t_ppf_two_sided(alpha, dof) -> np.ndarray:
     for _ in range(120):
         mid = 0.5 * (lo + hi)
         above = t_two_sided_p(mid, dof) > alpha
-        lo = np.where(above, mid, lo)
-        hi = np.where(above, hi, mid)
+        new_lo = np.where(above, mid, lo)
+        new_hi = np.where(above, hi, mid)
+        # a step that leaves the bracket unchanged repeats forever, so
+        # stopping here returns what the remaining steps would
+        if np.array_equal(new_lo, lo) and np.array_equal(new_hi, hi):
+            break
+        lo, hi = new_lo, new_hi
     return 0.5 * (lo + hi)
 
 

@@ -54,12 +54,9 @@ def bpe_token_count(text_col: str) -> Column:
     return F.expr(f"size(regexp_extract_all({text_col}, '{BPE_TOKEN_RE}', 0))")
 
 
-def _array_ngrams_sql(
-    arr_sql: str, n: int, sep: str = " ", distinct: bool = True
-) -> str:
-    """n-gram array over an array expression via a zip_with chain of slices
-    (distinct by default — shingle semantics; ``distinct=False`` keeps every
-    occurrence).
+def _array_ngrams_sql(arr_sql: str, n: int, sep: str = " ") -> str:
+    """Distinct n-gram array (shingle semantics) over an array expression via
+    a zip_with chain of slices.
 
     Performance-critical shape, two regimes:
 
@@ -100,9 +97,10 @@ def _array_ngrams_sql(
                 f"zip_with({acc}, slice({arr_sql}, {k}, {ln}), "
                 f"(a, b) -> concat(a, '{sep}', b))"
             )
-    if distinct:
-        acc = f"array_distinct({acc})"
-    return f"CASE WHEN size({arr_sql}) >= {n} THEN {acc} ELSE array() END"
+    return (
+        f"CASE WHEN size({arr_sql}) >= {n} THEN array_distinct({acc}) "
+        "ELSE array() END"
+    )
 
 
 def word_shingles(text_col: str, n: int = 3) -> Column:

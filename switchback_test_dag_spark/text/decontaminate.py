@@ -2,8 +2,8 @@
 overlap a benchmark (evaluation) set, the stage every published pretraining
 pipeline runs before training (the n-gram-collision method of Brown et al.
 2020 Appendix C / Chowdhery et al. 2022 §6; public method: a document is
-contaminated when it shares at least ``min_hits`` distinct word ``n``-grams
-with any eval document; n = 8–13 in the papers).
+contaminated when it shares at least one word ``n``-gram with any eval
+document; n = 8–13 in the papers).
 
 Scale shape (the 100 TB design point): the two sides are wildly asymmetric —
 benchmarks are megabytes, the corpus is the 100 TB side — so the plan must
@@ -20,10 +20,6 @@ never shuffle the corpus on gram:
 Nothing in the plan carries a corpus×corpus or corpus-shuffle term; explode
 amplification is bounded by tokens-per-document, and per-doc ``array_distinct``
 (built into the shingle expression) caps repeated grams inside one document.
-
-``broadcast_eval=False`` exists for the degenerate case of an eval set too
-big to broadcast (then the gram join becomes a plain shuffle hash join —
-still linear, just not map-side).
 """
 
 from __future__ import annotations
@@ -53,28 +49,23 @@ def contaminated_ids(
     id_col: str,
     text_col: str,
     n: int = 13,
-    min_hits: int = 1,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
-    """Ids of corpus documents sharing ≥ ``min_hits`` DISTINCT word n-grams
-    with the eval set, with the per-doc hit count
-    (``id_col``, ``n_eval_grams``). Grams are distinct per document, so
+    """Ids of corpus documents sharing at least one word n-gram with the
+    eval set, with the per-doc hit count (``id_col``, ``n_eval_grams``). Grams are distinct per document, so
     ``n_eval_grams`` counts distinct contaminated grams — a repeated gram in
     one document is one hit (the papers' collision semantics).
 
     Short (< n tokens) and NULL-text corpus documents cannot be contaminated
     and never appear in the output."""
     ev = eval_ngrams(eval_df, text_col, n).withColumnRenamed("gram", _GRAM)
-    if broadcast_eval:
-        ev = broadcast(ev)
     corpus_grams = docs.select(
         F.col(id_col), F.explode(word_shingles(text_col, n)).alias(_GRAM)
     )
     return (
-        corpus_grams.join(ev, _GRAM)
+        corpus_grams.join(broadcast(ev), _GRAM)
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_eval_grams"))
-        .filter(F.col("n_eval_grams") >= min_hits)
+        .filter(F.col("n_eval_grams") >= 1)
     )
 
 
@@ -84,13 +75,9 @@ def decontaminate(
     id_col: str,
     text_col: str,
     n: int = 13,
-    min_hits: int = 1,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """The corpus minus contaminated documents (schema unchanged). The anti
     side is the contaminated-id frame — small by construction, so AQE turns
     the removal into a broadcast anti join."""
-    bad = contaminated_ids(
-        docs, eval_df, id_col, text_col, n, min_hits, broadcast_eval
-    ).select(id_col)
+    bad = contaminated_ids(docs, eval_df, id_col, text_col, n).select(id_col)
     return docs.join(bad, id_col, "left_anti")

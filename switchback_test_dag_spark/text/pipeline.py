@@ -48,7 +48,6 @@ def clean_corpus(
     segmenter: Column,
     quality_min: float = 0.5,
     boiler_min_df: int = 20,
-    rejoin_sep: str = " ",
     shingle_n: int = 3,
     jaccard_threshold: float = 0.85,
     eval_df: DataFrame | None = None,
@@ -68,7 +67,7 @@ def clean_corpus(
     policies work too — segmentation stays with the caller, as in
     ``text/lines``). The segment stage drops every segment whose document
     frequency is ≥ ``boiler_min_df`` (``lines.drop_boilerplate``); scrubbed
-    text is the surviving segments joined with ``rejoin_sep``, and documents
+    text is the surviving segments joined with single spaces, and documents
     scrubbed to nothing are dropped. The stage runs BEFORE fingerprinting —
     the CCNet order pin (scrubbing changes fingerprints), load-bearing-tested
     in ``tests/test_lines_dsir.py``.
@@ -84,7 +83,7 @@ def clean_corpus(
     scrubbed = pin(
         kept_segs.select(
             *[c for c in kept_segs.columns if c != "_cc_segs"],
-            F.concat_ws(rejoin_sep, "_cc_segs").alias(text_col),
+            F.concat_ws(" ", "_cc_segs").alias(text_col),
         ).filter(F.col(text_col) != "")
     )
     kept1 = TD.exact_dedup(scrubbed, id_col, text_col)

@@ -1,7 +1,7 @@
 """Train/eval decontamination: hand-computed collision semantics on tiny
-frames (exact-n-gram sharing, min_hits, short/NULL-text docs), plan shape
-(eval side broadcast, no corpus-side shuffle before the gram join), and an
-in-process DuckDB replay on the real fixture table."""
+frames (exact-n-gram sharing, distinct hit counts, short/NULL-text docs),
+plan shape (eval side broadcast, no corpus-side shuffle before the gram
+join), and an in-process DuckDB replay on the real fixture table."""
 
 from __future__ import annotations
 
@@ -44,7 +44,7 @@ def test_collision_semantics_hand_computed(spark):
     assert kept == {2, 3, 4, 5}
 
 
-def test_min_hits_threshold(spark):
+def test_hit_counts_are_distinct_grams(spark):
     eval_df = _docs(spark, [(100, "a b c d e f")])  # grams: abcd, bcde, cdef
     docs = _docs(
         spark,
@@ -56,9 +56,9 @@ def test_min_hits_threshold(spark):
     )
     hits = {
         r["id"]: r["n_eval_grams"]
-        for r in contaminated_ids(docs, eval_df, "id", "text", n=4, min_hits=2).collect()
+        for r in contaminated_ids(docs, eval_df, "id", "text", n=4).collect()
     }
-    assert hits == {1: 3, 2: 2}
+    assert hits == {1: 3, 2: 2, 3: 1}
 
 
 def test_empty_and_null_eval_side(spark):

@@ -216,18 +216,6 @@ def test_zone_flip_and_invert(spark):
         assert r["f"] == expected
 
 
-def test_time_city_assignment_varies_by_city(spark):
-    df = spark.range(200).select(
-        F.col("id").alias("unit"), F.lit("X").alias("cx"), F.lit("Y").alias("cy")
-    )
-    out = df.select(
-        A.time_city_assignment("unit", "cx", seed=1).alias("ax"),
-        A.time_city_assignment("unit", "cy", seed=1).alias("ay"),
-    ).collect()
-    diff = sum(1 for r in out if r["ax"] != r["ay"])
-    assert 40 < diff < 160  # independent-ish across cities
-
-
 def test_crse_from_cluster_moments_matches_row_level(events):
     """The moment-collapsed CRSE used by the 4-method sweep must agree with
     the row-level crse_ols fit (same CR1 algebra, fact-row path) for every

@@ -127,32 +127,6 @@ def test_atomic_overwrite_crash_leaves_old_table_live(spark, tmp_path, monkeypat
     assert "v0000000002" in deleted and "v0000000001" in deleted
 
 
-def test_run_script_materializes_stages_atomically(spark, sf_dir, tmp_path):
-    """run_script(materialize_dir=...): CREATE OR REPLACE TABLE stages land
-    as committed snapshot tables, downstream statements read the committed
-    files, and re-running replaces each stage atomically (version 2)."""
-    from switchback_test_dag_spark.io import (
-        current_version,
-        load_table,
-        read_committed,
-    )
-    from switchback_test_dag_spark.sql_script import run_script
-
-    for name in ("region", "nation"):
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    script = """
-    CREATE OR REPLACE TABLE proj.ds.stage1 AS
-      SELECT n_regionkey, count(*) AS n FROM nation GROUP BY n_regionkey;
-    SELECT r_name, n FROM stage1 JOIN region ON n_regionkey = r_regionkey;
-    """
-    out = run_script(spark, script, materialize_dir=str(tmp_path))
-    assert out.count() == 5
-    assert current_version(str(tmp_path / "stage1")) == "v0000000001"
-    run_script(spark, script, materialize_dir=str(tmp_path))
-    assert current_version(str(tmp_path / "stage1")) == "v0000000002"
-    assert read_committed(spark, str(tmp_path / "stage1")).count() == 5
-
-
 def test_vacuum_keep_counts_previous_committed_not_orphans(spark, tmp_path):
     """vacuum_versions(keep=2) keeps the current version plus ONE previous
     committed version; an orphaned staging dir NEWER than the pointer never
@@ -194,40 +168,3 @@ def test_atomic_overwrite_refuses_version_collision(spark, tmp_path, monkeypatch
         sio.atomic_overwrite(spark.createDataFrame([(9,)], "id long"), path)
     assert sio.current_version(path) == "v0000000002"
     assert {r.id for r in sio.read_committed(spark, path).collect()} == {2}
-
-
-def test_read_committed_time_travel(spark, tmp_path):
-    """version= pins a past snapshot (time travel within un-vacuumed
-    versions); versions newer than the pointer are refused as uncommitted
-    staging, vacuumed versions raise FileNotFoundError."""
-    import os
-
-    import switchback_test_dag_spark.io as sio
-
-    path = str(tmp_path / "tbl")
-    for v in (1, 2):
-        sio.atomic_overwrite(spark.createDataFrame([(v,)], "id long"), path)
-    assert {r.id for r in sio.read_committed(spark, path).collect()} == {2}
-    old = sio.read_committed(spark, path, version="v0000000001")
-    assert {r.id for r in old.collect()} == {1}
-    # staging dir newer than the pointer is not a snapshot
-    os.makedirs(os.path.join(path, "v0000000003"))
-    with pytest.raises(ValueError, match="uncommitted staging"):
-        sio.read_committed(spark, path, version="v0000000003")
-    sio.vacuum_versions(path)
-    with pytest.raises(FileNotFoundError, match="vacuumed"):
-        sio.read_committed(spark, path, version="v0000000001")
-
-
-def test_read_committed_rejects_malformed_version_name(spark, tmp_path):
-    """A non-canonical version name ('v1' instead of zero-padded) must fail
-    loudly as malformed — the lexicographic newer-than-pointer guard would
-    otherwise classify it as an uncommitted staging dir, a misleading
-    error for what is really a caller typo."""
-    import switchback_test_dag_spark.io as sio
-
-    path = str(tmp_path / "tbl")
-    sio.atomic_overwrite(spark.createDataFrame([(1,)], "id long"), path)
-    with pytest.raises(ValueError, match="malformed version name"):
-        sio.read_committed(spark, path, version="v1")
-

@@ -113,7 +113,8 @@ def test_exact_quantiles_matches_builtin_grouped(spark):
 
 
 def test_exact_quantiles_matches_builtin_global(spark):
-    """The by=() branch (range-partitioned parallel cumsum) must agree too."""
+    """by=() (one global group, a running-sum window with no partition keys)
+    must agree too."""
     import random
 
     rng = random.Random(11)
@@ -187,9 +188,8 @@ def test_iqr_bounds_single_pass_any_kpi_width(spark):
 
 
 def test_exact_quantiles_null_group_key_kept(spark):
-    """A NULL group key is a group (groupBy semantics): both cumsum strategies
-    must emit its quantile row — the internal by-key joins are null-safe, so
-    the NULL group cannot vanish the way a plain equi-join would drop it."""
+    """A NULL group key is a group (groupBy semantics): exact_quantiles must
+    emit its quantile row, as the builtin percentile does."""
     import random
 
     from switchback_test_dag_spark.operators.relational import exact_quantiles
@@ -206,41 +206,13 @@ def test_exact_quantiles_null_group_key_kept(spark):
         ).collect()
     }
     assert None in ref
-    for wide in (False, True):
-        got = {
-            r["g"]: [r[f"q{i}"] for i in range(len(probs))]
-            for r in exact_quantiles(df, "v", probs, by=["g"], wide_groups=wide).collect()
-        }
-        assert set(got) == set(ref) == {None, "a", "b"}, f"wide_groups={wide}"
-        for g in ref:
-            assert got[g] == ref[g], (wide, g)
-
-
-def test_exact_quantiles_wide_groups_matches_grouped_window(spark):
-    """wide_groups=True (range-partitioned parallel cumsum, now generalized to
-    grouped quantiles) must agree with the per-group-window strategy exactly."""
-    import random
-
-    from switchback_test_dag_spark.operators.relational import exact_quantiles
-
-    rng = random.Random(5)
-    rows = [
-        (g, rng.uniform(-10, 10))
-        for g in ("a", "b")
-        for _ in range(120 if g == "a" else 37)
-    ]
-    df = spark.createDataFrame(rows, "g string, v double")
-    probs = [0.1, 0.25, 0.5, 0.75, 1.0]
-    kw = dict(by=["g"], out_cols=[f"q{i}" for i in range(len(probs))])
-    narrow = {r["g"]: r for r in exact_quantiles(df, "v", probs, **kw).collect()}
-    wide = {
-        r["g"]: r
-        for r in exact_quantiles(df, "v", probs, wide_groups=True, **kw).collect()
+    got = {
+        r["g"]: [r[f"q{i}"] for i in range(len(probs))]
+        for r in exact_quantiles(df, "v", probs, by=["g"]).collect()
     }
-    assert set(narrow) == set(wide) == {"a", "b"}
-    for g in narrow:
-        for i in range(len(probs)):
-            assert narrow[g][f"q{i}"] == wide[g][f"q{i}"], (g, i)
+    assert set(got) == set(ref) == {None, "a", "b"}
+    for g in ref:
+        assert got[g] == ref[g], g
 
 
 def test_iqr_filter_keeps_all_null_groups(spark):

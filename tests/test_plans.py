@@ -152,15 +152,6 @@ def test_lineitem_stats_shares_cell_frame(spark, sf_dir):
         release_all()
 
 
-def test_salted_join_keys_include_salt(spark, sf_dir):
-    # the salted low-cardinality join must key on (jk, _salt) — widening the
-    # reduce-task ceiling — and stay an equi join (never cartesian/NLJ)
-    plan = _plan(spark, "salted_range_join_totals", sf_dir)
-    assert "_salt" in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_cleaning_pipeline_plan_is_jvm_and_broadcasts_eval(spark, sf_dir):
     # the composed cleaning pipeline (quality -> boilerplate -> dedup ->
     # near-dup -> decontamination) must stay JVM-side end to end, keep

@@ -208,7 +208,7 @@ def _ref_quantile(vals, p):
 )
 def test_exact_quantiles_property(spark, rows, probs):
     """Generated inputs biased toward ties, NULLs, single-value and
-    empty-after-NULL groups: both cumsum strategies must agree with the
+    empty-after-NULL groups: exact_quantiles must agree with the
     pure-Python sorted-multiset reference to 1 ulp on every group, and
     groups with no non-NULL values must yield no row."""
     import math
@@ -227,19 +227,15 @@ def test_exact_quantiles_property(spark, rows, probs):
     for g, vals in by_g.items():
         want[g] = [_ref_quantile(vals, p) for p in probs]
 
-    for wide in (False, True):
-        got = {
-            r["g"]: [r[f"q{i}"] for i in range(len(probs))]
-            for r in exact_quantiles(
-                df, "v", probs, by=["g"], wide_groups=wide
-            ).collect()
-        }
-        assert set(got) == set(want), f"wide_groups={wide}"
-        for g in want:
-            for a, b in zip(got[g], want[g]):
-                assert a == b or abs(a - b) <= math.ulp(max(abs(a), abs(b))), (
-                    wide,
-                    g,
-                    got[g],
-                    want[g],
-                )
+    got = {
+        r["g"]: [r[f"q{i}"] for i in range(len(probs))]
+        for r in exact_quantiles(df, "v", probs, by=["g"]).collect()
+    }
+    assert set(got) == set(want)
+    for g in want:
+        for a, b in zip(got[g], want[g]):
+            assert a == b or abs(a - b) <= math.ulp(max(abs(a), abs(b))), (
+                g,
+                got[g],
+                want[g],
+            )

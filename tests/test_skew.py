@@ -81,42 +81,3 @@ def test_aqe_splits_hot_key_fact_join(spark):
         assert "skew=true" in plan, "AQE skew-join split did not engage"
         # sanity: the join result is still exact under the split
         assert fact.join(dim, "zone").count() == 120_000
-
-
-def test_salted_join_equals_plain_join(spark):
-    """salted_equi_join is a pure parallelism transform: identical multiset of
-    output rows to the plain join (inner AND left, with a range
-    extra_condition), while the shuffle keys gain the salt column — lifting
-    the k-task ceiling a k-distinct-key join has on a big cluster."""
-    from switchback_test_dag_spark.operators.relational import salted_equi_join
-
-    left = spark.range(0, 20_000).select(
-        (F.col("id") % 15).alias("k"),
-        F.col("id").alias("lid"),
-        (F.col("id") % 100).alias("lv"),
-    )
-    right = spark.range(0, 3_000).select(
-        (F.col("id") % 20).alias("k"),  # keys 15..19 match nothing
-        F.col("id").alias("rid"),
-        (F.col("id") % 100).alias("rv"),
-    )
-
-    def rng(sl, sr):
-        return F.abs(sl["lv"] - sr["rv"]) <= 3
-
-    for how in ("inner", "left"):
-        plain = left.join(
-            right,
-            (left["k"] == right["k"]) & (F.abs(left["lv"] - right["rv"]) <= 3),
-            how,
-        ).select(left["k"], "lid", "rid")
-        salted = salted_equi_join(
-            left, right, ["k"], salt=4, how=how, extra_condition=rng
-        ).select("k", "lid", "rid")
-        a = sorted(map(tuple, plain.collect()))
-        b = sorted(map(tuple, salted.collect()))
-        assert a == b, f"{how} join mismatch: {len(a)} vs {len(b)} rows"
-
-    plan = salted_equi_join(left, right, ["k"], salt=4)._jdf.queryExecution(
-    ).executedPlan().toString()
-    assert "_salt" in plan  # the shuffle key space is k × salt

@@ -61,13 +61,3 @@ def test_run_script_stages(spark):
         """,
     )
     assert result.collect()[0]["n"] == 5
-
-
-def test_run_script_injected_variables(spark):
-    spark.range(10).createOrReplaceTempView("src")
-    result = run_script(
-        spark,
-        "SELECT count(*) AS n FROM src WHERE id IN UNNEST(ids)",
-        variables={"ids": [1, 2, 3]},
-    )
-    assert result.collect()[0]["n"] == 3

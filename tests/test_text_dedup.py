@@ -170,12 +170,11 @@ def test_array_ngrams_regimes_identical_with_null_elements(spark):
         [(["a", None, "b", "c"],), (["x", "y"],), ([],), (None,)],
         "arr array<string>",
     )
-    col_form = _array_ngrams_sql("arr", 2, " ", distinct=False)
+    col_form = _array_ngrams_sql("arr", 2, " ")
     # identity expression defeats the identifier fast-path -> chain regime
-    expr_form = _array_ngrams_sql("slice(arr, 1, size(arr))", 2, " ",
-                                  distinct=False)
+    expr_form = _array_ngrams_sql("slice(arr, 1, size(arr))", 2, " ")
     rows = df.selectExpr(f"{col_form} as a", f"{expr_form} as b").collect()
     for r in rows:
         assert r["a"] == r["b"], (r["a"], r["b"])
     # spot-check the NULL-propagation semantics themselves
-    assert rows[0]["a"] == [None, None, "b c"]
+    assert rows[0]["a"] == [None, "b c"]

@@ -45,7 +45,6 @@ def test_clean_corpus_end_to_end(spark):
         segmenter=_segmenter(),
         quality_min=0.5,
         boiler_min_df=3,
-        rejoin_sep="\n",
         shingle_n=3,
         jaccard_threshold=0.9,
         eval_df=eval_df,
@@ -69,7 +68,6 @@ def test_clean_corpus_end_to_end(spark):
         segmenter=_segmenter(),
         quality_min=0.5,
         boiler_min_df=3,
-        rejoin_sep="\n",
         jaccard_threshold=0.9,
     )
     rows2 = {r["doc_id"]: r["contaminated"] for r in out2.collect()}
@@ -80,7 +78,7 @@ def test_clean_corpus_partition_invariant(spark):
     docs, eval_df = _fix(spark)
     kw = dict(
         segmenter=_segmenter(), quality_min=0.5, boiler_min_df=3,
-        rejoin_sep="\n", jaccard_threshold=0.9, eval_df=eval_df, decon_n=2,
+        jaccard_threshold=0.9, eval_df=eval_df, decon_n=2,
     )
     a = {(r["doc_id"], r["text"], r["contaminated"])
          for r in clean_corpus(docs, "doc_id", "text", **kw).collect()}
@@ -92,9 +90,9 @@ def test_clean_corpus_partition_invariant(spark):
 def test_clean_corpus_dedup_policy_fingerprints_after_rejoin(spark):
     """The CCNet order pin holds for the dedup stage: fingerprints are
     computed on the REJOINED scrubbed text, so two raw texts with different
-    segmentations that rejoin equal ("x y" vs "x\\ny" with rejoin_sep " ")
-    collapse to the min id — raw-text fingerprinting would miss them. The
-    scrub is a no-op here (boiler_min_df above the two-document count), so
+    segmentations that rejoin equal ("x y" vs "x\\ny", rejoined with a
+    space) collapse to the min id — raw-text fingerprinting would miss them.
+    The scrub is a no-op here (boiler_min_df above the two-document count), so
     only the rejoin tells the texts apart from their raw forms."""
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta"), (2, "alpha beta\ngamma delta")],
@@ -107,7 +105,6 @@ def test_clean_corpus_dedup_policy_fingerprints_after_rejoin(spark):
         segmenter=_segmenter(),
         quality_min=0.0,
         boiler_min_df=3,
-        rejoin_sep=" ",
         jaccard_threshold=0.99,
     )
     rows = {r["doc_id"]: r["text"] for r in out.collect()}
@@ -141,7 +138,6 @@ def test_pretraining_recipe_clean_select_pack(spark):
             segmenter=_segmenter(),
             quality_min=0.0,
             boiler_min_df=30,  # "nav bar home" df=60 -> scrubbed everywhere
-            rejoin_sep="\n",
             jaccard_threshold=0.95,
             eval_df=eval_df,
             decon_n=2,
