@@ -7,13 +7,15 @@ The reference computes these with statsmodels' ``tt_ind_solve_power`` /
 and scales MDE by the affected-order share
 (`notebooks/CI_for_different_datasets.ipynb:1821` ``get_results``). statsmodels is
 not available here, so power uses the standard noncentral-t normal approximation
-on top of the exact central-t critical value from ``stats.special`` — accurate to
-~1e-3 against Monte Carlo for the n ranges the reference sweeps (hundreds+ of
-orders per arm); solvers invert it by bisection.
+on top of the exact central-t critical value (commons-math3's ``TDistribution``
+through ``stats.distributions.t_ppf_two_sided``) — accurate to ~1e-3 against
+Monte Carlo for the n ranges the reference sweeps (hundreds+ of orders per arm);
+solvers invert it by bisection.
 
 Scale split: all solvers are driver-side scalar math over *aggregated moments*
 (tests × KPIs rows). The only cluster work is the one-pass moment aggregation in
-``mde_from_moments`` — a single shuffle regardless of input size.
+``mde_from_moments`` — a single shuffle regardless of input size. The critical
+value is computed in the driver's JVM, so the solvers need an active session.
 """
 
 from __future__ import annotations
@@ -25,7 +27,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from switchback_test_dag_spark.stats.special import norm_sf, t_ppf_two_sided
+from switchback_test_dag_spark.stats.distributions import t_ppf_two_sided
 
 # z-quantiles used by the closed-form (normal-approximation) MDE columns; the
 # same literals appear in the DuckDB oracle of `mde_by_event_type`.
@@ -51,27 +53,32 @@ def _bisect(below, lo: float, hi: float, steps: int) -> float:
     return 0.5 * (lo + hi)
 
 
+def _norm_sf(z: float) -> float:
+    """Standard-normal survival function, exact via ``math.erfc``."""
+    return 0.5 * math.erfc(z / math.sqrt(2.0))
+
+
 def norm_ppf(q: float) -> float:
     """Standard-normal quantile via bisection on the exact erfc-based sf."""
     if not 0.0 < q < 1.0:
         raise ValueError(f"q must be in (0,1), got {q}")
-    return _bisect(lambda z: 1.0 - float(norm_sf(z)) < q, -40.0, 40.0, 200)
+    return _bisect(lambda z: 1.0 - _norm_sf(z) < q, -40.0, 40.0, 200)
 
 
 def _t_crit(n_per_group: float, alpha: float) -> float:
     """Two-sided central-t critical value at ``2n-2`` dof (NaN below n = 2)."""
     if n_per_group < 2:
         return float("nan")
-    return float(t_ppf_two_sided(alpha, 2.0 * n_per_group - 2.0))
+    return t_ppf_two_sided(alpha, 2.0 * n_per_group - 2.0)
 
 
 def _power(effect_size: float, n_per_group: float, t_crit: float) -> float:
     """``power_two_sample`` at a precomputed critical value, so callers that
-    hold ``n`` fixed run the ``t_ppf_two_sided`` bisection once."""
+    hold ``n`` fixed compute ``t_ppf_two_sided`` once."""
     if n_per_group < 2:
         return float("nan")
     ncp = abs(effect_size) * math.sqrt(n_per_group / 2.0)
-    return float(norm_sf(t_crit - ncp) + norm_sf(t_crit + ncp))
+    return _norm_sf(t_crit - ncp) + _norm_sf(t_crit + ncp)
 
 
 def power_two_sample(

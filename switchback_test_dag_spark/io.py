@@ -2,8 +2,8 @@
 
 The driver provides deterministic parquet tables under ``/root/testdata/sf*/``
 (TESTDATA.md): TPC-H-ish ``region nation customer supplier part orders lineitem``
-plus ``events`` (timestamped stream), ``documents`` (text corpus) and ``embeddings``
-(vector corpus). Every oracle-checked query in ``__spark_entry__.py`` reads these.
+plus ``events`` (timestamped stream) and ``documents`` (text corpus). Every
+oracle-checked query in ``__spark_entry__.py`` reads these.
 
 Reads are plain ``spark.read.parquet`` so Catalyst handles column pruning and filter
 pushdown; at warehouse scale the same call targets partitioned parquet/iceberg paths
@@ -27,7 +27,6 @@ TABLES = (
     "lineitem",
     "events",
     "documents",
-    "embeddings",
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -50,7 +50,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from switchback_test_dag_spark.io import TABLES, load_table
+from switchback_test_dag_spark.io import load_table
 from switchback_test_dag_spark.operators.domain import (
     FACT_GROSS_PROFIT,
     FACT_ORDER_TIME,
@@ -308,8 +308,7 @@ def elt_orders_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     parameterization, returning the cleaned fact's aggregate signature."""
     from switchback_test_dag_spark.sql_script import run_script
 
-    for t in TABLES:
-        if t in ("lineitem", "orders", "customer", "supplier", "nation"):
-            load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+    for t in ("lineitem", "orders", "customer", "supplier", "nation"):
+        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     raw_config_df(spark).createOrReplaceTempView("elt_raw_config")
     return run_script(spark, _SPARK_SCRIPT)

@@ -9,7 +9,7 @@ value-diffed against DuckDB, not just row-counted.
 The t critical value is a literal (1.959964, the normal/large-dof two-sided 5%
 point) inlined into BOTH plans: the oracle stays SQL-pure and the parity check
 is exact. Calibration against the *exact* t quantile for the actual dof is
-covered by tests/test_inference.py using stats.special.t_ppf_two_sided.
+covered by tests/test_inference.py using stats.distributions.t_ppf_two_sided.
 """
 
 from __future__ import annotations
@@ -564,8 +564,9 @@ _MDE_FORMULA = "(1.959963984540054 + 0.8416212335729143) * sd_raw * 2.0 / sqrt(n
 )
 def welch_mde_by_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T4 + T11 + T9 per event_type in one result: Welch's t statistic on
-    portable-hash-labeled events (SQL-expressible half; the t-tail p-value is
-    scipy-validated in tests/test_stats_reference.py) joined with the
+    portable-hash-labeled events (SQL-expressible half; the t-tail p-value,
+    which this query does not project, is validated against an independent
+    numpy reference in tests/test_stats_reference.py) joined with the
     closed-form minimum detectable effect from the same moment pass — the
     normal-approximation half of the reference's ``tt_ind_solve_power`` sweeps
     (switchback_analysis.ipynb:462-709); exact-t solvers/curves live
@@ -595,24 +596,23 @@ def welch_mde_by_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.stddev_samp(v).alias("sd"),
         ],
     )
-    w = welch_from_moments(
-        m, ["event_type"], passthrough=["n", "mean_value", "sd"], with_p=False
-    )
-    return (
-        w.filter((F.col("n_a") > 1) & (F.col("n_b") > 1))
-        .select(
-            "event_type",
-            "n_a",
-            "n_b",
-            F.round("mean_diff", 6).alias("mean_diff"),
-            F.round("se", 6).alias("se"),
-            F.round("t_stat", 6).alias("t_stat"),
-            F.round("dof", 6).alias("dof"),
-            "n",
-            F.round("mean_value", 6).alias("mean_value"),
-            F.round("sd", 6).alias("sd"),
-            *mde_closed_form_cols(F.col("n"), F.col("sd"), F.col("mean_value")),
-        )
+    # filter the moments, not the Welch output: Catalyst pushes no filter
+    # through the projection holding p_value's nondeterministic `reflect`,
+    # so only this placement optimizes to the plan without the p column
+    m = m.filter((F.col("n_a") > 1) & (F.col("n_b") > 1))
+    w = welch_from_moments(m, ["event_type"], passthrough=["n", "mean_value", "sd"])
+    return w.select(
+        "event_type",
+        "n_a",
+        "n_b",
+        F.round("mean_diff", 6).alias("mean_diff"),
+        F.round("se", 6).alias("se"),
+        F.round("t_stat", 6).alias("t_stat"),
+        F.round("dof", 6).alias("dof"),
+        "n",
+        F.round("mean_value", 6).alias("mean_value"),
+        F.round("sd", 6).alias("sd"),
+        *mde_closed_form_cols(F.col("n"), F.col("sd"), F.col("mean_value")),
     )
 
 
@@ -647,7 +647,7 @@ def crse_beta_se(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").withColumn(
         "arm", P.portable_arm(_SPARK_BUCKET, "0", 0.5)
     ).withColumn("cluster", F.expr(_SPARK_BUCKET))
-    r = crse_ols(ev, "value", "arm", "Off", "On", "cluster", with_p=False)
+    r = crse_ols(ev, "value", "arm", "Off", "On", "cluster")
     return r.select(
         F.round("beta", 6).alias("beta"),
         F.round("se", 6).alias("se"),

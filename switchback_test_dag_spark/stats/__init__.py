@@ -4,9 +4,9 @@ The reference computes these with scipy/statsmodels on driver-side pandas
 (``/root/reference/py_scripts/automated_switchback_test_analysis_script.py:136-144``,
 ``notebooks/switchback_analysis/method_evaluation.ipynb``). Here each test is a
 closed-form composition of Spark aggregations so it scales horizontally; p-values
-use either a column-math normal survival function (|abs err| < 1.5e-7) or a
-Pandas UDF over the pure-numpy incomplete beta (``stats/special.py``) on the tiny
-aggregated result where a t distribution is required.
+are JVM column expressions: a normal survival function in column math (|abs err|
+< 1.5e-7), or, where a t distribution is required, commons-math3's incomplete
+beta (``stats/distributions.t_two_sided_p``).
 """
 
 from switchback_test_dag_spark.stats.mwu import mann_whitney_u

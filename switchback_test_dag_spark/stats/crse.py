@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from switchback_test_dag_spark.stats.distributions import t_two_sided_p_udf
+from switchback_test_dag_spark.stats.distributions import t_two_sided_p
 
 
 def crse_from_cluster_moments(seeded: DataFrame, by: Sequence[str] = ()) -> DataFrame:
@@ -103,12 +103,11 @@ def crse_ols(
     treatment,
     cluster_col: str,
     by: Sequence[str] = (),
-    with_p: bool = True,
 ) -> DataFrame:
     """OLS ``value ~ 1 + 1[group==treatment]`` with CR1 cluster-robust SEs.
 
     Returns per-``by`` rows: beta (mean_treat − mean_control), se, t_stat, dof
-    (= clusters − 1), n, n_clusters (+ p_value unless disabled).
+    (= clusters − 1), n, n_clusters, p_value.
     """
     by = list(by)
     v = F.col(value_col).cast("double")
@@ -176,12 +175,4 @@ def crse_ols(
         n.alias("n"),
         "n_clusters",
     )
-    if with_p:
-        out = out.withColumn(
-            "p_value",
-            F.when(
-                F.col("t_stat").isNotNull(),
-                t_two_sided_p_udf()(F.col("t_stat"), F.col("dof")),
-            ),
-        )
-    return out
+    return out.withColumn("p_value", t_two_sided_p(F.col("t_stat"), F.col("dof")))

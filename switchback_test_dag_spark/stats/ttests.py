@@ -8,8 +8,8 @@ Reference usages:
   ``deep_dive_analyses.ipynb`` ``sig_calc_time_region_units_func``.
 
 Each reduces to ``avg/stddev_samp/count`` per (partition, group) — one shuffle —
-followed by scalar column math; only the final Student-t tail runs as a scipy
-Pandas UDF on the tiny result (needs the incomplete beta function).
+followed by scalar column math; the Student-t tail is one JVM expression over
+commons-math3's incomplete beta (``stats.distributions.t_two_sided_p``).
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from switchback_test_dag_spark.stats.distributions import t_two_sided_p_udf
+from switchback_test_dag_spark.stats.distributions import t_two_sided_p
 
 
 def _group_moments(
@@ -56,13 +56,11 @@ def t_test(
     group_a,
     group_b,
     by: Sequence[str] = (),
-    with_p: bool = True,
 ) -> DataFrame:
     """Student two-sample t-test (pooled variance), scipy ``ttest_ind`` semantics.
 
-    Returns per-``by`` rows: n_a, n_b, mean_a, mean_b, mean_diff, se, t_stat, dof
-    (+ p_value when ``with_p``; the p column needs a scipy UDF, so oracle-diffed
-    queries can disable it and check the SQL-expressible statistic instead).
+    Returns per-``by`` rows: n_a, n_b, mean_a, mean_b, mean_diff, se, t_stat,
+    dof, p_value.
     """
     m = _group_moments(df, value_col, group_col, group_a, group_b, list(by))
     n_a, n_b = F.col("n_a"), F.col("n_b")
@@ -85,15 +83,7 @@ def t_test(
         ),
         F.when(valid, (n_a + n_b - 2).cast("double")).alias("dof"),
     )
-    if with_p:
-        out = out.withColumn(
-            "p_value",
-            F.when(
-                F.col("t_stat").isNotNull(),
-                t_two_sided_p_udf()(F.col("t_stat"), F.col("dof")),
-            ),
-        )
-    return out
+    return out.withColumn("p_value", t_two_sided_p(F.col("t_stat"), F.col("dof")))
 
 
 def welch_t_test(
@@ -103,18 +93,16 @@ def welch_t_test(
     group_a,
     group_b,
     by: Sequence[str] = (),
-    with_p: bool = True,
 ) -> DataFrame:
     """Welch's t-test (``equal_var=False``) with Welch–Satterthwaite dof."""
     m = _group_moments(df, value_col, group_col, group_a, group_b, list(by))
-    return welch_from_moments(m, by, with_p=with_p)
+    return welch_from_moments(m, by)
 
 
 def welch_from_moments(
     m: DataFrame,
     by: Sequence[str] = (),
     passthrough: Sequence[str] = (),
-    with_p: bool = True,
 ) -> DataFrame:
     """Welch statistics from an already-aggregated moments frame (columns
     ``n_a n_b mean_a mean_b sd_a sd_b`` per ``by`` tuple).
@@ -147,12 +135,4 @@ def welch_from_moments(
         dof.alias("dof"),
         *passthrough,
     )
-    if with_p:
-        out = out.withColumn(
-            "p_value",
-            F.when(
-                F.col("t_stat").isNotNull(),
-                t_two_sided_p_udf()(F.col("t_stat"), F.col("dof")),
-            ),
-        )
-    return out
+    return out.withColumn("p_value", t_two_sided_p(F.col("t_stat"), F.col("dof")))

@@ -4,6 +4,14 @@ These re-derive each statistic from its published formula with a *different*
 algorithm than the distributed engine (dense ranks via argsort instead of
 pre-aggregated window midranks; matrix OLS instead of closed-form group means),
 so agreement is a real cross-check, not a tautology.
+
+The Student-t tail is the regularized incomplete beta by the standard
+continued fraction (A&S 26.5.8, modified Lentz iteration) in numpy, independent
+of the commons-math3 ``Beta.regularizedBeta`` the package calls; test_special.py
+pins both against exact closed forms:
+  dof=1 (Cauchy)  : P = 1 − 2·atan(|t|)/π
+  dof=2           : P = 1 − |t|/sqrt(t²+2)
+  dof→∞ (normal)  : P = erfc(|t|/√2)   (math.erfc, stdlib, double precision)
 """
 
 from __future__ import annotations
@@ -12,7 +20,94 @@ import math
 
 import numpy as np
 
-from switchback_test_dag_spark.stats.special import t_two_sided_p
+_LGAMMA = np.frompyfunc(math.lgamma, 1, 1)
+
+_EPS = 3e-16
+_FPMIN = 1e-300
+_MAX_ITER = 300
+
+
+def _betacf(a: np.ndarray, b: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """Continued fraction for the incomplete beta (modified Lentz, vectorized).
+    Elements with a non-finite input never converge, so they are left out of
+    the convergence test: one NaN must not keep the whole vector iterating."""
+    live = np.isfinite(a) & np.isfinite(b) & np.isfinite(x)
+    qab = a + b
+    qap = a + 1.0
+    qam = a - 1.0
+    c = np.ones_like(x)
+    d = 1.0 - qab * x / qap
+    d = np.where(np.abs(d) < _FPMIN, _FPMIN, d)
+    d = 1.0 / d
+    h = d.copy()
+    for m in range(1, _MAX_ITER + 1):
+        m2 = 2 * m
+        aa = m * (b - m) * x / ((qam + m2) * (a + m2))
+        d = 1.0 + aa * d
+        d = np.where(np.abs(d) < _FPMIN, _FPMIN, d)
+        c = 1.0 + aa / c
+        c = np.where(np.abs(c) < _FPMIN, _FPMIN, c)
+        d = 1.0 / d
+        h = h * d * c
+        aa = -(a + m) * (qab + m) * x / ((a + m2) * (qap + m2))
+        d = 1.0 + aa * d
+        d = np.where(np.abs(d) < _FPMIN, _FPMIN, d)
+        c = 1.0 + aa / c
+        c = np.where(np.abs(c) < _FPMIN, _FPMIN, c)
+        d = 1.0 / d
+        delta = d * c
+        h = h * delta
+        if np.all(np.abs(delta[live] - 1.0) < _EPS):
+            break
+    return h
+
+
+def betainc(a, b, x) -> np.ndarray:
+    """Regularized incomplete beta I_x(a, b), elementwise, in the inputs'
+    broadcast shape (0-d for scalars)."""
+    shape = np.broadcast_shapes(np.shape(a), np.shape(b), np.shape(x))
+    a = np.atleast_1d(np.asarray(a, dtype=float))
+    b = np.atleast_1d(np.asarray(b, dtype=float))
+    x = np.atleast_1d(np.asarray(x, dtype=float))
+    a, b, x = np.broadcast_arrays(a, b, x)
+
+    lbeta = (
+        _LGAMMA(a + b).astype(float)
+        - _LGAMMA(a).astype(float)
+        - _LGAMMA(b).astype(float)
+    )
+    use_direct = x < (a + 1.0) / (a + b + 2.0)
+    # direct branch
+    xa, aa, ba = x.copy(), a.copy(), b.copy()
+    # symmetric branch computes I_{1-x}(b, a)
+    xa[~use_direct] = 1.0 - x[~use_direct]
+    aa[~use_direct] = b[~use_direct]
+    ba[~use_direct] = a[~use_direct]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        front_s = np.exp(
+            lbeta + aa * np.log(np.clip(xa, _FPMIN, 1.0)) + ba * np.log1p(-np.clip(xa, 0.0, 1.0 - 1e-17))
+        )
+        cf = _betacf(aa, ba, xa)
+        val = front_s * cf / aa
+    out = np.where(use_direct, val, 1.0 - val)
+    out = np.where(x <= 0.0, 0.0, out)
+    out = np.where(x >= 1.0, 1.0, out)
+    return out.reshape(shape)
+
+
+def t_two_sided_p(t, dof) -> np.ndarray:
+    """Two-sided p-value 2·P(T > |t|)."""
+    t = np.abs(np.asarray(t, dtype=float))
+    dof = np.asarray(dof, dtype=float)
+    return np.clip(betainc(0.5 * dof, 0.5, dof / (dof + t * t)), 0.0, 1.0)
+
+
+def norm_sf(z) -> np.ndarray:
+    """Standard normal survival function (exact via math.erfc), in the
+    input's shape (0-d for a scalar)."""
+    z = np.asarray(z, dtype=float)
+    erfc = np.frompyfunc(math.erfc, 1, 1)
+    return 0.5 * np.asarray(erfc(z / math.sqrt(2.0)), dtype=float)
 
 
 def rankdata_average(values: np.ndarray) -> np.ndarray:

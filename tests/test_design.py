@@ -3,7 +3,8 @@
 ``power_two_sample`` uses a noncentral-t normal approximation; published
 statsmodels values (pinned below) agree to ~2e-3 in the n ranges the reference
 sweeps, and a seeded Monte Carlo cross-checks the whole solver chain with an
-independent method.
+independent method. The critical values come from the session's JVM, so the
+power tests take the ``spark`` fixture.
 """
 
 from __future__ import annotations
@@ -22,6 +23,8 @@ from switchback_test_dag_spark.design import (
     solve_mde,
     solve_n,
 )
+from switchback_test_dag_spark.stats.distributions import t_ppf_two_sided
+from tests.reference_impls import norm_sf
 
 # statsmodels.stats.power.TTestIndPower().power(d, n, 0.05) reference values
 # (computed with statsmodels 0.14 / scipy nct — public formulas).
@@ -38,37 +41,34 @@ def test_norm_ppf_round_trip():
     for q in (0.025, 0.2, 0.5, 0.8, 0.975):
         z = norm_ppf(q)
         # round trip through the exact erfc-based cdf
-        from switchback_test_dag_spark.stats.special import norm_sf
-
         assert 1.0 - float(norm_sf(z)) == pytest.approx(q, abs=1e-10)
     assert norm_ppf(0.975) == pytest.approx(1.959963984540054, abs=1e-9)
     assert norm_ppf(0.8) == pytest.approx(0.8416212335729143, abs=1e-9)
 
 
-def test_power_matches_statsmodels_values():
+def test_power_matches_statsmodels_values(spark):
     for d, n, expected in STATSMODELS_POWER:
         assert power_two_sample(d, n) == pytest.approx(expected, abs=2e-3), (d, n)
 
 
-def test_power_matches_monte_carlo():
+def test_power_matches_monte_carlo(spark):
     rng = np.random.default_rng(7)
     d, n, sims = 0.5, 64, 4000
+    crit = t_ppf_two_sided(0.05, 2 * n - 2)
     rejections = 0
     for _ in range(sims):
         a = rng.normal(0.0, 1.0, n)
         b = rng.normal(d, 1.0, n)
         sp = math.sqrt(((a.var(ddof=1)) + (b.var(ddof=1))) / 2.0)
         t = (b.mean() - a.mean()) / (sp * math.sqrt(2.0 / n))
-        from switchback_test_dag_spark.stats.special import t_two_sided_p
-
-        if float(t_two_sided_p(t, 2 * n - 2)) < 0.05:
+        if abs(t) > crit:
             rejections += 1
     mc = rejections / sims
     se = math.sqrt(mc * (1 - mc) / sims)
     assert abs(power_two_sample(d, n) - mc) < 4 * se + 0.005
 
 
-def test_solvers_invert_power():
+def test_solvers_invert_power(spark):
     n = solve_n(0.5, power=0.8)
     assert power_two_sample(0.5, n) == pytest.approx(0.8, abs=1e-6)
     assert n == pytest.approx(63.77, abs=0.5)  # tt_ind_solve_power ≈ 63.77
@@ -77,7 +77,7 @@ def test_solvers_invert_power():
     assert power_two_sample(d, 100) == pytest.approx(0.8, abs=1e-6)
 
 
-def test_curve_intercept_and_affected_scaling():
+def test_curve_intercept_and_affected_scaling(spark):
     curve = power_curve([i / 100 for i in range(5, 100, 5)], n_per_group=64)
     d80 = interp_power_intercept(curve, 0.8)
     assert d80 == pytest.approx(solve_mde(64), abs=0.01)

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from switchback_test_dag_spark.io import load_table
 from switchback_test_dag_spark.plans import assignment as A
 from switchback_test_dag_spark.stats import permutation as P
-from switchback_test_dag_spark.stats.special import t_ppf_two_sided
+from switchback_test_dag_spark.stats.distributions import t_ppf_two_sided
 
 SF = "/root/testdata/sf0.001"
 BUCKET = "ts_ns div 3600000000000"
@@ -38,7 +38,7 @@ def _sweep(events, n_seeds, effect=0.0):
 
 def _exact_crit(events):
     g = events.select(F.expr(BUCKET).alias("b")).distinct().count()
-    return float(t_ppf_two_sided(0.05, float(g - 2)))
+    return t_ppf_two_sided(0.05, float(g - 2))
 
 
 def _reject_rate(stats, diff, se, crit):
@@ -236,9 +236,7 @@ def test_crse_from_cluster_moments_matches_row_level(events):
         labeled = events.withColumn(
             "arm", P.portable_arm(BUCKET, str(seed), 0.5)
         ).withColumn("cluster", F.expr(BUCKET))
-        exp = crse_ols(
-            labeled, "value", "arm", "Off", "On", "cluster", with_p=False
-        ).collect()[0]
+        exp = crse_ols(labeled, "value", "arm", "Off", "On", "cluster").collect()[0]
         assert got[seed]["mean_diff"] == pytest.approx(exp["beta"], rel=1e-9)
         assert got[seed]["se"] == pytest.approx(exp["se"], rel=1e-7)
 

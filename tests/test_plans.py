@@ -79,6 +79,25 @@ def test_jvm_path_queries_have_no_python_nodes(spark, sf_dir):
         assert "FlatMapGroupsInPandas" not in plan, f"{name} runs a grouped map"
 
 
+def test_t_p_value_paths_have_no_python_nodes(spark):
+    # every t test returns a Student-t p_value; its incomplete beta must be a
+    # JVM expression, not a Python UDF on the executors
+    from switchback_test_dag_spark.stats import crse_ols, t_test, welch_t_test
+
+    df = spark.createDataFrame(
+        [(float(i), "On" if i % 2 else "Off", i % 3) for i in range(12)],
+        "value double, arm string, cluster int",
+    )
+    for name, out in [
+        ("t_test", t_test(df, "value", "arm", "On", "Off")),
+        ("welch_t_test", welch_t_test(df, "value", "arm", "On", "Off")),
+        ("crse_ols", crse_ols(df, "value", "arm", "Off", "On", "cluster")),
+    ]:
+        assert "p_value" in out.columns, name
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "EvalPython" not in plan, f"{name} fell off the JVM path"
+
+
 def test_aggregations_are_partial(spark, sf_dir):
     # map-side combine: two HashAggregate nodes (partial + final) around the
     # exchange, so the shuffle moves group aggregates, not raw rows

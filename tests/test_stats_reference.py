@@ -128,8 +128,9 @@ def test_engines_null_safe_on_degenerate_inputs(spark):
     one_arm = spark.createDataFrame(
         [(1.0, "On"), (2.0, "On")], "value double, arm string"
     )
-    (w,) = welch_t_test(one_arm, "value", "arm", "On", "Off", with_p=False).collect()
+    (w,) = welch_t_test(one_arm, "value", "arm", "On", "Off").collect()
     assert w["n_b"] == 0 and w["t_stat"] is None and w["se"] is None
+    assert w["p_value"] is None
     (m,) = mann_whitney_u(one_arm, "value", "arm", "On", "Off").collect()
     assert m["u_stat"] is None
 
@@ -138,15 +139,16 @@ def test_engines_null_safe_on_degenerate_inputs(spark):
         [(5.0, "On"), (5.0, "Off"), (5.0, "On"), (5.0, "Off")],
         "value double, arm string",
     )
-    (w,) = welch_t_test(const, "value", "arm", "On", "Off", with_p=False).collect()
+    (w,) = welch_t_test(const, "value", "arm", "On", "Off").collect()
     assert w["mean_diff"] == 0.0 and w["t_stat"] is None  # 0/0 -> NULL, not error
+    assert w["p_value"] is None
     (m,) = mann_whitney_u(const, "value", "arm", "On", "Off").collect()
     assert m["z"] is None  # tie-corrected variance is 0
 
     # empty input frame
     empty = spark.createDataFrame([], "value double, arm string")
-    (w,) = welch_t_test(empty, "value", "arm", "On", "Off", with_p=False).collect()
-    assert w["n_a"] == 0 and w["mean_a"] is None
+    (w,) = welch_t_test(empty, "value", "arm", "On", "Off").collect()
+    assert w["n_a"] == 0 and w["mean_a"] is None and w["p_value"] is None
 
     # zero-variance MDE
     flat = spark.createDataFrame([(5.0,)] * 5, "value double")
@@ -157,5 +159,6 @@ def test_engines_null_safe_on_degenerate_inputs(spark):
     crse_in = spark.createDataFrame(
         [(1.0, "On", "c1"), (2.0, "On", "c1")], "y double, arm string, cl string"
     )
-    rows = crse_ols(crse_in, "y", "arm", "Off", "On", "cl", with_p=False).collect()
+    rows = crse_ols(crse_in, "y", "arm", "Off", "On", "cl").collect()
     assert len(rows) == 1  # must not raise
+    assert rows[0]["dof"] is None and rows[0]["p_value"] is None

@@ -21,9 +21,7 @@ so `tools/scale_evidence.py` can measure a real 10× data point:
   10× copy would quadratically inflate every dedup pair set and measure the
   blowup, not the operator) and no sentinel shingle is shared across docs
   (which would fan out the inverted-index joins).
-- embeddings: vec_id offset; vector rotated by copy index — cheap, norm-
-  preserving, and decorrelates replicas.
-- dims (region nation customer supplier part): byte-copied as-is.
+- region, nation: byte-copied as-is.
 
 Usage: python tools/make_scale.py [--src DIR] [--dst DIR] [--k 10]
 """
@@ -151,33 +149,7 @@ def main() -> None:
 
     replicate("documents", doc_copy)
 
-    vkey_base = (
-        spark.read.parquet(os.path.join(args.src, "embeddings.parquet"))
-        .agg(F.max("vec_id"))
-        .first()[0]
-        + 1
-    )
-
-    def emb_copy(df, c):
-        df = df.withColumn("vec_id", F.col("vec_id") + F.lit(c * vkey_base))
-        if c == 0:
-            return df
-        rot = c % 16
-        return df.withColumn(
-            "embedding",
-            F.expr(
-                f"concat(slice(embedding, {rot + 1}, size(embedding) - {rot}),"
-                f" slice(embedding, 1, {rot}))"
-            ),
-        )
-
-    replicate("embeddings", emb_copy)
-
-    for t in (
-        FIXED_DIMS
-        + SCALED_DIMS
-        + ("orders", "lineitem", "events", "documents", "embeddings")
-    ):
+    for t in FIXED_DIMS + SCALED_DIMS + ("orders", "lineitem", "events", "documents"):
         n = spark.read.parquet(os.path.join(args.dst, f"{t}.parquet")).count()
         print(f"{t}: {n}")
 
